@@ -2,9 +2,11 @@
 resume, lineage fingerprints, per-bucket metrics."""
 
 import json
+import math
 import os
 
 import pytest
+from pyspark.sql import DataFrameWriter
 
 from torchestra_spark.checkpoint import CheckpointedWriter, input_fingerprint
 
@@ -71,6 +73,61 @@ def test_manifest_contents(spark, events, tmp_path):
     assert m["fingerprint"] == "abc"
     assert m["rows"] > 0 and m["bytes"] > 0 and m["wall_ms"] > 0
     assert m["app_id"].startswith("local-")
+
+
+@pytest.mark.parametrize("wave_size,dropped", [(3, ()), (1, (2, 5))])
+def test_explicit_wave_size_bounds_each_write(spark, events, tmp_path, monkeypatch, wave_size, dropped):
+    path = str(tmp_path / "out")
+    CheckpointedWriter(path, key_col="user_id", n_buckets=8).run(events)
+    w = CheckpointedWriter(path, key_col="user_id", n_buckets=8, wave_size=wave_size)
+    if dropped:
+        for b in dropped:
+            os.remove(os.path.join(w.manifest_dir, f"bucket-{b}.json"))
+    else:
+        w.clear_manifests()
+    remaining = len(w.status().remaining)
+    calls = []  # the job description in force at each parquet write
+    real = DataFrameWriter.parquet
+
+    def spy(self, p, *a, **kw):
+        calls.append(spark.sparkContext.getLocalProperty("spark.job.description"))
+        return real(self, p, *a, **kw)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    spark.sparkContext.setJobDescription("caller job")
+    try:
+        assert w.run(events).is_complete
+        desc_after = spark.sparkContext.getLocalProperty("spark.job.description")
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    assert len(calls) == math.ceil(remaining / wave_size)
+    assert all(f"of 8 buckets to {path}" in d for d in calls)
+    assert desc_after == "caller job"
+    assert w.load(spark).count() == events.count()
+
+
+def test_layout_guard_refuses_other_layouts(spark, events, tmp_path):
+    path = str(tmp_path / "out")
+    w8 = CheckpointedWriter(path, key_col="user_id", n_buckets=8)
+    w8.run(events)
+    with open(os.path.join(w8.manifest_dir, "bucket-0.json")) as fh:
+        m = json.load(fh)
+    assert (m["n_buckets"], m["bucket_fn"]) == (8, "murmur3")
+    # fewer buckets over the same path: buckets 4-7 would stay on disk
+    with pytest.raises(ValueError, match="n_buckets=8.*new path"):
+        CheckpointedWriter(path, key_col="user_id", n_buckets=4).run(events)
+    # manifests without layout fields come from the older xxhash64 layout
+    for b in range(8):
+        mp = os.path.join(w8.manifest_dir, f"bucket-{b}.json")
+        with open(mp) as fh:
+            m = json.load(fh)
+        del m["n_buckets"], m["bucket_fn"]
+        with open(mp, "w") as fh:
+            json.dump(m, fh)
+    os.remove(os.path.join(w8.manifest_dir, "bucket-3.json"))
+    with pytest.raises(ValueError, match="bucket_fn=None"):
+        w8.run(events)
+    assert w8.status().remaining == [3]  # nothing was written
 
 
 def test_incremental_materializer_feature_refresh(spark, tmp_path):

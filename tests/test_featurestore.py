@@ -63,6 +63,44 @@ def test_materialize_and_resume(spark, events, feats, tmp_path):
     assert spark.read.parquet(out).count() == events.count()
 
 
+def test_default_materialize_is_one_write_of_one_file_per_bucket(
+    spark, events, feats, tmp_path, monkeypatch
+):
+    """The built spine is hash-partitioned on the entity, so with
+    n_buckets a multiple of the shuffle partitions every bucket is one
+    file, written by one job that runs the spine once."""
+    import os
+
+    from pyspark.sql import DataFrameWriter
+
+    store = _make_store().add_feature_table(feats, ts="feature_ts", name="f",
+                                            value_cols=["fval"])
+    fv = store.build(events)
+    assert 64 % int(spark.conf.get("spark.sql.shuffle.partitions")) == 0
+    writes = []
+    real = DataFrameWriter.parquet
+    monkeypatch.setattr(
+        DataFrameWriter, "parquet", lambda self, p, *a, **kw: writes.append(p) or real(self, p, *a, **kw)
+    )
+    out = str(tmp_path / "fv")
+    # keep every shuffle partition its own task: AQE would merge this
+    # small input into one task, which writes one file per bucket anyway
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        store.materialize(fv, out)  # 64 buckets, no bound on buckets per job
+    finally:
+        spark.conf.set(coalesce, prev)
+    assert writes == [out]
+    bucket_dirs = [d for d in os.listdir(out) if d.startswith("__ckpt_bucket=")]
+    assert bucket_dirs
+    for d in bucket_dirs:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
+    assert spark.read.parquet(out).count() == events.count()
+
+
 def test_state_reload_produces_identical_vectors(spark, events, feats, tmp_path):
     store = _make_store().add_feature_table(feats, ts="feature_ts", name="f",
                                             value_cols=["fval"])

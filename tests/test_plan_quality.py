@@ -401,3 +401,17 @@ def test_exact_knn_batch_one_scan_one_exchange(spark):
     assert len(re.findall(r"Exchange", plan)) == 1
     assert plan.count("MapInArrow") == 1
     assert "row_number" in plan
+
+
+@pytest.mark.parametrize("key", ["id", "skey"])
+def test_bucket_hash_is_the_hash_partition_id(spark, key):
+    """CheckpointedWriter buckets on pmod(hash(key), n) so that an input
+    hash-partitioned on the key writes one file per bucket; that rests
+    on hash() being the partition id HashPartitioning computes."""
+    n = 7
+    df = spark.range(2000).withColumn("skey", F.concat(F.lit("u"), F.col("id").cast("string")))
+    got = df.repartition(n, key).select(
+        (F.pmod(F.hash(key), F.lit(n)) == F.spark_partition_id()).alias("same")
+    )
+    assert got.filter(~F.col("same")).count() == 0
+    assert got.count() == 2000

@@ -5,23 +5,35 @@ carrying lineage and metrics").
 Design (Spark-idiomatic, no custom commit protocol):
 
 * The output is hash-bucketed on a key column into ``n_buckets``
-  directory partitions (``bucket=<i>/``).
-* Buckets are processed in **waves**; each wave is one filtered write
-  with Spark's *dynamic partition overwrite* — a retried/duplicated wave
-  overwrites exactly its own partitions, so writes are idempotent under
-  speculative re-execution.
-* After a wave commits, one manifest JSON per bucket is written to
-  ``_manifest/`` recording lineage (input fingerprint, source, app id)
-  and metrics (rows, bytes, wall ms).  The manifest — not _SUCCESS — is
-  the unit of completion.
+  directory partitions (``__ckpt_bucket=<b>/``), with
+  ``b = pmod(hash(key), n_buckets)``.
+* By default all remaining buckets are written in **one** job with
+  Spark's *dynamic partition overwrite*: the input plan runs once, and a
+  retried/duplicated job overwrites exactly its own partitions, so
+  writes are idempotent under speculative re-execution.  ``wave_size``
+  is an opt-in bound: each write job then covers at most that many
+  buckets (a filtered write per job, each re-running the input plan).
+* After a job commits, one manifest JSON per bucket is written to
+  ``_manifest/`` recording the layout (``n_buckets``, ``bucket_fn``),
+  lineage (input fingerprint, app id) and metrics (rows, bytes, wall
+  ms).  The manifest — not _SUCCESS — is the unit of completion.
 * Resume = list the manifest, skip completed buckets, process the rest.
-  If the input table is partitioned/bucketed on the same key (Iceberg
-  layout), the bucket filter prunes at the scan and resume does zero
-  redundant I/O; otherwise each wave re-scans the input (the standard
-  granularity/scan tradeoff, tune ``wave_size``).
+  A path whose manifests record a different layout is refused: its
+  stale bucket directories would survive the overwrite and duplicate
+  rows on load.
 
-At 1000 executors: one wave = one normal distributed write; the driver
-loop only sequences waves and writes tiny JSON files.
+File count: ``hash`` is the Murmur3 (seed 42) function Spark's
+``HashPartitioning`` uses, so when the input is already hash-partitioned
+on the key alone into S partitions (an entity window or aggregate
+leaves it so), bucket ``b`` draws rows only from the partitions ``p``
+with ``p ≡ b (mod gcd(S, n_buckets))``, so each bucket is written as
+``S / gcd(S, n_buckets)`` files; one file when ``n_buckets`` is a
+multiple of S.  AQE coalescing keeps this, because it merges whole
+reducer partitions.  No extra exchange is added for it: an input
+partitioned otherwise is written as up to one file per task per bucket.
+
+At 1000 executors: one write job = one normal distributed write; the
+driver writes only the tiny manifest JSON files.
 """
 
 from __future__ import annotations
@@ -36,6 +48,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 BUCKET_COL = "__ckpt_bucket"
+# recorded in each manifest; a resume must use the same function
+BUCKET_FN = "murmur3"
 
 
 def input_fingerprint(paths: Sequence[str]) -> str:
@@ -79,28 +93,42 @@ class CheckpointedWriter:
         path: str,
         key_col: str,
         n_buckets: int = 64,
-        wave_size: int = 16,
+        wave_size: Optional[int] = None,
         fingerprint: Optional[str] = None,
     ):
+        if wave_size is not None and int(wave_size) < 1:
+            raise ValueError(f"wave_size must be a positive bucket count or None, got {wave_size}")
         self.path = path
         self.key_col = key_col
         self.n_buckets = int(n_buckets)
-        self.wave_size = int(wave_size)
+        self.wave_size = None if wave_size is None else int(wave_size)
         self.fingerprint = fingerprint or ""
         self.manifest_dir = os.path.join(path, "_manifest")
 
     # ------------------------------------------------------------- manifest
     def status(self) -> CheckpointStatus:
-        completed: List[int] = []
-        if os.path.isdir(self.manifest_dir):
-            for f in os.listdir(self.manifest_dir):
-                if f.startswith("bucket-") and f.endswith(".json"):
-                    with open(os.path.join(self.manifest_dir, f)) as fh:
-                        m = json.load(fh)
-                    if self.fingerprint and m.get("fingerprint") not in ("", self.fingerprint):
-                        continue  # stale manifest from different input
-                    completed.append(int(m["bucket"]))
+        completed = [
+            int(m["bucket"])
+            for m in self.metrics()
+            # a manifest from different input is stale
+            if not self.fingerprint or m.get("fingerprint") in ("", self.fingerprint)
+        ]
         return CheckpointStatus(self.n_buckets, sorted(completed))
+
+    def _check_layout(self) -> None:
+        """Refuse to write over manifests of another bucket layout (or
+        written before manifests recorded one): dynamic overwrite would
+        replace only this layout's bucket directories and leave the old
+        ones, so ``load()`` would return duplicate rows."""
+        for m in self.metrics():
+            found = (m.get("n_buckets"), m.get("bucket_fn"))
+            if found != (self.n_buckets, BUCKET_FN):
+                raise ValueError(
+                    f"{self.path} holds bucket-{m['bucket']} written with "
+                    f"n_buckets={found[0]}, bucket_fn={found[1]}; this writer uses "
+                    f"n_buckets={self.n_buckets}, bucket_fn={BUCKET_FN}. Write to a "
+                    f"new path, or delete {self.path} to rebuild it."
+                )
 
     def clear_manifests(self) -> None:
         """Drop all bucket manifests so the next run() rewrites every
@@ -116,6 +144,8 @@ class CheckpointedWriter:
         os.makedirs(self.manifest_dir, exist_ok=True)
         rec = {
             "bucket": bucket,
+            "n_buckets": self.n_buckets,
+            "bucket_fn": BUCKET_FN,
             "rows": rows,
             "bytes": nbytes,
             "wall_ms": round(wall_ms, 1),
@@ -145,36 +175,44 @@ class CheckpointedWriter:
 
     # ----------------------------------------------------------------- write
     def run(self, df: DataFrame, progress: bool = False) -> CheckpointStatus:
-        """Write all remaining buckets in waves; safe to re-run any time."""
+        """Write all remaining buckets (one job, or jobs of ``wave_size``
+        buckets); safe to re-run any time."""
+        self._check_layout()
         spark = df.sparkSession
+        sc = spark.sparkContext
         status = self.status()
         remaining = status.remaining
         if not remaining:
             return status
         bucketed = df.withColumn(
-            BUCKET_COL, F.pmod(F.xxhash64(F.col(self.key_col)), F.lit(self.n_buckets))
+            BUCKET_COL, F.pmod(F.hash(F.col(self.key_col)), F.lit(self.n_buckets))
         )
+        step = self.wave_size or len(remaining)
         prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
+        prev_desc = sc.getLocalProperty("spark.job.description")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        app_id = spark.sparkContext.applicationId
+        app_id = sc.applicationId
         try:
-            for i in range(0, len(remaining), self.wave_size):
-                wave = remaining[i : i + self.wave_size]
-                t0 = time.time()
-                (
-                    bucketed.filter(F.col(BUCKET_COL).isin(wave))
-                    .write.mode("overwrite")
-                    .partitionBy(BUCKET_COL)
-                    .parquet(self.path)
+            for i in range(0, len(remaining), step):
+                wave = remaining[i : i + step]
+                sc.setJobDescription(
+                    f"checkpoint: write {len(wave)} of {self.n_buckets} buckets to {self.path}"
                 )
+                # a write of every bucket needs no filter
+                out = bucketed if len(wave) == self.n_buckets else bucketed.filter(
+                    F.col(BUCKET_COL).isin(wave)
+                )
+                t0 = time.time()
+                out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path)
                 wall = (time.time() - t0) * 1000.0
                 for b in wave:
                     rows, nbytes = self._bucket_stats(b)
                     self._write_manifest(b, rows, nbytes, wall / len(wave), app_id)
                 if progress:
-                    print(f"checkpoint wave committed: buckets={wave}")
+                    print(f"checkpoint committed: buckets={wave}")
         finally:
             spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+            sc.setJobDescription(prev_desc)
         return self.status()
 
     # ------------------------------------------------------------------ read

@@ -13,8 +13,14 @@ artifacts, and checkpointed resumable materialization.
         "value_z": Feature("value", [StandardScore()]),
     }))
     fv = store.build(events)                       # fit + transform
-    store.materialize(fv, "/out", resume=True)     # checkpointed write
+    store.materialize(fv, "/out")                  # checkpointed write
     store.save_state("/out/_state.json")
+
+``materialize`` is resumable as it stands: re-running it on the same
+path writes only the buckets that have no manifest yet (none after a
+complete run).  Pass ``fingerprint=input_fingerprint(paths)`` to tie
+the manifests to the input files, so a run over changed input rewrites
+every bucket.
 """
 
 from __future__ import annotations
@@ -209,10 +215,11 @@ class FeatureStore:
         built: DataFrame,
         path: str,
         n_buckets: int = 64,
-        wave_size: int = 16,
+        wave_size: Optional[int] = None,
         fingerprint: str = "",
     ) -> None:
-        """Checkpointed, resumable bucketed write keyed on the entity."""
+        """Checkpointed, resumable bucketed write keyed on the entity, in
+        one write job unless ``wave_size`` bounds each job's buckets."""
         CheckpointedWriter(
             path, key_col=self.entity, n_buckets=n_buckets,
             wave_size=wave_size, fingerprint=fingerprint,

@@ -105,7 +105,11 @@ def main() -> None:
     r.add_argument("--session-gap", dest="session_gap", type=float, default=6 * 3600.0)
     r.add_argument("--salt-buckets", dest="salt_buckets", type=int, default=1)
     r.add_argument("--buckets", type=int, default=64)
-    r.add_argument("--wave-size", dest="wave_size", type=int, default=16)
+    r.add_argument(
+        "--wave-size", dest="wave_size", type=int, default=None,
+        help="write at most this many buckets per write job (default: all "
+        "remaining buckets in one job)",
+    )
     r.add_argument("--resume", action="store_true")
     r.add_argument("--no-fingerprint", dest="fingerprint", action="store_false")
     args = p.parse_args()
