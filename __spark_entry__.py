@@ -413,8 +413,8 @@ def _q_serve_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FeatureStore SERVING composition under the oracle: fit on a
     history slice (even event_ids) via ``store.build``, then run
     ``store.serve_stream`` — broadcast as-of join + frozen pipeline
-    transform, the exact code path live streams take
-    (featurestore.py:160) — on the odd-event batch.  serve_stream's
+    transform, the exact code path live streams take — on the
+    odd-event batch.  serve_stream's
     body is pure DataFrame ops, so invoking it on a batch frame
     exercises the IDENTICAL composition the stream runs (the
     `tumbling_stats` batch-parity pattern); the streaming execution

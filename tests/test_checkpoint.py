@@ -84,7 +84,7 @@ def test_explicit_wave_size_bounds_each_write(spark, events, tmp_path, monkeypat
         for b in dropped:
             os.remove(os.path.join(w.manifest_dir, f"bucket-{b}.json"))
     else:
-        w.clear_manifests()
+        w.clear()
     remaining = len(w.status().remaining)
     calls = []  # the job description in force at each parquet write
     real = DataFrameWriter.parquet
@@ -128,6 +128,22 @@ def test_layout_guard_refuses_other_layouts(spark, events, tmp_path):
     with pytest.raises(ValueError, match="bucket_fn=None"):
         w8.run(events)
     assert w8.status().remaining == [3]  # nothing was written
+
+
+def test_clear_removes_bucket_data_with_manifests(spark, events, tmp_path):
+    """A fresh run (``submit.py run`` without --resume) clears the path
+    first; the clear must take the bucket directories with the
+    manifests, or a rerun with fewer buckets keeps buckets 4-7 beside
+    its own and load() returns duplicates."""
+    path = str(tmp_path / "out")
+    CheckpointedWriter(path, key_col="user_id", n_buckets=8).run(events)
+    w4 = CheckpointedWriter(path, key_col="user_id", n_buckets=4)
+    w4.clear()
+    assert w4.run(events).is_complete
+    assert sorted(d for d in os.listdir(path) if d.startswith("__ckpt_bucket=")) == [
+        f"__ckpt_bucket={b}" for b in range(4)
+    ]
+    assert w4.load(spark).count() == events.count()
 
 
 def test_incremental_materializer_feature_refresh(spark, tmp_path):

@@ -244,6 +244,33 @@ def test_build_honors_explicit_union_strategy(spark, events, feats, feats2):
     # MapInPandas fixtures legitimately fail the free stats gate)
 
 
+def test_build_and_serve_make_one_asof_call(spark, events, feats, feats2, monkeypatch):
+    """build and serve_stream each make ONE as-of call for all tables:
+    build with the tables' common strategy (union when they differ),
+    serve_stream with the broadcast kernel.  merge_asof has no fused
+    kernel, so a table cannot declare it."""
+    from torchestra_spark import featurestore
+
+    calls = []
+    real = featurestore.asof_join_multi
+
+    def spy(left, tables, *a, **kw):
+        calls.append(([t["name"] for t in tables], kw["strategy"]))
+        return real(left, tables, *a, **kw)
+
+    monkeypatch.setattr(featurestore, "asof_join_multi", spy)
+    one = FeatureStore(entity="user_id", ts="ts").add_feature_table(
+        feats, ts="feature_ts", name="f", value_cols=["fval"], strategy="auto")
+    one.build(events, fit=False)
+    mixed = one.add_feature_table(feats2, ts="feature_ts", name="g", value_cols=["gval"])
+    mixed.build(events, fit=False)
+    mixed.serve_stream(events)
+    assert calls == [(["f"], "auto"), (["f", "g"], "union"), (["f", "g"], "broadcast")]
+    with pytest.raises(ValueError, match="merge_asof"):
+        FeatureStore(entity="user_id", ts="ts").add_feature_table(
+            feats, ts="feature_ts", name="f", strategy="merge_asof")
+
+
 def test_fused_multi_table_tolerance_and_salting(spark, events, feats, feats2):
     """Per-table tolerance applies independently inside the fused pass,
     and hot-key salting preserves results."""

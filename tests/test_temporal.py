@@ -213,24 +213,47 @@ def test_asof_broadcast_tolerance(events, feats, events_pd, feats_pd):
 
 
 def test_asof_broadcast_null_feature_ts_ignored(spark):
-    """r8 review: a NULL feature ts must be DROPPED by the broadcast
-    kernel (it has no point-in-time meaning), never corrupt the sorted
-    key array and poison unrelated matches."""
+    """A feature row whose ts is NULL has no point-in-time meaning:
+    every strategy, and the k-table join, ignores it.  Event 0 comes
+    before user 1's only real feature row, so it stays unmatched even
+    though user 1 also has a NULL-ts row (the union spine would sort
+    that row first and fill 99.0 forward with no matched ts;
+    ``pandas.merge_asof`` raises on a NULL key; the broadcast kernel's
+    sorted key array would be corrupted)."""
     import pyspark.sql.functions as F
 
+    from torchestra_spark.operators.temporal import asof_join_multi
+
     lt = spark.createDataFrame(
-        [(1, "2024-01-05 00:00:00"), (2, "2024-01-05 00:00:00")],
-        "user_id long, ts string",
+        [(0, 1, "2024-01-01 00:00:00"), (1, 1, "2024-01-05 00:00:00"),
+         (2, 2, "2024-01-05 00:00:00")],
+        "event_id long, user_id long, ts string",
     ).withColumn("ts", F.to_timestamp("ts"))
     rt = spark.createDataFrame(
         [(1, "2024-01-02 00:00:00", 10.0), (1, None, 99.0),
          (2, "2024-01-03 00:00:00", 20.0)],
         "user_id long, feature_ts string, fval double",
     ).withColumn("feature_ts", F.to_timestamp("feature_ts"))
-    out = asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts",
-                    value_cols=["fval"], strategy="broadcast").toPandas()
-    got = dict(zip(out["user_id"], out["fval"]))
-    assert got == {1: 10.0, 2: 20.0}
+    expected = {0: (None, None), 1: (10.0, "2024-01-02"), 2: (20.0, "2024-01-03")}
+
+    def got(rows, value, matched):
+        return {
+            r["event_id"]: (r[value], None if r[matched] is None else str(r[matched])[:10])
+            for r in rows
+        }
+
+    for strategy in ("union", "broadcast", "merge_asof"):
+        out = asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts",
+                        value_cols=["fval"], strategy=strategy).collect()
+        assert got(out, "fval", "matched_feature_ts") == expected, strategy
+    tables = [
+        dict(name=f"t{k}", df=rt.withColumnRenamed("fval", f"v{k}"), ts="feature_ts")
+        for k in range(3)
+    ]
+    for strategy in ("union", "broadcast"):
+        out = asof_join_multi(lt, tables, on="user_id", left_ts="ts", strategy=strategy).collect()
+        for k in range(3):
+            assert got(out, f"v{k}", f"t{k}_matched_ts") == expected, (strategy, k)
 
 
 def test_asof_broadcast_pre_epoch_matched_ts(spark):
@@ -311,51 +334,108 @@ def test_asof_null_feature_value_not_skipped(spark):
         assert str(row["matched_feature_ts"]).startswith("2024-01-02"), strategy
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_asof_randomized_vs_merge_asof(spark, seed):
-    """Randomized micro-corpus (duplicate timestamps, NULL values,
-    unmatched entities, empty histories) vs pandas merge_asof, across
-    all three strategies."""
+def _dirty_asof_corpus(seed):
+    """Probe rows and three feature tables of dirty input: timestamps
+    on both sides of the epoch on a shared minute grid (exact
+    probe==feature ties, some planted), NULL feature values, NULL
+    feature ts, probe entities with no history and feature entities
+    with no probe rows."""
     rng = np.random.RandomState(seed)
     n_e, n_p, n_f = 12, 300, 80
+    base = pd.Timestamp("1969-12-28")  # the 10000-minute span crosses 1970
     probe = pd.DataFrame(
         {
             "event_id": np.arange(n_p),
             "user_id": rng.randint(0, n_e, n_p),
-            "ts": pd.Timestamp("2026-03-01")
-            + pd.to_timedelta(rng.randint(0, 10000, n_p) * 60, unit="s"),
+            "ts": base + pd.to_timedelta(rng.randint(0, 10000, n_p) * 60, unit="s"),
         }
     )
-    feats = pd.DataFrame(
-        {
-            # entities 0..7 only: 8..11 have empty histories
-            "user_id": rng.randint(0, 8, n_f),
-            "feature_ts": pd.Timestamp("2026-03-01")
-            + pd.to_timedelta(rng.randint(0, 10000, n_f) * 60, unit="s"),
-            "fval": np.where(rng.rand(n_f) < 0.15, np.nan, rng.randn(n_f)),
-        }
-    )
-    # dedupe (entity, ts) on the feature side: at equal ts merge_asof
-    # picks the last physical row while the engine picks the latest
-    # matched row deterministically — dedupe makes the oracle unambiguous
-    feats = feats.drop_duplicates(["user_id", "feature_ts"], keep="last")
-    lt, rt = spark.createDataFrame(probe), spark.createDataFrame(feats)
-    exp = pd.merge_asof(
+    tables = []
+    for k in range(3):
+        f = pd.DataFrame(
+            {
+                # entities 0..7 and 20..21: 8..11 have empty histories,
+                # 20..21 never probe
+                "user_id": np.where(rng.rand(n_f) < 0.1, rng.randint(20, 22, n_f),
+                                    rng.randint(0, 8, n_f)),
+                "feature_ts": base + pd.to_timedelta(rng.randint(0, 10000, n_f) * 60, unit="s"),
+                f"v{k}": np.where(rng.rand(n_f) < 0.15, np.nan, rng.randn(n_f)),
+            }
+        )
+        ties = probe.sample(10, random_state=seed * 3 + k)
+        f = pd.concat(
+            [f, pd.DataFrame({"user_id": ties["user_id"].to_numpy(),
+                              "feature_ts": ties["ts"].to_numpy(),
+                              f"v{k}": rng.randn(10)})],
+            ignore_index=True,
+        )
+        f.loc[rng.rand(len(f)) < 0.1, "feature_ts"] = pd.NaT
+        # dedupe (entity, ts) among the timed rows: at equal ts
+        # merge_asof picks the last physical row while the engine's tie
+        # order is unspecified — dedupe makes the oracle unambiguous
+        timed = f["feature_ts"].notna()
+        f = pd.concat([f[timed].drop_duplicates(["user_id", "feature_ts"], keep="last"),
+                       f[~timed]], ignore_index=True)
+        tables.append(f)
+    return probe, tables
+
+
+def _merge_asof_oracle(probe, f):
+    """pandas merge_asof after dropping the NULL-ts feature rows."""
+    return pd.merge_asof(
         probe.sort_values("ts", kind="stable"),
-        feats.sort_values("feature_ts", kind="stable"),
+        f.dropna(subset=["feature_ts"]).sort_values("feature_ts", kind="stable"),
         left_on="ts", right_on="feature_ts", by="user_id", direction="backward",
     ).sort_values("event_id", ignore_index=True)
-    for strategy in ("union", "merge_asof", "broadcast"):
-        got = (
-            asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts",
-                      value_cols=["fval"], strategy=strategy)
-            .toPandas().sort_values("event_id", ignore_index=True)
-        )
-        assert np.allclose(got["fval"].to_numpy(dtype=float),
-                           exp["fval"].to_numpy(dtype=float), equal_nan=True), strategy
-        gm, em = got["matched_feature_ts"], exp["feature_ts"]
-        assert gm.isna().equals(em.isna()), strategy
-        assert (gm.dropna().to_numpy() == em.dropna().to_numpy()).all(), strategy
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_asof_randomized_vs_merge_asof(spark, seed):
+    """Dirty input (NULL feature ts and values, exact ties, pre-epoch
+    times, unknown entities, and each side empty in turn) vs pandas
+    merge_asof, across every strategy — union, salted union with a low
+    threshold, broadcast, merge_asof — for k=1 (``asof_join``) and k=3
+    (``asof_join_multi``)."""
+    from torchestra_spark.operators.temporal import asof_join_multi
+
+    probe, tables = _dirty_asof_corpus(seed)
+    lt = spark.createDataFrame(probe, "event_id long, user_id long, ts timestamp")
+    rts = [spark.createDataFrame(f, f"user_id long, feature_ts timestamp, v{k} double")
+           for k, f in enumerate(tables)]
+    cases = {"dirty": (probe, tables, lt, rts)}
+    if seed == 0:  # the empty-side cases do not depend on the seed
+        cases["empty features"] = (probe, [f.iloc[:0] for f in tables], lt,
+                                   [rt.limit(0) for rt in rts])
+        cases["empty probe"] = (probe.iloc[:0], tables, lt.limit(0), rts)
+    strategies = {
+        "union": dict(strategy="union"),
+        "salted": dict(strategy="union", salt_buckets=4, salt_threshold=3),
+        "broadcast": dict(strategy="broadcast"),
+        "merge_asof": dict(strategy="merge_asof"),
+    }
+    for case, (p, tabs, lt, rts) in cases.items():
+        exps = [_merge_asof_oracle(p, f) for f in tabs]
+        runs = []  # (label, [(table index, matched-ts column)], output)
+        for name, kw in strategies.items():
+            out = asof_join(lt, rts[0], on="user_id", left_ts="ts", right_ts="feature_ts",
+                            value_cols=["v0"], **kw)
+            runs.append((f"{case}/k=1/{name}", [(0, "matched_feature_ts")], out))
+            if name != "merge_asof":
+                out = asof_join_multi(
+                    lt, [dict(name=f"t{k}", df=rt, ts="feature_ts") for k, rt in enumerate(rts)],
+                    on="user_id", left_ts="ts", **kw,
+                )
+                runs.append((f"{case}/k=3/{name}", [(k, f"t{k}_matched_ts") for k in range(3)], out))
+        for label, checks, out in runs:
+            got = out.toPandas().sort_values("event_id", ignore_index=True)
+            assert got["event_id"].tolist() == p["event_id"].sort_values().tolist(), label
+            for k, matched in checks:
+                exp = exps[k]
+                assert np.allclose(got[f"v{k}"].to_numpy(dtype=float),
+                                   exp[f"v{k}"].to_numpy(dtype=float), equal_nan=True), (label, k)
+                gm, em = pd.to_datetime(got[matched]), exp["feature_ts"]
+                assert gm.isna().equals(em.isna()), (label, k)
+                assert (gm.dropna().to_numpy() == em.dropna().to_numpy()).all(), (label, k)
 
 
 def test_rolling_stats_vs_numpy(spark, events, events_pd):

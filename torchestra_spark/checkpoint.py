@@ -130,15 +130,21 @@ class CheckpointedWriter:
                     f"new path, or delete {self.path} to rebuild it."
                 )
 
-    def clear_manifests(self) -> None:
-        """Drop all bucket manifests so the next run() rewrites every
-        bucket — the non-resume entry point (a fresh run must not
-        silently reuse stale bucket outputs, especially with
-        fingerprinting disabled)."""
-        if os.path.isdir(self.manifest_dir):
-            for f in os.listdir(self.manifest_dir):
-                if f.startswith("bucket-") and f.endswith(".json"):
-                    os.remove(os.path.join(self.manifest_dir, f))
+    def clear(self) -> None:
+        """Delete every bucket directory and manifest under the path so
+        the next run() rewrites every bucket — the non-resume entry
+        point (a fresh run must not silently reuse stale bucket outputs,
+        especially with fingerprinting disabled).  The data goes with
+        the manifests: bucket directories left without a manifest would
+        escape the layout guard, and a run with fewer buckets would
+        leave them beside its own, duplicating rows on load."""
+        import shutil
+
+        if os.path.isdir(self.path):
+            for d in os.listdir(self.path):
+                if d.startswith(f"{BUCKET_COL}="):
+                    shutil.rmtree(os.path.join(self.path, d))
+        shutil.rmtree(self.manifest_dir, ignore_errors=True)
 
     def _write_manifest(self, bucket: int, rows: int, nbytes: int, wall_ms: float, app_id: str) -> None:
         os.makedirs(self.manifest_dir, exist_ok=True)

@@ -25,14 +25,13 @@ every bucket.
 
 from __future__ import annotations
 
-from typing import Dict, List, Optional, Sequence, Tuple
+from typing import List, Optional, Sequence, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from torchestra_spark.checkpoint import CheckpointedWriter
 from torchestra_spark.operators.temporal import (
-    asof_join,
     asof_join_multi,
     fill_forward,
     lag_lead,
@@ -48,7 +47,7 @@ class FeatureStore:
         self.entity = entity
         self.ts = ts
         self._order = [ts] + ([order_tiebreak] if order_tiebreak else [])
-        self._feature_tables: List[Tuple[str, DataFrame, str, dict]] = []
+        self._feature_tables: List[dict] = []  # asof_join_multi specs
         self._lags: List[Tuple[str, Sequence[int], Sequence[int]]] = []
         self._rolling: List[Tuple[str, float, Tuple[str, ...]]] = []
         self._ffill: List[str] = []
@@ -67,19 +66,33 @@ class FeatureStore:
         salt_buckets: int = 1,
         salt_threshold: Optional[int] = None,
     ) -> "FeatureStore":
-        """Point-in-time join this table's latest values (<= event ts)."""
+        """Point-in-time join this table's latest values (<= event ts).
+
+        ``build`` joins all tables in ONE ``asof_join_multi`` call (the
+        probe spine moves once, whatever the table count) and
+        ``serve_stream`` in one ``strategy="broadcast"`` call.  The
+        ``build`` call takes the tables' ``strategy`` when they all
+        declare the same one, and ``"union"`` otherwise; the default is
+        ``"union"``, the others are ``"auto"`` and ``"broadcast"``
+        (``"merge_asof"`` raises ``ValueError``: the fused pass has no
+        cogroup kernel).  The one shared hot-key pass uses the largest
+        ``salt_buckets`` and the lowest ``salt_threshold`` of all
+        tables."""
+        if strategy not in ("union", "auto", "broadcast"):
+            raise ValueError(
+                f"feature table {name!r}: strategy must be 'union', 'auto' or "
+                f"'broadcast', got {strategy!r}"
+            )
         self._feature_tables.append(
-            (
-                name,
-                df,
-                ts,
-                dict(
-                    value_cols=list(value_cols) if value_cols else None,
-                    strategy=strategy,
-                    tolerance_sec=tolerance_sec,
-                    salt_buckets=salt_buckets,
-                    salt_threshold=salt_threshold,
-                ),
+            dict(
+                name=name,
+                df=df,
+                ts=ts,
+                value_cols=list(value_cols) if value_cols else None,
+                tolerance_sec=tolerance_sec,
+                strategy=strategy,
+                salt_buckets=salt_buckets,
+                salt_threshold=salt_threshold,
             )
         )
         return self
@@ -112,53 +125,20 @@ class FeatureStore:
     def build(self, events: DataFrame, fit: bool = True) -> DataFrame:
         """Assemble the feature vector: as-of joins -> window features ->
         fitted pipeline transform.  ``fit=False`` reuses loaded state."""
-        df = events
-        is_union = [
-            kw.get("strategy", "union") == "union"
-            for _n, _f, _t, kw in self._feature_tables
-        ]
-        fused = [t for t, u in zip(self._feature_tables, is_union) if u]
-        rest = [t for t, u in zip(self._feature_tables, is_union) if not u]
-        # an EXPLICIT strategy='union' on any fused table is a user
-        # declaration that its feature side must not be collected —
-        # honor it by pinning the whole fused pass to union; tables
-        # that left strategy unset ride the library default (auto)
-        fused_strategy = (
-            "union"
-            if any(kw.get("strategy") == "union" for _n, _f, _t, kw in fused)
-            else "auto"
+        tables = self._feature_tables
+        strategies = {t["strategy"] for t in tables}
+        df = asof_join_multi(
+            events,
+            tables,
+            on=self.entity,
+            left_ts=self.ts,
+            salt_buckets=max((t["salt_buckets"] for t in tables), default=1),
+            salt_threshold=min(
+                (t["salt_threshold"] for t in tables if t["salt_threshold"] is not None),
+                default=None,
+            ),
+            strategy=strategies.pop() if len(strategies) == 1 else "union",
         )
-        if len(fused) >= 2:
-            # ONE union + ONE entity-partitioned window pass for all
-            # union-strategy tables: k tables would otherwise shuffle
-            # the (wide) probe spine k times
-            df = asof_join_multi(
-                df,
-                [
-                    dict(
-                        name=name, df=ft, ts=fts,
-                        value_cols=kw.get("value_cols"),
-                        tolerance_sec=kw.get("tolerance_sec"),
-                    )
-                    for name, ft, fts, kw in fused
-                ],
-                on=self.entity,
-                left_ts=self.ts,
-                salt_buckets=max(kw.get("salt_buckets", 1) for _n, _f, _t, kw in fused),
-                # most sensitive (lowest) explicit threshold wins — one
-                # shared hot-key pass covers every fused table
-                salt_threshold=min(
-                    (kw["salt_threshold"] for _n, _f, _t, kw in fused
-                     if kw.get("salt_threshold") is not None),
-                    default=None,
-                ),
-                strategy=fused_strategy,
-            )
-        else:
-            rest = self._feature_tables
-        for name, ft, fts, kw in rest:
-            df = asof_join(df, ft, on=self.entity, left_ts=self.ts, right_ts=fts, **kw)
-            df = df.withColumnRenamed(f"matched_{fts}", f"{name}_matched_ts")
         for col, lags, leads in self._lags:
             df = lag_lead(df, self.entity, self._order, col, lags=lags, leads=leads)
         for col, win, stats in self._rolling:
@@ -174,10 +154,11 @@ class FeatureStore:
         return df
 
     def serve_stream(self, events_stream: DataFrame) -> DataFrame:
-        """Serve the store to a LIVE event stream: every feature table
-        joins point-in-time via the broadcast as-of strategy (a static
-        feature snapshot shipped to every task + vectorized searchsorted
-        match — zero shuffle of the stream, streaming-legal because no
+        """Serve the store to a LIVE event stream: all feature tables
+        join point-in-time in one broadcast as-of call (static feature
+        snapshots shipped to every task + one vectorized searchsorted
+        match per Arrow batch for all tables — zero shuffle of the
+        stream and one Python crossing, streaming-legal because no
         batch-only op touches the stream side), then the batch-fitted
         pipeline's transforms apply unchanged (pure Column exprs over
         frozen state).
@@ -189,23 +170,18 @@ class FeatureStore:
         rolling, sessionization) are fit-time history ops; for their
         streaming twins use ``streaming.stream_sessionize_ids`` /
         ``stream_windowed_stats`` explicitly."""
-        out = events_stream
-        for name, ft, fts, kw in self._feature_tables:
-            out = asof_join(
-                out, ft, on=self.entity, left_ts=self.ts, right_ts=fts,
-                value_cols=kw.get("value_cols"),
-                tolerance_sec=kw.get("tolerance_sec"),
-                strategy="broadcast",
-            )
-            out = out.withColumnRenamed(f"matched_{fts}", f"{name}_matched_ts")
+        out = asof_join_multi(
+            events_stream, self._feature_tables, on=self.entity, left_ts=self.ts,
+            strategy="broadcast",
+        )
         if self._pipeline is not None:
             out = self._pipeline.transform(out)
         return out
 
     def assert_leakage_free(self, built: DataFrame) -> None:
         """Hard gate: every matched feature timestamp <= event ts."""
-        for name, _ft, _fts, _kw in self._feature_tables:
-            c = f"{name}_matched_ts"
+        for t in self._feature_tables:
+            c = f"{t['name']}_matched_ts"
             n = built.filter(F.col(c) > F.col(self.ts)).count()
             if n:
                 raise AssertionError(f"temporal leakage: {n} rows in {c}")

@@ -1,26 +1,35 @@
 """Point-in-time / temporal operators — the north-rule core.
 
 The reference library has no temporal ops (its lookups are the only
-join-like construct, /root/reference/src/torchestra/_lookups.py); these
-extend its fit/transform engine into a point-in-time feature store over
-entity x timestamp data, per the driver's north rule: as-of join with
-explicit skew handling, lag/lead, fill-forward backfill, gap-based
-sessionization — zero temporal leakage (every joined feature_ts <=
-event ts).
+join-like construct); these extend its fit/transform engine into a
+point-in-time feature store over entity x timestamp data, per the
+north rule: as-of join with explicit skew handling, lag/lead,
+fill-forward backfill, gap-based sessionization — zero temporal leakage
+(every joined feature_ts <= event ts).
 
 Scale design notes
 ------------------
-* ``asof_join`` default strategy is **union + window fill-forward**:
-  one shuffle on the entity key, fully JVM-side (whole-stage codegen +
-  a single window scan), no UDF.  At 1000 executors this is a plain
-  hash-partitioned sort — the same cost profile as a sort-merge join.
-* The ``merge_asof`` strategy co-partitions both sides by entity hash
-  and runs ``pandas.merge_asof`` per partition inside ``applyInPandas``
-  — useful when the probe side must keep all its columns wide.
+* One as-of engine: ``asof_join_multi`` joins k >= 1 feature tables
+  onto a probe spine and ``asof_join`` is its k=1 case.  Feature rows
+  whose ts is NULL are dropped once, where the table specs are
+  normalized, so every strategy sees the same input.
+* The default strategy is ``"auto"``: when every feature side is
+  provably small (a free Catalyst size estimate, then one confirming
+  ``count()``) it takes the **broadcast kernel** — each table ships to
+  every task as sorted numpy arrays and one pandas UDF matches each
+  Arrow batch of the probe with vectorized ``searchsorted``, so the
+  (wide) probe side is never shuffled.  Otherwise it takes ``"union"``.
+* ``"union"``: union-tag + window fill-forward — one shuffle on the
+  entity key and one window scan for all k tables, fully JVM-side
+  (whole-stage codegen, no UDF).  The scale-out path when a feature
+  side does not fit executor memory: at 1000 executors it is a plain
+  hash-partitioned sort, the cost profile of a sort-merge join.
+* ``"merge_asof"`` (``asof_join`` only) co-groups both sides by entity
+  and runs ``pandas.merge_asof`` per entity inside ``applyInPandas``.
 * Skew: a single hot entity lands in one window partition.  The
-  ``salt_buckets`` option splits each entity's *probe* rows into N
-  hash(ts)-buckets and replicates the (much smaller) feature side into
-  every bucket — preserving point-in-time order within each bucket
+  ``salt_buckets`` option splits each hot entity's *probe* rows into N
+  hash(ts)-buckets and replicates its (much smaller) feature history
+  into every bucket — preserving point-in-time order within each bucket
   while spreading the hot entity over N tasks.  AQE's skew-join
   splitting handles residual imbalance.
 * Window ops (lag/lead/ffill/sessionize) are single-shuffle Catalyst
@@ -57,68 +66,214 @@ def asof_join(
     salt_threshold: Optional[int] = None,
     keep_right_ts: bool = True,
 ) -> DataFrame:
-    """Backward as-of join: for every left row, attach the latest right
-    row of the same entity with ``right_ts <= left_ts`` (exact matches
-    allowed — pandas ``merge_asof`` semantics).
+    """Backward as-of join of one feature table: for every left row,
+    attach the latest right row of the same entity with
+    ``right_ts <= left_ts`` (exact matches allowed — pandas
+    ``merge_asof`` semantics) as ``value_cols`` (default: every right
+    column but ``on`` and ``right_ts``) plus ``matched_{right_ts}``,
+    which ``keep_right_ts=False`` drops.
+
+    This is the k=1 case of :func:`asof_join_multi`, one engine with
+    three strategies that return identical rows: ``"union"`` (window
+    fill-forward over one entity shuffle), ``"broadcast"`` (the
+    vectorized kernel over a broadcast feature table; the probe is
+    never shuffled) and ``"merge_asof"`` (only here: cogrouped
+    ``pandas.merge_asof`` per entity).  ``"auto"`` (default) picks
+    broadcast when the feature side is provably small, else union; see
+    :func:`asof_join_multi` for the gate, tolerance and skew salting.
 
     Leakage-free by construction: joined values only ever come from
-    right rows at or before the probe timestamp.
-
-    Precondition: probe timestamps must be non-null (a NULL event time
-    has no point-in-time meaning); filter them upstream.
-
-    Strategy (all three produce identical results — pytest equivalence
-    + the same SQL oracle check every path):
-
-    * ``"auto"`` (default): pick ``broadcast`` when the FEATURE side is
-      provably small — Catalyst size estimate under
-      ``TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES`` (default 64 MB, 0
-      disables) confirmed by an actual row count under the broadcast
-      guardrail — else fall back to ``union``.  The same reasoning as
-      Spark's own ``autoBroadcastJoinThreshold`` for equi-joins:
-      broadcasting the side that fits removes the ONLY shuffle of the
-      (wide, 10^12-row at scale) probe side.  Explicit ``salt_buckets``
-      is a skew declaration for the shuffle path, so it forces union.
-    * ``"union"``: union-tag + window fill-forward — one entity-hash
-      shuffle of both sides, fully JVM-side.  The scale-out path when
-      the feature side does NOT fit in executor memory.
-    * ``"broadcast"``: force the broadcast kernel (raises above the
-      row guardrail).
-    * ``"merge_asof"``: cogrouped ``pandas.merge_asof`` per entity.
-
-    Skew (``salt_buckets > 1``, union strategy): salting is applied only
-    to **hot entities** — those with ``>= salt_threshold`` probe rows
-    (default ``DEFAULT_SALT_THRESHOLD``).  Cold entities keep the plain
-    single-bucket path, so the feature side is replicated xN only for
-    the handful of keys that need it instead of the whole table.
+    right rows at or before the probe timestamp.  Feature rows whose
+    ``right_ts`` is NULL are ignored by every strategy.  Precondition:
+    probe timestamps must be non-null (a NULL event time has no
+    point-in-time meaning); filter them upstream.
     """
-    value_cols = list(
-        value_cols
-        if value_cols is not None
-        else [c for c in right.columns if c not in (on, right_ts)]
-    )
-    if strategy == "auto":
-        n = _auto_broadcast_rows(right, salt_buckets)
-        if n is not None:
-            return _asof_broadcast(
-                left, right, on, left_ts, right_ts, value_cols, tolerance_sec,
-                keep_right_ts, precounted=n,
-            )
-        strategy = "union"
-    if strategy == "union":
-        return _asof_union(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec,
-            salt_buckets, salt_threshold, keep_right_ts,
-        )
+    spec = dict(name="__asof", df=right, ts=right_ts, value_cols=value_cols,
+                tolerance_sec=tolerance_sec)
+    matched = f"matched_{right_ts}"
     if strategy == "merge_asof":
-        return _asof_merge(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec, keep_right_ts
+        out = _asof_merge(left, _specs(left, [spec], on)[0], on, left_ts, matched)
+    else:
+        out = asof_join_multi(left, [spec], on, left_ts, salt_buckets, salt_threshold, strategy)
+        out = out.withColumnRenamed("__asof_matched_ts", matched)
+    return out if keep_right_ts else out.drop(matched)
+
+
+def asof_join_multi(
+    left: DataFrame,
+    tables: Sequence[dict],
+    on: str,
+    left_ts: str = "ts",
+    salt_buckets: int = 1,
+    salt_threshold: Optional[int] = None,
+    strategy: str = "auto",
+) -> DataFrame:
+    """Backward as-of join of k >= 1 feature tables onto one probe
+    spine in one pass — the library's one as-of engine: ``asof_join``
+    is its k=1 case and adds only the ``"merge_asof"`` strategy.
+
+    ``tables`` is a sequence of specs::
+
+        dict(name="purch", df=purchases, ts="feature_ts",
+             value_cols=None, tolerance_sec=None)
+
+    Per table: the latest row of the same entity with
+    ``ts <= left_ts`` (exact ties match), emitted as the table's value
+    columns (``value_cols=None``: every column but ``on`` and ``ts``)
+    plus ``{name}_matched_ts``.  With ``tolerance_sec`` a match older
+    than that many seconds counts as none.  Feature rows whose ts is
+    NULL are ignored.
+
+    Strategy — all return identical rows:
+
+    * ``"auto"`` (default): ``"broadcast"`` when EVERY feature side is
+      provably small — each Catalyst size estimate under
+      ``TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES`` (default 64 MB, 0
+      disables), all k checked before any count is paid, then one
+      confirming row count per table under the broadcast guardrail —
+      else ``"union"``.  The reasoning of Spark's own
+      ``autoBroadcastJoinThreshold``: broadcasting the side that fits
+      removes the only shuffle of the (wide, 10^12-row at scale) probe
+      side.  Explicit ``salt_buckets`` declares skew for the shuffle
+      path, so it forces union.
+    * ``"union"``: every table's payload rides its own nullable struct
+      column on one shared union spine; the k
+      ``last(struct_k, ignorenulls=True)`` window functions share one
+      window spec, so Catalyst evaluates them in ONE Window operator
+      over ONE entity Exchange + sort — the probe spine moves once, not
+      once per table.  Per-table fill-forwards stay independent because
+      rows of table j carry NULL in table k's struct.
+    * ``"broadcast"``: force the kernel; raises above the row guardrail.
+      One Arrow crossing matches all k tables.
+
+    Skew (``salt_buckets > 1``, union): one shared hot-key pass over
+    the probe side finds the entities with ``>= salt_threshold`` probe
+    rows (default ``DEFAULT_SALT_THRESHOLD``); their probe rows split
+    into hash(ts) buckets and every table's feature rows for them
+    replicate into all buckets.  Cold entities keep the plain path and
+    pay nothing."""
+    from pyspark.sql.types import StructField, StructType
+
+    specs = _specs(left, tables, on)
+    if not specs:
+        return left
+    if _use_broadcast(specs, strategy, salt_buckets):
+        return _asof_broadcast_multi(left, specs, on, left_ts)
+    ts = "__ts"
+    side = "__side"  # 0 = feature (sorts first at ties), 1 = probe
+    bucket = "__bucket"
+    l_schema = left.schema
+    l_cols = l_schema.names
+    # All payload rides ONE struct per feature row: matched ts + every
+    # value column.  Filling forward last(struct, ignorenulls=True)
+    # picks the latest *feature row as a whole*, so a feature row whose
+    # value is SQL NULL still wins (the probe sees NULL value + its
+    # matched ts) — exact pandas merge_asof semantics.
+    for k, sp in enumerate(specs):
+        schema = sp["schema"]
+        sp["fv"] = f"__fv{k}"
+        sp["fv_type"] = StructType(
+            [StructField("__mts", schema[sp["ts"]].dataType)]
+            + [StructField(f"__v_{c}", schema[c].dataType) for c in sp["value_cols"]]
         )
-    if strategy == "broadcast":
-        return _asof_broadcast(
-            left, right, on, left_ts, right_ts, value_cols, tolerance_sec, keep_right_ts
+
+    lhs = left.select(
+        *[F.col(c) for c in l_cols],
+        F.col(left_ts).alias(ts),
+        F.lit(1).alias(side),
+        *[F.lit(None).cast(sp["fv_type"]).alias(sp["fv"]) for sp in specs],
+    )
+    sides = [lhs]
+    for k, sp in enumerate(specs):
+        right, rts = sp["df"], sp["ts"]
+        sides.append(
+            right.select(
+                *[
+                    (F.col(on) if c == on else F.lit(None).cast(l_schema[c].dataType)).alias(c)
+                    for c in l_cols
+                ],
+                F.col(rts).alias(ts),
+                F.lit(0).alias(side),
+                *[
+                    (
+                        F.struct(
+                            F.col(rts).alias("__mts"),
+                            *[F.col(c).alias(f"__v_{c}") for c in sp["value_cols"]],
+                        )
+                        if j == k
+                        else F.lit(None).cast(specs[j]["fv_type"])
+                    ).alias(specs[j]["fv"])
+                    for j in range(len(specs))
+                ],
+            )
         )
-    raise ValueError(f"unknown strategy {strategy!r}")
+
+    salted = salt_buckets > 1
+    hot_keys = (
+        _hot_keys(left, on, salt_threshold or DEFAULT_SALT_THRESHOLD) if salted else []
+    )
+    if salted and hot_keys:
+        tag = _hot_tagger(left.sparkSession, on, hot_keys)
+        sides = [_salt_probe(tag(sides[0]), ts, bucket, salt_buckets)] + [
+            _salt_feature(tag(r), bucket, salt_buckets) for r in sides[1:]
+        ]
+        part = [on, bucket]
+    else:
+        part = [on]
+
+    u = sides[0]
+    for r in sides[1:]:
+        u = u.unionByName(r)
+    w = Window.partitionBy(*part).orderBy(F.col(ts).asc(), F.col(side).asc()).rowsBetween(
+        Window.unboundedPreceding, 0
+    )
+    proj: List[Column] = [F.col(c) for c in l_cols]
+    for sp in specs:
+        ff = F.last(F.col(sp["fv"]), ignorenulls=True).over(w)
+        tol = sp.get("tolerance_sec")
+        if tol is not None:
+            in_tol = ff["__mts"].isNotNull() & (
+                _ts_sec(F.col(ts)) - _ts_sec(ff["__mts"]) <= F.lit(float(tol))
+            )
+            proj += [F.when(in_tol, ff[f"__v_{c}"]).alias(c) for c in sp["value_cols"]]
+            proj.append(F.when(in_tol, ff["__mts"]).alias(sp["matched"]))
+        else:
+            proj += [ff[f"__v_{c}"].alias(c) for c in sp["value_cols"]]
+            proj.append(ff["__mts"].alias(sp["matched"]))
+    return u.select(*proj, F.col(side)).filter(F.col(side) == 1).drop(side)
+
+
+def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
+    """Normalized copies of the table specs, shared by every strategy:
+    ``value_cols=None`` becomes every column but the key and ts, the
+    schema is read once, the output name ``{name}_matched_ts`` is
+    fixed, and feature rows whose
+    ts is NULL are dropped — a NULL feature ts has no point-in-time
+    meaning (the union spine would sort it first and fill its value
+    forward with no matched ts).  Raises on colliding output columns."""
+    specs: List[dict] = []
+    out_names = list(left.columns)
+    for t in tables:
+        sp = dict(t)
+        right, rts = sp["df"], sp["ts"]
+        sp["schema"] = right.schema
+        sp["value_cols"] = list(
+            sp["value_cols"]
+            if sp.get("value_cols") is not None
+            else [c for c in sp["schema"].names if c not in (on, rts)]
+        )
+        sp["df"] = right.filter(F.col(rts).isNotNull())
+        sp["matched"] = f"{sp['name']}_matched_ts"
+        for c in sp["value_cols"] + [sp["matched"]]:
+            if c in out_names:
+                raise ValueError(
+                    f"asof_join_multi: output column {c!r} of table "
+                    f"{sp['name']!r} collides with an earlier column; "
+                    "pass value_cols / rename to disambiguate"
+                )
+            out_names.append(c)
+        specs.append(sp)
+    return specs
 
 
 # Auto-strategy gate: feature sides whose Catalyst size ESTIMATE is
@@ -144,22 +299,33 @@ def _auto_stats_small(right: DataFrame) -> bool:
     return est <= _AUTO_BROADCAST_MAX_BYTES
 
 
-def _auto_broadcast_rows(right: DataFrame, salt_buckets: int) -> Optional[int]:
-    """Row count of ``right`` when the auto strategy should broadcast
-    it, else None (union).  Two-step decision: the free statistics gate,
-    then one cheap count of the (estimated-small) side to confirm — so
-    a huge feature table never pays a count just to be told to shuffle.
-    Note the residual risk: both gates can be fooled together when
-    Catalyst underestimates a <=5M-row frame of very wide rows (the
-    row guardrail bounds rows, not bytes) — set
-    TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES=0 to force union for such
-    workloads."""
+def _use_broadcast(specs: Sequence[dict], strategy: str, salt_buckets: int) -> bool:
+    """The strategy gate: True for the broadcast kernel, False for the
+    union spine.  For ``"auto"``: the k free statistics gates first, so
+    one oversized table decides union before any count job is paid,
+    then one count per (estimated-small) table to confirm.  Residual
+    risk: both gates can be fooled together when Catalyst underestimates
+    a <=5M-row frame of very wide rows (the row guardrail bounds rows,
+    not bytes) — set TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES=0 to force
+    union for such workloads."""
+    if strategy == "broadcast":
+        for sp in specs:
+            n = sp["df"].count()
+            if n > _BROADCAST_MAX_ROWS:
+                raise ValueError(
+                    f"feature side {sp['name']!r} has {n} rows; too large to "
+                    "broadcast — use strategy='union'"
+                )
+        return True
+    if strategy == "union":
+        return False
+    if strategy != "auto":
+        raise ValueError(f"unknown strategy {strategy!r}")
     if salt_buckets > 1 or _AUTO_BROADCAST_MAX_BYTES <= 0:
-        return None
-    if not _auto_stats_small(right):
-        return None
-    n = right.count()
-    return n if n <= _BROADCAST_MAX_ROWS else None
+        return False
+    return all(_auto_stats_small(sp["df"]) for sp in specs) and all(
+        sp["df"].count() <= _BROADCAST_MAX_ROWS for sp in specs
+    )
 
 
 # Probe rows per entity above which a key counts as hot and gets salted.
@@ -252,315 +418,40 @@ def _salt_feature(tagged: DataFrame, bucket: str, salt_buckets: int) -> DataFram
     ).drop("__hot")
 
 
-def _asof_union(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
-    salt_buckets: int,
-    salt_threshold: Optional[int],
-    keep_right_ts: bool,
-) -> DataFrame:
-    """Union-tag + fill-forward: one shuffle, no UDF.
+def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) -> DataFrame:
+    """``asof_join(strategy="merge_asof")`` for one normalized spec:
+    co-group both sides by entity and run ``pandas.merge_asof`` per
+    group (Arrow-batched, vectorized — no per-row Python).
 
-    Both sides are unioned on a common (entity, ts) spine with a side
-    tag; within each entity ordered by (ts, side) — feature rows sort
-    *before* probe rows at equal ts so exact matches are visible — a
-    ``last(value, ignorenulls=True)`` running window carries each
-    feature value forward onto probe rows.
-    """
-    ts = "__ts"
-    side = "__side"  # 0 = feature (sorts first at ties), 1 = probe
-    l_cols = left.columns
-
-    salted = salt_buckets > 1
-    bucket = "__bucket"
-    l_sel = [F.col(c) for c in l_cols]
-    # All payload rides ONE struct per feature row: matched_ts + every
-    # value column.  Filling forward last(struct, ignorenulls=True)
-    # picks the latest *feature row as a whole*, so a feature row whose
-    # value is SQL NULL still wins (the probe sees NULL value + its
-    # matched_ts) — exact pandas merge_asof semantics.  Per-column
-    # last(ignorenulls) would skip NULL values and pair a stale value
-    # with a newer matched_ts.
-    from pyspark.sql.types import StructField, StructType
-
-    fv_type = StructType(
-        [StructField("__mts", right.schema[right_ts].dataType)]
-        + [StructField(f"__v_{c}", right.schema[c].dataType) for c in value_cols]
-    )
-    lhs = left.select(
-        *l_sel,
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(side),
-        F.lit(None).cast(fv_type).alias("__fv"),
-    )
-    rhs = right.select(
-        *[
-            (F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-            for c in l_cols
-        ],
-        F.col(right_ts).alias(ts),
-        F.lit(0).alias(side),
-        F.struct(
-            F.col(right_ts).alias("__mts"),
-            *[F.col(c).alias(f"__v_{c}") for c in value_cols],
-        ).alias("__fv"),
-    )
-    hot_keys = (
-        _hot_keys(left, on, salt_threshold or DEFAULT_SALT_THRESHOLD) if salted else []
-    )
-    if salted and hot_keys:
-        tag = _hot_tagger(left.sparkSession, on, hot_keys)
-        lhs = _salt_probe(tag(lhs), ts, bucket, salt_buckets)
-        rhs = _salt_feature(tag(rhs), bucket, salt_buckets)
-        part = [on, bucket]
-    else:
-        part = [on]
-
-    u = lhs.unionByName(rhs)
-    w = Window.partitionBy(*part).orderBy(F.col(ts).asc(), F.col(side).asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    ff = F.last(F.col("__fv"), ignorenulls=True).over(w)
-    filled = u.select(
-        *l_cols,
-        F.col(ts),
-        F.col(side),
-        *[ff[f"__v_{c}"].alias(f"__f_{c}") for c in value_cols],
-        ff["__mts"].alias("__f_ts"),
-    )
-    out = filled.filter(F.col(side) == 1)
-    if tolerance_sec is not None:
-        in_tol = F.col("__f_ts").isNotNull() & (
-            _ts_sec(F.col(ts)) - _ts_sec(F.col("__f_ts")) <= F.lit(float(tolerance_sec))
-        )
-        out = out.select(
-            *l_cols,
-            *[F.when(in_tol, F.col(f"__f_{c}")).alias(c) for c in value_cols],
-            F.when(in_tol, F.col("__f_ts")).alias("__f_ts"),
-        )
-    else:
-        out = out.select(
-            *l_cols, *[F.col(f"__f_{c}").alias(c) for c in value_cols], F.col("__f_ts")
-        )
-    if keep_right_ts:
-        out = out.withColumnRenamed("__f_ts", f"matched_{right_ts}")
-    else:
-        out = out.drop("__f_ts")
-    return out
-
-
-def asof_join_multi(
-    left: DataFrame,
-    tables: Sequence[dict],
-    on: str,
-    left_ts: str = "ts",
-    salt_buckets: int = 1,
-    salt_threshold: Optional[int] = None,
-    strategy: str = "auto",
-) -> DataFrame:
-    """Fused backward as-of join of K feature tables onto one probe
-    spine in ONE union + ONE entity-partitioned window pass.
-
-    ``tables`` is a sequence of specs::
-
-        dict(name="purch", df=purchases, ts="feature_ts",
-             value_cols=None, tolerance_sec=None)
-
-    Per table the semantics are exactly ``asof_join(strategy='union')``:
-    latest right row with ``right_ts <= left_ts`` (exact ties match),
-    emitted as the table's value columns plus ``{name}_matched_ts``.
-
-    Why fused: the sequential loop shuffles the (wide, 10^12-row) probe
-    spine once PER TABLE — k tables, k Exchanges of the big side.  Here
-    every table's payload rides its own nullable struct column on one
-    shared union spine; the K ``last(struct_k, ignorenulls=True)``
-    window functions share a single window spec, so Catalyst evaluates
-    them in ONE Window operator over ONE Exchange + sort of the spine.
-    Per-table fill-forwards stay independent because rows of table j
-    carry NULL in table k's struct and ``ignorenulls`` skips them.
-
-    Skew: one shared hot-key pass over the probe side; hot probe rows
-    split into hash(ts) buckets, every table's hot feature rows
-    replicate into all buckets (cold keys pay nothing).
-
-    Strategy: ``"auto"`` (default) chains the zero-shuffle broadcast
-    kernel per table when EVERY feature side is provably small (the
-    ``asof_join`` auto gate) — k broadcast matches pipeline inside one
-    probe-scan stage, the probe spine never shuffles at all.  Otherwise
-    (or with ``strategy="union"`` / explicit ``salt_buckets``) the
-    fused one-union-one-window pass above.  Results are identical
-    either way: each table's fill-forward is independent, so k chained
-    broadcast matches compute exactly the k fused window columns."""
-    from pyspark.sql.types import StructField, StructType
-
-    specs = [dict(t) for t in tables]
-    if not specs:
-        return left
-    ts = "__ts"
-    side = "__side"  # 0 = feature (sorts first at ties), 1 = probe
-    bucket = "__bucket"
-    l_cols = left.columns
-    out_names: List[str] = list(l_cols)
-    for k, sp in enumerate(specs):
-        right, rts = sp["df"], sp["ts"]
-        sp["value_cols"] = list(
-            sp.get("value_cols")
-            or [c for c in right.columns if c not in (on, rts)]
-        )
-        sp["matched"] = f"{sp['name']}_matched_ts"
-        for c in sp["value_cols"] + [sp["matched"]]:
-            if c in out_names:
-                raise ValueError(
-                    f"asof_join_multi: output column {c!r} of table "
-                    f"{sp['name']!r} collides with an earlier column; "
-                    "pass value_cols / rename to disambiguate"
-                )
-            out_names.append(c)
-        sp["fv"] = f"__fv{k}"
-        sp["fv_type"] = StructType(
-            [StructField("__mts", right.schema[rts].dataType)]
-            + [StructField(f"__v_{c}", right.schema[c].dataType) for c in sp["value_cols"]]
-        )
-
-    if strategy == "auto":
-        # all k FREE stats gates first — one oversized table decides
-        # union without any count job having been paid (review r8)
-        if (
-            salt_buckets <= 1
-            and _AUTO_BROADCAST_MAX_BYTES > 0
-            and all(_auto_stats_small(sp["df"]) for sp in specs)
-        ):
-            counts = [sp["df"].count() for sp in specs]
-            if all(n <= _BROADCAST_MAX_ROWS for n in counts):
-                return _asof_broadcast_multi(left, specs, on, left_ts, counts)
-    elif strategy != "union":
-        raise ValueError(f"unknown strategy {strategy!r}")
-
-    lhs = left.select(
-        *[F.col(c) for c in l_cols],
-        F.col(left_ts).alias(ts),
-        F.lit(1).alias(side),
-        *[F.lit(None).cast(sp["fv_type"]).alias(sp["fv"]) for sp in specs],
-    )
-    sides = [lhs]
-    for k, sp in enumerate(specs):
-        right, rts = sp["df"], sp["ts"]
-        sides.append(
-            right.select(
-                *[
-                    (F.col(on) if c == on else F.lit(None).cast(left.schema[c].dataType)).alias(c)
-                    for c in l_cols
-                ],
-                F.col(rts).alias(ts),
-                F.lit(0).alias(side),
-                *[
-                    (
-                        F.struct(
-                            F.col(rts).alias("__mts"),
-                            *[F.col(c).alias(f"__v_{c}") for c in sp["value_cols"]],
-                        )
-                        if j == k
-                        else F.lit(None).cast(specs[j]["fv_type"])
-                    ).alias(specs[j]["fv"])
-                    for j in range(len(specs))
-                ],
-            )
-        )
-
-    salted = salt_buckets > 1
-    hot_keys = (
-        _hot_keys(left, on, salt_threshold or DEFAULT_SALT_THRESHOLD) if salted else []
-    )
-    if salted and hot_keys:
-        tag = _hot_tagger(left.sparkSession, on, hot_keys)
-        sides = [_salt_probe(tag(sides[0]), ts, bucket, salt_buckets)] + [
-            _salt_feature(tag(r), bucket, salt_buckets) for r in sides[1:]
-        ]
-        part = [on, bucket]
-    else:
-        part = [on]
-
-    u = sides[0]
-    for r in sides[1:]:
-        u = u.unionByName(r)
-    w = Window.partitionBy(*part).orderBy(F.col(ts).asc(), F.col(side).asc()).rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    proj: List[Column] = [F.col(c) for c in l_cols]
-    for sp in specs:
-        ff = F.last(F.col(sp["fv"]), ignorenulls=True).over(w)
-        tol = sp.get("tolerance_sec")
-        if tol is not None:
-            in_tol = ff["__mts"].isNotNull() & (
-                _ts_sec(F.col(ts)) - _ts_sec(ff["__mts"]) <= F.lit(float(tol))
-            )
-            proj += [F.when(in_tol, ff[f"__v_{c}"]).alias(c) for c in sp["value_cols"]]
-            proj.append(F.when(in_tol, ff["__mts"]).alias(sp["matched"]))
-        else:
-            proj += [ff[f"__v_{c}"].alias(c) for c in sp["value_cols"]]
-            proj.append(ff["__mts"].alias(sp["matched"]))
-    return u.select(*proj, F.col(side)).filter(F.col(side) == 1).drop(side)
-
-
-def _asof_merge(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
-    keep_right_ts: bool,
-) -> DataFrame:
-    """Co-partition by entity + per-partition ``pandas.merge_asof``
-    (Arrow-batched, vectorized — no per-row Python).
-
-    Partition-boundary-correct because partitioning is on the entity
-    key only (never on time), so an entity's full feature history is
+    Partition-boundary-correct because grouping is on the entity key
+    only (never on time), so an entity's full feature history is
     visible to its probe rows.
     """
-    l_cols = left.columns
-    rv = right.select(
-        F.col(on), F.col(right_ts), *[F.col(c) for c in value_cols]
-    ).withColumnRenamed(right_ts, "__rts")
-    lt = left.withColumn("__side", F.lit(1))
-    rt = rv.withColumn("__side", F.lit(0))
-    # single cogroup-style shuffle: tag and union, group by entity
+    right, schema, value_cols, tol = sp["df"], sp["schema"], sp["value_cols"], sp.get("tolerance_sec")
+    l_schema = left.schema
+    l_cols = l_schema.names
+    out_cols = l_cols + value_cols + [matched]
+    rv = right.select(F.col(on), F.col(sp["ts"]).alias("__rts"), *[F.col(c) for c in value_cols])
     merged_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in left.schema.fields]
-        + [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in value_cols]
-        + [f"`matched_{right_ts}` {right.schema[right_ts].dataType.simpleString()}"]
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in l_schema.fields]
+        + [f"`{c}` {schema[c].dataType.simpleString()}" for c in value_cols]
+        + [f"`{matched}` {schema[sp['ts']].dataType.simpleString()}"]
     )
 
     def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         if lpdf.empty:
-            return pd.DataFrame(columns=l_cols + value_cols + [f"matched_{right_ts}"])
-        lpdf = lpdf.sort_values(left_ts, kind="stable")
-        rpdf = rpdf.sort_values("__rts", kind="stable")[["__rts"] + value_cols]
+            return pd.DataFrame(columns=out_cols)
         out = pd.merge_asof(
-            lpdf,
-            rpdf,
+            lpdf.sort_values(left_ts, kind="stable"),
+            rpdf.sort_values("__rts", kind="stable")[["__rts"] + value_cols],
             left_on=left_ts,
             right_on="__rts",
             direction="backward",
-            tolerance=pd.Timedelta(seconds=tolerance_sec) if tolerance_sec is not None else None,
+            tolerance=pd.Timedelta(seconds=tol) if tol is not None else None,
         )
-        out = out.rename(columns={"__rts": f"matched_{right_ts}"})
-        return out[l_cols + value_cols + [f"matched_{right_ts}"]]
+        return out.rename(columns={"__rts": matched})[out_cols]
 
-    out = (
-        lt.groupBy(on)
-        .cogroup(rt.groupBy(on))
-        .applyInPandas(lambda lp, rp: merge(lp, rp), merged_schema)
-    )
-    if not keep_right_ts:
-        out = out.drop(f"matched_{right_ts}")
-    return out
+    return left.groupBy(on).cogroup(rv.groupBy(on)).applyInPandas(merge, merged_schema)
 
 
 # Broadcast guardrail: each feature row costs ~8B (ts) + 8-ish B per
@@ -578,7 +469,10 @@ _TS_UNMATCHED = -(2**63)
 
 def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]) -> dict:
     """Flat broadcastable (entity-code, ts, values) arrays sorted by
-    (code, ts): each entity's history is one contiguous block."""
+    (code, ts): each entity's history is one contiguous block.  ``right``
+    must hold no NULL ts (``_specs`` drops them): pandas would sort one
+    last and int64 conversion would turn it into INT64_MIN, breaking the
+    sorted-key invariant ``searchsorted`` relies on."""
     import numpy as np
 
     pdf = (
@@ -587,12 +481,6 @@ def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]
             F.unix_micros(F.col(right_ts).cast("timestamp")).alias("__t"),
             *[F.col(c) for c in value_cols],
         )
-        # A NULL feature ts has no point-in-time meaning; keeping it
-        # would also corrupt the kernel (pandas sorts NaN last, then
-        # int64 conversion turns it into INT64_MIN, breaking the
-        # sorted-key invariant searchsorted relies on) — drop it here,
-        # matching the probe-side non-null precondition.
-        .filter(F.col(right_ts).isNotNull())
         .toPandas()
         .sort_values(["__e", "__t"], kind="stable")
         .reset_index(drop=True)
@@ -691,23 +579,14 @@ def _bcast_match_cols(
     return data
 
 
-def _asof_broadcast_multi(
-    left: DataFrame, specs: Sequence[dict], on: str, left_ts: str, counts: Sequence[int]
-) -> DataFrame:
-    """Fused k-table broadcast as-of: ONE Arrow crossing matches every
-    table (vs k chained pandas-UDF stages — k-fold fewer JVM<->Python
-    transfers of the probe's (entity, ts) columns; guide §4.1).  The
-    probe side is never shuffled.  Output columns/types are identical
-    to the union-fused pass: l_cols, then per table value_cols +
-    ``{name}_matched_ts``."""
+def _asof_broadcast_multi(left: DataFrame, specs: Sequence[dict], on: str, left_ts: str) -> DataFrame:
+    """The broadcast kernel for k normalized specs: ONE Arrow crossing
+    matches every table (k chained pandas-UDF stages would ship the
+    probe's (entity, ts) columns to Python k times).  The probe side is
+    never shuffled.  Output columns/types are identical to the union
+    spine's: l_cols, then per table value_cols + ``{name}_matched_ts``."""
     spark = left.sparkSession
-    tables = []
-    for sp, n in zip(specs, counts):
-        if n > _BROADCAST_MAX_ROWS:  # caller gates; keep the guardrail
-            raise ValueError(
-                f"feature side {sp['name']!r} has {n} rows; too large to broadcast"
-            )
-        tables.append(_bcast_build(sp["df"], on, sp["ts"], sp["value_cols"]))
+    tables = [_bcast_build(sp["df"], on, sp["ts"], sp["value_cols"]) for sp in specs]
     bc = spark.sparkContext.broadcast(tables)
     tols = [
         None if sp.get("tolerance_sec") is None else int(sp["tolerance_sec"] * 1_000_000)
@@ -715,14 +594,14 @@ def _asof_broadcast_multi(
     ]
     all_vcols = [list(sp["value_cols"]) for sp in specs]
     fields = ", ".join(
-        f"`{c}` {sp['df'].schema[c].dataType.simpleString()}"
+        f"`{c}` {sp['schema'][c].dataType.simpleString()}"
         for sp in specs
         for c in sp["value_cols"]
     )
     fields += ", " + ", ".join(f"`__matched_us_{k}` bigint" for k in range(len(specs)))
 
     @F.pandas_udf(fields)
-    def _match_all(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
+    def _match(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
         data = {}
         for k, tb in enumerate(bc.value):
             data.update(
@@ -734,7 +613,7 @@ def _asof_broadcast_multi(
 
     l_cols = left.columns
     out = left.withColumn(
-        "__m", _match_all(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp")))
+        "__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp")))
     )
     sel: List[Column] = [F.col(c) for c in l_cols]
     for k, sp in enumerate(specs):
@@ -743,67 +622,10 @@ def _asof_broadcast_multi(
             F.when(
                 F.col(f"__m.__matched_us_{k}") != F.lit(_TS_UNMATCHED),
                 F.timestamp_micros(F.col(f"__m.__matched_us_{k}")).cast(
-                    sp["df"].schema[sp["ts"]].dataType
+                    sp["schema"][sp["ts"]].dataType
                 ),
             ).alias(sp["matched"])
         )
-    return out.select(*sel)
-
-
-def _asof_broadcast(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str,
-    right_ts: str,
-    value_cols: List[str],
-    tolerance_sec: Optional[float],
-    keep_right_ts: bool,
-    precounted: Optional[int] = None,
-) -> DataFrame:
-    """Broadcast as-of: when the feature side fits in executor memory
-    (the common feature-store shape — features per entity are small even
-    when the probe table is 10^12 rows), ship flat (entity-code, ts,
-    values) arrays sorted by (code, ts) to every task and match fully
-    vectorized per Arrow batch: entity -> code via one C-level hash-map
-    lookup, block bounds via two ``searchsorted`` calls over the sorted
-    code array, then one ``searchsorted`` per distinct code in the batch
-    (numpy slices only — no pandas groupby, no per-row Python).  ZERO
-    shuffle of the (wide) probe side — the same reasoning as
-    broadcasting the small side of an equi-join.
-    """
-    spark = left.sparkSession
-    n = precounted if precounted is not None else right.count()
-    if n > _BROADCAST_MAX_ROWS:
-        raise ValueError(
-            f"feature side has {n} rows; too large to broadcast — use strategy='union'"
-        )
-    table = _bcast_build(right, on, right_ts, value_cols)
-    bc = spark.sparkContext.broadcast(table)
-    tol_us = None if tolerance_sec is None else int(tolerance_sec * 1_000_000)
-
-    fields = ", ".join(
-        [f"`{c}` {right.schema[c].dataType.simpleString()}" for c in value_cols]
-        + ["`__matched_us` bigint"]
-    )
-
-    @F.pandas_udf(fields)
-    def _match(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
-        return pd.DataFrame(
-            _bcast_match_cols(bc.value, entity, ts_us, tol_us, value_cols, "__matched_us")
-        )
-
-    l_cols = left.columns
-    out = left.withColumn(
-        "__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp")))
-    )
-    matched_ts = F.when(
-        F.col("__m.__matched_us") != F.lit(_TS_UNMATCHED),
-        F.timestamp_micros(F.col("__m.__matched_us")).cast(right.schema[right_ts].dataType),
-    )
-    sel = [F.col(c) for c in l_cols] + [F.col(f"__m.{c}").alias(c) for c in value_cols]
-    if keep_right_ts:
-        sel.append(matched_ts.alias(f"matched_{right_ts}"))
     return out.select(*sel)
 
 

@@ -84,8 +84,9 @@ def run_job(args: argparse.Namespace) -> None:
     else:
         # fresh run: never reuse prior bucket outputs (run() skips any
         # bucket with an existing manifest, which without --resume would
-        # silently serve stale data when fingerprinting is off)
-        writer.clear_manifests()
+        # silently serve stale data when fingerprinting is off), and
+        # never leave a bucket directory of another --buckets layout
+        writer.clear()
     status = writer.run(out, progress=True)
     print(f"complete={status.is_complete} buckets={len(status.completed)}")
 
