@@ -1,19 +1,21 @@
 """The allocator-tuning env defaults `get_spark` exports for the JVM
 gateway and its forked Python workers (guide §4: page-fault/memcg
-charge churn from per-buffer mmap/munmap in every Arrow stage)."""
+charge churn from per-buffer mmap/munmap in every Arrow stage), and its
+choice of shuffle scratch dir."""
 
 import os
 
 import pytest
 
-from torchestra_spark.session import _apply_malloc_tuning
+from torchestra_spark import session
+from torchestra_spark.session import _apply_malloc_tuning, _local_dir
 
 _KEYS = ("MALLOC_MMAP_THRESHOLD_", "MALLOC_TRIM_THRESHOLD_", "ARROW_DEFAULT_MEMORY_POOL")
 
 
 @pytest.fixture(autouse=True)
 def _own_env(monkeypatch):
-    """Let monkeypatch own every key ``_apply_malloc_tuning`` reads or
+    """Let monkeypatch own every key the session helpers read or
     may set, so os.environ is the same before and after each test.
     ``delenv`` on an absent key records nothing to undo, so each key is
     set first (recording its prior state) and then removed."""
@@ -21,7 +23,7 @@ def _own_env(monkeypatch):
         return {k: v for k, v in os.environ.items() if k != "PYTEST_CURRENT_TEST"}
 
     before = env()
-    for k in _KEYS + ("SPARK_GRAFT_MALLOC_TUNING",):
+    for k in _KEYS + ("SPARK_GRAFT_MALLOC_TUNING", "SPARK_GRAFT_LOCAL_DIR"):
         monkeypatch.setenv(k, "")
         monkeypatch.delenv(k)
     yield
@@ -49,8 +51,34 @@ def test_malloc_tuning_respects_existing_values(monkeypatch):
 
 
 def test_malloc_tuning_disabled_by_env(monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_MALLOC_TUNING", "0")
-    _apply_malloc_tuning()
+    for off in ("0", "false", "FALSE", "no", "Off", " off "):
+        monkeypatch.setenv("SPARK_GRAFT_MALLOC_TUNING", off)
+        _apply_malloc_tuning()
 
-    for k in _KEYS:
-        assert k not in os.environ
+        for k in _KEYS:
+            assert k not in os.environ, off
+
+
+@pytest.mark.parametrize("free_gib, master, want", [
+    (16, "local[4]", "/dev/shm"),
+    (16, "local", "/dev/shm"),
+    (16, "local[*]", "/dev/shm"),
+    (1, "local[4]", None),                 # tmpfs too small
+    (16, "spark://head:7077", None),       # cluster: /dev/shm is the driver's
+    (16, "yarn", None),
+    (16, "k8s://https://api:6443", None),
+])
+def test_local_dir_shm_only_for_local_master(monkeypatch, free_gib, master, want):
+    class _St:
+        f_bavail, f_frsize = free_gib * 1024**2, 1024
+
+    monkeypatch.setattr(session.os.path, "isdir", lambda p: True)
+    monkeypatch.setattr(session.os, "access", lambda p, mode: True)
+    monkeypatch.setattr(session.os, "statvfs", lambda p: _St)
+    assert _local_dir(master) == want
+
+
+@pytest.mark.parametrize("master", ["local[4]", "spark://head:7077"])
+def test_local_dir_env_override(monkeypatch, master):
+    monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/scratch/nvme")
+    assert _local_dir(master) == "/scratch/nvme"

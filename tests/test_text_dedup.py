@@ -526,17 +526,25 @@ def test_lsh_buckets_multi_bit_identical_to_per_table(spark):
 def test_minhash_simhash_empty_doc_segments(spark):
     """Batch-vectorized sketches handle empty docs anywhere in the batch
     (leading / interior / trailing reduceat segments)."""
-    texts = ["", "alpha beta gamma delta", "", "one two three four", ""]
-    df = spark.createDataFrame(pd.DataFrame({"doc_id": range(5), "text": texts}))
+    texts = ["", "alpha beta gamma delta", "", "one two three four", "", None, "solo"]
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": range(7), "text": texts}), "doc_id long, text string"
+    ).repartition(4)
+    # plus a partition holding only NULL / empty / one-word docs
+    df = df.union(spark.createDataFrame(
+        [(7, None), (8, ""), (9, "lone")], "doc_id long, text string").coalesce(1))
     sigs = {
         r["doc_id"]: list(r["signature"])
         for r in D.minhash_signatures(df, "text", "doc_id", k=8, shingle_n=2).collect()
     }
-    assert sigs[0] == sigs[2] == sigs[4] == [D._MERSENNE] * 8
+    # NULL text, empty text and a doc shorter than one shingle all get
+    # the empty signature
+    empty = [0, 2, 4, 5, 6, 7, 8, 9]
+    assert all(sigs[i] == [D._MERSENNE] * 8 for i in empty)
     assert sigs[1] != sigs[3] and max(sigs[1]) < D._MERSENNE
     sh = {r["doc_id"]: r["simhash"] for r in D.simhash64(df, "text", "doc_id").collect()}
-    assert sh[0] == sh[2] == sh[4] == 0
-    assert sh[1] != 0 and sh[3] != 0
+    assert all(sh[i] == 0 for i in (0, 2, 4, 5, 7, 8))
+    assert sh[1] != 0 and sh[3] != 0 and sh[6] != 0
     # partitioning invariance: same results in a single partition
     sigs1 = {
         r["doc_id"]: list(r["signature"])
@@ -857,16 +865,25 @@ def test_near_dup_sketches_parity(spark):
     rows += [(100, list(range(30))), (101, list(range(30))),
              (102, list(range(15)) + [999] + list(range(15, 30))),
              (103, [7] * 20)]
+    # NULL list, empty list and shorter-than-k docs mixed into the batch
+    rows += [(104, None), (105, []), (106, [4, 5])]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>").repartition(5)
+    # plus a partition holding only NULL / empty / shorter-than-k docs
+    df = df.union(spark.createDataFrame(
+        [(107, None), (108, []), (109, [9])], "doc_id long, tokens array<int>").coalesce(1))
     sk = {r.doc_id: r for r in
           D.near_dup_sketches(df, "tokens", "doc_id", k=3, w=4).collect()}
     ref_sim = {r.doc_id: r.simhash
                for r in D.simhash_tokens(df, "tokens", "doc_id").collect()}
-    ref_fps = {r.doc_id: sorted(set(r.fps)) for r in df.select(
+    ref_fps = {r.doc_id: sorted(set(r.fps or [])) for r in df.select(
         "doc_id", T.winnow_fingerprints_tokens(F.col("tokens"), k=3, w=4).alias("fps")
     ).collect()}
     assert {i: r.simhash for i, r in sk.items()} == ref_sim
     assert {i: sorted(r.winnow_fps) for i, r in sk.items()} == ref_fps
+    # a NULL list sketches exactly like an empty one
+    for i in (104, 105, 107, 108):
+        assert (sk[i].simhash, list(sk[i].winnow_fps)) == (0, [])
+    assert list(sk[106].winnow_fps) == list(sk[109].winnow_fps) == []
 
 
 def test_near_dup_report_equals_separate_paths(spark):
@@ -1131,9 +1148,14 @@ def test_simhash_probe_index_batch(spark):
         [(10, list(range(40))),                       # exact copy of ref 0
          (11, list(range(39)) + [555]),               # near dup of ref 0
          (12, list(range(5000, 5040))),               # unrelated
-         (13, [])],                                   # empty
+         (13, []),                                    # empty
+         (14, None),                                  # NULL
+         (15, [3])],                                  # one token
         "doc_id long, tokens array<int>",
-    )
+    ).repartition(4)
+    # plus a partition holding only NULL / empty docs
+    probe = probe.union(spark.createDataFrame(
+        [(16, None), (17, [])], "doc_id long, tokens array<int>").coalesce(1))
     idx = D.build_simhash_index(ref, "tokens", "doc_id", prefix_bits=8, tables=8)
     out = {r.doc_id: (r.near_dup_matches, r.is_near_dup)
            for r in D.mark_near_dups_indexed(probe, "tokens", "doc_id", idx,
@@ -1141,12 +1163,14 @@ def test_simhash_probe_index_batch(spark):
     assert out[10] == (1, True)
     assert out[11][1] is True
     assert out[12] == (0, False)
-    assert out[13] == (0, False)
+    for i in (13, 14, 15, 16, 17):
+        assert out[i] == (0, False)
     # match semantics equal the blocked join run on the union corpus
     sim_ref = {r.doc_id: r.simhash for r in D.simhash_tokens(ref, "tokens", "doc_id").collect()}
     sim_pr = {r.doc_id: r.simhash
               for r in D.mark_near_dups_indexed(probe, "tokens", "doc_id", idx).collect()}
     assert sim_pr[10] == sim_ref[0]   # same kernel, bit-identical sketches
+    assert sim_pr[13] == sim_pr[14] == sim_pr[16] == sim_pr[17] == 0  # NULL == empty
 
 
 def test_simhash_probe_index_on_stream_matches_batch(spark, tmp_path):
@@ -1182,9 +1206,15 @@ def test_mark_contaminated_indexed_matches_join_path(spark):
         [(1, [99, 98] + list(range(8)) + [77]),
          (2, list(range(1000, 1030))),
          (3, [0, 1, 2]),
-         (4, list(range(20)))],
+         (4, list(range(20))),
+         (5, None),
+         (6, []),
+         (7, list(range(7)))],  # one token short of an 8-gram
         "doc_id long, tokens array<int>",
-    )
+    ).repartition(4)
+    # plus a partition holding only NULL / empty docs
+    train = train.union(spark.createDataFrame(
+        [(8, None), (9, [])], "doc_id long, tokens array<int>").coalesce(1))
     idx = D.build_contamination_index(ev, "tokens", n=8)
     got = {r.doc_id: (r.contam_hits, r.is_contaminated)
            for r in D.mark_contaminated_indexed(train, "tokens", "doc_id", idx,
@@ -1193,6 +1223,7 @@ def test_mark_contaminated_indexed_matches_join_path(spark):
            for r in D.mark_contaminated(train, "tokens", "doc_id", ev, n=8).collect()}
     assert got == exp
     assert got[4] == (13, True) and got[2] == (0, False)
+    assert all(got[i] == (0, False) for i in (3, 5, 6, 7, 8, 9))
 
 
 def test_mark_contaminated_indexed_on_stream(spark, tmp_path):
@@ -1748,6 +1779,28 @@ def test_exact_knn_batch_boundary_ties(spark):
     out = S.exact_knn_batch(df, "embedding", "vec_id", base[None, :], k=10)
     got = [r["vec_id"] for r in out.orderBy("rank").collect()]
     assert got == list(range(10)), got
+
+
+_BOOKS = np.array([[[0.0, 0.0], [10.0, 10.0]]])  # m=1 subspace, ks=2, dim=2
+_VEC_STAGES = {
+    "pq_encode": lambda df: S.pq_encode(df, "embedding", _BOOKS),
+    "ivfpq_encode": lambda df: S.ivfpq_encode(df, "embedding", np.zeros((1, 2)), _BOOKS),
+    "lsh_buckets": lambda df: S.lsh_buckets(df, "embedding", 2, n_planes=4),
+}
+
+
+@pytest.mark.parametrize("rows, err", [
+    # a NULL between good rows shifted every later vector of the flat
+    # buffer: row 2 silently got row 3's first half
+    ([(1, [0.0, 0.0]), (2, None), (3, [10.0, 10.0, 0.0, 0.0])], "1 NULL embedding"),
+    ([(1, None)], "1 NULL embedding"),  # a lone NULL failed inside numpy's reshape
+    ([(1, [0.0, 0.0]), (2, [10.0, 10.0, 0.0, 0.0])], r"1 embedding\(s\) with length != dim=2"),
+], ids=["null_between", "lone_null", "wrong_length"])
+@pytest.mark.parametrize("stage", sorted(_VEC_STAGES))
+def test_vector_stages_reject_null_and_wrong_length(spark, stage, rows, err):
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
+    with pytest.raises(Exception, match=f"ValueError: {stage}: {err}"):
+        _VEC_STAGES[stage](df).collect()
 
 
 def test_avi_top_down_rows(spark):

@@ -1,30 +1,45 @@
-"""Deduplication for training-data pipelines: exact, MinHash+LSH,
-SimHash, n-gram Jaccard.
+"""Deduplication and decontamination for training-data pipelines.
 
-Scale design:
+Every stage reads either a text column or a pre-tokenized
+``array<int>`` column keyed by a document id.
 
-* **exact_dedup** — fingerprint + min-id keeper: one shuffle on the
-  64-bit fingerprint (tiny shuffle keys), JVM-side only.
-* **minhash_signatures** — per-doc signatures computed in ONE Arrow
-  batch per partition (numpy broadcasting over all shingles of the
-  batch), not per-row Python; mapInArrow hands the kernel the Arrow
-  ListArray's flat values buffer directly (no per-row pandas
-  materialization).  Signature width k and (a,b) hash params are
-  deterministic from `seed`.
-* **lsh_candidate_pairs** — band the signatures, explode (doc, band,
-  band-hash), self-join on band buckets: candidates only ever meet in
-  a bucket, so the join is on high-selectivity keys (the classic
-  shingle->minhash->band->bucket-join pipeline).  Hot buckets are
-  handled by AQE skew-join splitting.
-* **simhash64** — 64-bit sign-sum sketch over token hashes, vectorized
-  per Arrow batch; near-dup = hamming distance <= threshold within
-  prefix buckets.
-* **ngram_jaccard_pairs** — exact distinct-shingle Jaccard for verify
-  stages (array_intersect/array_union — Catalyst, no UDF).
+* **exact_dedup / mark_exact_dups** — fingerprint + min-id keeper: one
+  shuffle on the 64-bit fingerprint, JVM-side only.
+* **minhash_signatures -> lsh_candidate_pairs** (``minhash_dedup``,
+  ``minhash_dedup_verified``) — k MinHash permutations over hashed word
+  shingles, banded into buckets; candidates only ever meet in a bucket.
+  ``ngram_jaccard`` / ``verify_pairs_jaccard`` give the exact
+  distinct-shingle Jaccard for the verify stage (Catalyst array ops).
+* **simhash64 / simhash_tokens -> simhash_hamming_pairs**
+  (``simhash_near_dups``, ``simhash_tokens_near_dups``) — 64-bit
+  sign-sum sketches over token hashes; near-dup = hamming distance <=
+  threshold within rotated-prefix buckets.
+* **winnow_near_dups** — winnowed k-gram fingerprints (Schleimer et
+  al., SIGMOD 2003) blocked on shared fingerprints.
+* **near_dup_sketches -> near_dup_report** — both token sketches from
+  one corpus scan, both pair sets full-outer-joined per pair.
+* **build_simhash_index -> mark_near_dups_indexed** — a driver-built
+  probe index over a static reference corpus; probing is stateless,
+  so it runs on streams.
+* **mark_contaminated / decontaminate** — test-set decontamination:
+  distinct token n-grams shared with an eval corpus (broadcast join);
+  **build_contamination_index -> mark_contaminated_indexed** is its
+  stateless (streaming) twin.
+* **dedup_clusters / dedup_keep_best** — connected components over
+  near-dup pairs and the keep-best-member policy.
+
+Every per-document sketch crosses the Arrow boundary in one place,
+``_map_token_lists``: one ``mapInArrow`` pass that hands a numpy kernel
+the batch's flat token buffer and per-row lengths (no per-row Python
+objects).  The three blocked pair joins share ``_capped_self_join``.
+All sketch arithmetic is integer-exact and replayed by DuckDB SQL
+oracles.
 """
 
 from __future__ import annotations
 
+import operator
+from functools import reduce
 from typing import Optional
 
 import numpy as np
@@ -194,6 +209,79 @@ def _ensure_parallelism(df: DataFrame, min_parallelism: Optional[int] = None) ->
     return df
 
 
+def _map_token_lists(
+    df: DataFrame,
+    col: str,
+    id_col: str,
+    kernel,
+    out_ddl: str,
+    prep=None,
+) -> DataFrame:
+    """(id, <kernel columns>) per row of ``df`` from ONE ``mapInArrow``
+    pass over the list column ``col``.
+
+    The Arrow ListArray's flat values buffer already IS the
+    concatenated form the batch kernels want: ``kernel(flat, lens)``
+    gets the batch's values decoded to int64 and the per-row lengths (a
+    NULL list counts as length 0), with no per-row pandas/numpy object
+    (mapInPandas measured ~2.4x slower end-to-end on the token sketch).
+    It returns one entry per ``out_ddl`` column, each a per-row numpy
+    array or an ``(offsets, values)`` pair for an array column.
+
+    The repartition of ``_ensure_parallelism`` runs on the source
+    column; ``prep`` (a Column -> Column function, e.g. a Catalyst
+    shingle hash of a text column) is applied after it."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    names = [id_col] + [f.split()[0] for f in out_ddl.split(",")]
+    sel = _ensure_parallelism(df.select(F.col(id_col).alias("__id"), F.col(col).alias("__t")))
+    if prep is not None:
+        sel = sel.select("__id", prep(F.col("__t")).alias("__t"))
+
+    def run(batches):
+        for b in batches:
+            arr = b.column(1)
+            lens = pc.fill_null(pc.list_value_length(arr), 0)
+            lens = lens.to_numpy(zero_copy_only=False).astype(np.int64)
+            flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
+            cols = [b.column(0)]
+            for c in kernel(flat, lens):
+                if isinstance(c, tuple):
+                    offsets, values = c
+                    c = pa.ListArray.from_arrays(pa.array(offsets.astype(np.int32)), pa.array(values))
+                else:
+                    c = pa.array(c)
+                cols.append(c)
+            yield pa.RecordBatch.from_arrays(cols, names)
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    return sel.mapInArrow(run, f"`{id_col}` {id_type}, {out_ddl}")
+
+
+def _capped_self_join(rows: DataFrame, keys: list, cap: Optional[int]) -> DataFrame:
+    """Self-join ``rows`` (an ``__id`` column plus blocking ``keys``) as
+    aliases ``l``/``r`` on equal keys with ``l.__id < r.__id``.
+
+    ``cap`` drops every key group with more than ``cap`` rows first (a
+    degenerate mega-bucket of n rows would otherwise emit n^2/2 pairs;
+    AQE splits the shuffle partition but not the pair count): one
+    map-side-combined count, then a broadcast anti-join of the
+    blocklist, which holds only groups ABOVE the cap and is tiny for
+    real corpora.  ``None`` disables the cap."""
+    if cap is not None:
+        big = (
+            rows.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("__n"))
+            .filter(F.col("__n") > cap)
+            .select(*keys)
+        )
+        rows = rows.join(F.broadcast(big), keys, "left_anti")
+    l, r = rows.alias("l"), rows.alias("r")
+    cond = [F.col(f"l.{k}") == F.col(f"r.{k}") for k in keys]
+    return l.join(r, reduce(operator.and_, cond + [F.col("l.__id") < F.col("r.__id")]))
+
+
 # ----------------------------------------------------------------- minhash
 def _hashed_shingles(text: Column, n: int) -> Column:
     """64-bit hashes of word n-grams WITHOUT materializing gram strings:
@@ -244,53 +332,30 @@ def minhash_signatures(
     of the batch, reading the ListArray's flat buffer zero-copy.
     """
     a, b = _minhash_params(k, seed)
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
+    MM = np.uint64(_MERSENNE)
+
+    def sign(flat, lens):
+        # ONE (k, total) broadcast across every shingle of the batch,
+        # then a segmented min per doc (reduceat).  Mersenne fold
+        # instead of integer division: 2^61 = 1 (mod M) so x mod M ==
+        # ((x >> 61) + (x & M)) with one conditional subtract —
+        # bit-identical to % M
+        x = a[:, None] * flat.astype(np.uint64)[None, :] + b[:, None]
+        m = (x >> np.uint64(61)) + (x & MM)
+        m = np.where(m >= MM, m - MM, m)
+        # pad one max-valued column so a trailing empty segment's
+        # start index stays in bounds
+        m = np.concatenate([m, np.full((k, 1), _MERSENNE, dtype=np.uint64)], axis=1)
+        mins = np.minimum.reduceat(m, np.cumsum(lens) - lens, axis=1).astype(np.int64)
+        # interior empty segments: reduceat echoes the next doc's first
+        # element — overwrite with the empty signature
+        mins[:, lens == 0] = _MERSENNE
+        return ((np.arange(len(lens) + 1) * k, mins.T.ravel()),)
+
+    return _map_token_lists(
+        df, text_col, id_col, sign, "signature array<bigint>",
+        prep=lambda txt: _hashed_shingles(txt, shingle_n),
     )
-    sh = sel.select("__id", _hashed_shingles(F.col("__txt"), shingle_n).alias("__h"))
-
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    def sign(batches):
-        for bt in batches:
-            arr = bt.column(1)
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            n_docs = len(lens)
-            if lens.sum() == 0:
-                mins = np.full((k, n_docs), _MERSENNE, dtype=np.int64)
-            else:
-                # flat Arrow values buffer: the concatenated form the
-                # kernel wants, no per-row pandas materialization
-                all_h = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.uint64)
-                # ONE (k, total) broadcast across every shingle of the
-                # whole batch, then a segmented min per doc (reduceat)
-                # Mersenne fold instead of integer division: 2^61 = 1
-                # (mod M) so x mod M == ((x >> 61) + (x & M)) with one
-                # conditional subtract — bit-identical to % M
-                MM = np.uint64(_MERSENNE)
-                x = a[:, None] * all_h[None, :] + b[:, None]
-                m = (x >> np.uint64(61)) + (x & MM)
-                m = np.where(m >= MM, m - MM, m)
-                # pad one max-valued column so a trailing empty
-                # segment's start index stays in bounds
-                m = np.concatenate([m, np.full((k, 1), _MERSENNE, dtype=np.uint64)], axis=1)
-                starts = np.concatenate([[0], np.cumsum(lens)[:-1]])
-                mins = np.minimum.reduceat(m, starts, axis=1).astype(np.int64)
-                # interior empty segments: reduceat echoes the next
-                # doc's first element — overwrite with empty signature
-                mins[:, lens == 0] = _MERSENNE
-            sig_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(n_docs + 1, dtype=np.int32) * k),
-                pa.array(mins.T.ravel(), type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays([bt.column(0), sig_arr], ["__id", "signature"])
-
-    out_schema = f"__id {df.schema[id_col].dataType.simpleString()}, signature array<bigint>"
-    return sh.mapInArrow(sign, out_schema).withColumnRenamed("__id", id_col)
 
 
 def lsh_candidate_pairs(
@@ -334,24 +399,8 @@ def lsh_candidate_pairs(
             )
         ).alias("bucket"),
     )
-    if max_bucket_size is not None:
-        # Blocklist of oversized buckets: one map-side-combined count,
-        # then a broadcast anti-join (the blocklist holds only buckets
-        # ABOVE the cap — tiny by construction for real corpora).
-        big = (
-            banded.groupBy("bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket_size)
-            .select("bucket")
-        )
-        banded = banded.join(F.broadcast(big), "bucket", "left_anti")
-    l = banded.alias("l")
-    r = banded.alias("r")
     pairs = (
-        l.join(
-            r,
-            (F.col("l.bucket") == F.col("r.bucket")) & (F.col("l.__id") < F.col("r.__id")),
-        )
+        _capped_self_join(banded, ["bucket"], max_bucket_size)
         .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -481,88 +530,40 @@ def _simhash_votes(all_h: np.ndarray, lens: np.ndarray) -> np.ndarray:
     return vals
 
 
-def _segmented_sketch_arrow(
-    arr_df: DataFrame, kernel, id_type: str, arr_field: str = "__h"
-) -> DataFrame:
-    """mapInArrow driver for batch-segmented sketch kernels over an
-    (__id, <list column>) frame: the Arrow ListArray's flat values
-    buffer + per-row lengths go straight to ``kernel(flat, lens) ->
-    int64[n_rows]`` with NO pandas materialization.  mapInPandas turns
-    every row's list into its own numpy object (500k allocations for a
-    500k-doc batch run — measured ~2.4x slower end-to-end on the token
-    sketch); Arrow's list layout already IS the concatenated form the
-    reduceat kernels want."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+def _token_simhash(flat: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Per-doc 64-bit SimHash of int64 token ids: each token is spread
+    with splitmix64 (io/sources.py, the generator's counter-based hash)
+    and the bits are voted by ``_simhash_votes``."""
+    from torchestra_spark.io.sources import _splitmix64
 
-    def run(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index(arr_field))
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            out = np.zeros(len(lens), dtype=np.int64)
-            if lens.sum() > 0:
-                flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
-                out = kernel(flat, lens)
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(out, type=pa.int64())], ["__id", "simhash"]
-            )
-
-    return arr_df.mapInArrow(run, f"__id {id_type}, simhash bigint")
+    return _simhash_votes(_splitmix64(flat.astype(np.uint64)), lens)
 
 
 def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash over whitespace tokens: per bit, sign of the sum of
     ±1 votes from each token hash.  Words are hashed with the winnow
-    polynomial fold (text.token_hash, Catalyst codegen) then spread to
-    64 bits with splitmix64 in the vote kernel — the SAME two hashes
-    the oracled winnow and token-simhash paths use, so the text sketch
-    is SQL-reproducible end-to-end (driver oracle `simhash_near_dups`),
-    replacing the un-replayable xxhash64 it used through round 4.  The
-    bit-vote reduction is one numpy op per Arrow batch."""
+    polynomial fold (text.token_hash, Catalyst codegen) then go through
+    the token-id sketch of ``simhash_tokens`` — the SAME two hashes the
+    oracled winnow and token-simhash paths use, so the text sketch is
+    SQL-reproducible end-to-end (driver oracle `simhash_near_dups`).
+    The bit-vote reduction is one numpy op per Arrow batch."""
     from torchestra_spark.functions.text import token_hash, words
-    from torchestra_spark.io.sources import _splitmix64
 
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__txt"))
+    return _map_token_lists(
+        df, text_col, id_col, lambda flat, lens: (_token_simhash(flat, lens),),
+        "simhash bigint",
+        prep=lambda txt: F.transform(words(F.lower(txt)), lambda x: token_hash(x)),
     )
-    toks = sel.select(
-        "__id",
-        F.transform(words(F.lower(F.col("__txt"))), lambda x: token_hash(x)).alias("__h"),
-    )
-    out = _segmented_sketch_arrow(
-        toks,
-        lambda flat, lens: _simhash_votes(
-            _splitmix64(flat.astype(np.int64).astype(np.uint64)), lens
-        ),
-        df.schema[id_col].dataType.simpleString(),
-    )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def simhash_tokens(df: DataFrame, tokens_col: str, id_col: str) -> DataFrame:
     """64-bit SimHash over INTEGER token ids (pre-tokenized corpora, the
-    input_hint table shape): each token id is hashed with splitmix64
-    (io/sources.py — the same counter-based hash as the generator), so
-    the whole sketch is integer-exact and SQL-reproducible end-to-end
-    (driver oracle `simhash_tokens`).  Same batch-vectorized vote kernel
-    as the text simhash."""
-    from torchestra_spark.io.sources import _splitmix64
-
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(tokens_col).alias("__t"))
+    input_hint table shape): the whole sketch is integer-exact and
+    SQL-reproducible end-to-end (driver oracle `simhash_tokens`)."""
+    return _map_token_lists(
+        df, tokens_col, id_col, lambda flat, lens: (_token_simhash(flat, lens),),
+        "simhash bigint",
     )
-    out = _segmented_sketch_arrow(
-        sel,
-        lambda flat, lens: _simhash_votes(
-            _splitmix64(flat.astype(np.int64).astype(np.uint64)), lens
-        ),
-        df.schema[id_col].dataType.simpleString(),
-        arr_field="__t",
-    )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def simhash_hamming_pairs(
@@ -619,24 +620,9 @@ def simhash_hamming_pairs(
             )
         ).alias("tb"),
     ).select("__id", "__sh", "tb.table", "tb.bucket")
-    if max_bucket_size is not None:
-        big = (
-            banded.groupBy("table", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket_size)
-            .select("table", "bucket")
-        )
-        banded = banded.join(F.broadcast(big), ["table", "bucket"], "left_anti")
-    l = banded.alias("l")
-    r = banded.alias("r")
     hamming = F.bit_count(F.col("l.__sh").bitwiseXOR(F.col("r.__sh")))
     out = (
-        l.join(
-            r,
-            (F.col("l.table") == F.col("r.table"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
+        _capped_self_join(banded, ["table", "bucket"], max_bucket_size)
         .select(
             F.col("l.__id").alias("id_a"),
             F.col("r.__id").alias("id_b"),
@@ -771,17 +757,8 @@ def winnow_near_dups(
     # per-doc set sizes BEFORE the frequency cap: the overlap denominator
     # reflects the true fingerprint sets, the cap only prunes pair-gen
     sizes = fps.groupBy("__id").agg(F.count(F.lit(1)).alias("__n"))
-    if max_fp_freq is not None:
-        hot = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("__fn"))
-            .filter(F.col("__fn") > max_fp_freq)
-            .select("fp")
-        )
-        fps = fps.join(F.broadcast(hot), "fp", "left_anti")
-    l, r = fps.alias("l"), fps.alias("r")
     pairs = (
-        l.join(r, (F.col("l.fp") == F.col("r.fp")) & (F.col("l.__id") < F.col("r.__id")))
+        _capped_self_join(fps, ["fp"], max_fp_freq)
         .groupBy(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
         .agg(F.count(F.lit(1)).alias("shared"))
         .filter(F.col("shared") >= min_shared)
@@ -821,6 +798,45 @@ def _ragged_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
     return np.cumsum(out)
 
 
+def _gram_fold(flat: np.ndarray, lens: np.ndarray, k: int):
+    """The WINNOW_MOD polynomial fold of every k-token window of the
+    concatenated token buffer (k-1 whole-buffer vector ops; needs
+    ``lens.sum() >= k``) — the gram hash of ``text.token_ngram_hashes``
+    and ``text.winnow_fingerprints_tokens``.  Returns (grams, segids,
+    inside): per window start, its gram, the doc it starts in, and
+    whether it ends in that doc too (False where it crosses a doc
+    boundary)."""
+    from torchestra_spark.functions.text import WINNOW_MOD, WINNOW_PRIME
+
+    T = int(lens.sum())
+    h = flat.astype(np.int64) % WINNOW_MOD
+    g = h[: T - k + 1].copy()
+    for j in range(1, k):
+        g = (g * WINNOW_PRIME + h[j : T - k + 1 + j]) % WINNOW_MOD
+    seg = np.repeat(np.arange(len(lens), dtype=np.int64), lens)
+    return g, seg[: T - k + 1], seg[: T - k + 1] == seg[k - 1 :]
+
+
+def _token_ngram_raw(flat: np.ndarray, lens: np.ndarray, k: int):
+    """ALL n-gram hashes per segment (duplicates kept, document order)
+    from the concatenated token buffer — the winnow gram fold without
+    window-min or dedup.  Returns (values int64[total], segids)."""
+    if int(lens.sum()) < k:
+        return np.empty(0, np.int64), np.empty(0, np.int64)
+    g, seg, inside = _gram_fold(flat, lens, k)
+    return g[inside], seg[inside]
+
+
+def _dedup_seg_values(gv: np.ndarray, gs: np.ndarray):
+    """Distinct (segid, value) pairs via one lexsort; returns the
+    deduped (values, segids) sorted by (seg, value)."""
+    order = np.lexsort((gv, gs))
+    gv, gs = gv[order], gs[order]
+    keep = np.ones(len(gv), dtype=bool)
+    keep[1:] = (gv[1:] != gv[:-1]) | (gs[1:] != gs[:-1])
+    return gv[keep], gs[keep]
+
+
 def _winnow_token_fps_kernel(flat: np.ndarray, lens: np.ndarray, k: int, w: int):
     """Batch-wide winnowing kernel: concatenated int64 token ids +
     per-doc segment lengths -> per-doc DISTINCT fingerprint sets
@@ -833,23 +849,19 @@ def _winnow_token_fps_kernel(flat: np.ndarray, lens: np.ndarray, k: int, w: int)
     via one lexsort.  Grams/windows never cross document boundaries:
     crossing gram positions are poisoned to a sentinel > any
     fingerprint, and window positions are generated per segment."""
-    from torchestra_spark.functions.text import WINNOW_MOD, WINNOW_PRIME
+    from torchestra_spark.functions.text import WINNOW_MOD
 
     n = len(lens)
     T = int(lens.sum())
     Gn = np.maximum(lens - (k - 1), 0)
     if T < k:
         return np.zeros(n + 1, dtype=np.int64), np.empty(0, dtype=np.int64)
-    h = flat.astype(np.int64) % WINNOW_MOD
-    g = h[: T - k + 1].copy()
-    for j in range(1, k):
-        g = (g * WINNOW_PRIME + h[j : T - k + 1 + j]) % WINNOW_MOD
+    g, _, inside = _gram_fold(flat, lens, k)
     starts = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(lens, out=starts[1:])
-    seg = np.repeat(np.arange(n, dtype=np.int64), lens)
     sent = np.int64(WINNOW_MOD)  # > every fingerprint (values are mod M)
     gfull = np.full(T + 1, sent, dtype=np.int64)
-    gfull[: T - k + 1] = np.where(seg[: T - k + 1] == seg[k - 1 :], g, sent)
+    gfull[: T - k + 1] = np.where(inside, g, sent)
     vals_list, segs_list = [], []
     big = Gn >= w
     if big.any():
@@ -867,13 +879,7 @@ def _winnow_token_fps_kernel(flat: np.ndarray, lens: np.ndarray, k: int, w: int)
         segs_list.append(np.arange(n)[small])
     if not vals_list:
         return np.zeros(n + 1, dtype=np.int64), np.empty(0, dtype=np.int64)
-    vals = np.concatenate(vals_list)
-    segs = np.concatenate(segs_list)
-    order = np.lexsort((vals, segs))
-    vals, segs = vals[order], segs[order]
-    keep = np.ones(len(vals), dtype=bool)
-    keep[1:] = (vals[1:] != vals[:-1]) | (segs[1:] != segs[:-1])
-    vals, segs = vals[keep], segs[keep]
+    vals, segs = _dedup_seg_values(np.concatenate(vals_list), np.concatenate(segs_list))
     offsets = np.zeros(n + 1, dtype=np.int64)
     np.cumsum(np.bincount(segs, minlength=n), out=offsets[1:])
     return offsets, vals
@@ -893,44 +899,12 @@ def near_dup_sketches(
     `near_dup_report` vs `simhash_dedup_tokens`+`winnow_dedup_tokens`).
     Both kernels are bit-identical to their standalone twins, so the
     fused path stays SQL-oracle-checkable."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    def sketch(flat, lens):
+        return _token_simhash(flat, lens), _winnow_token_fps_kernel(flat, lens, k, w)
 
-    from torchestra_spark.io.sources import _splitmix64
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(tokens_col).alias("__t"))
+    return _map_token_lists(
+        df, tokens_col, id_col, sketch, "simhash bigint, winnow_fps array<bigint>"
     )
-
-    def run(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index("__t"))
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            nrows = len(lens)
-            sim = np.zeros(nrows, dtype=np.int64)
-            offsets = np.zeros(nrows + 1, dtype=np.int64)
-            fvals = np.empty(0, dtype=np.int64)
-            if lens.sum() > 0:
-                flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(
-                    np.int64
-                )
-                sim = _simhash_votes(_splitmix64(flat.astype(np.uint64)), lens)
-                offsets, fvals = _winnow_token_fps_kernel(flat, lens, k, w)
-            fp_arr = pa.ListArray.from_arrays(
-                pa.array(offsets.astype(np.int32)),
-                pa.array(fvals, type=pa.int64()),
-            )
-            yield pa.RecordBatch.from_arrays(
-                [b.column(0), pa.array(sim, type=pa.int64()), fp_arr],
-                ["__id", "simhash", "winnow_fps"],
-            )
-
-    out = sel.mapInArrow(run, f"__id {id_type}, simhash bigint, winnow_fps array<bigint>")
-    return out.withColumnRenamed("__id", id_col)
 
 
 def near_dup_report(
@@ -1145,120 +1119,42 @@ def mark_near_dups_indexed(
     are identical to the blocked join and SQL-oracled (driver query
     `near_dup_probe`).  Returns (id, simhash, near_dup_matches,
     is_near_dup) where matches counts DISTINCT reference docs."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    from torchestra_spark.io.sources import _splitmix64
-
-    id_type = df.schema[id_col].dataType.simpleString()
     ref_sh = index["sh"]
     tbls = index["tables"]
     step, shift = index["step"], index["shift"]
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(tokens_col).alias("__t"))
-    )
 
-    def run(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index("__t"))
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            n = len(lens)
-            sim = np.zeros(n, dtype=np.int64)
-            if lens.sum() > 0:
-                flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
-                sim = _simhash_votes(_splitmix64(flat.astype(np.int64).astype(np.uint64)), lens)
-            s = sim.view(np.uint64)
-            seg_list, cand_list = [], []
-            for t, (bs, order) in enumerate(tbls):
-                if not len(bs):
-                    continue
-                bq = (_rotl64(s, t * step) >> shift).astype(np.uint64)
-                lo = np.searchsorted(bs, bq, side="left")
-                hi = np.searchsorted(bs, bq, side="right")
-                cnt = hi - lo
-                if cnt.sum() == 0:
-                    continue
-                idx = _ragged_ranges(lo.astype(np.int64), cnt.astype(np.int64))
-                seg_list.append(np.repeat(np.arange(n), cnt))
-                cand_list.append(order[idx])
-            matches = np.zeros(n, dtype=np.int64)
-            if seg_list:
-                seg = np.concatenate(seg_list)
-                cand = np.concatenate(cand_list)
-                # distinct (probe, ref) across tables, then hamming
-                o = np.lexsort((cand, seg))
-                seg, cand = seg[o], cand[o]
-                keep = np.ones(len(seg), dtype=bool)
-                keep[1:] = (seg[1:] != seg[:-1]) | (cand[1:] != cand[:-1])
-                seg, cand = seg[keep], cand[keep]
-                ham = _popcount64(ref_sh[cand] ^ s[seg])
-                ok = ham <= max_hamming
-                matches = np.bincount(seg[ok], minlength=n)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(sim, type=pa.int64()),
-                    pa.array(matches.astype(np.int64)),
-                    pa.array(matches > 0),
-                ],
-                ["__id", "simhash", "near_dup_matches", "is_near_dup"],
-            )
+    def probe(flat, lens):
+        n = len(lens)
+        sim = _token_simhash(flat, lens)
+        s = sim.view(np.uint64)
+        seg_list, cand_list = [], []
+        for t, (bs, order) in enumerate(tbls):
+            if not len(bs):
+                continue
+            bq = (_rotl64(s, t * step) >> shift).astype(np.uint64)
+            lo = np.searchsorted(bs, bq, side="left")
+            hi = np.searchsorted(bs, bq, side="right")
+            cnt = hi - lo
+            if cnt.sum() == 0:
+                continue
+            idx = _ragged_ranges(lo.astype(np.int64), cnt.astype(np.int64))
+            seg_list.append(np.repeat(np.arange(n), cnt))
+            cand_list.append(order[idx])
+        matches = np.zeros(n, dtype=np.int64)
+        if seg_list:
+            # distinct (probe, ref) across tables, then hamming
+            cand, seg = _dedup_seg_values(np.concatenate(cand_list), np.concatenate(seg_list))
+            ham = _popcount64(ref_sh[cand] ^ s[seg])
+            matches = np.bincount(seg[ham <= max_hamming], minlength=n)
+        return sim, matches.astype(np.int64), matches > 0
 
-    out = sel.mapInArrow(
-        run,
-        f"__id {id_type}, simhash bigint, near_dup_matches bigint, is_near_dup boolean",
+    return _map_token_lists(
+        df, tokens_col, id_col, probe,
+        "simhash bigint, near_dup_matches bigint, is_near_dup boolean",
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 # --------------------------------------------------------- decontamination
-def _token_ngram_arrays(df: DataFrame, tokens_col: str, id_col: str, n: int) -> DataFrame:
-    """(id, grams array<bigint>) per document, DUPLICATES KEPT — the
-    numpy twin of ``text.token_ngram_hashes``'s gram fold run
-    batch-wide in one mapInArrow pass (the whole fold is n-1 vector ops
-    over the batch's concatenated token buffer, vs n interpreted
-    ``element_at`` evaluations PER GRAM for the Catalyst HOF — guide
-    §4.2; interleaved A/B at sf0.1: 2.3 s vs 3.2 s end-to-end).  Gram
-    values are identical (same WINNOW_MOD fold); consumers needing set
-    semantics dedup AFTER their selective step (count_distinct in
-    ``mark_contaminated``) so the whole-corpus dedup sort is skipped."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    id_type = df.schema[id_col].dataType.simpleString()
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(tokens_col).alias("__t"))
-    )
-
-    def run(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index("__t"))
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            nrows = len(lens)
-            offsets = np.zeros(nrows + 1, dtype=np.int64)
-            gv = np.empty(0, dtype=np.int64)
-            if lens.sum() > 0:
-                flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
-                # RAW grams (duplicates kept): the consumer counts
-                # count_distinct after the membership join, so the
-                # whole-batch dedup lexsort is skipped here (r8) — only
-                # grams that actually match are ever deduped, JVM-side
-                gv, gs = _token_ngram_raw(flat.astype(np.int64), lens, n)
-                np.cumsum(np.bincount(gs, minlength=nrows), out=offsets[1:])
-            gram_arr = pa.ListArray.from_arrays(
-                pa.array(offsets.astype(np.int32)), pa.array(gv, type=pa.int64())
-            )
-            yield pa.RecordBatch.from_arrays([b.column(0), gram_arr], ["__id", "__gs"])
-
-    return sel.mapInArrow(run, f"__id {id_type}, __gs array<bigint>")
-
-
 def mark_contaminated(
     df: DataFrame,
     tokens_col: str,
@@ -1291,21 +1187,31 @@ def mark_contaminated(
         )
         .distinct()
     )
-    # Train side (the 100 TB side): grams via the vectorized Arrow
-    # kernel, exploded JVM-side — same values as the Catalyst HOF the
-    # (small) eval side keeps (guide §4.2, see _token_ngram_arrays)
-    tg = _token_ngram_arrays(df, tokens_col, id_col, n).select(
-        "__id", F.explode("__gs").alias("__g")
+    # Train side (the 100 TB side): grams from the numpy twin of
+    # token_ngram_hashes' fold, one vector op per gram position over the
+    # batch's token buffer, vs n interpreted element_at evaluations PER
+    # GRAM for the Catalyst HOF (guide §4.2; interleaved A/B at sf0.1:
+    # 2.3 s vs 3.2 s end-to-end).  Grams are RAW (duplicates kept) and
+    # exploded JVM-side: only grams that match are ever deduped, by the
+    # count_distinct below, so the whole-corpus dedup sort is skipped.
+    def grams(flat, lens):
+        gv, gs = _token_ngram_raw(flat, lens, n)
+        offsets = np.zeros(len(lens) + 1, dtype=np.int64)
+        np.cumsum(np.bincount(gs, minlength=len(lens)), out=offsets[1:])
+        return ((offsets, gv),)
+
+    tg = _map_token_lists(df, tokens_col, id_col, grams, "__gs array<bigint>").select(
+        id_col, F.explode("__gs").alias("__g")
     )
-    # grams are raw (duplicates kept); count DISTINCT matched grams so
-    # the semantics stay exactly token_ngram_hashes' distinct-gram hits
+    # count DISTINCT matched grams so the semantics stay exactly
+    # token_ngram_hashes' distinct-gram hits
     hits = (
         tg.join(F.broadcast(eg), "__g")
-        .groupBy("__id")
+        .groupBy(id_col)
         .agg(F.count_distinct(F.col("__g")).alias("contam_hits"))
     )
     return (
-        df.join(hits.withColumnRenamed("__id", id_col), id_col, "left")
+        df.join(hits, id_col, "left")
         .withColumn("contam_hits", F.coalesce(F.col("contam_hits"), F.lit(0)))
         .withColumn("is_contaminated", F.col("contam_hits") >= min_hits)
     )
@@ -1327,49 +1233,6 @@ def decontaminate(
         n=n, min_hits=min_hits,
     )
     return m.filter(~F.col("is_contaminated")).drop("contam_hits", "is_contaminated")
-
-
-def _token_ngram_raw(flat: np.ndarray, lens: np.ndarray, k: int):
-    """ALL n-gram hashes per segment (duplicates kept, document order)
-    from the concatenated token buffer — the winnow gram fold without
-    window-min or dedup.  Returns (values int64[total], segids)."""
-    from torchestra_spark.functions.text import WINNOW_MOD, WINNOW_PRIME
-
-    n = len(lens)
-    T = int(lens.sum())
-    if T < k:
-        return np.empty(0, np.int64), np.empty(0, np.int64)
-    h = flat.astype(np.int64) % WINNOW_MOD
-    g = h[: T - k + 1].copy()
-    for j in range(1, k):
-        g = (g * WINNOW_PRIME + h[j : T - k + 1 + j]) % WINNOW_MOD
-    seg = np.repeat(np.arange(n, dtype=np.int64), lens)
-    valid = seg[: T - k + 1] == seg[k - 1 :]
-    return g[valid], seg[: T - k + 1][valid]
-
-
-def _dedup_seg_values(gv: np.ndarray, gs: np.ndarray):
-    """Distinct (segid, value) pairs via one lexsort; returns the
-    deduped (values, segids) sorted by (seg, value)."""
-    order = np.lexsort((gv, gs))
-    gv, gs = gv[order], gs[order]
-    keep = np.ones(len(gv), dtype=bool)
-    keep[1:] = (gv[1:] != gv[:-1]) | (gs[1:] != gs[:-1])
-    return gv[keep], gs[keep]
-
-
-def _token_ngram_kernel(flat: np.ndarray, lens: np.ndarray, k: int):
-    """DISTINCT n-gram hashes per segment from the concatenated token
-    buffer — the gram stage of ``_winnow_token_fps_kernel`` without the
-    window-min selection; numpy twin of ``text.token_ngram_hashes``.
-    Returns (offsets int64[n+1], values int64[total], segids)."""
-    n = len(lens)
-    gv, gs = _token_ngram_raw(flat, lens, k)
-    if len(gv):
-        gv, gs = _dedup_seg_values(gv, gs)
-    offsets = np.zeros(n + 1, dtype=np.int64)
-    np.cumsum(np.bincount(gs, minlength=n), out=offsets[1:])
-    return offsets, gv, gs
 
 
 def build_contamination_index(
@@ -1411,52 +1274,27 @@ def mark_contaminated_indexed(
     distinct-gram hit counts), so the same SQL oracle checks both
     (driver queries `decontaminate` / `decontaminate_indexed`).
     Returns (id, contam_hits, is_contaminated)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     idx = np.sort(np.asarray(gram_index, dtype=np.int64))
-    id_type = df.schema[id_col].dataType.simpleString()
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(tokens_col).alias("__t"))
-    )
 
-    def run(batches):
-        for b in batches:
-            arr = b.column(b.schema.get_field_index("__t"))
-            lens_arr = pc.list_value_length(arr)
-            if lens_arr.null_count:
-                lens_arr = pc.fill_null(lens_arr, 0)
-            lens = lens_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            nrows = len(lens)
-            hits = np.zeros(nrows, dtype=np.int64)
-            if lens.sum() > 0 and len(idx):
-                flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False)
-                # membership-filter FIRST, dedup only the (rare) matches
-                # (r8): distinctness only matters for grams that hit the
-                # index, so the whole-batch lexsort over every gram is
-                # replaced by one over the matched handful
-                gv, gs = _token_ngram_raw(flat.astype(np.int64), lens, n)
-                if len(gv):
-                    pos = np.searchsorted(idx, gv)
-                    pos[pos == len(idx)] = 0
-                    hit = idx[pos] == gv
-                    mgv, mgs = gv[hit], gs[hit]
-                    if len(mgv):
-                        _, mgs = _dedup_seg_values(mgv, mgs)
-                        hits = np.bincount(mgs, minlength=nrows)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b.column(0),
-                    pa.array(hits.astype(np.int64)),
-                    pa.array(hits >= min_hits),
-                ],
-                ["__id", "contam_hits", "is_contaminated"],
-            )
+    def probe(flat, lens):
+        hits = np.zeros(len(lens), dtype=np.int64)
+        # membership-filter FIRST, dedup only the (rare) matches:
+        # distinctness only matters for grams that hit the index, so
+        # the whole-batch lexsort over every gram is replaced by one
+        # over the matched handful
+        gv, gs = _token_ngram_raw(flat, lens, n)
+        if len(gv) and len(idx):
+            pos = np.searchsorted(idx, gv)
+            pos[pos == len(idx)] = 0
+            hit = idx[pos] == gv
+            if hit.any():
+                _, mgs = _dedup_seg_values(gv[hit], gs[hit])
+                hits = np.bincount(mgs, minlength=len(lens))
+        return hits.astype(np.int64), hits >= min_hits
 
-    out = sel.mapInArrow(
-        run, f"__id {id_type}, contam_hits bigint, is_contaminated boolean"
+    return _map_token_lists(
+        df, tokens_col, id_col, probe, "contam_hits bigint, is_contaminated boolean"
     )
-    return out.withColumnRenamed("__id", id_col)
 
 
 def dedup_clusters(

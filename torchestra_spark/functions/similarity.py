@@ -127,7 +127,29 @@ def _planes(dim: int, n_planes: int, seed: int) -> np.ndarray:
     return rng.randn(dim, n_planes).astype(np.float64)
 
 
-def _vec_matrix_stage(df: DataFrame, vec_col: str, dim: int, out_field: str, kernel):
+def _fixed_dim_matrix(arr, dim: int, stage: str) -> np.ndarray:
+    """The (n, dim) float64 matrix of an Arrow list column, reshaped from
+    its flat child buffer.  A NULL or wrong-length vector would silently
+    misalign every later row of the flatten, so either raises a
+    ``ValueError`` naming ``stage`` and the offending row count."""
+    import pyarrow.compute as pc
+
+    if arr.null_count:
+        raise ValueError(
+            f"{stage}: {arr.null_count} NULL embedding(s) in batch; "
+            "filter NULL vectors upstream"
+        )
+    lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
+    bad = int((lens != dim).sum())
+    if bad:
+        raise ValueError(f"{stage}: {bad} embedding(s) with length != dim={dim}")
+    flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.float64)
+    return flat.reshape(len(arr), dim)
+
+
+def _vec_matrix_stage(
+    df: DataFrame, vec_col: str, dim: int, out_field: str, kernel, stage: str
+) -> DataFrame:
     """Append a column computed from the (n, dim) embedding matrix in ONE
     ``mapInArrow`` pass over the flat ListArray buffer — the ``pq_encode``
     pattern: reshape the contiguous child buffer instead of materializing
@@ -136,26 +158,22 @@ def _vec_matrix_stage(df: DataFrame, vec_col: str, dim: int, out_field: str, ker
     notes).  All other columns pass through untouched.
 
     ``out_field`` is a ``"name type"`` DDL fragment; ``kernel(X) ->
-    pyarrow.Array`` of length ``n`` (rows with NULL vectors are not
-    supported, same contract as the previous pandas-UDF versions)."""
+    pyarrow.Array`` of length ``n``.  NULL or wrong-length vectors raise
+    (``_fixed_dim_matrix``) with ``stage`` in the message."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
     out_schema = ", ".join(parts + [out_field])
     vec_name = vec_col
 
-    def stage(batches):
+    def run(batches):
         for b in batches:
-            arr = b.column(b.schema.get_field_index(vec_name))
-            flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.float64)
-            n = len(arr)
-            X = flat.reshape(n, dim) if n else flat.reshape(0, dim)
+            X = _fixed_dim_matrix(b.column(b.schema.get_field_index(vec_name)), dim, stage)
             out = kernel(X)
             cols = [b.column(i) for i in range(b.num_columns)]
             yield pa.RecordBatch.from_arrays(cols + [out], list(b.schema.names) + [out_field.split(" ")[0]])
 
-    return df.mapInArrow(stage, out_schema)
+    return df.mapInArrow(run, out_schema)
 
 
 def lsh_buckets(
@@ -177,7 +195,7 @@ def lsh_buckets(
     def kernel(X: np.ndarray):
         return pa.array(((X @ P) > 0) @ weights, type=pa.int64())
 
-    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} bigint", kernel)
+    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} bigint", kernel, "lsh_buckets")
 
 
 def lsh_buckets_multi(
@@ -210,7 +228,9 @@ def lsh_buckets_multi(
             pa.array(cols.ravel(), type=pa.int64()),
         )
 
-    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} array<bigint>", kernel)
+    return _vec_matrix_stage(
+        df, vec_col, dim, f"{out_col} array<bigint>", kernel, "lsh_buckets_multi"
+    )
 
 
 def _bucket_of(query: np.ndarray, P: np.ndarray, weights: np.ndarray) -> int:
@@ -358,7 +378,7 @@ def ivf_assign(
         d = c_norms[None, :] - 2.0 * (X @ C.T)
         return pa.array(d.argmin(axis=1).astype(np.int32), type=pa.int32())
 
-    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} int", kernel)
+    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} int", kernel, "ivf_assign")
 
 
 def ivf_topk(
@@ -564,7 +584,6 @@ def exact_knn_batch(
     This is the scale path for exact ground truth: no full-corpus
     collect, one scan for ALL queries, shuffle bounded by q·k·parts."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     from pyspark.sql import Window
 
@@ -580,22 +599,7 @@ def exact_knn_batch(
             n = len(arr)
             if not n:
                 continue
-            # a NULL or wrong-length embedding would silently misalign
-            # every subsequent vector after the flatten (ADVICE r7) —
-            # fail loudly with the offending row count instead
-            if arr.null_count:
-                raise ValueError(
-                    f"exact_knn_batch: {arr.null_count} NULL embedding(s) in batch; "
-                    "filter NULL vectors upstream"
-                )
-            lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
-            bad = int((lens != dim).sum())
-            if bad:
-                raise ValueError(
-                    f"exact_knn_batch: {bad} embedding(s) with length != dim={dim}"
-                )
-            flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.float64)
-            X = flat.reshape(n, dim)
+            X = _fixed_dim_matrix(arr, dim, "exact_knn_batch")
             Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-30)
             S = Xn @ Qn  # (n, nq)
             kk = min(k, n)
@@ -744,7 +748,6 @@ def pq_encode(
     via mapInArrow over the flat ListArray buffer — no per-row
     Python."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, ks, sub = B.shape
@@ -761,10 +764,8 @@ def pq_encode(
 
     def encode(batches):
         for b in batches:
-            arr = b.column(b.schema.get_field_index("__v"))
-            flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.float64)
-            n = len(arr)
-            X = flat.reshape(n, m * sub) if n else flat.reshape(0, m * sub)
+            X = _fixed_dim_matrix(b.column(b.schema.get_field_index("__v")), m * sub, "pq_encode")
+            n = len(X)
             codes = np.empty((n, m), dtype=np.int32)
             for j in range(m):
                 Xs = X[:, j * sub : (j + 1) * sub]
@@ -808,7 +809,7 @@ def pq_topk(
         codes = X.astype(np.int64)
         return pa.array(table[np.arange(m)[None, :], codes].sum(axis=1), type=pa.float64())
 
-    scored = _vec_matrix_stage(code_df, code_col, m, "pq_dist double", kernel)
+    scored = _vec_matrix_stage(code_df, code_col, m, "pq_dist double", kernel, "pq_topk")
     return scored.select(id_col, "pq_dist").orderBy(
         F.col("pq_dist").asc(), F.col(id_col).asc()
     ).limit(k)
@@ -903,7 +904,6 @@ def ivfpq_encode(
     codes instead of vectors — the index layout that makes
     billion-vector ANN a metadata-plus-codes problem."""
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
@@ -920,10 +920,10 @@ def ivfpq_encode(
 
     def encode(batches):
         for b in batches:
-            arr = b.column(b.schema.get_field_index("__v"))
-            flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.float64)
-            n = len(arr)
-            X = flat.reshape(n, m * sub) if n else flat.reshape(0, m * sub)
+            X = _fixed_dim_matrix(
+                b.column(b.schema.get_field_index("__v")), m * sub, "ivfpq_encode"
+            )
+            n = len(X)
             cells = (c_norms[None, :] - 2.0 * (X @ C.T)).argmin(axis=1) if n else np.empty(0, np.int64)
             R = X - C[cells] if n else X
             codes = np.empty((n, m), dtype=np.int32)
@@ -975,7 +975,6 @@ def ivfpq_topk(
     jj = np.arange(m)
 
     import pyarrow as pa
-    import pyarrow.compute as pc
 
     cand = code_df.filter(F.col(cell_col).isin(probes))
     parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in cand.schema.fields]
@@ -990,8 +989,7 @@ def ivfpq_topk(
             codes_arr = b.column(b.schema.get_field_index(code_col))
             n = len(cells_arr)
             cc = cells_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            flat = pc.list_flatten(codes_arr).to_numpy(zero_copy_only=False).astype(np.int64)
-            CO = flat.reshape(n, m) if n else flat.reshape(0, m)
+            CO = _fixed_dim_matrix(codes_arr, m, "ivfpq_topk").astype(np.int64)
             dist = T[cc[:, None], jj[None, :], CO].sum(axis=1) if n else np.empty(0)
             cols = [b.column(i) for i in range(b.num_columns)]
             yield pa.RecordBatch.from_arrays(

@@ -578,15 +578,13 @@ class Pipeline:
         def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             tc = TaskContext.get()
             pid = tc.partitionId() if tc is not None else 0
-            digests = [sketchers[j]._td.new_digest() for j in range(n_ops)]
+            cols: List[List[np.ndarray]] = [[] for _ in range(n_ops)]
             for pdf in batches:
                 for j in range(n_ops):
-                    vals = pdf[f"c{j}"].to_numpy(dtype=np.float64, na_value=np.nan)
-                    sketchers[j]._td.add_values(digests[j], vals[~np.isnan(vals)])
+                    cols[j].append(pdf[f"c{j}"].to_numpy(dtype=np.float64, na_value=np.nan))
             out = []
             for j in range(n_ops):
-                d = digests[j]
-                sketchers[j]._td._process(d)
+                d = sketchers[j].partial_sketch(np.concatenate(cols[j] or [np.empty(0)]))
                 k = d.n_processed
                 out.append(
                     pd.DataFrame(
@@ -621,15 +619,7 @@ class Pipeline:
                 for pid in sorted(pdf["pid"].unique()):
                     # processed centroids are mean-ascending; restore order
                     sub = pdf[pdf["pid"] == pid].sort_values("mean", kind="stable")
-                    d = td.new_digest()
-                    k = len(sub)
-                    d.processed_means[:k] = sub["mean"].to_numpy()
-                    d.processed_weights[:k] = sub["weight"].to_numpy()
-                    d.n_processed = k
-                    d.processed_weight = float(sub["weight"].sum())
-                    if k:
-                        d.mean_min = float(sub["mean"].iloc[0])
-                        d.mean_max = float(sub["mean"].iloc[-1])
+                    d = td.from_centroids(sub["mean"].to_numpy(), sub["weight"].to_numpy())
                     td.merge_digests(t, d)
                 td._process(t)
                 k = t.n_processed
@@ -663,20 +653,9 @@ class Pipeline:
         for j, (_path, op, _col) in enumerate(ops):
             opm = ops_arr == j
             pj, mj, wj = pid_arr[opm], mean_arr[opm], weight_arr[opm]
-            partials = []
-            for pid in np.unique(pj):
-                pm = pj == pid
-                means, weights = mj[pm], wj[pm]
-                d = op._td.new_digest()
-                k = len(means)
-                d.processed_means[:k] = means
-                d.processed_weights[:k] = weights
-                d.n_processed = k
-                d.processed_weight = float(np.sum(weights))
-                if k:
-                    d.mean_min = float(means[0])
-                    d.mean_max = float(means[-1])
-                partials.append(d)
+            partials = [
+                op._td.from_centroids(mj[pj == pid], wj[pj == pid]) for pid in np.unique(pj)
+            ]
             Pipeline._finalize(op, partials, update)
 
     # ------------------------------------------------------------ transform

@@ -12,19 +12,49 @@ import os
 
 from pyspark.sql import SparkSession
 
+_FALSY = ("0", "false", "no", "off")
+
 
 def _apply_malloc_tuning() -> None:
     """Raise the glibc mmap/trim thresholds (and pin PyArrow to the
     system allocator) for the JVM gateway and its forked Python
     workers.  Defaults only — pre-existing values are respected and
-    ``SPARK_GRAFT_MALLOC_TUNING=0`` disables entirely."""
-    if os.environ.get("SPARK_GRAFT_MALLOC_TUNING", "1") == "0":
+    ``SPARK_GRAFT_MALLOC_TUNING`` set to 0/false/no/off (any case)
+    disables entirely."""
+    if os.environ.get("SPARK_GRAFT_MALLOC_TUNING", "1").strip().lower() in _FALSY:
         return
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1024**3))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1024**3))
     # route PyArrow buffers through the same tamed glibc heap rather
     # than the bundled pool's own madvise purging
     os.environ.setdefault("ARROW_DEFAULT_MEMORY_POOL", "system")
+
+
+def _local_dir(master: str) -> str | None:
+    """Shuffle/spill scratch dir: ``SPARK_GRAFT_LOCAL_DIR`` if set, else
+    RAM-backed ``/dev/shm`` for a ``local`` master when it is writable
+    and has >= 8 GiB free, else None (Spark's disk-backed default).
+
+    Local disk can be the tighter limit for shuffle files: a root fs
+    measured at ~0.8 s of file create/sync latency PER tiny shuffle
+    (250k-row groupBy 1.27 s on ext4 vs 0.47 s on tmpfs).  But tmpfs
+    shuffle space competes with executor memory, and on a cluster
+    master ``/dev/shm`` is the DRIVER host's, not the executors', so it
+    is a local-mode choice only; on a cluster set
+    ``SPARK_GRAFT_LOCAL_DIR`` (or ``spark.local.dir`` via
+    ``extra_conf``) to the NVMe scratch array."""
+    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
+    if local_dir is not None or not master.startswith("local"):
+        return local_dir
+    if not (os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK)):
+        return None
+    try:
+        st = os.statvfs("/dev/shm")
+    except OSError:  # pragma: no cover - statvfs is best-effort
+        return None
+    # container /dev/shm defaults (64 MB) or a nearly-full tmpfs keep
+    # the disk-backed Spark default
+    return "/dev/shm" if st.f_bavail * st.f_frsize >= 8 * 1024**3 else None
 
 
 def get_spark(
@@ -35,14 +65,6 @@ def get_spark(
 ) -> SparkSession:
     master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
-    # Shuffle/spill scratch dir (guide §2.1: local disk can be the
-    # tighter limit for shuffle files).  On this sandbox the root fs
-    # pays ~0.8 s of file create/sync latency PER tiny shuffle
-    # (measured: 250k-row groupBy 1.27 s on ext4 vs 0.47 s on tmpfs),
-    # so default to RAM-backed /dev/shm when present.  On a real
-    # cluster set SPARK_GRAFT_LOCAL_DIR (or spark.local.dir via
-    # extra_conf) to the NVMe scratch array instead — tmpfs shuffle
-    # space competes with executor memory and is a local-mode choice.
     # Allocator churn at the Python boundary (guide §4): every numpy /
     # Arrow temp above glibc's default 128 KB mmap threshold pays an
     # mmap+munmap per buffer — page faults plus a cgroup memory
@@ -56,19 +78,9 @@ def get_spark(
     # the budget spark.python.worker.memory plans for.  Set before the
     # JVM launches so the gateway and its forked Python workers
     # inherit; existing values are respected, and
-    # SPARK_GRAFT_MALLOC_TUNING=0 disables.
+    # SPARK_GRAFT_MALLOC_TUNING=0/false/no/off disables.
     _apply_malloc_tuning()
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm") and os.access("/dev/shm", os.W_OK):
-        try:
-            st = os.statvfs("/dev/shm")
-            # only default to tmpfs when it is big enough to hold real
-            # shuffle output — container /dev/shm defaults (64 MB) or a
-            # nearly-full tmpfs keep the disk-backed Spark default
-            if st.f_bavail * st.f_frsize >= 8 * 1024**3:
-                local_dir = "/dev/shm"
-        except OSError:  # pragma: no cover - statvfs is best-effort
-            pass
+    local_dir = _local_dir(master)
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)

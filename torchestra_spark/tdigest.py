@@ -78,6 +78,20 @@ class TDigest:
             unprocessed_weights=np.zeros(max_unprocessed, dtype=np.float64),
         )
 
+    def from_centroids(self, means: np.ndarray, weights: np.ndarray) -> DigestState:
+        """A processed digest holding the given mean-ascending centroids,
+        e.g. a partial's compacted output collected from an executor."""
+        d = self.new_digest()
+        k = len(means)
+        d.processed_means[:k] = means
+        d.processed_weights[:k] = weights
+        d.n_processed = k
+        d.processed_weight = float(np.sum(weights))
+        if k:
+            d.mean_min = float(means[0])
+            d.mean_max = float(means[-1])
+        return d
+
     def add_values(self, digest: DigestState, values: np.ndarray) -> None:
         values = np.asarray(values, dtype=np.float64)
         self.add_centroids(digest, values, np.ones_like(values))
