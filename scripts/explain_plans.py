@@ -2,7 +2,10 @@
 plans/<tag>/<query>.txt, normalized so two checkouts' plans diff clean.
 
 Each query closure from ``bench.bench_queries`` runs as the bench runs
-it; every SQL execution it starts (pinning sub-jobs, count gates, the
+it.  A named query the bench lacks is looked up in
+``__spark_entry__.queries()`` and run on ``SPARK_GRAFT_SF_DIR`` into a
+noop sink, so the plans of every declared query can be diffed.  Every
+SQL execution a query starts (pinning sub-jobs, count gates, the
 final noop write) is written with the text Spark's SQL status store
 recorded for it, sorted by that text (``near_dup_report`` runs two
 branches concurrently, so execution order is not stable).
@@ -28,6 +31,7 @@ import sys
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
+import __spark_entry__  # noqa: E402
 import bench  # noqa: E402
 from torchestra_spark.session import get_spark  # noqa: E402
 
@@ -70,6 +74,18 @@ def _executions(store) -> dict:
     }
 
 
+def _queries(spark, only) -> dict:
+    """The bench's query closures, plus a noop-sink closure for each name
+    in ``only`` that only ``__spark_entry__.queries()`` declares."""
+    queries = bench.bench_queries(spark)
+    declared = __spark_entry__.queries()
+    for name in sorted((only or set()) - set(queries)):
+        if name not in declared:
+            raise SystemExit(f"unknown query {name!r}")
+        queries[name] = lambda q=declared[name]: bench._noop(q(spark, bench.SF_DIR))
+    return queries
+
+
 def main(argv) -> None:
     if not argv:
         raise SystemExit(__doc__)
@@ -84,7 +100,7 @@ def main(argv) -> None:
     store = spark._jsparkSession.sharedState().statusStore()
     bus = spark.sparkContext._jsc.sc().listenerBus()
     try:
-        for name, fn in bench.bench_queries(spark).items():
+        for name, fn in _queries(spark, only).items():
             if only and name not in only:
                 continue
             bus.waitUntilEmpty()

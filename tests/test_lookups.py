@@ -237,8 +237,8 @@ def test_fused_lookups_single_arrow_crossing(spark):
 
 
 def test_fused_lookups_broadcast_branch(spark):
-    """Vocabularies above _BROADCAST_MIN ride a TorrentBroadcast inside
-    the fused UDF — same results as the per-op exprs."""
+    """Vocabularies above _BROADCAST_MIN ride a TorrentBroadcast — same
+    results as the per-op exprs."""
     import numpy as np
 
     from torchestra_spark.operators.lookups import _BROADCAST_MIN, fused_lookups
@@ -250,7 +250,7 @@ def test_fused_lookups_broadcast_branch(spark):
     c, ix = CountLookup(), IndexLookup()
     pipe = Pipeline({"cnt": Feature("cat", [c]), "idx": Feature("cat", [ix])})
     pipe.fit(df)
-    assert sum(len(s.mapping) for s in [c.mapping_spec(), ix.mapping_spec()]) >= _BROADCAST_MIN
+    assert len(c.counts) >= _BROADCAST_MIN and len(ix.lookup) >= _BROADCAST_MIN
     probe = spark.createDataFrame(pd.DataFrame({"cat": keys[:50] + ["unseen"]}))
     out = fused_lookups(probe, {"cnt": (c, "cat"), "idx": (ix, "cat")}).toPandas()
     assert (out.loc[out["cat"] != "unseen", "cnt"] == 2).all()

@@ -201,7 +201,7 @@ def test_pairwise_topk(spark, embs):
 # -------------------------------------------------------------- multimodal
 def test_multimodal_decode_plumbing(spark):
     pdf = pd.DataFrame(
-        {"doc_id": [1, 2, 3], "payload": [b"abc123", b"", b"zzzzzz\x00\xff"]}
+        {"doc_id": [1, 2, 3, 4], "payload": [b"abc123", b"", b"zzzzzz\x00\xff", None]}
     )
     df = M.attach_media_metadata(spark.createDataFrame(pdf), kind="image", fmt="png")
     assert df.schema["media"].dataType.simpleString().startswith("struct<kind:string")
@@ -210,6 +210,12 @@ def test_multimodal_decode_plumbing(spark):
     exp = M._fake_decode(b"abc123", 16)
     assert np.allclose(np.asarray(out.loc[1, "features"]), exp)
     assert np.allclose(np.asarray(out.loc[2, "features"]), np.zeros(16))
+    assert np.array_equal(np.asarray(out.loc[4, "features"]), np.zeros(16))  # NULL
+    # the real decoder gives the same zeros for empty and NULL payloads
+    real = M.decode_features(df.filter("doc_id IN (2, 4)"), n_features=16, decoder="real")
+    got = {r["doc_id"]: r["features"] for r in real.collect()}
+    assert sorted(got) == [2, 4]
+    assert all(np.array_equal(np.asarray(v), np.zeros(16)) for v in got.values())
 
 
 def test_multimodal_real_decoder_unsupported_format(spark):
@@ -368,12 +374,18 @@ def test_real_decode_features_golden(spark):
 
 def test_frame_sampling(spark):
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [1], "payload": [bytes(range(100))]})
+        pd.DataFrame({"doc_id": [1, 2, 3], "payload": [bytes(range(100)), None, b""]})
     )
-    out = M.frame_sample_stub(df, every_n=10, frame_features=8).toPandas()
+    all_rows = M.frame_sample_stub(df, every_n=10, frame_features=8).toPandas()
+    out = all_rows[all_rows["doc_id"] == 1]
     assert len(out) == 10
     assert out["frame_idx"].tolist() == list(range(10))
     assert all(len(v) == 8 for v in out["features"])
+    # NULL and empty payloads each fabricate one frame, index 0
+    for doc in (2, 3):
+        rows = all_rows[all_rows["doc_id"] == doc]
+        assert rows["frame_idx"].tolist() == [0], doc
+        assert np.allclose(np.asarray(rows["features"].iloc[0]), M._fake_decode(b"\x00", 8))
 
 
 def test_ivf_ann(spark, embs):
@@ -499,6 +511,17 @@ def test_embedding_near_dups_exact_and_lsh(spark):
     }
     assert lsh <= exact
     assert (3, 7) in lsh  # ~identical vectors land together in >=1 of 8 tables
+    # an empty frame gives an empty result on every path
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    for method in ("exact", "lsh"):
+        assert S.embedding_near_dups(empty, "embedding", "vec_id", method=method).collect() == []
+    assert S.pairwise_topk_per_row(empty, "embedding", "vec_id").collect() == []
+    # a NULL first vector reaches the stage's named error
+    nullfirst = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="ValueError: lsh_buckets_multi: 1 NULL embedding"):
+        S.embedding_near_dups(nullfirst, "embedding", "vec_id").collect()
 
 
 def test_lsh_buckets_multi_bit_identical_to_per_table(spark):
@@ -1099,6 +1122,10 @@ def test_resize_bmp_real(spark):
     gup = M.decode_bmp_pixels(bytes(up[0].payload))
     yi = (np.arange(8) * 4) // 8
     assert np.array_equal(gup, px[yi][:, yi])
+    # an empty payload is not a BMP: it raises at the codec
+    empty = spark.createDataFrame([(3, b"")], "doc_id long, payload binary")
+    with pytest.raises(Exception, match="not a BMP payload"):
+        M.resize_bmp(empty, "payload", "doc_id", width=2, height=2).collect()
 
 
 def test_ivfpq_exact_config_and_recall(spark, embs):
@@ -1635,6 +1662,10 @@ def test_resize_image_mixed_containers(spark):
         yi = (np.arange(3) * h0) // 3
         xi = (np.arange(4) * w0) // 4
         assert np.array_equal(dec(bytes(out[doc])), px[yi][:, xi]), doc
+    # an empty payload matches no container magic: it raises
+    empty = spark.createDataFrame([(4, b"")], "doc_id long, payload binary")
+    with pytest.raises(Exception, match="resize_image supports"):
+        M.resize_image(empty, width=4, height=3).collect()
 
 
 def test_jpeg_codec_roundtrip_tolerances():
@@ -1744,6 +1775,12 @@ def test_frame_sample_real_through_spark(spark):
     assert sorted(got) == [0, 2, 4]
     for fi in got:
         assert np.allclose(got[fi], [vals[fi] / 255.0] * 4, atol=1e-5)
+    # a frame of only NULL payloads emits no rows; an empty one is not AVI
+    nulls = spark.createDataFrame([(3, None), (4, None)], "doc_id long, payload binary")
+    assert V.frame_sample(nulls, every_n=2, frame_features=4).collect() == []
+    empty = spark.createDataFrame([(5, b"")], "doc_id long, payload binary")
+    with pytest.raises(Exception, match="not an AVI payload"):
+        V.frame_sample(empty, every_n=2, frame_features=4).collect()
 
 
 def test_winnow_release_with_fp_freq_cap(spark):
@@ -1786,7 +1823,10 @@ _VEC_STAGES = {
     "pq_encode": lambda df: S.pq_encode(df, "embedding", _BOOKS),
     "ivfpq_encode": lambda df: S.ivfpq_encode(df, "embedding", np.zeros((1, 2)), _BOOKS),
     "lsh_buckets": lambda df: S.lsh_buckets(df, "embedding", 2, n_planes=4),
+    # infers dim from the first non-NULL vector, then runs lsh_buckets
+    "pairwise_topk_per_row": lambda df: S.pairwise_topk_per_row(df, "embedding", "vec_id"),
 }
+_ERR_STAGE = {"pairwise_topk_per_row": "lsh_buckets"}
 
 
 @pytest.mark.parametrize("rows, err", [
@@ -1795,12 +1835,29 @@ _VEC_STAGES = {
     ([(1, [0.0, 0.0]), (2, None), (3, [10.0, 10.0, 0.0, 0.0])], "1 NULL embedding"),
     ([(1, None)], "1 NULL embedding"),  # a lone NULL failed inside numpy's reshape
     ([(1, [0.0, 0.0]), (2, [10.0, 10.0, 0.0, 0.0])], r"1 embedding\(s\) with length != dim=2"),
-], ids=["null_between", "lone_null", "wrong_length"])
+    ([(1, None), (2, [0.0, 0.0])], "1 NULL embedding"),
+], ids=["null_between", "lone_null", "wrong_length", "null_first"])
 @pytest.mark.parametrize("stage", sorted(_VEC_STAGES))
 def test_vector_stages_reject_null_and_wrong_length(spark, stage, rows, err):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>").coalesce(1)
-    with pytest.raises(Exception, match=f"ValueError: {stage}: {err}"):
+    with pytest.raises(Exception, match=f"ValueError: {_ERR_STAGE.get(stage, stage)}: {err}"):
         _VEC_STAGES[stage](df).collect()
+
+
+def test_train_ivfpq_collects_one_sample(spark, embs, monkeypatch):
+    """train_ivfpq trains its coarse centroids and its residual
+    codebooks from ONE collected training sample."""
+    calls = []
+    orig = S._train_sample
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return orig(*args, **kwargs)
+
+    monkeypatch.setattr(S, "_train_sample", counting)
+    C, B = S.train_ivfpq(embs, "embedding", n_centroids=4, m=8, ks=16, sample=200, iters=2)
+    assert len(calls) == 1
+    assert C.shape == (4, 64) and B.shape == (8, 16, 8)
 
 
 def test_avi_top_down_rows(spark):

@@ -89,12 +89,25 @@ def _dct_matrix() -> np.ndarray:
 DCT = _dct_matrix()
 
 
+# Rec.601 luma weights: the Y row of JFIF's YCbCr and every luminance
+# decoder of the multimodal layer (``_luma``)
+_REC601 = (0.299, 0.587, 0.114)
+
+
+def _luma(rgb: np.ndarray) -> np.ndarray:
+    """(..., 3) uint8 RGB -> (...) float32 Rec.601 luminance in [0,1]."""
+    x = rgb.astype(np.float32) / 255.0
+    wr, wg, wb = _REC601
+    return x[..., 0] * wr + x[..., 1] * wg + x[..., 2] * wb
+
+
 def _rgb_to_ycbcr(px: np.ndarray) -> np.ndarray:
     px = px.astype(np.float64)
     r, g, b = px[..., 0], px[..., 1], px[..., 2]
+    wr, wg, wb = _REC601
     return np.stack(
         [
-            0.299 * r + 0.587 * g + 0.114 * b,
+            wr * r + wg * g + wb * b,
             -0.168736 * r - 0.331264 * g + 0.5 * b + 128.0,
             0.5 * r - 0.418688 * g - 0.081312 * b + 128.0,
         ],
@@ -570,5 +583,4 @@ def _decode_scan(data, pos, frame, scan, quant, huff, restart_interval):
 def decode_jpeg(payload: bytes) -> np.ndarray:
     """Baseline JPEG -> (h, w) float32 luminance in [0,1] (Rec.601 —
     the ``decode_bmp``/``decode_png`` twin)."""
-    rgb = decode_jpeg_pixels(payload).astype(np.float32) / 255.0
-    return rgb[:, :, 0] * 0.299 + rgb[:, :, 1] * 0.587 + rgb[:, :, 2] * 0.114
+    return _luma(decode_jpeg_pixels(payload))

@@ -20,19 +20,21 @@ Schema convention:
                   width int, height int,
                   sample_rate int, n_frames int>
 
-All stages run through ``mapInPandas`` so each task decodes a whole
-Arrow batch, amortizing per-batch setup; batch size is controlled by
-spark.sql.execution.arrow.maxRecordsPerBatch.
+All stages (here and in video.py) run through one driver,
+``_map_payloads``: one ``mapInPandas`` pass in which each task decodes
+a whole Arrow batch, amortizing per-batch setup; batch size is
+controlled by spark.sql.execution.arrow.maxRecordsPerBatch.  Each stage
+supplies only its per-payload function.
 """
 
 from __future__ import annotations
-
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from torchestra_spark.functions.jpeg import _luma, decode_jpeg_pixels, encode_jpeg
 
 MEDIA_STRUCT = (
     "kind string, format string, width int, height int, sample_rate int, n_frames int"
@@ -89,33 +91,9 @@ def encode_bmp(pixels: np.ndarray) -> bytes:
     return header + info + b"".join(rows)
 
 
-def decode_bmp(payload: bytes) -> np.ndarray:
-    """Uncompressed 24-bit BMP -> (h, w) float32 luminance in [0,1]."""
-    import struct
-
-    if payload[:2] != b"BM":
-        raise ValueError("not a BMP payload")
-    off = struct.unpack_from("<I", payload, 10)[0]
-    w, h = struct.unpack_from("<ii", payload, 18)
-    bpp = struct.unpack_from("<H", payload, 28)[0]
-    comp = struct.unpack_from("<I", payload, 30)[0]
-    if bpp != 24 or comp != 0:
-        raise NotImplementedError(f"only uncompressed 24-bit BMP supported (bpp={bpp})")
-    bottom_up = h > 0
-    h = abs(h)
-    row = w * 3
-    stride = row + (4 - row % 4) % 4
-    buf = np.frombuffer(payload, dtype=np.uint8, count=stride * h, offset=off)
-    rows = buf.reshape(h, stride)[:, :row].reshape(h, w, 3)
-    if bottom_up:
-        rows = rows[::-1]
-    bgr = rows.astype(np.float32) / 255.0
-    return bgr[:, :, 2] * 0.299 + bgr[:, :, 1] * 0.587 + bgr[:, :, 0] * 0.114
-
-
 def decode_bmp_pixels(payload: bytes) -> np.ndarray:
-    """Uncompressed 24-bit BMP -> (h, w, 3) uint8 RGB (the raw-pixel
-    twin of ``decode_bmp``, for transforms that must re-encode —
+    """Uncompressed 24-bit BMP -> (h, w, 3) uint8 RGB (the raw pixels
+    behind ``decode_bmp``, for transforms that must re-encode —
     luminance is lossy)."""
     import struct
 
@@ -136,6 +114,11 @@ def decode_bmp_pixels(payload: bytes) -> np.ndarray:
     if bottom_up:
         rows = rows[::-1]
     return rows[:, :, ::-1].copy()  # BGR -> RGB
+
+
+def decode_bmp(payload: bytes) -> np.ndarray:
+    """Uncompressed 24-bit BMP -> (h, w) float32 luminance in [0,1]."""
+    return _luma(decode_bmp_pixels(payload))
 
 
 def _png_chunk(tag: bytes, body: bytes) -> bytes:
@@ -257,8 +240,25 @@ def decode_png_pixels(payload: bytes) -> np.ndarray:
 def decode_png(payload: bytes) -> np.ndarray:
     """Non-interlaced 8-bit PNG -> (h, w) float32 luminance in [0,1]
     (the ``decode_bmp`` twin; same Rec.601 weights)."""
-    rgb = decode_png_pixels(payload).astype(np.float32) / 255.0
-    return rgb[:, :, 0] * 0.299 + rgb[:, :, 1] * 0.587 + rgb[:, :, 2] * 0.114
+    return _luma(decode_png_pixels(payload))
+
+
+# magic bytes -> (pixel decoder, encoder) of every image container with
+# a pure-numpy codec: what decoder="real" and resize_image understand
+_IMAGE_CODECS = (
+    (b"BM", decode_bmp_pixels, encode_bmp),
+    (PNG_MAGIC, decode_png_pixels, encode_png),
+    (b"\xff\xd8", decode_jpeg_pixels, encode_jpeg),  # lossy re-encode
+)
+
+
+def _image_codec(payload: bytes):
+    """(pixel decoder, encoder) of the image container ``payload`` is
+    in, sniffed by its magic bytes; None for any other payload."""
+    for magic, dec, enc in _IMAGE_CODECS:
+        if payload.startswith(magic):
+            return dec, enc
+    return None
 
 
 def encode_wav(samples: np.ndarray, sample_rate: int = 16000) -> bytes:
@@ -331,21 +331,16 @@ def _real_decode(payload: bytes, n: int) -> np.ndarray:
     ffmpeg — the documented integration point)."""
     if payload is None or len(payload) == 0:
         return np.zeros(n, dtype=np.float32)
-    if payload[:2] == b"BM":
-        return _pool_features(decode_bmp(payload).ravel(), n)
-    if payload[:8] == PNG_MAGIC:
-        return _pool_features(decode_png(payload).ravel(), n)
-    if payload[:2] == b"\xff\xd8":
-        from torchestra_spark.functions.jpeg import decode_jpeg
-
-        return _pool_features(decode_jpeg(payload).ravel(), n)
     if payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
         return _pool_features(decode_wav(payload), n)
-    raise NotImplementedError(
-        "real decoding supports uncompressed BMP, non-interlaced 8-bit "
-        "PNG, baseline JPEG, and 16-bit PCM WAV here; video requires "
-        "ffmpeg (not available in this environment)"
-    )
+    codec = _image_codec(payload)
+    if codec is None:
+        raise NotImplementedError(
+            "real decoding supports uncompressed BMP, non-interlaced 8-bit "
+            "PNG, baseline JPEG, and 16-bit PCM WAV here; video requires "
+            "ffmpeg (not available in this environment)"
+        )
+    return _pool_features(_luma(codec[0](payload)).ravel(), n)
 
 
 def _fake_decode(payload: bytes, n: int) -> np.ndarray:
@@ -358,6 +353,67 @@ def _fake_decode(payload: bytes, n: int) -> np.ndarray:
     return (arr[idx % len(arr)].astype(np.float32) / 255.0) * (1.0 + (idx % 7) * 0.01)
 
 
+def _map_payloads(df: DataFrame, payload_col: str, id_col: str, out_ddl: str, fn) -> DataFrame:
+    """(id, <out_ddl columns>) from ONE Arrow-batched ``mapInPandas``
+    pass over the binary column ``payload_col``.
+
+    ``fn(payload)`` gets one payload (``bytes``, or None for a NULL: each
+    stage keeps its own NULL policy) and returns a list of output rows,
+    each a tuple matching ``out_ddl``; the payload's id repeats once per
+    row.  Decoding is CPU-heavy and media tables are often a few files,
+    so the input is first spread over the session's parallelism
+    (``_ensure_parallelism``)."""
+    from torchestra_spark.functions.dedup import _ensure_parallelism
+
+    names = [f.split()[0] for f in out_ddl.split(",")]
+    sel = _ensure_parallelism(
+        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
+    )
+
+    def run(batches):
+        for pdf in batches:
+            outs = [fn(p) for p in pdf["__p"]]
+            rows = [r for o in outs for r in o]
+            if not rows:
+                # pandas types an empty column float64, which Arrow
+                # cannot convert to an array column: emit nothing
+                continue
+            data = {"__id": np.repeat(pdf["__id"].to_numpy(), [len(o) for o in outs])}
+            data.update((n, list(c)) for n, c in zip(names, zip(*rows)))
+            yield pd.DataFrame(data)
+
+    id_type = df.schema[id_col].dataType.simpleString()
+    out = sel.mapInPandas(run, f"__id {id_type}, {out_ddl}")
+    return out.withColumnRenamed("__id", id_col)
+
+
+def _resize_nearest(px: np.ndarray, height: int, width: int) -> np.ndarray:
+    """Nearest-neighbor resample of an (h, w, ...) image to (height,
+    width): two integer index vectors — the deterministic choice
+    (bilinear would tie the oracle to float rounding)."""
+    h0, w0 = px.shape[:2]
+    yi = (np.arange(height, dtype=np.int64) * h0) // height
+    xi = (np.arange(width, dtype=np.int64) * w0) // width
+    return px[yi][:, xi]
+
+
+def _resize_payloads(
+    df: DataFrame, payload_col: str, id_col: str, width: int, height: int, codec_of
+) -> DataFrame:
+    """(id, payload) with every image resampled to (height, width) and
+    re-encoded by ``codec_of(payload) -> (pixel decoder, encoder)``;
+    NULL payloads pass through as NULL."""
+
+    def resize(p):
+        if p is None:
+            return [(None,)]
+        b = bytes(p)
+        dec, enc = codec_of(b)
+        return [(enc(_resize_nearest(dec(b), height, width)),)]
+
+    return _map_payloads(df, payload_col, id_col, "payload binary", resize)
+
+
 def decode_features(
     df: DataFrame,
     payload_col: str = "payload",
@@ -367,29 +423,21 @@ def decode_features(
 ) -> DataFrame:
     """payload binary -> features array<float>[n_features].
 
-    decoder='real' decodes uncompressed BMP and 16-bit PCM WAV with the
-    pure-numpy codecs above (luminance / PCM samples mean-pooled into
-    ``n_features`` buckets); other containers raise NotImplementedError
+    decoder='real' decodes uncompressed BMP, non-interlaced 8-bit PNG,
+    baseline JPEG and 16-bit PCM WAV with the pure-numpy codecs above
+    (luminance / PCM samples mean-pooled into ``n_features`` buckets;
+    uncompressed AVI video is sampled per frame by
+    ``video.frame_sample``); other containers raise NotImplementedError
     at the PIL/ffmpeg integration point.  decoder='fake' remains the
-    deterministic stand-in for formats that need external codecs.
+    deterministic stand-in for formats that need external codecs.  NULL
+    and empty payloads give ``n_features`` zeros.
     """
     if decoder not in ("fake", "real"):
         raise ValueError(decoder)
-    id_type = df.schema[id_col].dataType.simpleString()
-    from torchestra_spark.functions.dedup import _ensure_parallelism
-
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    )
     kernel = _real_decode if decoder == "real" else _fake_decode
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [kernel(p, n_features) for p in pdf["__p"]]
-            yield pd.DataFrame({"__id": pdf["__id"], "features": feats})
-
-    out = sel.mapInPandas(decode, f"__id {id_type}, features array<float>")
-    return out.withColumnRenamed("__id", id_col)
+    return _map_payloads(
+        df, payload_col, id_col, "features array<float>", lambda p: [(kernel(p, n_features),)]
+    )
 
 
 def resize_bmp(
@@ -405,33 +453,11 @@ def resize_bmp(
 
     The Spark shape is the multimodal contract: opaque binary column
     in, opaque binary column out, Arrow-batched mapInPandas, no
-    external codec.  Nearest-neighbor is two integer index vectors —
-    the deterministic choice (bilinear would tie the oracle to float
-    rounding).  NULL payloads pass through as NULL; non-BMP payloads
-    raise at the codec (same contract as decode_features)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    from torchestra_spark.functions.dedup import _ensure_parallelism
-
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
+    external codec.  NULL payloads pass through as NULL; non-BMP
+    payloads raise at the codec (same contract as decode_features)."""
+    return _resize_payloads(
+        df, payload_col, id_col, width, height, lambda b: (decode_bmp_pixels, encode_bmp)
     )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for p in pdf["__p"]:
-                if p is None:
-                    outs.append(None)
-                    continue
-                px = decode_bmp_pixels(bytes(p))
-                h0, w0 = px.shape[:2]
-                yi = (np.arange(height, dtype=np.int64) * h0) // height
-                xi = (np.arange(width, dtype=np.int64) * w0) // width
-                outs.append(encode_bmp(px[yi][:, xi]))
-            yield pd.DataFrame({"__id": pdf["__id"], "payload": outs})
-
-    out = sel.mapInPandas(run, f"__id {id_type}, payload binary")
-    return out.withColumnRenamed("__id", id_col)
 
 
 def resize_image(
@@ -442,53 +468,24 @@ def resize_image(
     height: int = 224,
 ) -> DataFrame:
     """Container-preserving image resize over MIXED binary payloads:
-    sniffs each payload by magic (BMP or PNG), decodes with the
+    sniffs each payload by magic (BMP, PNG or JPEG), decodes with the
     pure-numpy codec, nearest-neighbor resamples to (height, width),
     and re-encodes in the SAME container — the ``resize_bmp`` kernel
     generalized to a heterogeneous image column (the realistic corpus
     shape: one binary column, many formats).  NULL payloads pass
     through; unsupported containers raise at the codec (same contract
     as ``decode_features``)."""
-    id_type = df.schema[id_col].dataType.simpleString()
-    from torchestra_spark.functions.dedup import _ensure_parallelism
 
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    )
+    def codec_of(b: bytes):
+        codec = _image_codec(b)
+        if codec is None:
+            raise NotImplementedError(
+                "resize_image supports BMP, non-interlaced 8-bit PNG, "
+                "and baseline JPEG; video frames require ffmpeg"
+            )
+        return codec
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for p in pdf["__p"]:
-                if p is None:
-                    outs.append(None)
-                    continue
-                b = bytes(p)
-                if b[:2] == b"BM":
-                    dec, enc = decode_bmp_pixels, encode_bmp
-                elif b[:8] == PNG_MAGIC:
-                    dec, enc = decode_png_pixels, encode_png
-                elif b[:2] == b"\xff\xd8":
-                    from torchestra_spark.functions.jpeg import (
-                        decode_jpeg_pixels,
-                        encode_jpeg,
-                    )
-
-                    dec, enc = decode_jpeg_pixels, encode_jpeg  # lossy re-encode
-                else:
-                    raise NotImplementedError(
-                        "resize_image supports BMP, non-interlaced 8-bit PNG, "
-                        "and baseline JPEG; video frames require ffmpeg"
-                    )
-                px = dec(b)
-                h0, w0 = px.shape[:2]
-                yi = (np.arange(height, dtype=np.int64) * h0) // height
-                xi = (np.arange(width, dtype=np.int64) * w0) // width
-                outs.append(enc(px[yi][:, xi]))
-            yield pd.DataFrame({"__id": pdf["__id"], "payload": outs})
-
-    out = sel.mapInPandas(run, f"__id {id_type}, payload binary")
-    return out.withColumnRenamed("__id", id_col)
+    return _resize_payloads(df, payload_col, id_col, width, height, codec_of)
 
 
 def resize_stub(
@@ -514,33 +511,23 @@ def frame_sample_stub(
     decoder: str = "fake",
 ) -> DataFrame:
     """Video frame-sampling plumbing: (id, frame_idx, features).  The
-    fake decoder fabricates ceil(len(payload)/every_n) frames;
-    ``decoder="real"`` delegates to :func:`torchestra_spark.functions.
-    video.frame_sample` — real demux of uncompressed AVI containers
-    (compressed codecs raise there, at the fourcc check)."""
+    fake decoder fabricates max(1, len(payload) // every_n) frames (one
+    frame, index 0, for a NULL or empty payload); ``decoder="real"``
+    delegates to :func:`torchestra_spark.functions.video.frame_sample`
+    — real demux of uncompressed AVI containers (compressed codecs
+    raise there, at the fourcc check)."""
     if decoder == "real":
         from torchestra_spark.functions.video import frame_sample
 
         return frame_sample(
             df, payload_col, id_col, every_n=every_n, frame_features=frame_features
         )
-    id_type = df.schema[id_col].dataType.simpleString()
-    from torchestra_spark.functions.dedup import _ensure_parallelism
 
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    )
+    def sample(p):
+        p = p or b""
+        return [
+            (fi, _fake_decode(p + bytes([fi % 256]), frame_features))
+            for fi in range(max(1, len(p) // every_n))
+        ]
 
-    def sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for i, p in zip(pdf["__id"], pdf["__p"]):
-                n_frames = max(1, (0 if p is None else len(p)) // every_n)
-                for fi in range(n_frames):
-                    ids.append(i)
-                    idxs.append(fi)
-                    feats.append(_fake_decode((p or b"") + bytes([fi % 256]), frame_features))
-            yield pd.DataFrame({"__id": ids, "frame_idx": idxs, "features": feats})
-
-    out = sel.mapInPandas(sample, f"__id {id_type}, frame_idx int, features array<float>")
-    return out.withColumnRenamed("__id", id_col)
+    return _map_payloads(df, payload_col, id_col, "frame_idx int, features array<float>", sample)

@@ -14,10 +14,9 @@
 
 from __future__ import annotations
 
-from typing import Iterator, List, Optional, Sequence
+from typing import List, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -148,32 +147,66 @@ def _fixed_dim_matrix(arr, dim: int, stage: str) -> np.ndarray:
 
 
 def _vec_matrix_stage(
-    df: DataFrame, vec_col: str, dim: int, out_field: str, kernel, stage: str
+    df: DataFrame,
+    vec_col: str,
+    dim: int,
+    out_ddl: str,
+    kernel,
+    stage: str,
+    keep_vec: bool = True,
+    aux: Sequence[str] = (),
 ) -> DataFrame:
-    """Append a column computed from the (n, dim) embedding matrix in ONE
-    ``mapInArrow`` pass over the flat ListArray buffer — the ``pq_encode``
-    pattern: reshape the contiguous child buffer instead of materializing
-    a per-row numpy object via ``np.stack(Series.map(np.asarray))``
+    """Append the ``out_ddl`` columns computed from the (n, dim) embedding
+    matrix in ONE ``mapInArrow`` pass over the flat ListArray buffer:
+    reshape the contiguous child buffer instead of materializing a
+    per-row numpy object via ``np.stack(Series.map(np.asarray))``
     (measured ~2.4x on the token-sketch analog, dedup.py flat-buffer
     notes).  All other columns pass through untouched.
 
-    ``out_field`` is a ``"name type"`` DDL fragment; ``kernel(X) ->
-    pyarrow.Array`` of length ``n``.  NULL or wrong-length vectors raise
-    (``_fixed_dim_matrix``) with ``stage`` in the message."""
+    ``kernel(X, *aux_values)`` gets the matrix plus the numpy values of
+    each ``aux`` column and returns one numpy array per ``out_ddl``
+    column (a lone array for one column): 1-D for a scalar column, 2-D
+    (n, k) for an array column.  ``keep_vec=False`` moves the vector
+    column last under a private name and leaves it out of the output,
+    so no vector bytes travel back from Python.  NULL or wrong-length
+    vectors raise (``_fixed_dim_matrix``) with ``stage`` in the
+    message."""
     import pyarrow as pa
 
-    parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
-    out_schema = ", ".join(parts + [out_field])
-    vec_name = vec_col
+    if not keep_vec:
+        df = df.select(*[c for c in df.columns if c != vec_col], F.col(vec_col).alias("__v"))
+        vec_col = "__v"
+    fields = df.schema.fields
+    keep = [i for i, f in enumerate(fields) if keep_vec or f.name != vec_col]
+    parts = [f"`{fields[i].name}` {fields[i].dataType.simpleString()}" for i in keep]
+    out_names = [f.split()[0] for f in out_ddl.split(",")]
+
+    def arrow(c: np.ndarray):
+        if c.ndim == 1:
+            return pa.array(c)
+        n, k = c.shape
+        return pa.ListArray.from_arrays(
+            pa.array(np.arange(n + 1, dtype=np.int32) * k), pa.array(c.ravel())
+        )
 
     def run(batches):
         for b in batches:
-            X = _fixed_dim_matrix(b.column(b.schema.get_field_index(vec_name)), dim, stage)
-            out = kernel(X)
-            cols = [b.column(i) for i in range(b.num_columns)]
-            yield pa.RecordBatch.from_arrays(cols + [out], list(b.schema.names) + [out_field.split(" ")[0]])
+            X = _fixed_dim_matrix(b.column(b.schema.get_field_index(vec_col)), dim, stage)
+            extra = [b.column(b.schema.get_field_index(c)).to_numpy(zero_copy_only=False) for c in aux]
+            out = kernel(X, *extra)
+            out = [out] if isinstance(out, np.ndarray) else out
+            yield pa.RecordBatch.from_arrays(
+                [b.column(i) for i in keep] + [arrow(c) for c in out],
+                [b.schema.names[i] for i in keep] + out_names,
+            )
 
-    return df.mapInArrow(run, out_schema)
+    return df.mapInArrow(run, ", ".join(parts + [out_ddl]))
+
+
+def _buckets(X: np.ndarray, P: np.ndarray, weights: np.ndarray) -> np.ndarray:
+    """Random-hyperplane bucket ids: the sign pattern of X @ P packed
+    into an int64 (one row of ``X`` per id; works for one vector too)."""
+    return ((X @ P) > 0) @ weights
 
 
 def lsh_buckets(
@@ -187,15 +220,11 @@ def lsh_buckets(
     """Random-hyperplane bucket id per row: sign pattern of X @ P packed
     into an int.  One numpy matmul per Arrow batch over the flat
     ListArray buffer (mapInArrow) — no per-row Python object per cell."""
-    import pyarrow as pa
-
     P = _planes(dim, n_planes, seed)
     weights = (1 << np.arange(n_planes, dtype=np.int64))
-
-    def kernel(X: np.ndarray):
-        return pa.array(((X @ P) > 0) @ weights, type=pa.int64())
-
-    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} bigint", kernel, "lsh_buckets")
+    return _vec_matrix_stage(
+        df, vec_col, dim, f"{out_col} bigint", lambda X: _buckets(X, P, weights), "lsh_buckets"
+    )
 
 
 def lsh_buckets_multi(
@@ -211,30 +240,15 @@ def lsh_buckets_multi(
     runs, so bucket values are bit-identical to T separate calls — but
     the corpus is scanned and Arrow-transferred once instead of once
     per table (the loop-of-unions shape this replaces)."""
-    import pyarrow as pa
-
     Ps = [_planes(dim, n_planes, s) for s in seeds]
     weights = (1 << np.arange(n_planes, dtype=np.int64))
-    T = len(Ps)
 
     def kernel(X: np.ndarray):
-        n = X.shape[0]
-        if n:
-            cols = np.stack([((X @ P) > 0) @ weights for P in Ps], axis=1)
-        else:
-            cols = np.empty((0, T), dtype=np.int64)
-        return pa.ListArray.from_arrays(
-            pa.array(np.arange(n + 1, dtype=np.int32) * T),
-            pa.array(cols.ravel(), type=pa.int64()),
-        )
+        return np.stack([_buckets(X, P, weights) for P in Ps], axis=1)
 
     return _vec_matrix_stage(
         df, vec_col, dim, f"{out_col} array<bigint>", kernel, "lsh_buckets_multi"
     )
-
-
-def _bucket_of(query: np.ndarray, P: np.ndarray, weights: np.ndarray) -> int:
-    return int(((query @ P) > 0) @ weights)
 
 
 def _probe_masks(margins: np.ndarray, n_probes: int) -> np.ndarray:
@@ -301,7 +315,7 @@ def ann_topk(
     cond = None
     for t, s in enumerate(seeds):
         P = _planes(len(q), n_planes, s)
-        base = _bucket_of(q, P, weights)
+        base = int(_buckets(q, P, weights))
         probes = [base ^ int(m) for m in _probe_masks(np.abs(q @ P), n_probes)]
         c = F.element_at(F.col("__bkts"), t + 1).isin(probes)
         cond = c if cond is None else (cond | c)
@@ -333,6 +347,34 @@ def _train_sample(
     )
 
 
+def _to_matrix(df: DataFrame, vec_col: str) -> np.ndarray:
+    """Collect a bounded frame's vectors to the driver as one (n, d)
+    float64 matrix."""
+    pdf = df.toPandas()
+    return np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+
+
+def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """Index of the nearest row of ``C`` for every row of ``X``:
+    argmin ||x-c||^2 = argmin(c.c - 2 x.c), O(n*k) memory, no (n, k, d)
+    difference tensor."""
+    return ((C**2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)).argmin(axis=1)
+
+
+def _kmeans(X: np.ndarray, k: int, iters: int, rng: np.random.RandomState) -> np.ndarray:
+    """Lloyd's k-means: ``min(k, n)`` distinct rows drawn with ``rng``
+    seed the centroids, then ``iters`` assign/mean rounds (an empty
+    cluster keeps its centroid)."""
+    C = X[rng.choice(len(X), size=min(k, len(X)), replace=False)].copy()
+    for _ in range(iters):
+        assign = _nearest(X, C)
+        for j in range(len(C)):
+            members = X[assign == j]
+            if len(members):
+                C[j] = members.mean(axis=0)
+    return C
+
+
 def train_ivf_centroids(
     df: DataFrame,
     vec_col: str,
@@ -345,20 +387,8 @@ def train_ivf_centroids(
     """Train an IVF coarse quantizer: k-means (Lloyd's, deterministic
     seed) over a bounded sample collected to the driver — the classic
     two-stage pattern: train small, assign at scale."""
-    pdf = _train_sample(df, vec_col, sample, order_col).toPandas()
-    X = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-    rng = np.random.RandomState(seed)
-    C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)].copy()
-    for _ in range(iters):
-        # argmin ||x-c||^2 = argmin(c.c - 2 x.c): O(n*k) memory, no
-        # (n, k, d) difference tensor
-        d = (C**2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
-        assign = d.argmin(axis=1)
-        for j in range(len(C)):
-            members = X[assign == j]
-            if len(members):
-                C[j] = members.mean(axis=0)
-    return C
+    X = _to_matrix(_train_sample(df, vec_col, sample, order_col), vec_col)
+    return _kmeans(X, n_centroids, iters, np.random.RandomState(seed))
 
 
 def ivf_assign(
@@ -367,18 +397,17 @@ def ivf_assign(
     """Assign every row to its nearest centroid cell (one numpy matmul
     per Arrow batch).  Store/partition by this column for scan-pruned
     ANN at scale."""
-    import pyarrow as pa
-
     C = np.asarray(centroids, dtype=np.float64)
-    c_norms = (C**2).sum(axis=1)
-    dim = C.shape[1]
+    return _vec_matrix_stage(
+        df, vec_col, C.shape[1], f"{out_col} int",
+        lambda X: _nearest(X, C).astype(np.int32), "ivf_assign",
+    )
 
-    def kernel(X: np.ndarray):
-        # argmin ||x-c||^2 = argmin(c.c - 2 x.c)
-        d = c_norms[None, :] - 2.0 * (X @ C.T)
-        return pa.array(d.argmin(axis=1).astype(np.int32), type=pa.int32())
 
-    return _vec_matrix_stage(df, vec_col, dim, f"{out_col} int", kernel, "ivf_assign")
+def _probe_cells(q: np.ndarray, C: np.ndarray, n_probes: int) -> List[int]:
+    """The ``n_probes`` cells whose centroids are nearest the query."""
+    d = ((C - q[None, :]) ** 2).sum(axis=1)
+    return [int(i) for i in np.argsort(d)[:n_probes]]
 
 
 def ivf_topk(
@@ -393,13 +422,8 @@ def ivf_topk(
     """IVF ANN: scan only the ``n_probes`` cells nearest to the query,
     exact cosine re-rank inside.  With the table partitioned by
     ``ivf_cell`` the probe prunes at the scan."""
-    q = np.asarray(list(query), dtype=np.float64)
-    C = np.asarray(centroids, dtype=np.float64)
-    d = ((C - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in np.argsort(d)[:n_probes]]
-    assigned = ivf_assign(df, vec_col, C)
-    cand = assigned.filter(F.col("ivf_cell").isin(probes))
-    return brute_force_topk(cand, vec_col, list(q), k=k, id_col=id_col)
+    assigned = ivf_assign(df, vec_col, centroids)
+    return ivf_topk_stored(assigned, vec_col, query, centroids, k, n_probes, id_col)
 
 
 def ivf_topk_stored(
@@ -423,9 +447,7 @@ def ivf_topk_stored(
     the same centroids (plan-quality pytest asserts the pruning, the
     driver oracle checks values)."""
     q = np.asarray(list(query), dtype=np.float64)
-    C = np.asarray(centroids, dtype=np.float64)
-    d = ((C - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in np.argsort(d)[:n_probes]]
+    probes = _probe_cells(q, np.asarray(centroids, dtype=np.float64), n_probes)
     cand = df.filter(F.col(cell_col).isin(probes))
     return brute_force_topk(cand, vec_col, list(q), k=k, id_col=id_col)
 
@@ -460,7 +482,7 @@ def embedding_near_dups(
     * ``method='exact'`` — all-pairs self-join baseline for verification
       and small tables; quadratic, use only as the correctness oracle.
     """
-    from torchestra_spark.functions.dedup import _ensure_parallelism
+    from torchestra_spark.functions.dedup import _capped_self_join, _ensure_parallelism
 
     base = _ensure_parallelism(
         df.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"))
@@ -481,29 +503,13 @@ def embedding_near_dups(
         raise ValueError(method)
     dim = _infer_dim(df, vec_col)
     # all T tables' buckets in ONE scan + Arrow stage, then posexplode
-    # to (table, bucket) rows — bit-identical to per-table lsh_buckets
+    # to (table, bucket) rows — bit-identical to per-table lsh_buckets;
+    # (table, bucket) cells above max_bucket_size are dropped first
     banded = lsh_buckets_multi(
         base, "__v", dim, n_planes, [seed + 1000 * t for t in range(tables)]
     ).select("__id", F.posexplode("buckets").alias("__tbl", "bucket"))
-    if max_bucket_size is not None:
-        # blocklist of oversized (table, bucket) cells: one map-side-
-        # combined count, broadcast anti-join (blocklist holds only
-        # cells ABOVE the cap — tiny by construction for real corpora)
-        big = (
-            banded.groupBy("__tbl", "bucket")
-            .agg(F.count(F.lit(1)).alias("__bn"))
-            .filter(F.col("__bn") > max_bucket_size)
-            .select("__tbl", "bucket")
-        )
-        banded = banded.join(F.broadcast(big), ["__tbl", "bucket"], "left_anti")
-    l, r = banded.alias("l"), banded.alias("r")
     cand = (
-        l.join(
-            r,
-            (F.col("l.__tbl") == F.col("r.__tbl"))
-            & (F.col("l.bucket") == F.col("r.bucket"))
-            & (F.col("l.__id") < F.col("r.__id")),
-        )
+        _capped_self_join(banded, ["__tbl", "bucket"], max_bucket_size)
         .select(F.col("l.__id").alias("id_a"), F.col("r.__id").alias("id_b"))
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -563,8 +569,11 @@ def pairwise_topk_per_row(
 
 
 def _infer_dim(df: DataFrame, vec_col: str) -> int:
-    row = df.select(F.size(vec_col).alias("d")).first()
-    return int(row["d"])
+    """Length of the first non-NULL vector, 0 when there is none: an
+    empty frame then gives an empty result, and NULL vectors reach
+    ``_fixed_dim_matrix``'s named error like in every vector stage."""
+    row = df.filter(F.col(vec_col).isNotNull()).select(F.size(vec_col)).first()
+    return 0 if row is None else int(row[0])
 
 
 def exact_knn_batch(
@@ -673,14 +682,13 @@ def recall_at_k(
     distributed brute-force pass for ALL queries — no full-corpus
     driver collect, so the harness runs unchanged on a 100 TB corpus
     (the GT pass costs one scan; the per-fn ANN searches dominate)."""
-    qpdf = (
+    queries = (
         df.select(F.xxhash64(F.lit(seed), vec_col).alias("__h"), vec_col)
         .orderBy("__h", vec_col)
         .limit(n_queries)
         .select(vec_col)
-        .toPandas()
     )
-    Q = np.stack(qpdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+    Q = _to_matrix(queries, vec_col)
     truth = exact_topk_multi(df, vec_col, id_col, Q, k)
     out = {}
     for name, fn in search_fns.items():
@@ -708,8 +716,7 @@ def train_pq(
     per subspace over a bounded driver-side sample — the same
     train-small/encode-at-scale pattern as IVF.  Returns codebooks of
     shape (m, ks, d/m); d must be divisible by m."""
-    pdf = _train_sample(df, vec_col, sample, order_col).toPandas()
-    X = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+    X = _to_matrix(_train_sample(df, vec_col, sample, order_col), vec_col)
     return _pq_fit(X, m, ks, iters, seed)
 
 
@@ -725,18 +732,18 @@ def _pq_fit(X: np.ndarray, m: int, ks: int, iters: int, seed: int) -> np.ndarray
     rng = np.random.RandomState(seed)
     books = np.empty((m, min(ks, len(X)), sub), dtype=np.float64)
     for j in range(m):
-        Xs = X[:, j * sub : (j + 1) * sub]
-        C = Xs[rng.choice(len(Xs), size=min(ks, len(Xs)), replace=False)].copy()
-        for _ in range(iters):
-            # O(n*ks) memory (matmul trick), not an (n, ks, sub) tensor
-            dist = (C**2).sum(axis=1)[None, :] - 2.0 * (Xs @ C.T)
-            assign = dist.argmin(axis=1)
-            for c in range(len(C)):
-                members = Xs[assign == c]
-                if len(members):
-                    C[c] = members.mean(axis=0)
-        books[j] = C
+        books[j] = _kmeans(X[:, j * sub : (j + 1) * sub], ks, iters, rng)
     return books
+
+
+def _pq_codes(X: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """(n, m) int32 PQ code: the nearest centroid of each subvector in
+    its subspace's codebook ``B[j]``."""
+    m, _, sub = B.shape
+    codes = np.empty((len(X), m), dtype=np.int32)
+    for j in range(m):
+        codes[:, j] = _nearest(X[:, j * sub : (j + 1) * sub], B[j])
+    return codes
 
 
 def pq_encode(
@@ -747,40 +754,12 @@ def pq_encode(
     candidate scoring.  One numpy matmul per subspace per Arrow batch
     via mapInArrow over the flat ListArray buffer — no per-row
     Python."""
-    import pyarrow as pa
-
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, ks, sub = B.shape
-    other = [f.name for f in df.schema.fields if f.name != vec_col]
-    sel = df.select(*other, F.col(vec_col).alias("__v"))
-    # joined as a list so a vector-only input (no passthrough columns)
-    # doesn't produce a leading-comma schema string
-    parts = [
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name != vec_col
-    ]
-    out_schema = ", ".join(parts + [f"{out_col} array<int>"])
-
-    def encode(batches):
-        for b in batches:
-            X = _fixed_dim_matrix(b.column(b.schema.get_field_index("__v")), m * sub, "pq_encode")
-            n = len(X)
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                Xs = X[:, j * sub : (j + 1) * sub]
-                C = B[j]
-                dist = (C**2).sum(axis=1)[None, :] - 2.0 * (Xs @ C.T)
-                codes[:, j] = dist.argmin(axis=1).astype(np.int32)
-            code_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(n + 1, dtype=np.int32) * m),
-                pa.array(codes.ravel(), type=pa.int32()),
-            )
-            cols = [b.column(i) for i in range(b.num_columns) if b.schema.names[i] != "__v"]
-            names = [nm for nm in b.schema.names if nm != "__v"]
-            yield pa.RecordBatch.from_arrays(cols + [code_arr], names + [out_col])
-
-    return sel.mapInArrow(encode, out_schema)
+    m, _, sub = B.shape
+    return _vec_matrix_stage(
+        df, vec_col, m * sub, f"{out_col} array<int>",
+        lambda X: _pq_codes(X, B), "pq_encode", keep_vec=False,
+    )
 
 
 def pq_topk(
@@ -796,8 +775,6 @@ def pq_topk(
     the driver and broadcast; each row's approximate distance is m
     table lookups summed — no vector data moves at query time, and
     orderBy+limit compiles to TakeOrderedAndProject."""
-    import pyarrow as pa
-
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, ks, sub = B.shape
     q = np.asarray(query, dtype=np.float64).reshape(m, sub)
@@ -806,8 +783,7 @@ def pq_topk(
     def kernel(X: np.ndarray):
         # codes arrive as the flat ListArray buffer reshaped (n, m);
         # float64 round-trip is exact for code ids (< ks <= 2^16)
-        codes = X.astype(np.int64)
-        return pa.array(table[np.arange(m)[None, :], codes].sum(axis=1), type=pa.float64())
+        return table[np.arange(m)[None, :], X.astype(np.int64)].sum(axis=1)
 
     scored = _vec_matrix_stage(code_df, code_col, m, "pq_dist double", kernel, "pq_topk")
     return scored.select(id_col, "pq_dist").orderBy(
@@ -822,6 +798,18 @@ def sq_l2(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def _exact_rerank(
+    cand: DataFrame, vec_df: DataFrame, query: Sequence[float], k: int, id_col: str, vec_col: str
+) -> DataFrame:
+    """Exact squared-L2 top-k of the ``vec_df`` rows whose ids are in
+    the (small) shortlist ``cand``: a broadcast semi-join, so only the
+    shortlist rows are scored."""
+    exact = vec_df.join(F.broadcast(cand.select(id_col)), id_col).select(
+        id_col, sq_l2(F.col(vec_col), _lit_vec(query)).alias("dist")
+    )
+    return exact.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
 
 
 def pq_rerank_topk(
@@ -854,10 +842,7 @@ def pq_rerank_topk(
     cand = pq_topk(
         code_df, codebooks, query, k=shortlist, id_col=id_col, code_col=code_col
     )
-    exact = vec_df.join(F.broadcast(cand.select(id_col)), id_col).select(
-        id_col, sq_l2(F.col(vec_col), _lit_vec(query)).alias("dist")
-    )
-    return exact.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
+    return _exact_rerank(cand, vec_df, query, k, id_col, vec_col)
 
 
 # ------------------------------------------------------- IVF-PQ composite
@@ -878,16 +863,9 @@ def train_ivfpq(
     its precision where it matters.  One bounded driver-side sample
     trains both stages; returns (centroids (nc, d), codebooks
     (m, ks', d/m))."""
-    C = train_ivf_centroids(
-        df, vec_col, n_centroids=n_centroids, sample=sample, iters=iters,
-        seed=seed, order_col=order_col,
-    )
-    pdf = _train_sample(df, vec_col, sample, order_col).toPandas()
-    X = np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
-    d = (C**2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
-    R = X - C[d.argmin(axis=1)]
-    books = _pq_fit(R, m, ks, iters, seed)
-    return C, books
+    X = _to_matrix(_train_sample(df, vec_col, sample, order_col), vec_col)
+    C = _kmeans(X, n_centroids, iters, np.random.RandomState(seed))
+    return C, _pq_fit(X - C[_nearest(X, C)], m, ks, iters, seed)
 
 
 def ivfpq_encode(
@@ -903,47 +881,18 @@ def ivfpq_encode(
     ``cell_col``: queries prune cells at the scan AND score 8-byte
     codes instead of vectors — the index layout that makes
     billion-vector ANN a metadata-plus-codes problem."""
-    import pyarrow as pa
-
     C = np.ascontiguousarray(centroids, dtype=np.float64)
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
-    m, ks, sub = B.shape
-    c_norms = (C**2).sum(axis=1)
-    parts = [
-        f"`{f.name}` {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if f.name != vec_col
-    ]
-    out_schema = ", ".join(parts + [f"{cell_col} int", f"{code_col} array<int>"])
-    sel = df.select(*[f.name for f in df.schema.fields if f.name != vec_col],
-                    F.col(vec_col).alias("__v"))
+    m, _, sub = B.shape
 
-    def encode(batches):
-        for b in batches:
-            X = _fixed_dim_matrix(
-                b.column(b.schema.get_field_index("__v")), m * sub, "ivfpq_encode"
-            )
-            n = len(X)
-            cells = (c_norms[None, :] - 2.0 * (X @ C.T)).argmin(axis=1) if n else np.empty(0, np.int64)
-            R = X - C[cells] if n else X
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                Rs = R[:, j * sub : (j + 1) * sub]
-                Bj = B[j]
-                dist = (Bj**2).sum(axis=1)[None, :] - 2.0 * (Rs @ Bj.T)
-                codes[:, j] = dist.argmin(axis=1).astype(np.int32)
-            code_arr = pa.ListArray.from_arrays(
-                pa.array(np.arange(n + 1, dtype=np.int32) * m),
-                pa.array(codes.ravel(), type=pa.int32()),
-            )
-            cols = [b.column(i) for i in range(b.num_columns) if b.schema.names[i] != "__v"]
-            names = [nm for nm in b.schema.names if nm != "__v"]
-            yield pa.RecordBatch.from_arrays(
-                cols + [pa.array(cells.astype(np.int32), type=pa.int32()), code_arr],
-                names + [cell_col, code_col],
-            )
+    def kernel(X: np.ndarray):
+        cells = _nearest(X, C)
+        return cells.astype(np.int32), _pq_codes(X - C[cells], B)
 
-    return sel.mapInArrow(encode, out_schema)
+    return _vec_matrix_stage(
+        df, vec_col, m * sub, f"{cell_col} int, {code_col} array<int>",
+        kernel, "ivfpq_encode", keep_vec=False,
+    )
 
 
 def ivfpq_topk(
@@ -968,36 +917,20 @@ def ivfpq_topk(
     B = np.ascontiguousarray(codebooks, dtype=np.float64)
     m, ks, sub = B.shape
     q = np.asarray(list(query), dtype=np.float64)
-    cd = ((C - q[None, :]) ** 2).sum(axis=1)
-    probes = [int(i) for i in np.argsort(cd)[:n_probes]]
+    probes = _probe_cells(q, C, n_probes)
     Rq = (q[None, :] - C).reshape(len(C), m, sub)  # per-cell query residual
     T = ((B[None, :, :, :] - Rq[:, :, None, :]) ** 2).sum(axis=3)  # (nc, m, ks)
     jj = np.arange(m)
 
-    import pyarrow as pa
+    def kernel(codes: np.ndarray, cells: np.ndarray):
+        # flat-buffer ADC: the codes ListArray child buffer reshaped to
+        # (n, m), gathered from the per-cell tables in one fancy-index
+        return T[cells.astype(np.int64)[:, None], jj[None, :], codes.astype(np.int64)].sum(axis=1)
 
     cand = code_df.filter(F.col(cell_col).isin(probes))
-    parts = [f"`{f.name}` {f.dataType.simpleString()}" for f in cand.schema.fields]
-    out_schema = ", ".join(parts + ["ivfpq_dist double"])
-
-    def stage(batches):
-        # flat-buffer ADC: reshape the codes ListArray child buffer to
-        # (n, m) and gather from the per-cell tables in one fancy-index
-        # — no per-row Python (the pq_encode pattern)
-        for b in batches:
-            cells_arr = b.column(b.schema.get_field_index(cell_col))
-            codes_arr = b.column(b.schema.get_field_index(code_col))
-            n = len(cells_arr)
-            cc = cells_arr.to_numpy(zero_copy_only=False).astype(np.int64)
-            CO = _fixed_dim_matrix(codes_arr, m, "ivfpq_topk").astype(np.int64)
-            dist = T[cc[:, None], jj[None, :], CO].sum(axis=1) if n else np.empty(0)
-            cols = [b.column(i) for i in range(b.num_columns)]
-            yield pa.RecordBatch.from_arrays(
-                cols + [pa.array(dist, type=pa.float64())],
-                list(b.schema.names) + ["ivfpq_dist"],
-            )
-
-    scored = cand.mapInArrow(stage, out_schema)
+    scored = _vec_matrix_stage(
+        cand, code_col, m, "ivfpq_dist double", kernel, "ivfpq_topk", aux=[cell_col]
+    )
     return scored.select(id_col, "ivfpq_dist").orderBy(
         F.col("ivfpq_dist").asc(), F.col(id_col).asc()
     ).limit(k)
@@ -1027,7 +960,4 @@ def ivfpq_rerank_topk(
         code_df, centroids, codebooks, query, k=shortlist, n_probes=n_probes,
         id_col=id_col, cell_col=cell_col, code_col=code_col,
     )
-    exact = vec_df.join(F.broadcast(cand.select(id_col)), id_col).select(
-        id_col, sq_l2(F.col(vec_col), _lit_vec(query)).alias("dist")
-    )
-    return exact.orderBy(F.col("dist").asc(), F.col(id_col).asc()).limit(int(k))
+    return _exact_rerank(cand, vec_df, query, k, id_col, vec_col)

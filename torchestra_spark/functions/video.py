@@ -24,12 +24,12 @@ fourcc check — the one remaining external-codec integration point.
 from __future__ import annotations
 
 import struct
-from typing import Iterator, Optional
+from typing import Optional
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from torchestra_spark.functions.multimodal import _luma, _map_payloads, _pool_features
 
 
 def encode_avi(frames: np.ndarray, fps: int = 25, top_down: bool = False) -> bytes:
@@ -175,30 +175,14 @@ def frame_sample(
     features array<float>).  NULL payloads produce no rows; compressed
     streams raise at the codec fourcc (same contract as
     ``decode_features``)."""
-    from torchestra_spark.functions.dedup import _ensure_parallelism
-    from torchestra_spark.functions.multimodal import _pool_features
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    sel = _ensure_parallelism(
-        df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
-    )
+    def sample(p):
+        if p is None:
+            return []
+        fidx, frames = decode_avi_frames(bytes(p), every_n=every_n)
+        return [
+            (int(i), _pool_features(lum.ravel(), frame_features))
+            for i, lum in zip(fidx, _luma(frames))
+        ]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, feats = [], [], []
-            for i, p in zip(pdf["__id"], pdf["__p"]):
-                if p is None:
-                    continue
-                fidx, frames = decode_avi_frames(bytes(p), every_n=every_n)
-                lum = frames.astype(np.float32) / 255.0
-                lum = (
-                    lum[..., 0] * 0.299 + lum[..., 1] * 0.587 + lum[..., 2] * 0.114
-                )
-                for k in range(len(fidx)):
-                    ids.append(i)
-                    idxs.append(int(fidx[k]))
-                    feats.append(_pool_features(lum[k].ravel(), frame_features))
-            yield pd.DataFrame({"__id": ids, "frame_idx": idxs, "features": feats})
-
-    out = sel.mapInPandas(run, f"__id {id_type}, frame_idx int, features array<float>")
-    return out.withColumnRenamed("__id", id_col)
+    return _map_payloads(df, payload_col, id_col, "frame_idx int, features array<float>", sample)

@@ -161,93 +161,43 @@ def eliminator_from_state(state: Dict[str, Any]) -> Eliminator:
 
 
 # ------------------------------------------------------------- broadcast map
-_BROADCAST_MIN = 1024  # below this, ship the dict in the UDF closure
+_BROADCAST_MIN = 1024  # below this, ship the payload in the UDF closure
 
 
-class MappingSpec:
-    """The portable essence of a fitted lookup: (dict, OOV default,
-    output Spark type, int-keyed?).  Lets k lookups fuse into ONE Arrow
-    crossing (``fused_lookups``) instead of k pandas UDF stages — the
-    reference's operator-stacking rationale (MeanScale.stack,
-    _normalization.py:71-88) applied to the transform side."""
-
-    def __init__(self, mapping: Dict[Any, Any], default: Any, out_type: str, int_keys: bool):
-        self.mapping = mapping
-        self.default = default
-        self.out_type = out_type
-        self.int_keys = int_keys
+def _shipped(payload: Any, size: int):
+    """A zero-argument getter of ``payload`` for a pandas UDF: payloads
+    of ``size >= _BROADCAST_MIN`` entries ride a TorrentBroadcast (read
+    once per executor, kept out of the pickled task closure); smaller
+    ones ride the closure itself."""
+    spark = SparkSession.getActiveSession()
+    if spark is not None and size >= _BROADCAST_MIN:
+        bc = spark.sparkContext.broadcast(payload)
+        return lambda: bc.value
+    return lambda: payload
 
 
 def fused_lookups(df: "DataFrame", outputs: Dict[str, tuple]) -> "DataFrame":
-    """Apply k fitted lookups in ONE pandas UDF / ONE Arrow crossing.
+    """Apply k fitted lookups as ONE ``withColumns`` of their exprs.
 
     ``outputs`` maps output column name -> (fitted lookup op, input
-    column name).  All k broadcast dicts ride one TorrentBroadcast and
-    the UDF returns a struct of the k results, unpacked into plain
-    columns.
-
-    MEASURED CAVEAT: Catalyst's ExtractPythonUDFs already batches k
-    independent ``op.expr`` pandas UDFs at the same projection into ONE
-    ArrowEvalPython stage (one Arrow crossing), and that coalesced plan
-    is ~25% FASTER than this struct-building UDF (bench lookups_fused
-    vs lookups_unfused).  Use this only when lookups end up in
-    DIFFERENT projection levels (e.g. a lookup consuming another UDF's
-    output forces a stage split) or when consolidating k broadcasts
-    matters more than CPU.
-    """
-    spark = SparkSession.getActiveSession()
-    names = list(outputs.keys())
-    specs = []
-    in_cols = []
-    for out in names:
-        op, col_name = outputs[out]
-        specs.append(op.mapping_spec())
-        in_cols.append(F.col(col_name))
-    payload = [(s.mapping, s.default, s.out_type, s.int_keys) for s in specs]
-    bc = None
-    if spark is not None and sum(len(s.mapping) for s in specs) >= _BROADCAST_MIN:
-        bc = spark.sparkContext.broadcast(payload)
-        payload = None  # keep the dicts out of the pickled task closure
-
-    fields = ", ".join(f"`{out}` {s.out_type}" for out, s in zip(names, specs))
-
-    @F.pandas_udf(fields)
-    def _apply(*cols: pd.Series) -> pd.DataFrame:
-        ps = bc.value if bc is not None else payload
-        data = {}
-        for out, (d, default, out_type, int_keys), s in zip(names, ps, cols):
-            if int_keys:
-                s = s.astype("int64")
-            o = s.map(d)
-            if default is not None:
-                o = o.fillna(default)
-            if out_type == "bigint":
-                o = o.astype("int64")
-            data[out] = o
-        return pd.DataFrame(data)
-
-    tmp = "__fused"
-    out_df = df.withColumn(tmp, _apply(*in_cols))
-    for out in names:
-        out_df = out_df.withColumn(out, F.col(f"{tmp}.{out}"))
-    return out_df.drop(tmp)
+    column name).  Catalyst's ExtractPythonUDFs batches the k
+    independent pandas UDFs of one projection into ONE ArrowEvalPython
+    stage, so the k lookups share a single Arrow crossing — the plan
+    is the same as applying each ``op.expr`` in turn (bench
+    lookups_fused vs lookups_unfused)."""
+    return df.withColumns({out: op.expr(F.col(c)) for out, (op, c) in outputs.items()})
 
 
 def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool) -> "F.udf":
-    """Arrow-vectorized dict application.  Large vocabularies ride a
-    TorrentBroadcast instead of the task closure."""
-    spark = SparkSession.getActiveSession()
-    bc = None
-    if spark is not None and len(vocab) >= _BROADCAST_MIN:
-        bc = spark.sparkContext.broadcast(vocab)
-        vocab = None  # keep the dict out of the pickled task closure
+    """Arrow-vectorized dict application (``Series.map``); the dict
+    ships by ``_shipped``."""
+    get_vocab = _shipped(vocab, len(vocab))
 
     @F.pandas_udf(out_type)
     def _apply(s: pd.Series) -> pd.Series:
-        d = bc.value if bc is not None else vocab
         if int_keys:
             s = s.astype("int64")
-        out = s.map(d)
+        out = s.map(get_vocab())
         if default is not None:
             out = out.fillna(default)
         if out_type == "bigint":
@@ -255,7 +205,6 @@ def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool)
         return out
 
     return _apply
-
 
 
 def _merge_counts(old: Dict[str, int], new: Dict[str, int], eliminator: "Eliminator") -> Dict[str, int]:
@@ -297,10 +246,6 @@ class CountLookup(FittedTransform):
         self._require_fitted()
         return _map_udf(self.counts, 0, "bigint", self.int_keys)(col)
 
-    def mapping_spec(self) -> "MappingSpec":
-        self._require_fitted()
-        return MappingSpec(self.counts, 0, "bigint", self.int_keys)
-
     def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
         return _merge_counts(old, new, self.eliminator)
 
@@ -341,10 +286,6 @@ class RatioLookup(FittedTransform):
         if self.total == 0:
             return F.lit(0.0)
         return _map_udf(self.ratios, 0.0, "double", self.int_keys)(col)
-
-    def mapping_spec(self) -> "MappingSpec":
-        self._require_fitted()
-        return MappingSpec(self.ratios, 0.0, "double", self.int_keys)
 
     def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
         return _merge_counts(old, new, self.eliminator)
@@ -411,10 +352,6 @@ class IndexLookup(FittedTransform):
     def expr(self, col: Column) -> Column:
         self._require_fitted()
         return _map_udf(self.lookup, self.unknown_idx, "bigint", self.int_keys)(col)
-
-    def mapping_spec(self) -> "MappingSpec":
-        self._require_fitted()
-        return MappingSpec(self.lookup, self.unknown_idx, "bigint", self.int_keys)
 
     def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
         return _merge_counts(old, new, self.eliminator)

@@ -505,24 +505,18 @@ class GroupedStandardScore(FittedTransform):
 
     def expr(self, col: Column) -> Column:
         self._require_fitted()
-        # Build the two lookup maps ONCE (not per Arrow batch) and ship
-        # large ones via TorrentBroadcast instead of the task closure —
-        # the same threshold policy as the lookups' _map_udf.
-        mean_map = {k: v[0] for k, v in self.params.items()}
-        std_map = {k: v[1] for k, v in self.params.items()}
-        from pyspark.sql import SparkSession
+        # Build the two lookup maps ONCE (not per Arrow batch); they ship
+        # like the lookups' vocabularies (closure, or broadcast if large)
+        from torchestra_spark.operators.lookups import _shipped
 
-        from torchestra_spark.operators.lookups import _BROADCAST_MIN
-
-        spark = SparkSession.getActiveSession()
-        bc = None
-        if spark is not None and len(self.params) >= _BROADCAST_MIN:
-            bc = spark.sparkContext.broadcast((mean_map, std_map))
-            mean_map = std_map = None  # keep the payload out of the closure
+        get_maps = _shipped(
+            ({k: v[0] for k, v in self.params.items()}, {k: v[1] for k, v in self.params.items()}),
+            len(self.params),
+        )
 
         @F.pandas_udf("double")
         def _apply(g: pd.Series, x: pd.Series) -> pd.Series:
-            m, s = bc.value if bc is not None else (mean_map, std_map)
+            m, s = get_maps()
             return (x.astype("float64") - g.map(m)) / g.map(s)
 
         # Canonicalize the serving key with the SAME Spark cast('string')

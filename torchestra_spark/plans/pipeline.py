@@ -663,13 +663,11 @@ class Pipeline:
         """Dependency-ordered withColumns; Catalyst collapses the
         projections into one select, and its ExtractPythonUDFs rule
         batches all independent pandas UDFs at that level into ONE
-        ArrowEvalPython stage — k lookups already share a single Arrow
-        crossing with no engine-side fusion (measured: an explicit
-        struct-fused UDF is ~25% SLOWER than letting Catalyst coalesce;
-        see bench lookups_fused vs lookups_unfused and
+        ArrowEvalPython stage — k lookups share a single Arrow crossing
+        with no engine-side fusion (see
         tests/test_pipeline_plan.py::test_transform_single_arrow_stage).
-        ``fused_lookups`` remains available for plans where lookups land
-        in different projection levels."""
+        A lookup that reads another UDF's output lands in a later
+        projection and so in its own ArrowEvalPython stage."""
         self.validate_schema(df.schema)
         order = self._feature_order()
         for name in order:
