@@ -164,29 +164,75 @@ def test_int_index_lookup(int_train_df, int_probe_df):
     assert got == [expect_lookup.get(k, 1) for k in INT_PROBE]
 
 
+# get_state() of each op below fitted on TRAIN / INT_TRAIN: the saved
+# state format, pinned key for key
+STATE_GOLDENS = {
+    "c": {"counts": {"a": 8, "b": 7, "c": 3, "d": 4, "e": 4}, "total": 26,
+          "eliminator": {"kind": "NoThreshold"}},
+    "r": {"ratios": {"a": 8 / 23, "b": 7 / 23, "d": 4 / 23, "e": 4 / 23}, "total": 23,
+          "eliminator": {"kind": "MinThreshold", "threshold": 4}},
+    "i": {"lookup": {"a": 2, "b": 3, "d": 4}, "padding_idx": 0, "unknown_idx": 1,
+          "eliminator": {"kind": "TopK", "k": 3}},
+    "ic": {"counts": {"1": 8, "2": 7, "5": 4, "4": 3, "-3": 2, "3": 1}, "total": 25,
+           "eliminator": {"kind": "NoThreshold"}},
+    "ir": {"ratios": {"1": 8 / 19, "2": 7 / 19, "5": 4 / 19}, "total": 19,
+           "eliminator": {"kind": "MinThreshold", "threshold": 4}},
+    "ii": {"lookup": {"1": 2, "2": 3, "5": 4}, "padding_idx": 0, "unknown_idx": 1,
+           "eliminator": {"kind": "TopK", "k": 3}},
+}
+
+
 def test_state_roundtrip(train_df, probe_df, int_train_df, int_probe_df, tmp_path):
     # test_lookups.py:77-87,203-214 pattern
-    pipe = Pipeline(
-        {
-            "c": Feature("k", [CountLookup()]),
-            "r": Feature("k", [RatioLookup(MinThreshold(4))]),
-            "i": Feature("k", [IndexLookup(TopK(3))]),
-        }
-    )
-    pipe.fit(train_df)
-    out1 = pipe.transform(probe_df)
-    path = str(tmp_path / "lk.json")
-    pipe.save_state(path)
-    fresh = Pipeline(
-        {
-            "c": Feature("k", [CountLookup()]),
-            "r": Feature("k", [RatioLookup(MinThreshold(4))]),
-            "i": Feature("k", [IndexLookup(TopK(3))]),
-        }
-    ).load_state(path)
-    out2 = fresh.transform(probe_df)
-    for c in ["c", "r", "i"]:
-        assert _col(out1, c) == _col(out2, c), c
+    def pipes():
+        return (
+            Pipeline(
+                {
+                    "c": Feature("k", [CountLookup()]),
+                    "r": Feature("k", [RatioLookup(MinThreshold(4))]),
+                    "i": Feature("k", [IndexLookup(TopK(3))]),
+                }
+            ),
+            Pipeline(
+                {
+                    "ic": Feature("k", [IntCountLookup()]),
+                    "ir": Feature("k", [IntRatioLookup(MinThreshold(4))]),
+                    "ii": Feature("k", [IntIndexLookup(TopK(3))]),
+                }
+            ),
+        )
+
+    for pipe, fresh, train, probe in zip(
+        pipes(), pipes(), [train_df, int_train_df], [probe_df, int_probe_df]
+    ):
+        pipe.fit(train)
+        for name, feat in pipe.features.items():
+            assert feat.ops[0].get_state() == STATE_GOLDENS[name], name
+        out1 = pipe.transform(probe)
+        path = str(tmp_path / "lk.json")
+        pipe.save_state(path)
+        out2 = fresh.load_state(path).transform(probe)
+        for name, feat in fresh.features.items():
+            assert feat.ops[0].get_state() == STATE_GOLDENS[name], name
+            assert _col(out1, name) == _col(out2, name), name
+
+
+@pytest.mark.parametrize(
+    "op, expect",
+    [
+        (IntCountLookup(), [1, 0, 0]),
+        (IntRatioLookup(), [1 / 3, 0.0, 0.0]),
+        (IntIndexLookup(), [3, 1, 1]),  # vocab order 2, 1 -> indices 2, 3
+    ],
+    ids=["count", "ratio", "index"],
+)
+def test_int_lookup_null_key(spark, op, expect):
+    # NULL keys are skipped at fit and map to the OOV default at
+    # transform, like the string lookups
+    train = spark.createDataFrame([(0, 1), (1, 2), (2, 2), (3, None)], "id long, k bigint")
+    probe = spark.createDataFrame([(0, 1), (1, None), (2, 3)], "id long, k bigint")
+    got, _ = _fit_probe(train, probe, op)
+    assert got == expect
 
 
 def test_shared_vocab_fit_is_one_wave(train_df):
@@ -261,6 +307,8 @@ def test_fused_lookups_broadcast_branch(spark):
 def test_vocab_collect_cap(spark, monkeypatch):
     """An unbounded-cardinality vocabulary without an eliminator raises
     an actionable error instead of silently OOMing the driver."""
+    from pyspark.sql import functions as F
+
     from torchestra_spark.plans.pipeline import Feature, Pipeline
 
     monkeypatch.setattr(Pipeline, "_MAX_VOCAB", 10)
@@ -269,6 +317,14 @@ def test_vocab_collect_cap(spark, monkeypatch):
         Pipeline({"c": Feature("cat", [CountLookup()])}).fit(df)
     # an eliminator that keeps it under the cap fits fine
     Pipeline({"c": Feature("cat", [CountLookup(TopK(5))])}).fit(df)
+    # a grouped fit has no eliminator: its error names the group column
+    from torchestra_spark.operators.scalers import GroupedStandardScore
+
+    gdf = df.withColumn("x", F.lit(1.0))
+    with pytest.raises(RuntimeError, match="group column 'cat'") as err:
+        Pipeline({"z": Feature("x", [GroupedStandardScore("cat")])}).fit(gdf)
+    assert "SPARK_GRAFT_MAX_VOCAB" in str(err.value)
+    assert "eliminator" not in str(err.value)
 
 
 def test_hash_bucket_vocabulary_free(spark):

@@ -98,6 +98,33 @@ def test_mixed_stateless_ops_not_in_plan(sdf):
     assert pipe.waves == [["a.1"], ["a.3"]]
 
 
+def test_feature_cycle_raises():
+    with pytest.raises(ValueError, match="feature cycle through 'a'"):
+        Pipeline({"a": Feature("b", [AddTotal()]), "b": Feature("a", [AddTotal()])})
+
+
+def test_diamond_dag_plans_in_linear_time():
+    """30 stacked diamonds: l_i, r_i = StandardScore(d_{i-1}) and
+    d_i = Ratio(l_i, r_i).  Each d_i reaches d0 along 2^i paths, so a
+    walk that re-derives a feature's upstream stats per path never
+    finishes; the plan is one wave per level."""
+    from torchestra_spark import Ratio
+
+    depth = 30
+    feats = {"d0": Feature("x", [StandardScore()])}
+    for i in range(1, depth + 1):
+        feats[f"l{i}"] = Feature(f"d{i - 1}", [StandardScore()])
+        feats[f"r{i}"] = Feature(f"d{i - 1}", [StandardScore()])
+        feats[f"d{i}"] = Feature([f"l{i}", f"r{i}"], [Ratio()])
+    pipe = Pipeline(feats)
+    assert len(pipe.waves) == depth + 1
+    assert pipe.waves[-1] == [f"l{depth}.0", f"r{depth}.0"]
+    assert pipe.stats_op_paths[-1] == f"r{depth}.0"
+    assert pipe.dependencies[f"r{depth}.0"] == {"d0.0"} | {
+        f"{side}{i}.0" for i in range(1, depth) for side in "lr"
+    }
+
+
 def test_e2e_staged_fit_hand_derived(sdf):
     # E2E with hand-derived expectations (test_stats_plan.py:267-355
     # pattern): x=[1..4] sum=10 -> a = x+10; sum(a)=50 -> b = a+50

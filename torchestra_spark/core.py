@@ -14,11 +14,15 @@ Spark-first:
     Columns; all scalar ops in a fit wave share **one** ``df.agg(...)``
     job (single scan, map-side partial aggregation by Catalyst).
   - ``FitKind.VOCAB``: fit needs a ``groupBy(key).count()``; all vocab
-    ops in a wave share one unpivot+groupBy job, with eliminators
-    (HAVING-style predicates) pushed into Spark before the collect.
+    ops in a wave share one groupBy job (an unpivot when there are
+    several), with the op's ``eliminator`` (HAVING-style predicates)
+    pushed into Spark before the collect.
   - ``FitKind.SKETCH``: fit builds a mergeable sketch per partition
     (numpy t-digest inside ``mapInPandas``), partials merged on the
     driver in deterministic partition order.
+  - ``FitKind.GROUPED``: ``fit_aggs(col)`` per key of the op's
+    ``group_col``; the ops of a wave that share a group column share
+    one ``groupBy(group_col).agg(...)`` job.
 
 ``fit_finalize(stats)`` is the reference's ``apply_stats``: it runs on
 the driver over tiny collected stats and freezes the op's parameters,
@@ -144,8 +148,13 @@ class FittedTransform(Transform):
         raise NotImplementedError
 
     # -- VOCAB ---------------------------------------------------------------
-    # vocab ops implement ``prune_counts`` (Spark-side eliminator pushdown,
-    # see operators/lookups.py) and receive {key(str): count(int)}.
+    # vocab ops carry an ``eliminator`` whose ``Eliminator.prune_spark``
+    # is pushed into Spark (see operators/lookups.py) and receive
+    # {key(str): count(int)}.
+
+    # -- GROUPED --------------------------------------------------------------
+    # grouped ops implement ``fit_aggs`` and name a ``group_col``; they
+    # receive {group key(str): {stat name: value}}.
 
     # -- SKETCH ---------------------------------------------------------------
     # sketch ops implement ``partial_sketch(values: np.ndarray) -> partial``

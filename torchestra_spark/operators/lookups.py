@@ -147,17 +147,16 @@ class TopK(Eliminator):
         return {"kind": "TopK", "k": self.k}
 
 
+_ELIMINATORS = {e.__name__: e for e in (NoThreshold, MinThreshold, RatioThreshold, TopK)}
+
+
 def eliminator_from_state(state: Dict[str, Any]) -> Eliminator:
+    """Rebuild an eliminator from ``get_state()``: the ``kind`` names the
+    class, the remaining keys are its constructor arguments."""
     kind = state["kind"]
-    if kind == "NoThreshold":
-        return NoThreshold()
-    if kind == "MinThreshold":
-        return MinThreshold(state["threshold"])
-    if kind == "RatioThreshold":
-        return RatioThreshold(state["threshold"])
-    if kind == "TopK":
-        return TopK(state["k"])
-    raise ValueError(f"unknown eliminator {kind!r}")
+    if kind not in _ELIMINATORS:
+        raise ValueError(f"unknown eliminator {kind!r}")
+    return _ELIMINATORS[kind](**{k: v for k, v in state.items() if k != "kind"})
 
 
 # ------------------------------------------------------------- broadcast map
@@ -196,10 +195,12 @@ def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool)
     @F.pandas_udf(out_type)
     def _apply(s: pd.Series) -> pd.Series:
         if int_keys:
-            s = s.astype("int64")
-        out = s.map(get_vocab())
-        if default is not None:
-            out = out.fillna(default)
+            # a bigint column with NULLs arrives as float64 with NaN: map
+            # the non-null keys as int64, NULL rows get the default
+            out = s.dropna().astype("int64").map(get_vocab()).reindex(s.index)
+        else:
+            out = s.map(get_vocab())
+        out = out.fillna(default)
         if out_type == "bigint":
             out = out.astype("int64")
         return out
@@ -207,32 +208,76 @@ def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool)
     return _apply
 
 
-def _merge_counts(old: Dict[str, int], new: Dict[str, int], eliminator: "Eliminator") -> Dict[str, int]:
-    """Counter-add two collected vocab payloads, then re-apply the
-    eliminator over the merged dict — combine_stats across fit calls.
-    Exact for NoThreshold; with pruning eliminators the per-fit Spark
-    pushdown has already dropped sub-threshold keys within each fit, so
-    an incrementally-updated vocabulary can undercount keys that only
-    cross the threshold across deltas (documented approximation)."""
-    merged = dict(old)
-    for k, v in new.items():
-        merged[k] = merged.get(k, 0) + v
-    return eliminator.prune_dict(merged)
-
-
-# ----------------------------------------------------------------- string ops
-class CountLookup(FittedTransform):
-    """string -> training-set count (0 if absent) — _lookups.py:6-77."""
+class _VocabLookup(FittedTransform):
+    """What the six vocabulary lookups share: the VOCAB fit with its
+    eliminator, the counter-add merge across fit calls, the Arrow dict
+    map, and the state codec.  A subclass names its fitted dict
+    (``_table``), that dict's value type, its OOV default and output
+    type, its scalar state fields, and its own ``fit_finalize``.
+    ``int_keys`` twins key the dict on ints; state keys are always
+    ``str(key)`` (JSON object keys), parsed back with ``int``."""
 
     fit_kind = FitKind.VOCAB
     int_keys = False
     input_kinds = ("string",)
     output_kind = "numeric"
+    _table: str  # attribute name of the fitted dict
+    _value: type = int
+    _out_type = "bigint"
+    _fields = ("total",)
 
     def __init__(self, eliminator: Optional[Eliminator] = None):
         super().__init__()
         self.eliminator = eliminator or NoThreshold()
-        self.counts: Dict[str, int] = {"": 0}
+
+    @property
+    def _oov(self) -> Any:
+        return self._value(0)
+
+    def expr(self, col: Column) -> Column:
+        self._require_fitted()
+        return _map_udf(getattr(self, self._table), self._oov, self._out_type, self.int_keys)(col)
+
+    def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
+        """Counter-add two collected vocab payloads, then re-apply the
+        eliminator over the merged dict — combine_stats across fit calls.
+        Exact for NoThreshold; with pruning eliminators the per-fit Spark
+        pushdown has already dropped sub-threshold keys within each fit,
+        so an incrementally-updated vocabulary can undercount keys that
+        only cross the threshold across deltas (documented approximation)."""
+        merged = dict(old)
+        for k, v in new.items():
+            merged[k] = merged.get(k, 0) + v
+        return self.eliminator.prune_dict(merged)
+
+    def get_state(self) -> Dict[str, Any]:
+        table = getattr(self, self._table)
+        if self.int_keys:
+            table = {str(k): v for k, v in table.items()}
+        return {
+            self._table: table,
+            **{f: getattr(self, f) for f in self._fields},
+            "eliminator": self.eliminator.get_state(),
+        }
+
+    def set_state(self, state: Dict[str, Any]) -> None:
+        key = int if self.int_keys else str
+        setattr(self, self._table, {key(k): self._value(v) for k, v in state[self._table].items()})
+        for f in self._fields:
+            setattr(self, f, int(state[f]))
+        self.eliminator = eliminator_from_state(state["eliminator"])
+        self._fitted = True
+
+
+# ----------------------------------------------------------------- string ops
+class CountLookup(_VocabLookup):
+    """string -> training-set count (0 if absent) — _lookups.py:6-77."""
+
+    _table = "counts"
+
+    def __init__(self, eliminator: Optional[Eliminator] = None):
+        super().__init__(eliminator)
+        self.counts: Dict[Any, int] = {"": 0}
         self.total = 0
 
     def fit_finalize(self, pruned_counts: Dict[str, int]) -> None:
@@ -242,36 +287,17 @@ class CountLookup(FittedTransform):
         self.counts = dict(pruned_counts) if self.total > 0 else {"": 0}
         self._fitted = True
 
-    def expr(self, col: Column) -> Column:
-        self._require_fitted()
-        return _map_udf(self.counts, 0, "bigint", self.int_keys)(col)
 
-    def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
-        return _merge_counts(old, new, self.eliminator)
-
-
-    def get_state(self) -> Dict[str, Any]:
-        return {"counts": self.counts, "total": self.total, "eliminator": self.eliminator.get_state()}
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.counts = dict(state["counts"])
-        self.total = int(state["total"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
-        self._fitted = True
-
-
-class RatioLookup(FittedTransform):
+class RatioLookup(_VocabLookup):
     """string -> count/total (0.0 if total==0) — _lookups.py:80-134."""
 
-    fit_kind = FitKind.VOCAB
-    int_keys = False
-    input_kinds = ("string",)
-    output_kind = "numeric"
+    _table = "ratios"
+    _value = float
+    _out_type = "double"
 
     def __init__(self, eliminator: Optional[Eliminator] = None):
-        super().__init__()
-        self.eliminator = eliminator or NoThreshold()
-        self.ratios: Dict[str, float] = {}
+        super().__init__(eliminator)
+        self.ratios: Dict[Any, float] = {}
         self.total = 0
 
     def fit_finalize(self, pruned_counts: Dict[str, int]) -> None:
@@ -283,25 +309,10 @@ class RatioLookup(FittedTransform):
 
     def expr(self, col: Column) -> Column:
         self._require_fitted()
-        if self.total == 0:
-            return F.lit(0.0)
-        return _map_udf(self.ratios, 0.0, "double", self.int_keys)(col)
-
-    def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
-        return _merge_counts(old, new, self.eliminator)
+        return F.lit(0.0) if self.total == 0 else super().expr(col)
 
 
-    def get_state(self) -> Dict[str, Any]:
-        return {"ratios": self.ratios, "total": self.total, "eliminator": self.eliminator.get_state()}
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.ratios = dict(state["ratios"])
-        self.total = int(state["total"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
-        self._fitted = True
-
-
-class IndexLookup(FittedTransform):
+class IndexLookup(_VocabLookup):
     """string -> dense index — _lookups.py:137-220.
 
     Vocabulary ordered by count DESC / key ASC (``sort_counts``), index
@@ -310,10 +321,8 @@ class IndexLookup(FittedTransform):
     vocabulary primitive of the north star.
     """
 
-    fit_kind = FitKind.VOCAB
-    int_keys = False
-    input_kinds = ("string",)
-    output_kind = "numeric"
+    _table = "lookup"
+    _fields = ("padding_idx", "unknown_idx")
 
     def __init__(
         self,
@@ -321,11 +330,14 @@ class IndexLookup(FittedTransform):
         padding_idx: int = 0,
         unknown_idx: int = 1,
     ):
-        super().__init__()
-        self.eliminator = eliminator or NoThreshold()
+        super().__init__(eliminator)
         self.padding_idx = padding_idx
         self.unknown_idx = unknown_idx
-        self.lookup: Dict[str, int] = {"": self.unknown_idx}
+        self.lookup: Dict[Any, int] = {"": self.unknown_idx}
+
+    @property
+    def _oov(self) -> int:
+        return self.unknown_idx
 
     def dictionary_size(self) -> int:
         # _lookups.py:161-170
@@ -347,29 +359,6 @@ class IndexLookup(FittedTransform):
                 i += 1
             self.lookup[k] = i
             taken.add(i)
-        self._fitted = True
-
-    def expr(self, col: Column) -> Column:
-        self._require_fitted()
-        return _map_udf(self.lookup, self.unknown_idx, "bigint", self.int_keys)(col)
-
-    def merge_stats(self, old: Dict[str, int], new: Dict[str, int]) -> Dict[str, int]:
-        return _merge_counts(old, new, self.eliminator)
-
-
-    def get_state(self) -> Dict[str, Any]:
-        return {
-            "lookup": self.lookup,
-            "padding_idx": self.padding_idx,
-            "unknown_idx": self.unknown_idx,
-            "eliminator": self.eliminator.get_state(),
-        }
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.lookup = {k: int(v) for k, v in state["lookup"].items()}
-        self.padding_idx = int(state["padding_idx"])
-        self.unknown_idx = int(state["unknown_idx"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
         self._fitted = True
 
 
@@ -396,19 +385,6 @@ class IntCountLookup(CountLookup):
         self.counts = int_counts
         self._fitted = True
 
-    def get_state(self) -> Dict[str, Any]:
-        return {
-            "counts": {str(k): v for k, v in self.counts.items()},
-            "total": self.total,
-            "eliminator": self.eliminator.get_state(),
-        }
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.counts = {int(k): int(v) for k, v in state["counts"].items()}
-        self.total = int(state["total"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
-        self._fitted = True
-
 
 class IntRatioLookup(RatioLookup):
     """int -> count/total — _lookups.py:317-373."""
@@ -422,19 +398,6 @@ class IntRatioLookup(RatioLookup):
         self.ratios = (
             {k: v / self.total for k, v in int_counts.items()} if self.total > 0 else {}
         )
-        self._fitted = True
-
-    def get_state(self) -> Dict[str, Any]:
-        return {
-            "ratios": {str(k): v for k, v in self.ratios.items()},
-            "total": self.total,
-            "eliminator": self.eliminator.get_state(),
-        }
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.ratios = {int(k): float(v) for k, v in state["ratios"].items()}
-        self.total = int(state["total"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
         self._fitted = True
 
 
@@ -467,21 +430,6 @@ class IntIndexLookup(IndexLookup):
                 i += 1
             self.lookup[int(k)] = i
             i += 1
-        self._fitted = True
-
-    def get_state(self) -> Dict[str, Any]:
-        return {
-            "lookup": {str(k): v for k, v in self.lookup.items()},
-            "padding_idx": self.padding_idx,
-            "unknown_idx": self.unknown_idx,
-            "eliminator": self.eliminator.get_state(),
-        }
-
-    def set_state(self, state: Dict[str, Any]) -> None:
-        self.lookup = {int(k): int(v) for k, v in state["lookup"].items()}
-        self.padding_idx = int(state["padding_idx"])
-        self.unknown_idx = int(state["unknown_idx"])
-        self.eliminator = eliminator_from_state(state["eliminator"])
         self._fitted = True
 
 

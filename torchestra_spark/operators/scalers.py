@@ -43,6 +43,15 @@ def _stat(stats: Dict[str, Any], key: str) -> float:
     return float("nan") if v is None else float(v)
 
 
+def _std(n: Any, var_pop: Any, ddof: int) -> float:
+    """std with ``ddof`` from collected (n, var_pop): sqrt(sum((x-mean)^2)
+    / (n - ddof)) (_normalization.py:208) as var_pop * n / (n - ddof);
+    nan when n <= ddof."""
+    n = int(n) if n is not None else 0
+    var_pop = float(var_pop) if var_pop is not None else 0.0
+    return math.sqrt(var_pop * n / (n - ddof)) if n > ddof else float("nan")
+
+
 def _merge_extreme(a: Any, b: Any, pick) -> Any:
     """Merge two min/max aggregates where either may be SQL NULL."""
     if a is None:
@@ -275,10 +284,8 @@ class StandardScore(FittedTransform):
         return {"n": F.count(c), "mean": F.avg(c), "var_pop": F.var_pop(c)}
 
     def fit_finalize(self, stats: Dict[str, Any]) -> None:
-        n = int(stats["n"]) if stats["n"] is not None else 0
         self.mean = _stat(stats, "mean")
-        var_pop = float(stats["var_pop"]) if stats["var_pop"] is not None else 0.0
-        self.std = math.sqrt(var_pop * n / (n - self.ddof)) if n > self.ddof else float("nan")
+        self.std = _std(stats["n"], stats["var_pop"], self.ddof)
         self._fitted = True
 
     def merge_stats(self, old: Dict[str, Any], new: Dict[str, Any]) -> Dict[str, Any]:
@@ -478,21 +485,14 @@ class GroupedStandardScore(FittedTransform):
         self.ddof = int(ddof)
         self.params: Dict[str, tuple] = {}
 
-    def fit_aggs(self, col: Column) -> Dict[str, Column]:
-        c = col.cast("double")
-        return {"n": F.count(c), "mean": F.avg(c), "var_pop": F.var_pop(c)}
+    fit_aggs = StandardScore.fit_aggs  # per group: n, mean, var_pop
 
     def fit_finalize(self, stats: Dict[str, Dict[str, Any]]) -> None:
         """stats: {group_key(str): {n, mean, var_pop}}."""
-        self.params = {}
-        for g, st in stats.items():
-            n = int(st["n"]) if st["n"] is not None else 0
-            mean = float(st["mean"]) if st["mean"] is not None else float("nan")
-            var_pop = float(st["var_pop"]) if st["var_pop"] is not None else 0.0
-            std = (
-                math.sqrt(var_pop * n / (n - self.ddof)) if n > self.ddof else float("nan")
-            )
-            self.params[g] = (mean, std)
+        self.params = {
+            g: (_stat(st, "mean"), _std(st["n"], st["var_pop"], self.ddof))
+            for g, st in stats.items()
+        }
         self._fitted = True
 
     def merge_stats(

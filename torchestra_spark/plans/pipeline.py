@@ -26,12 +26,18 @@ minimal passes over the data:
 * all SCALAR_AGG fits -> **one** ``df.agg(...)`` (single scan; Catalyst
   hash aggregate does partial/merge — the reference's calculate/combine
   split);
-* all VOCAB fits -> one unpivot + ``groupBy(op, key).count()`` job
-  (single shuffle for every vocabulary in the wave), eliminators pushed
-  as Spark predicates before the driver collect;
+* all VOCAB fits -> one ``groupBy`` count job: several vocabularies
+  unpivot into one ``groupBy(op, key).count()`` (single shuffle for
+  every vocabulary in the wave), a lone one is a plain
+  ``groupBy(key).count()``; eliminators pushed as Spark predicates
+  before the driver collect;
 * all SKETCH fits -> one ``mapInPandas`` pass emitting per-partition
   t-digest centroids, merged on the driver in partition order (the
-  reference's shard merge, _normalization.py:601-613).
+  reference's shard merge, _normalization.py:601-613);
+* all GROUPED fits -> one ``groupBy(group_col).agg(...)`` per distinct
+  group column.
+
+The jobs of a wave run in that order.
 
 Transform compiles every feature into Column expressions applied in
 dependency order — one logical projection, optimized by Catalyst into a
@@ -41,7 +47,7 @@ single whole-stage-codegen'd select (plus Arrow UDF stages where lookups
 
 from __future__ import annotations
 
-from typing import Any, Dict, Iterator, List, Optional, Sequence, Set, Tuple
+from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Set, Tuple
 
 import numpy as np
 import pandas as pd
@@ -168,70 +174,56 @@ def _params_close(a: Any, b: Any, rtol: float) -> bool:
 class Pipeline:
     def __init__(self, features: Dict[str, Feature]):
         self.features = dict(features)
-        self._validate()
         # dependency map: stats-op path -> set of upstream stats-op paths
         # (reference StatsPlan.dependencies, _stats_plan.py:20-48)
-        self.dependencies = self._find_stats_ops()
+        self.dependencies = self._stats_dependencies()
         self.stats_op_paths = list(self.dependencies.keys())
         self.waves = list(self._build_waves())
 
     # ------------------------------------------------------------- structure
-    def _validate(self) -> None:
-        # DFS cycle check over the (possibly multi-parent) feature DAG
-        state: Dict[str, int] = {}  # 1 = visiting, 2 = done
-
-        def visit(name: str) -> None:
-            if state.get(name) == 2:
-                return
-            if state.get(name) == 1:
-                raise ValueError(f"feature cycle through {name!r}")
-            state[name] = 1
-            for ref in self.features[name].input_refs:
-                if ref in self.features:
-                    visit(ref)
-            state[name] = 2
-
-        for name in self.features:
-            visit(name)
-
     def _op(self, path: str) -> Transform:
         name, _, idx = path.rpartition(".")
         return self.features[name].ops[int(idx)]
 
-    def _upstream_stats(self, ref: str) -> List[str]:
-        """All stats-op paths upstream of (and including) feature `ref`."""
-        if ref not in self.features:
-            return []
-        feat = self.features[ref]
-        out = self._inherited_stats(feat)
-        out += [
-            f"{ref}.{i}" for i, op in enumerate(feat.ops) if isinstance(op, FittedTransform)
-        ]
-        return out
+    def _feature_order(self) -> List[str]:
+        """Features in dependency order (inputs first) — the one DFS over
+        the (possibly multi-parent) feature graph; raises on a cycle."""
+        done: Dict[str, None] = {}  # insertion-ordered set
+        visiting: Set[str] = set()
 
-    def _inherited_stats(self, feat: Feature) -> List[str]:
-        """Order-preserving dedup union of upstream stats paths across
-        ALL of a feature's input references."""
-        out: List[str] = []
-        seen: Set[str] = set()
-        for ref in feat.input_refs:
-            for p in self._upstream_stats(ref):
-                if p not in seen:
-                    seen.add(p)
-                    out.append(p)
-        return out
+        def visit(name: str) -> None:
+            if name in done:
+                return
+            if name in visiting:
+                raise ValueError(f"feature cycle through {name!r}")
+            visiting.add(name)
+            for ref in self.features[name].input_refs:
+                if ref in self.features:
+                    visit(ref)
+            visiting.discard(name)
+            done[name] = None
 
-    def _find_stats_ops(self) -> Dict[str, Set[str]]:
-        deps: Dict[str, Set[str]] = {}
-        for name, feat in self.features.items():
-            inherited = self._inherited_stats(feat)
-            chain: List[str] = list(inherited)
+        for name in self.features:
+            visit(name)
+        return list(done)
+
+    def _stats_dependencies(self) -> Dict[str, Set[str]]:
+        """One pass over the feature order: each feature's set of stats
+        paths upstream of (and in) it is built once from its inputs'
+        sets, so a DAG of diamonds costs linear, not exponential, time.
+        Keyed in ``self.features`` order, ops in chain order."""
+        upstream: Dict[str, Set[str]] = {}
+        own: Dict[str, Dict[str, Set[str]]] = {}
+        for name in self._feature_order():
+            feat = self.features[name]
+            chain = set().union(*(upstream[r] for r in feat.input_refs if r in self.features))
+            own[name] = {}
             for i, op in enumerate(feat.ops):
                 if isinstance(op, FittedTransform):
-                    path = f"{name}.{i}"
-                    deps[path] = set(chain)
-                    chain.append(path)
-        return deps
+                    own[name][f"{name}.{i}"] = set(chain)
+                    chain.add(f"{name}.{i}")
+            upstream[name] = chain
+        return {path: deps for name in self.features for path, deps in own[name].items()}
 
     def _build_waves(self) -> Iterator[List[str]]:
         # Kahn-style waves, reference _stats_plan.py:89-102
@@ -248,39 +240,35 @@ class Pipeline:
             yield wave
 
     # ---------------------------------------------------------- expressions
-    def _input_expr(self, path: str) -> Column:
-        """Composed Column feeding the op at `path` (the reference's
-        minimal input-prefix subgraph, _stats_plan.py:63-87)."""
-        name, _, idx = path.rpartition(".")
-        return self._compose(name, upto=int(idx))
-
-    def _compose(self, name: str, upto: Optional[int] = None) -> Column:
-        feat = self.features[name]
-
-        def ref_col(ref: str) -> Column:
-            return self._compose(ref) if ref in self.features else F.col(ref)
-
+    @staticmethod
+    def _chain(feat: Feature, ref_col: Callable[[str], Column], upto: Optional[int] = None) -> Column:
+        """Apply a feature's op chain (its first ``upto`` ops) to its
+        inputs, each resolved by ``ref_col``: a multi-input head fuses
+        the N inputs, the tail ops chain on its single output."""
         ops = feat.ops if upto is None else feat.ops[:upto]
-        if len(feat.input_refs) > 1:
-            if not ops:
-                # a stats op cannot sit AT the head of a multi-input
-                # feature (head must be stateless, enforced in Feature),
-                # so upto >= 1 always includes the head here
-                raise ValueError(
-                    f"multi-input feature {name!r} cannot be composed "
-                    "without its MultiTransform head"
-                )
-            col = ops[0].expr(*[ref_col(r) for r in feat.input_refs])
-            ops = ops[1:]
+        cols = [ref_col(r) for r in feat.input_refs]
+        if len(cols) > 1:
+            col, ops = ops[0].expr(*cols), ops[1:]
         else:
-            col = ref_col(feat.input_refs[0])
+            col = cols[0]
         for op in ops:
             col = op.expr(col)
         return col
 
+    def _resolve(self, ref: str) -> Column:
+        """A reference as one composed Column: a feature's whole chain
+        over its resolved inputs, or a source column."""
+        return self.output_expr(ref) if ref in self.features else F.col(ref)
+
+    def _input_expr(self, path: str) -> Column:
+        """Composed Column feeding the op at `path` (the reference's
+        minimal input-prefix subgraph, _stats_plan.py:63-87)."""
+        name, _, idx = path.rpartition(".")
+        return self._chain(self.features[name], self._resolve, upto=int(idx))
+
     def output_expr(self, name: str) -> Column:
         """Fully-composed expression for a feature (requires fit)."""
-        return self._compose(name)
+        return self._chain(self.features[name], self._resolve)
 
     # ------------------------------------------------------------ bind check
     def validate_schema(self, schema) -> None:
@@ -406,49 +394,47 @@ class Pipeline:
         return self.fit(df).transform(df, keep_input=keep_input)
 
     def _fit_wave(self, df: DataFrame, wave: List[str], update: bool = False) -> None:
-        scalar: List[Tuple[str, FittedTransform, Column]] = []
-        vocab: List[Tuple[str, FittedTransform, Column]] = []
-        sketch: List[Tuple[str, FittedTransform, Column]] = []
-        grouped: List[Tuple[str, FittedTransform, Column]] = []
+        # one batched job per fit kind, run in this order
+        jobs = {
+            FitKind.SCALAR_AGG: self._fit_scalar,
+            FitKind.VOCAB: self._fit_vocab,
+            FitKind.SKETCH: self._fit_sketch,
+            FitKind.GROUPED: self._fit_grouped,
+        }
+        by_kind: Dict[FitKind, List[Tuple[str, FittedTransform, Column]]] = {k: [] for k in jobs}
         for path in wave:
             op = self._op(path)
             assert isinstance(op, FittedTransform)
-            col = self._input_expr(path)
-            if op.fit_kind is FitKind.SCALAR_AGG:
-                scalar.append((path, op, col))
-            elif op.fit_kind is FitKind.VOCAB:
-                vocab.append((path, op, col))
-            elif op.fit_kind is FitKind.SKETCH:
-                sketch.append((path, op, col))
-            elif op.fit_kind is FitKind.GROUPED:
-                grouped.append((path, op, col))
-            else:  # pragma: no cover
-                raise ValueError(op.fit_kind)
+            by_kind[op.fit_kind].append((path, op, self._input_expr(path)))
+        for kind, fit in jobs.items():
+            if by_kind[kind]:
+                fit(df, by_kind[kind], update)
 
-        if scalar:
-            self._fit_scalar(df, scalar, update)
-        if vocab:
-            self._fit_vocab(df, vocab, update)
-        if sketch:
-            self._fit_sketch(df, sketch, update)
-        if grouped:
-            self._fit_grouped(df, grouped, update)
+    @staticmethod
+    def _aggregates(
+        ops: List[Tuple[str, FittedTransform, Column]]
+    ) -> Tuple[List[Column], Callable[[Any], List[Dict[str, Any]]]]:
+        """Every op's ``fit_aggs`` as one aliased aggregate list, and an
+        unpacker from a result row to each op's stats dict (op order)."""
+        aggs: List[Column] = []
+        names: List[List[str]] = []
+        for j, (_path, op, col) in enumerate(ops):
+            stats = op.fit_aggs(col)
+            aggs += [agg.alias(f"s{j}__{n}") for n, agg in stats.items()]
+            names.append(list(stats))
+
+        def unpack(row: Any) -> List[Dict[str, Any]]:
+            return [{n: row[f"s{j}__{n}"] for n in ns} for j, ns in enumerate(names)]
+
+        return aggs, unpack
 
     @staticmethod
     def _fit_scalar(df: DataFrame, ops: List[Tuple[str, FittedTransform, Column]], update: bool = False) -> None:
         """One df.agg for every scalar-stat op in the wave (shared scan)."""
-        aggs: List[Column] = []
-        slots: List[Tuple[FittedTransform, List[str]]] = []
-        for j, (_path, op, col) in enumerate(ops):
-            names = []
-            for stat_name, agg in op.fit_aggs(col).items():
-                alias = f"s{j}__{stat_name}"
-                aggs.append(agg.alias(alias))
-                names.append(stat_name)
-            slots.append((op, names))
-        row = df.agg(*aggs).collect()[0].asDict()
-        for j, (op, names) in enumerate(slots):
-            Pipeline._finalize(op, {n: row[f"s{j}__{n}"] for n in names}, update)
+        aggs, unpack = Pipeline._aggregates(ops)
+        row = df.agg(*aggs).collect()[0]
+        for (_path, op, _col), stats in zip(ops, unpack(row)):
+            Pipeline._finalize(op, stats, update)
 
     # Hard ceiling on vocabulary rows collected to the driver: above
     # this, a fit would OOM the driver silently — raise an actionable
@@ -457,14 +443,17 @@ class Pipeline:
     _MAX_VOCAB = int(__import__("os").environ.get("SPARK_GRAFT_MAX_VOCAB", 10_000_000))
 
     @staticmethod
-    def _collect_vocab(df: DataFrame, what: str) -> list:
+    def _collect_vocab(
+        df: DataFrame,
+        what: str,
+        remedy: str = "Add an eliminator (TopK / MinThreshold / RatioThreshold) "
+        "or raise SPARK_GRAFT_MAX_VOCAB.",
+    ) -> list:
         cap = Pipeline._MAX_VOCAB
         rows = df.limit(cap + 1).collect()
         if len(rows) > cap:
             raise RuntimeError(
-                f"{what}: vocabulary exceeds {cap} surviving keys — the "
-                "driver cannot hold it.  Add an eliminator (TopK / "
-                "MinThreshold / RatioThreshold) or raise SPARK_GRAFT_MAX_VOCAB."
+                f"{what}: vocabulary exceeds {cap} keys — the driver cannot hold it.  {remedy}"
             )
         return rows
 
@@ -512,7 +501,6 @@ class Pipeline:
         for j, (_path, op, _col) in enumerate(ops):
             Pipeline._finalize(op, by_op[j], update)
 
-
     @staticmethod
     def _fit_grouped(
         df: DataFrame, ops: List[Tuple[str, FittedTransform, Column]], update: bool = False
@@ -525,25 +513,15 @@ class Pipeline:
         for path, op, col in ops:
             by_group.setdefault(op.group_col, []).append((path, op, col))
         for gcol, group_ops in by_group.items():
-            aggs: List[Column] = []
-            slots: List[Tuple[FittedTransform, List[str]]] = []
-            for j, (_path, op, col) in enumerate(group_ops):
-                names = []
-                for stat_name, agg in op.fit_aggs(col).items():
-                    aggs.append(agg.alias(f"g{j}__{stat_name}"))
-                    names.append(stat_name)
-                slots.append((op, names))
+            aggs, unpack = Pipeline._aggregates(group_ops)
             rows = Pipeline._collect_vocab(
                 df.groupBy(F.col(gcol).cast("string").alias("__g")).agg(*aggs),
-                f"grouped fit on {gcol!r}",
+                f"grouped fit on group column {gcol!r}",
+                "Raise SPARK_GRAFT_MAX_VOCAB.",
             )
-            for j, (op, names) in enumerate(slots):
-                stats = {
-                    r["__g"]: {n: r[f"g{j}__{n}"] for n in names}
-                    for r in rows
-                    if r["__g"] is not None
-                }
-                Pipeline._finalize(op, stats, update)
+            per_group = [(r["__g"], unpack(r)) for r in rows if r["__g"] is not None]
+            for j, (_path, op, _col) in enumerate(group_ops):
+                Pipeline._finalize(op, {g: stats[j] for g, stats in per_group}, update)
 
     # above this many input partitions, per-partition sketch partials are
     # tree-merged executor-side into <= this many runs before the driver
@@ -671,50 +649,16 @@ class Pipeline:
         self.validate_schema(df.schema)
         order = self._feature_order()
         for name in order:
-            feat = self.features[name]
             # prior feature outputs are materialized columns here, so a
             # plain F.col works for feature refs and source columns alike
-            if len(feat.input_refs) > 1:
-                col = feat.ops[0].expr(*[F.col(r) for r in feat.input_refs])
-                rest = feat.ops[1:]
-            else:
-                col = F.col(feat.input_refs[0])
-                rest = feat.ops
-            for op in rest:
-                col = op.expr(col)
-            df = df.withColumn(name, col)
+            df = df.withColumn(name, self._chain(self.features[name], F.col))
         if not keep_input:
             df = df.select(*order)
         return df
 
-    def _feature_order(self) -> List[str]:
-        out: List[str] = []
-        visiting: Set[str] = set()
-
-        def visit(name: str) -> None:
-            if name in out:
-                return
-            if name in visiting:  # pragma: no cover - guarded in _validate
-                raise ValueError("cycle")
-            visiting.add(name)
-            for ref in self.features[name].input_refs:
-                if ref in self.features:
-                    visit(ref)
-            visiting.discard(name)
-            out.append(name)
-
-        for name in self.features:
-            visit(name)
-        return out
-
     # ---------------------------------------------------------------- state
     def save_state(self, path: str) -> None:
-        states: Dict[str, Dict[str, Any]] = {}
-        for name, feat in self.features.items():
-            for i, op in enumerate(feat.ops):
-                if isinstance(op, FittedTransform):
-                    states[f"{name}.{i}"] = op.get_state()
-        StateArtifact(states).save(path)
+        StateArtifact({p: self._op(p).get_state() for p in self.stats_op_paths}).save(path)
 
     def load_state(self, path: str) -> "Pipeline":
         artifact = StateArtifact.load(path)
