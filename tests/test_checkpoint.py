@@ -69,7 +69,13 @@ def test_manifest_contents(spark, events, tmp_path):
     path = str(tmp_path / "out")
     w = CheckpointedWriter(path, key_col="user_id", n_buckets=2, fingerprint="abc")
     w.run(events)
+    assert sorted(os.listdir(w.manifest_dir)) == ["bucket-0.json", "bucket-1.json"]
     m = json.load(open(os.path.join(w.manifest_dir, "bucket-0.json")))
+    assert set(m) == {
+        "bucket", "n_buckets", "bucket_fn", "rows", "bytes", "wall_ms",
+        "fingerprint", "app_id", "committed_at",
+    }
+    assert (m["bucket"], m["n_buckets"], m["bucket_fn"]) == (0, 2, "murmur3")
     assert m["fingerprint"] == "abc"
     assert m["rows"] > 0 and m["bytes"] > 0 and m["wall_ms"] > 0
     assert m["app_id"].startswith("local-")
@@ -146,6 +152,85 @@ def test_clear_removes_bucket_data_with_manifests(spark, events, tmp_path):
     assert w4.load(spark).count() == events.count()
 
 
+def _session_state(spark):
+    return (
+        spark.conf.get("spark.sql.sources.partitionOverwriteMode", None),
+        spark.sparkContext.getLocalProperty("spark.job.description"),
+    )
+
+
+def _fails_at_execution(df, col):
+    from pyspark.sql import functions as F
+
+    return df.withColumn(col, F.when(F.col(col).isNotNull(), F.raise_error(F.lit("boom"))))
+
+
+def test_failed_write_restores_session_state(spark, events, tmp_path):
+    """An input that raises while the write job runs leaves the
+    session's overwrite mode and job description as they were, and no
+    manifest behind."""
+    path = str(tmp_path / "out")
+    w = CheckpointedWriter(path, key_col="user_id", n_buckets=4)
+    spark.sparkContext.setJobDescription("caller job")
+    try:
+        before = _session_state(spark)
+        with pytest.raises(Exception, match="boom"):
+            w.run(_fails_at_execution(events, "event_id"))
+        assert _session_state(spark) == before
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    assert w.metrics() == [] and w.status().remaining == [0, 1, 2, 3]
+
+
+def test_failed_refresh_restores_session_state(spark, tmp_path):
+    import pandas as pd
+
+    from torchestra_spark.checkpoint import IncrementalMaterializer
+
+    inp = str(tmp_path / "in")
+    outp = str(tmp_path / "out")
+    spark.createDataFrame(
+        pd.DataFrame({"ds": ["d1"] * 3 + ["d2"] * 2, "x": [1.0, 2, 3, 4, 5]})
+    ).write.partitionBy("ds").parquet(inp)
+    mat = IncrementalMaterializer(inp, outp, "ds")
+    spark.sparkContext.setJobDescription("caller job")
+    try:
+        before = _session_state(spark)
+        with pytest.raises(Exception, match="boom"):
+            mat.refresh(spark, lambda df: _fails_at_execution(df, "x"))
+        assert _session_state(spark) == before
+    finally:
+        spark.sparkContext.setJobDescription(None)
+    assert not os.path.exists(mat.manifest_dir)
+    assert mat.changed_partitions() == ["d1", "d2"]
+
+
+@pytest.mark.parametrize(
+    "values",
+    [["10:00"] * 3 + ["ok"] * 2, ["a b"] * 3 + ["a_b"] * 2],
+    ids=["escaped", "mangled-collision"],
+)
+def test_incremental_materializer_rejects_unsafe_values(spark, tmp_path, values):
+    """Spark escapes ':' in directory names (``ds=10%3A00``), so a
+    filter on the name matches no row; 'a b' and 'a_b' would share one
+    manifest file.  Both are refused before any job runs."""
+    import pandas as pd
+
+    from torchestra_spark.checkpoint import IncrementalMaterializer
+
+    inp = str(tmp_path / "in")
+    outp = str(tmp_path / "out")
+    spark.createDataFrame(
+        pd.DataFrame({"ds": values, "x": [float(i) for i in range(len(values))]})
+    ).write.partitionBy("ds").parquet(inp)
+    mat = IncrementalMaterializer(inp, outp, "ds")
+    with pytest.raises(ValueError, match="needs path escaping"):
+        mat.refresh(spark)
+    with pytest.raises(ValueError, match="needs path escaping"):
+        mat.changed_partitions()
+    assert not os.path.exists(outp)
+
+
 def test_incremental_materializer_feature_refresh(spark, tmp_path):
     """The feature-store daily loop: append a delta partition, merge its
     stats with the refit-safe fit_update, refresh — ONLY the new
@@ -176,6 +261,14 @@ def test_incremental_materializer_feature_refresh(spark, tmp_path):
     mat = IncrementalMaterializer(inp, outp, "ds")
     assert sorted(mat.refresh(spark, tf)) == ["2026-01-01", "2026-01-02"]
     assert mat.refresh(spark, tf) == []  # current -> no-op
+    # one manifest per partition, named by its value
+    assert sorted(os.listdir(mat.manifest_dir)) == [
+        "part-2026-01-01.json", "part-2026-01-02.json"
+    ]
+    with open(os.path.join(mat.manifest_dir, "part-2026-01-01.json")) as fh:
+        m = json.load(fh)
+    assert set(m) == {"value", "fingerprint", "committed_at"}
+    assert m["value"] == "2026-01-01"
 
     def part_files(base, v):
         d = os.path.join(base, f"ds={v}")
@@ -209,6 +302,18 @@ def test_incremental_materializer_feature_refresh(spark, tmp_path):
     assert part_files(outp, "2026-01-01") == old1
     assert mat.load(spark).count() == 100
 
+    # a partition deleted from the input leaves the view with its
+    # manifest; nothing else is rewritten
+    shutil.rmtree(os.path.join(inp, "ds=2026-01-01"))
+    assert mat.changed_partitions() == []
+    assert mat.refresh(spark, tf) == []
+    assert not os.path.exists(os.path.join(outp, "ds=2026-01-01"))
+    assert sorted(os.listdir(mat.manifest_dir)) == [
+        "part-2026-01-02.json", "part-2026-01-03.json"
+    ]
+    assert mat.load(spark).count() == spark.read.parquet(inp).count() == 50
+    assert mat.refresh(spark, tf) == []
+
 
 def test_snapshot_store_time_travel_and_expire(spark, tmp_path):
     """Iceberg-style log: append-only version dirs + snapshot pins.
@@ -228,6 +333,14 @@ def test_snapshot_store_time_travel_and_expire(spark, tmp_path):
     st = SnapshotStore(inp, outp, "ds")
     assert st.refresh(spark) == ["d1", "d2"]          # snapshot 0
     assert st.refresh(spark) == []                    # unchanged: no commit
+    assert os.listdir(st.snap_dir) == ["v000000.json"]
+    with open(os.path.join(st.snap_dir, "v000000.json")) as fh:
+        s0 = json.load(fh)
+    assert set(s0) == {
+        "id", "parent", "committed_at", "refreshed", "removed", "pins", "fingerprints"
+    }
+    assert (s0["id"], s0["parent"], s0["refreshed"], s0["removed"]) == (0, None, ["d1", "d2"], [])
+    assert s0["pins"] == {"d1": 0, "d2": 0} and set(s0["fingerprints"]) == {"d1", "d2"}
     v0 = st.load(spark).groupBy("ds").sum("x").collect()
     v0 = {r["ds"]: r["sum(x)"] for r in v0}
     assert v0 == {"d1": 6.0, "d2": 15.0}
@@ -312,3 +425,67 @@ def test_snapshot_store_retry_and_removed_partitions(spark, tmp_path):
     ).partitionBy("ds").parquet(inp)
     with _pt.raises(ValueError, match="escaping"):
         st.refresh(spark)
+
+
+def test_submit_run_job_fresh_resume_rebucket(spark, tmp_path, capsys):
+    """``submit.py run`` end to end: a fresh run, a --resume of the
+    complete output (a no-op), and a fresh run with fewer buckets,
+    which must not leave the old layout's buckets beside its own."""
+    import argparse
+
+    import numpy as np
+    import pandas as pd
+
+    from torchestra_spark.submit import run_job
+
+    rng = np.random.RandomState(14)
+    n = 400
+    ev = pd.DataFrame({
+        "event_id": np.arange(n, dtype="int64"),
+        "user_id": rng.randint(0, 64, n).astype("int64"),
+        "ts": pd.Timestamp("2026-01-01") + pd.to_timedelta(rng.randint(0, 86400 * 7, n), unit="s"),
+    })
+    ft = pd.DataFrame({
+        "user_id": rng.randint(0, 64, 200).astype("int64"),
+        "feature_ts": pd.Timestamp("2026-01-01")
+        + pd.to_timedelta(rng.randint(0, 86400 * 7, 200), unit="s"),
+        "value": rng.normal(size=200),
+    })
+    ev_path, ft_path = str(tmp_path / "events"), str(tmp_path / "features")
+    spark.createDataFrame(ev).write.parquet(ev_path)
+    spark.createDataFrame(ft).write.parquet(ft_path)
+    out = str(tmp_path / "out")
+
+    def run(buckets, resume):
+        run_job(argparse.Namespace(
+            events=ev_path, features=ft_path, out=out, entity="user_id", ts="ts",
+            feature_ts="feature_ts", value_col="value", session_gap=6 * 3600.0,
+            salt_buckets=1, buckets=buckets, wave_size=None, resume=resume,
+            fingerprint=True,
+        ))
+        return capsys.readouterr().out
+
+    def buckets_on_disk():
+        return sorted(d for d in os.listdir(out) if d.startswith("__ckpt_bucket="))
+
+    def mtimes():
+        files = ["_state.json"] + [
+            os.path.join("_manifest", f) for f in os.listdir(os.path.join(out, "_manifest"))
+        ]
+        return {f: os.stat(os.path.join(out, f)).st_mtime_ns for f in files}
+
+    assert "complete=True buckets=8" in run(8, resume=False)
+    assert sorted(os.listdir(os.path.join(out, "_manifest"))) == sorted(
+        f"bucket-{b}.json" for b in range(8)
+    )
+    assert os.path.isfile(os.path.join(out, "_state.json"))
+    w8 = CheckpointedWriter(out, key_col="user_id", n_buckets=8)
+    assert w8.load(spark).count() == n
+
+    before = mtimes()
+    assert "already complete" in run(8, resume=True)
+    assert mtimes() == before
+
+    assert "complete=True buckets=4" in run(4, resume=False)
+    assert buckets_on_disk() == [f"__ckpt_bucket={b}" for b in range(4)]
+    assert CheckpointedWriter(out, key_col="user_id", n_buckets=4).load(spark).count() == n

@@ -6,6 +6,7 @@ state-artifact round-trips.
 """
 
 import math
+import os
 
 import numpy as np
 from hypothesis import given, settings
@@ -114,6 +115,7 @@ def test_state_artifact_inf_nan(tmp_path):
     path = str(tmp_path / "s.json")
     s = {"op": {"a": math.inf, "b": -math.inf, "c": 1.5, "d": 5e-324}}
     StateArtifact(s).save(path)
+    assert os.listdir(tmp_path) == ["s.json"]  # no .tmp left behind
     back = StateArtifact.load(path).states
     assert back["op"]["a"] == math.inf and back["op"]["b"] == -math.inf
     assert back["op"]["c"] == 1.5 and back["op"]["d"] == 5e-324

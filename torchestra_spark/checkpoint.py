@@ -34,18 +34,36 @@ partitioned otherwise is written as up to one file per task per bucket.
 
 At 1000 executors: one write job = one normal distributed write; the
 driver writes only the tiny manifest JSON files.
+
+Two refreshers keep a derived table in step with a hive-partitioned
+input (``<col>=<value>/`` directories).  ``IncrementalMaterializer``
+rewrites new or changed partitions in place; ``SnapshotStore`` writes
+them as a new version and commits a snapshot.  Both diff each input
+partition's file fingerprint against the one they recorded.  Partition
+values must be alphanumeric or ``-._``: Spark escapes other characters in
+directory names (``10:00`` becomes ``10%3A00``), so the name would no
+longer equal the column value; such an input is refused before any job
+runs.  A partition deleted from the input is dropped from an
+``IncrementalMaterializer`` view (its output directory and manifest are
+deleted) and unpinned from the next ``SnapshotStore`` snapshot (its
+version directories stay for time travel until ``expire``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
+from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import List, Optional, Sequence
+from typing import Dict, Iterator, List, Optional, Sequence, Tuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from torchestra_spark.state import write_json_atomic
 
 BUCKET_COL = "__ckpt_bucket"
 # recorded in each manifest; a resume must use the same function
@@ -68,6 +86,65 @@ def input_fingerprint(paths: Sequence[str]) -> str:
             st = os.stat(f)
             h.update(f"{f}:{st.st_size}:{int(st.st_mtime)}".encode())
     return h.hexdigest()[:16]
+
+
+def _utc_now() -> str:
+    return time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime())
+
+
+def _records(directory: str, prefix: str) -> List[dict]:
+    """The ``<prefix>*.json`` records in ``directory``, by file name."""
+    if not os.path.isdir(directory):
+        return []
+    out = []
+    for f in sorted(os.listdir(directory)):
+        if f.startswith(prefix) and f.endswith(".json"):
+            with open(os.path.join(directory, f)) as fh:
+                out.append(json.load(fh))
+    return out
+
+
+def _partition_dirs(path: str, col: str) -> Dict[str, str]:
+    """{value: directory} of the ``<col>=<value>`` directories under
+    ``path``, by name.  A value must be alphanumeric or ``-._``: Spark
+    escapes other characters in the directory name, so the name would
+    not equal the column value a filter or manifest compares against."""
+    prefix = f"{col}="
+    out = {}
+    if os.path.isdir(path):
+        for d in sorted(os.listdir(path)):
+            full = os.path.join(path, d)
+            if not (d.startswith(prefix) and os.path.isdir(full)):
+                continue
+            v = d[len(prefix):]
+            if not all(c.isalnum() or c in "-._" for c in v):
+                raise ValueError(
+                    f"partition value {unquote(v)!r} needs path escaping; use "
+                    "alphanumeric/-/._ values (e.g. ds=2026-08-16)"
+                )
+            out[v] = full
+    return out
+
+
+def _diff(current: Dict[str, str], recorded: Dict[str, str]) -> Tuple[List[str], List[str]]:
+    """(changed, removed): the values of ``current`` that are new or whose
+    fingerprint differs from ``recorded``, and the recorded values that
+    ``current`` no longer has."""
+    changed = [v for v, fp in current.items() if recorded.get(v) != fp]
+    return changed, [v for v in recorded if v not in current]
+
+
+@contextmanager
+def _dynamic_overwrite(spark: SparkSession) -> Iterator[None]:
+    """Dynamic partition overwrite for the writes inside; the session's
+    previous mode is restored on exit, also on error."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, "static")
+    spark.conf.set(key, "dynamic")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, prev)
 
 
 @dataclass
@@ -138,17 +215,12 @@ class CheckpointedWriter:
         the manifests: bucket directories left without a manifest would
         escape the layout guard, and a run with fewer buckets would
         leave them beside its own, duplicating rows on load."""
-        import shutil
-
-        if os.path.isdir(self.path):
-            for d in os.listdir(self.path):
-                if d.startswith(f"{BUCKET_COL}="):
-                    shutil.rmtree(os.path.join(self.path, d))
+        for d in _partition_dirs(self.path, BUCKET_COL).values():
+            shutil.rmtree(d)
         shutil.rmtree(self.manifest_dir, ignore_errors=True)
 
     def _write_manifest(self, bucket: int, rows: int, nbytes: int, wall_ms: float, app_id: str) -> None:
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        rec = {
+        write_json_atomic(os.path.join(self.manifest_dir, f"bucket-{bucket}.json"), {
             "bucket": bucket,
             "n_buckets": self.n_buckets,
             "bucket_fn": BUCKET_FN,
@@ -157,12 +229,8 @@ class CheckpointedWriter:
             "wall_ms": round(wall_ms, 1),
             "fingerprint": self.fingerprint,
             "app_id": app_id,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-        }
-        tmp = os.path.join(self.manifest_dir, f".bucket-{bucket}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, os.path.join(self.manifest_dir, f"bucket-{bucket}.json"))
+            "committed_at": _utc_now(),
+        })
 
     def _bucket_stats(self, bucket: int) -> tuple:
         """Rows/bytes of a written bucket from parquet footers (no scan)."""
@@ -194,30 +262,28 @@ class CheckpointedWriter:
             BUCKET_COL, F.pmod(F.hash(F.col(self.key_col)), F.lit(self.n_buckets))
         )
         step = self.wave_size or len(remaining)
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         prev_desc = sc.getLocalProperty("spark.job.description")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         app_id = sc.applicationId
         try:
-            for i in range(0, len(remaining), step):
-                wave = remaining[i : i + step]
-                sc.setJobDescription(
-                    f"checkpoint: write {len(wave)} of {self.n_buckets} buckets to {self.path}"
-                )
-                # a write of every bucket needs no filter
-                out = bucketed if len(wave) == self.n_buckets else bucketed.filter(
-                    F.col(BUCKET_COL).isin(wave)
-                )
-                t0 = time.time()
-                out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path)
-                wall = (time.time() - t0) * 1000.0
-                for b in wave:
-                    rows, nbytes = self._bucket_stats(b)
-                    self._write_manifest(b, rows, nbytes, wall / len(wave), app_id)
-                if progress:
-                    print(f"checkpoint committed: buckets={wave}")
+            with _dynamic_overwrite(spark):
+                for i in range(0, len(remaining), step):
+                    wave = remaining[i : i + step]
+                    sc.setJobDescription(
+                        f"checkpoint: write {len(wave)} of {self.n_buckets} buckets to {self.path}"
+                    )
+                    # a write of every bucket needs no filter
+                    out = bucketed if len(wave) == self.n_buckets else bucketed.filter(
+                        F.col(BUCKET_COL).isin(wave)
+                    )
+                    t0 = time.time()
+                    out.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(self.path)
+                    wall = (time.time() - t0) * 1000.0
+                    for b in wave:
+                        rows, nbytes = self._bucket_stats(b)
+                        self._write_manifest(b, rows, nbytes, wall / len(wave), app_id)
+                    if progress:
+                        print(f"checkpoint committed: buckets={wave}")
         finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
             sc.setJobDescription(prev_desc)
         return self.status()
 
@@ -226,16 +292,29 @@ class CheckpointedWriter:
         return spark.read.parquet(self.path).drop(BUCKET_COL)
 
     def metrics(self) -> List[dict]:
-        out = []
-        if os.path.isdir(self.manifest_dir):
-            for f in sorted(os.listdir(self.manifest_dir)):
-                if f.startswith("bucket-") and f.endswith(".json"):
-                    with open(os.path.join(self.manifest_dir, f)) as fh:
-                        out.append(json.load(fh))
-        return out
+        return _records(self.manifest_dir, "bucket-")
 
 
-class IncrementalMaterializer:
+class _PartitionRefresh:
+    """What both refreshers share: the ``<col>=<value>`` partitions of the
+    input with their fingerprints, and the recompute of some of them."""
+
+    def __init__(self, input_path: str, output_path: str, partition_col: str):
+        self.input_path = input_path
+        self.output_path = output_path
+        self.partition_col = partition_col
+
+    def _input_fingerprints(self) -> Dict[str, str]:
+        """{partition value -> current input fingerprint}."""
+        dirs = _partition_dirs(self.input_path, self.partition_col)
+        return {v: input_fingerprint([d]) for v, d in dirs.items()}
+
+    def _recompute(self, spark: SparkSession, values: List[str], transform) -> DataFrame:
+        src = spark.read.parquet(self.input_path).filter(F.col(self.partition_col).isin(values))
+        return transform(src) if transform is not None else src
+
+
+class IncrementalMaterializer(_PartitionRefresh):
     """Manifest-driven incremental refresh of a derived table over a
     hive-partitioned input — the Iceberg-snapshot read pattern on plain
     parquet: the manifest records each input partition's file
@@ -258,45 +337,24 @@ class IncrementalMaterializer:
     written — pair with the refit-safe ``fit_update`` (frozen upstream
     params) for an exactly-consistent table, or ``clear()`` to force a
     full rebuild after a param-shifting refit.
-
-    Partition values are compared as directory-name strings (use string
-    partition columns, e.g. ``ds='2026-08-16'``).
     """
 
     def __init__(self, input_path: str, output_path: str, partition_col: str):
-        self.input_path = input_path
-        self.output_path = output_path
-        self.partition_col = partition_col
+        super().__init__(input_path, output_path, partition_col)
         self.manifest_dir = os.path.join(output_path, "_manifest")
 
     # ---------------------------------------------------------------- state
-    def _input_partitions(self) -> dict:
-        """{partition value -> current input fingerprint}."""
-        prefix = f"{self.partition_col}="
-        out = {}
-        if os.path.isdir(self.input_path):
-            for d in sorted(os.listdir(self.input_path)):
-                full = os.path.join(self.input_path, d)
-                if d.startswith(prefix) and os.path.isdir(full):
-                    out[d[len(prefix):]] = input_fingerprint([full])
-        return out
-
-    def _manifest(self) -> dict:
+    def _manifest(self) -> Dict[str, str]:
         """{partition value -> fingerprint it was materialized from}."""
-        out = {}
-        if os.path.isdir(self.manifest_dir):
-            for f in os.listdir(self.manifest_dir):
-                if f.startswith("part-") and f.endswith(".json"):
-                    with open(os.path.join(self.manifest_dir, f)) as fh:
-                        m = json.load(fh)
-                    out[m["value"]] = m["fingerprint"]
-        return out
+        return {m["value"]: m["fingerprint"] for m in _records(self.manifest_dir, "part-")}
+
+    def _part_file(self, value: str) -> str:
+        return os.path.join(self.manifest_dir, f"part-{value}.json")
 
     def changed_partitions(self) -> List[str]:
         """Input partitions that are new or whose files changed since
         they were last materialized."""
-        seen = self._manifest()
-        return [v for v, fp in self._input_partitions().items() if seen.get(v) != fp]
+        return _diff(self._input_fingerprints(), self._manifest())[0]
 
     def clear(self) -> None:
         """Drop the manifest: the next refresh() rebuilds everything."""
@@ -309,43 +367,34 @@ class IncrementalMaterializer:
     def refresh(self, spark: SparkSession, transform=None) -> List[str]:
         """Recompute only new/changed partitions through ``transform``
         (DataFrame -> DataFrame, must keep the partition column); write
-        with dynamic partition overwrite; update the manifest.  Returns
-        the partition values refreshed ([] when already current)."""
-        fps = self._input_partitions()
-        changed = self.changed_partitions()
-        if not changed:
-            return []
-        src = spark.read.parquet(self.input_path).filter(
-            F.col(self.partition_col).isin(changed)
-        )
-        out = transform(src) if transform is not None else src
-        prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            out.write.mode("overwrite").partitionBy(self.partition_col).parquet(
-                self.output_path
-            )
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-        os.makedirs(self.manifest_dir, exist_ok=True)
-        for v in changed:
-            rec = {
-                "value": v,
-                "fingerprint": fps[v],
-                "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            }
-            safe = "".join(c if c.isalnum() or c in "-._" else "_" for c in v)
-            tmp = os.path.join(self.manifest_dir, f".part-{safe}.json.tmp")
-            with open(tmp, "w") as fh:
-                json.dump(rec, fh)
-            os.replace(tmp, os.path.join(self.manifest_dir, f"part-{safe}.json"))
+        with dynamic partition overwrite; update the manifest.  A
+        partition deleted from the input since it was materialized loses
+        its output directory and its manifest.  Returns the partition
+        values refreshed ([] when none was new or changed)."""
+        fps = self._input_fingerprints()
+        changed, removed = _diff(fps, self._manifest())
+        if changed:
+            out = self._recompute(spark, changed, transform)
+            with _dynamic_overwrite(spark):
+                out.write.mode("overwrite").partitionBy(self.partition_col).parquet(
+                    self.output_path
+                )
+            committed_at = _utc_now()
+            for v in changed:
+                write_json_atomic(
+                    self._part_file(v),
+                    {"value": v, "fingerprint": fps[v], "committed_at": committed_at},
+                )
+        for v in removed:
+            shutil.rmtree(os.path.join(self.output_path, f"{self.partition_col}={v}"), ignore_errors=True)
+            os.remove(self._part_file(v))
         return changed
 
     def load(self, spark: SparkSession) -> DataFrame:
         return spark.read.parquet(self.output_path)
 
 
-class SnapshotStore:
+class SnapshotStore(_PartitionRefresh):
     """Iceberg-style snapshot log + time travel on plain parquet.
 
     ``IncrementalMaterializer`` refreshes in place (copy-on-write
@@ -369,7 +418,7 @@ class SnapshotStore:
     * ``expire(keep_last=k)``         — delete version directories no
       retained snapshot references (Iceberg's expire_snapshots).
 
-    The snapshot commit is a single atomic ``os.replace`` of one small
+    The snapshot commit is a single atomic rename of one small
     JSON — the same O(1)-metadata commit Iceberg uses; data writes are
     append-only so a failed refresh never corrupts a committed
     snapshot.  At cluster scale the JSON lives on the shared store and
@@ -380,52 +429,31 @@ class SnapshotStore:
     processes (expire does skip ver dirs newer than the last committed
     snapshot, so maintenance beside one in-flight refresh is fine, but
     two concurrent refreshes can still interleave version numbers); and
-    a POSIX-semantics filesystem (atomic ``os.replace``, directory
+    a POSIX-semantics filesystem (atomic rename, directory
     listing) — NFS/local/POSIX-mounted stores, not bare object stores
     (S3 needs an Iceberg/Delta-style commit service instead).
     """
 
     def __init__(self, input_path: str, output_path: str, partition_col: str):
-        self.input_path = input_path
-        self.output_path = output_path
-        self.partition_col = partition_col
+        super().__init__(input_path, output_path, partition_col)
         self.snap_dir = os.path.join(output_path, "_snapshots")
-        self._inner = IncrementalMaterializer(input_path, output_path, partition_col)
 
     # ---------------------------------------------------------------- state
     def snapshots(self) -> List[dict]:
-        out = []
-        if os.path.isdir(self.snap_dir):
-            for f in sorted(os.listdir(self.snap_dir)):
-                if f.startswith("v") and f.endswith(".json"):
-                    with open(os.path.join(self.snap_dir, f)) as fh:
-                        out.append(json.load(fh))
-        return out
+        return _records(self.snap_dir, "v")
 
     def current(self) -> Optional[dict]:
         snaps = self.snapshots()
         return snaps[-1] if snaps else None
 
-    def _fingerprints_of(self, snap: Optional[dict]) -> dict:
-        return dict(snap["fingerprints"]) if snap else {}
+    def _version_dirs(self) -> Iterator[Tuple[str, int, str]]:
+        """(partition value, version, directory) of every
+        ``<part>=<value>/ver=<n>`` directory of the table."""
+        for v, part_dir in _partition_dirs(self.output_path, self.partition_col).items():
+            for ver, vd in _partition_dirs(part_dir, "ver").items():
+                yield v, int(ver), vd
 
     # -------------------------------------------------------------- refresh
-    def _drop_version_dirs(self, snap_id: int) -> None:
-        """Remove leftover ver=<snap_id> directories from a refresh that
-        crashed between data write and snapshot commit — snap_id is not
-        referenced by any committed snapshot, so this only ever deletes
-        uncommitted data (a retried refresh would otherwise append a
-        SECOND copy into the same directories and commit duplicates)."""
-        import shutil
-
-        prefix = f"{self.partition_col}="
-        if os.path.isdir(self.output_path):
-            for d in os.listdir(self.output_path):
-                if d.startswith(prefix):
-                    vd = os.path.join(self.output_path, d, f"ver={snap_id}")
-                    if os.path.isdir(vd):
-                        shutil.rmtree(vd)
-
     def refresh(self, spark: SparkSession, transform=None) -> List[str]:
         """Write new/changed input partitions as a new version and
         commit the next snapshot.  Input partitions DELETED since the
@@ -434,31 +462,22 @@ class SnapshotStore:
         Returns refreshed partition values ([] = input unchanged; no
         snapshot is committed)."""
         cur = self.current()
-        fps = self._inner._input_partitions()
-        for v in fps:
-            # partition values become directory names; Spark escapes
-            # specials (space, ':', '%'), which would break the
-            # name-vs-column comparisons below — require safe values
-            if not all(c.isalnum() or c in "-._" for c in v):
-                raise ValueError(
-                    f"partition value {v!r} needs path escaping; use "
-                    "alphanumeric/-/._ values (e.g. ds=2026-08-16)"
-                )
-        pinned_fps = self._fingerprints_of(cur)
-        changed = [v for v, fp in fps.items() if pinned_fps.get(v) != fp]
-        removed = [v for v in (cur["pins"] if cur else {}) if v not in fps]
+        fps = self._input_fingerprints()
+        pinned_fps = cur["fingerprints"] if cur else {}
+        changed, removed = _diff(fps, pinned_fps)
         if not changed and not removed:
             return []
         snap_id = (cur["id"] + 1) if cur else 0
         pins = {v: p for v, p in (cur["pins"] if cur else {}).items() if v in fps}
         fingerprints = {v: f for v, f in pinned_fps.items() if v in fps}
         if changed:
-            self._drop_version_dirs(snap_id)  # crash-retry hygiene
-            src = spark.read.parquet(self.input_path).filter(
-                F.col(self.partition_col).isin(changed)
-            )
-            out = transform(src) if transform is not None else src
-            out = out.withColumn("ver", F.lit(snap_id))
+            # a refresh that crashed between data write and snapshot
+            # commit left ver=<snap_id> directories no committed snapshot
+            # pins; a retry would append a SECOND copy into them
+            for _, ver, vd in self._version_dirs():
+                if ver == snap_id:
+                    shutil.rmtree(vd)
+            out = self._recompute(spark, changed, transform).withColumn("ver", F.lit(snap_id))
             # append-only: ver=<snap_id> directories are new, nothing of
             # any committed snapshot is touched
             out.write.mode("append").partitionBy(self.partition_col, "ver").parquet(
@@ -467,20 +486,15 @@ class SnapshotStore:
             for v in changed:
                 pins[v] = snap_id
                 fingerprints[v] = fps[v]
-        rec = {
+        write_json_atomic(os.path.join(self.snap_dir, f"v{snap_id:06d}.json"), {
             "id": snap_id,
             "parent": cur["id"] if cur else None,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
+            "committed_at": _utc_now(),
             "refreshed": sorted(changed),
             "removed": sorted(removed),
             "pins": pins,
             "fingerprints": fingerprints,
-        }
-        os.makedirs(self.snap_dir, exist_ok=True)
-        tmp = os.path.join(self.snap_dir, f".v{snap_id:06d}.json.tmp")
-        with open(tmp, "w") as fh:
-            json.dump(rec, fh)
-        os.replace(tmp, os.path.join(self.snap_dir, f"v{snap_id:06d}.json"))
+        })
         return sorted(changed)
 
     # ----------------------------------------------------------------- read
@@ -516,8 +530,6 @@ class SnapshotStore:
         written ver=N but not yet committed its snapshot JSON — the one
         concurrent shape (maintenance alongside a refresh) the
         single-writer model still allows."""
-        import shutil
-
         snaps = self.snapshots()
         if len(snaps) <= keep_last:
             return []
@@ -525,21 +537,10 @@ class SnapshotStore:
         live = {(v, ver) for s in keep for v, ver in s["pins"].items()}
         latest = snaps[-1]["id"]
         removed = []
-        prefix = f"{self.partition_col}="
-        if os.path.isdir(self.output_path):
-            for d in os.listdir(self.output_path):
-                if not d.startswith(prefix):
-                    continue
-                pv = d[len(prefix):]
-                part_dir = os.path.join(self.output_path, d)
-                for vd in os.listdir(part_dir):
-                    if vd.startswith("ver="):
-                        ver = int(vd[len("ver="):])
-                        if ver > latest:
-                            continue  # uncommitted in-flight refresh
-                        if (pv, ver) not in live:
-                            shutil.rmtree(os.path.join(part_dir, vd))
-                            removed.append(f"{d}/{vd}")
+        for v, ver, vd in self._version_dirs():
+            if ver <= latest and (v, ver) not in live:
+                shutil.rmtree(vd)
+                removed.append(os.path.relpath(vd, self.output_path))
         for s in drop:
             p = os.path.join(self.snap_dir, f"v{s['id']:06d}.json")
             if os.path.exists(p):

@@ -38,6 +38,17 @@ def _decode(obj: Any) -> Any:
     return obj
 
 
+def write_json_atomic(path: str, obj: Any) -> None:
+    """Write ``obj`` as JSON to ``path`` through ``path + ".tmp"`` and one
+    rename, making the directory first: a reader sees the old document
+    or the new one, never a torn one."""
+    os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
+
+
 class StateArtifact:
     """A saved fit state: {op_path: state_dict}."""
 
@@ -45,11 +56,7 @@ class StateArtifact:
         self.states = states
 
     def save(self, path: str) -> None:
-        os.makedirs(os.path.dirname(os.path.abspath(path)), exist_ok=True)
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(_encode(self.states), f)
-        os.replace(tmp, path)
+        write_json_atomic(path, _encode(self.states))
 
     @classmethod
     def load(cls, path: str) -> "StateArtifact":

@@ -54,6 +54,23 @@ def run_job(args: argparse.Namespace) -> None:
     from torchestra_spark.operators.temporal import asof_join, lag_lead, sessionize
 
     spark = SparkSession.builder.appName("torchestra_spark_pit_job").getOrCreate()
+    fp = input_fingerprint([args.events, args.features]) if args.fingerprint else ""
+    writer = CheckpointedWriter(
+        args.out, key_col=args.entity, n_buckets=args.buckets,
+        wave_size=args.wave_size, fingerprint=fp,
+    )
+    if args.resume:
+        status = writer.status()
+        if status.is_complete:
+            # before any fit: a complete output is not touched
+            print("already complete; nothing to do")
+            return
+    else:
+        # fresh run: never reuse prior bucket outputs (run() skips any
+        # bucket with an existing manifest, which without --resume would
+        # silently serve stale data when fingerprinting is off), and
+        # never leave a bucket directory of another --buckets layout
+        writer.clear()
     events = spark.read.parquet(args.events)
     feats = spark.read.parquet(args.features)
 
@@ -71,22 +88,6 @@ def run_job(args: argparse.Namespace) -> None:
     out = pipe.fit_transform(pit)
     pipe.save_state(os.path.join(args.out, "_state.json"))
 
-    fp = input_fingerprint([args.events, args.features]) if args.fingerprint else ""
-    writer = CheckpointedWriter(
-        args.out, key_col=args.entity, n_buckets=args.buckets,
-        wave_size=args.wave_size, fingerprint=fp,
-    )
-    if args.resume:
-        status = writer.status()
-        if status.is_complete:
-            print("already complete; nothing to do")
-            return
-    else:
-        # fresh run: never reuse prior bucket outputs (run() skips any
-        # bucket with an existing manifest, which without --resume would
-        # silently serve stale data when fingerprinting is off), and
-        # never leave a bucket directory of another --buckets layout
-        writer.clear()
     status = writer.run(out, progress=True)
     print(f"complete={status.is_complete} buckets={len(status.completed)}")
 
