@@ -2167,9 +2167,8 @@ def _q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "contam_hits", "is_contaminated")
 
 
-# Shared by `tokenize_vocab` (broadcast-join path) and `tokenize_local`
-# (shuffle-free task-closure path): both must produce identical token
-# arrays, so one oracle checks both.
+# Shared by `tokenize_vocab` and `tokenize_local`: both run the one
+# shuffle-free tokenizer pass, so one oracle checks both.
 _TOKENIZE_ORACLE_SQL = """
     WITH srcw AS (
       SELECT doc_id,
@@ -2224,9 +2223,9 @@ def _q_tokenize_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_tokenize_local(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the shuffle-free tokenization path (new r5): vocabulary in the
-    # task closure, one mapInPandas pass, corpus never moves — the
-    # 100 TB / streaming twin of tokenize_vocab, same oracle
+    # tokenize_vocab's pass with an explicit vocabulary cap: vocabulary
+    # in the task closure, one mapInArrow pass, corpus never moves —
+    # same oracle
     from torchestra_spark.functions.text import fit_vocab, tokenize_with_vocab_local
 
     doc = _t(spark, sf_dir, "documents")
@@ -2235,10 +2234,10 @@ def _q_tokenize_local(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_decontaminate_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # the stateless streaming-safe twin of `decontaminate`: the eval
-    # subset's distinct gram hashes become a driver-built sorted index
-    # probed in one mapInArrow pass (no join, no shuffle); semantics
-    # are identical, so the SAME SQL oracle checks both paths
+    # `decontaminate`'s pass over a prebuilt index: the eval subset's
+    # distinct gram hashes become a driver-built sorted index probed in
+    # one mapInArrow pass (no join, no shuffle); the SAME SQL oracle
+    # checks both queries
     from torchestra_spark.functions.dedup import (
         build_contamination_index,
         mark_contaminated_indexed,

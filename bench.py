@@ -335,9 +335,9 @@ def bench_queries(spark):
 
     def q_decontaminate():
         # test-set decontamination of the probe corpus against a
-        # ~2k-doc eval subset: the eval n-gram set broadcasts, the
-        # train side streams through a map-side probe (no shuffle of
-        # the corpus)
+        # ~2k-doc eval subset: the eval gram index is collected once,
+        # then the train side is probed in one mapInArrow pass (no
+        # join, no shuffle of the corpus)
         from torchestra_spark.functions.dedup import mark_contaminated
 
         evald = toks.filter(F.pmod(F.xxhash64("doc_id", F.lit(9)), F.lit(1024)) == 0)
@@ -357,7 +357,7 @@ def bench_queries(spark):
         _noop(mark_near_dups_indexed(_probe_corpus(), "tokens", "doc_id", idx, max_hamming=4))
 
     def q_decontaminate_indexed():
-        # the streaming-safe serving twin of q_decontaminate: eval gram
+        # q_decontaminate's pass over a prebuilt index: eval gram
         # hashes become a driver-built sorted index; the probe corpus
         # probes it in one mapInArrow pass — zero joins, zero shuffles
         from torchestra_spark.functions.dedup import (

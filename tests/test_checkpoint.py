@@ -206,14 +206,19 @@ def test_failed_refresh_restores_session_state(spark, tmp_path):
 
 
 @pytest.mark.parametrize(
-    "values",
-    [["10:00"] * 3 + ["ok"] * 2, ["a b"] * 3 + ["a_b"] * 2],
-    ids=["escaped", "mangled-collision"],
+    "values, error",
+    [
+        (["10:00"] * 3 + ["ok"] * 2, "needs path escaping"),
+        (["a b"] * 3 + ["a_b"] * 2, "needs path escaping"),
+        (["a", "a", None], "holds NULL"),
+    ],
+    ids=["escaped", "mangled-collision", "null"],
 )
-def test_incremental_materializer_rejects_unsafe_values(spark, tmp_path, values):
+def test_incremental_materializer_rejects_unsafe_values(spark, tmp_path, values, error):
     """Spark escapes ':' in directory names (``ds=10%3A00``), so a
     filter on the name matches no row; 'a b' and 'a_b' would share one
-    manifest file.  Both are refused before any job runs."""
+    manifest file; a NULL lands in ``ds=__HIVE_DEFAULT_PARTITION__``,
+    which no ``isin`` matches.  All are refused before any job runs."""
     import pandas as pd
 
     from torchestra_spark.checkpoint import IncrementalMaterializer
@@ -224,9 +229,9 @@ def test_incremental_materializer_rejects_unsafe_values(spark, tmp_path, values)
         pd.DataFrame({"ds": values, "x": [float(i) for i in range(len(values))]})
     ).write.partitionBy("ds").parquet(inp)
     mat = IncrementalMaterializer(inp, outp, "ds")
-    with pytest.raises(ValueError, match="needs path escaping"):
+    with pytest.raises(ValueError, match=error):
         mat.refresh(spark)
-    with pytest.raises(ValueError, match="needs path escaping"):
+    with pytest.raises(ValueError, match=error):
         mat.changed_partitions()
     assert not os.path.exists(outp)
 

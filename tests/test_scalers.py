@@ -88,6 +88,21 @@ def test_tdigest_distribution(spark):
     assert np.allclose(got, ranks, atol=1e-2)
 
 
+@pytest.mark.parametrize("bad", [None, float("nan")], ids=["null", "nan"])
+def test_tdigest_distribution_null_and_nan(spark, bad):
+    # a NULL arrives at the digest as NaN, and NaN matches no centroid
+    # interval: both map to a missing value instead of failing the
+    # batch (Arrow's return path turns the kernel's NaN into NULL)
+    fit = spark.createDataFrame(pd.DataFrame({"id": np.arange(100), "x": np.arange(100.0)}))
+    pipe = Pipeline({"q": Feature("x", [TDigestDistribution()])})
+    pipe.fit(fit)
+    rows = spark.createDataFrame([(0, 50.0), (1, bad)], "id long, x double")
+    got = pipe.transform(rows).orderBy("id").collect()
+    assert got[1]["x"] is None if bad is None else np.isnan(got[1]["x"])
+    assert got[0]["q"] == pytest.approx(0.5, abs=0.02)
+    assert got[1]["q"] is None
+
+
 def test_nan_to_num_clamp(spark):
     vals = [1.0, float("nan"), float("inf"), float("-inf"), -9.0, 9.0]
     pdf = pd.DataFrame({"id": range(len(vals)), "x": vals})

@@ -49,6 +49,13 @@ def test_single_value():
     assert td.cdf(t, np.array([6.0]))[0] == 1.0
 
 
+def test_cdf_nan_is_nan():
+    td, t = _fit(np.arange(100.0))
+    est = td.cdf(t, np.array([-1.0, np.nan, 50.0, 200.0]))
+    assert np.isnan(est[1])
+    assert est[0] == 0.0 and est[3] == 1.0 and abs(est[2] - 0.5) < 0.02
+
+
 def test_compression_stress_40k():
     # test_normalization.py:560-571: 40k values at compression 1000
     rng = np.random.RandomState(0)

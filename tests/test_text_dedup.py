@@ -1227,7 +1227,20 @@ def test_simhash_probe_index_on_stream_matches_batch(spark, tmp_path):
     assert all(v == (1, True) for v in ep.values())  # each probe copies one ref doc
 
 
-def test_mark_contaminated_indexed_matches_join_path(spark):
+def _catalyst_contam_hits(train, ev, n=8):
+    """Independent reference: the Catalyst ``token_ngram_hashes`` fold of
+    each row, ``array_intersect``-ed with the collected eval gram set."""
+    def grams(c):
+        return F.coalesce(T.token_ngram_hashes(F.col(c), n), F.array().cast("array<bigint>"))
+
+    eval_grams = sorted({g for r in ev.select(grams("tokens").alias("g")).collect()
+                         for g in r.g})
+    evset = F.array(*[F.lit(g) for g in eval_grams]).cast("array<bigint>")
+    return {r.doc_id: (r.h, r.h >= 1) for r in train.select(
+        "doc_id", F.size(F.array_intersect(grams("tokens"), evset)).alias("h")).collect()}
+
+
+def test_mark_contaminated_matches_catalyst_reference(spark):
     ev = spark.createDataFrame([(100, list(range(20)))], "doc_id long, tokens array<int>")
     train = spark.createDataFrame(
         [(1, [99, 98] + list(range(8)) + [77]),
@@ -1246,14 +1259,21 @@ def test_mark_contaminated_indexed_matches_join_path(spark):
     got = {r.doc_id: (r.contam_hits, r.is_contaminated)
            for r in D.mark_contaminated_indexed(train, "tokens", "doc_id", idx,
                                                 n=8).collect()}
-    exp = {r.doc_id: (r.contam_hits, r.is_contaminated)
-           for r in D.mark_contaminated(train, "tokens", "doc_id", ev, n=8).collect()}
+    marked = D.mark_contaminated(train, "tokens", "doc_id", ev, n=8)
+    exp = _catalyst_contam_hits(train, ev)
     assert got == exp
+    assert {r.doc_id: (r.contam_hits, r.is_contaminated) for r in marked.collect()} == exp
     assert got[4] == (13, True) and got[2] == (0, False)
     assert all(got[i] == (0, False) for i in (3, 5, 6, 7, 8, 9))
+    # one pass over the training side: no join, no aggregate, and no
+    # hash exchange (the round-robin one is train's own repartition)
+    plan = marked._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan and "HashAggregate" not in plan
+    assert "hashpartitioning" not in plan
 
 
-def test_mark_contaminated_indexed_on_stream(spark, tmp_path):
+@pytest.mark.parametrize("form", ["indexed", "eval_df"])
+def test_mark_contaminated_on_stream(spark, tmp_path, form):
     from tests.test_streaming import run_to_memory
 
     ev = spark.createDataFrame(
@@ -1261,6 +1281,12 @@ def test_mark_contaminated_indexed_on_stream(spark, tmp_path):
         "doc_id long, tokens array<int>",
     )
     idx = D.build_contamination_index(ev, "tokens", n=8)
+
+    def mark(frame):
+        if form == "indexed":
+            return D.mark_contaminated_indexed(frame, "tokens", "doc_id", idx, n=8)
+        return D.mark_contaminated(frame, "tokens", "doc_id", ev, n=8)
+
     probe = spark.createDataFrame(
         [(100 + i, list(range((i % 10) * 30, (i % 10) * 30 + 20))) for i in range(40)],
         "doc_id long, tokens array<int>",
@@ -1268,17 +1294,45 @@ def test_mark_contaminated_indexed_on_stream(spark, tmp_path):
     d = tmp_path / "contam_stream"
     probe.coalesce(3).write.parquet(str(d))
     stream = spark.readStream.schema(probe.schema).parquet(str(d))
-    got = run_to_memory(
-        D.mark_contaminated_indexed(stream, "tokens", "doc_id", idx, n=8),
-        "t_contam", spark,
-    )
+    got = run_to_memory(mark(stream), f"t_contam_{form}", spark)
     gp = {r.doc_id: (r.contam_hits, r.is_contaminated) for r in got.collect()}
-    ep = {r.doc_id: (r.contam_hits, r.is_contaminated)
-          for r in D.mark_contaminated_indexed(probe, "tokens", "doc_id", idx,
-                                               n=8).collect()}
+    ep = {r.doc_id: (r.contam_hits, r.is_contaminated) for r in mark(probe).collect()}
     assert gp == ep and len(gp) == 40
     # the first 5 of every 10 probes copy an eval doc -> 13 shared grams
     assert gp[100] == (13, True) and gp[105] == (0, False)
+
+
+@pytest.mark.parametrize("stage", ["decontaminate", "tokenize"])
+def test_dirty_ids_are_marked_per_row(spark, stage):
+    """A duplicated and a NULL id: each row gets its own answer, and the
+    input columns keep their order ahead of the new ones."""
+    if stage == "decontaminate":
+        ev = spark.createDataFrame([(100, list(range(20)))], "doc_id long, tokens array<int>")
+        df = spark.createDataFrame(
+            [("copy", 1, list(range(20))),
+             ("clean", 1, list(range(1000, 1030))),   # same id as the copy
+             ("null-id copy", None, list(range(20)))],
+            "k string, doc_id long, tokens array<int>",
+        )
+        out = D.mark_contaminated(df, "tokens", "doc_id", ev, n=8)
+        new = ["contam_hits", "is_contaminated"]
+        got = {r.k: r.contam_hits for r in out.collect()}
+        assert got == {"copy": 13, "clean": 0, "null-id copy": 13}
+        kept = [r.k for r in D.decontaminate(df, "tokens", "doc_id", ev, n=8).collect()]
+        assert kept == ["clean"]   # the NULL-id leak is dropped
+    else:
+        df = spark.createDataFrame(
+            [("a", 1, "cat sat"), ("b", 1, "dog mat"), ("c", None, "mat cat")],
+            "k string, doc_id long, text string",
+        )
+        vocab = spark.createDataFrame(
+            [("cat", 1), ("sat", 2), ("dog", 3), ("mat", 4)], "word string, token_id int"
+        )
+        out = T.tokenize_with_vocab(df, "text", "doc_id", vocab)
+        new = ["tokens", "n_tok"]
+        got = {r.k: (list(r.tokens), r.n_tok) for r in out.collect()}
+        assert got == {"a": ([1, 2], 2), "b": ([3, 4], 2), "c": ([4, 1], 2)}
+    assert out.columns == df.columns + new
 
 
 def test_dedup_clusters_path_graph_pointer_doubling(spark):
@@ -1295,19 +1349,30 @@ def test_dedup_clusters_path_graph_pointer_doubling(spark):
     assert set(out.values()) == {"d000"}
 
 
-def test_tokenize_local_matches_join_path(spark):
-    # the shuffle-free task-closure tokenizer must produce bit-identical
-    # token arrays to the broadcast-join path (they share one driver
-    # oracle), including empty / NULL / whitespace-edge documents
+def _catalyst_tokens(df, vocab, oov=0):
+    """Independent reference: the JVM ``\\s`` split of ``words`` over
+    ``lower(text)``, each word looked up in a literal vocabulary map."""
+    v = {r.word: r.token_id for r in vocab.collect()}
+    lut = F.create_map(*[F.lit(x) for kv in sorted(v.items()) for x in kv])
+    toks = F.coalesce(
+        F.transform(T.words(F.lower(F.col("text"))),
+                    lambda w: F.coalesce(F.element_at(lut, w), F.lit(oov))),
+        F.array().cast("array<int>"),
+    )
+    return {r["doc_id"]: (r["tokens"], r["n_tok"]) for r in df.select(
+        "doc_id", toks.alias("tokens"), F.size(toks).alias("n_tok")).collect()}
+
+
+def test_tokenize_matches_catalyst_reference(spark):
+    # the task-closure tokenizer must produce the token arrays of the
+    # Catalyst reference (the oracle's word split and lookup),
+    # including empty / NULL / whitespace-edge documents
     df = spark.createDataFrame(
         [(1, "The cat  sat"), (2, ""), (3, None), (4, "cat CAT\tmat\ncat")],
         "doc_id long, text string",
     )
     vocab = T.fit_vocab(df, "text", size=3)
-    a = {
-        r["doc_id"]: (r["tokens"], r["n_tok"])
-        for r in T.tokenize_with_vocab(df, "text", "doc_id", vocab).collect()
-    }
+    a = _catalyst_tokens(df, vocab)
     b = {
         r["doc_id"]: (r["tokens"], r["n_tok"])
         for r in T.tokenize_with_vocab_local(df, "text", "doc_id", vocab).collect()
@@ -1323,17 +1388,38 @@ def test_tokenize_local_matches_join_path(spark):
     assert "Exchange" not in plan
 
 
+def test_tokenize_with_vocab_on_stream(spark, tmp_path):
+    from tests.test_streaming import run_to_memory
+
+    df = spark.createDataFrame(
+        [(i, f"cat dog {'mat ' * (i % 3)}x{i % 4}") for i in range(30)] + [(30, None)],
+        "doc_id long, text string",
+    )
+    vocab = T.fit_vocab(df, "text", size=4)
+    d = tmp_path / "tok_stream"
+    df.coalesce(3).write.parquet(str(d))
+    stream = spark.readStream.schema(df.schema).parquet(str(d))
+    got = run_to_memory(T.tokenize_with_vocab(stream, "text", "doc_id", vocab),
+                        "t_tok", spark)
+    gp = {r.doc_id: (r.tokens, r.n_tok) for r in got.collect()}
+    ep = {r.doc_id: (r.tokens, r.n_tok)
+          for r in T.tokenize_with_vocab(df, "text", "doc_id", vocab).collect()}
+    assert gp == ep and len(gp) == 31
+    assert gp[30] == ([], 0)
+
+
 def test_tokenize_local_fuzz_parity(spark):
     # 300 seeded random docs over ASCII words + all five Java-\s
-    # whitespace chars + punctuation: join path and task-closure path
-    # must agree token-for-token (they share one driver oracle, so any
-    # split/lowercase divergence is a correctness bug)
+    # whitespace chars + punctuation: the Catalyst reference (JVM split)
+    # and the task-closure path (Python split) must agree token-for-token
+    # (they share one driver oracle, so any split/lowercase divergence is
+    # a correctness bug)
     import random
 
     rng = random.Random(20260817)
     ws_chars = [" ", "\t", "\n", "\x0b", "\f", "\r", "  ", " \t\n"]
     # includes locale-sensitive non-ASCII (U+0130 İ, ß, Σ/ς): both
-    # paths now lowercase JVM-side, so these must agree token-for-token
+    # sides lowercase JVM-side, so these must agree token-for-token
     pieces = ["cat", "Dog", "MAT", "x", "42", "a-b", "e!", "Zz9", "", "the",
               "\u0130stanbul", "STRASSE", "stra\u00dfe", "\u03a3\u039f\u03a6\u039f\u03a3", "\u03c3o\u03c2"]
     docs = []
@@ -1345,10 +1431,7 @@ def test_tokenize_local_fuzz_parity(spark):
         docs.append((i, txt if rng.random() > 0.05 else None))
     df = spark.createDataFrame(docs, "doc_id long, text string").repartition(4)
     vocab = T.fit_vocab(df, "text", size=6)
-    a = {
-        r["doc_id"]: r["tokens"]
-        for r in T.tokenize_with_vocab(df, "text", "doc_id", vocab).collect()
-    }
+    a = {k: toks for k, (toks, _) in _catalyst_tokens(df, vocab).items()}
     b = {
         r["doc_id"]: r["tokens"]
         for r in T.tokenize_with_vocab_local(df, "text", "doc_id", vocab).collect()

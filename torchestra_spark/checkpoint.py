@@ -108,7 +108,9 @@ def _partition_dirs(path: str, col: str) -> Dict[str, str]:
     """{value: directory} of the ``<col>=<value>`` directories under
     ``path``, by name.  A value must be alphanumeric or ``-._``: Spark
     escapes other characters in the directory name, so the name would
-    not equal the column value a filter or manifest compares against."""
+    not equal the column value a filter or manifest compares against.
+    NULL (Spark's ``__HIVE_DEFAULT_PARTITION__``) is refused too: an
+    ``isin`` over the names matches no NULL row."""
     prefix = f"{col}="
     out = {}
     if os.path.isdir(path):
@@ -117,6 +119,11 @@ def _partition_dirs(path: str, col: str) -> Dict[str, str]:
             if not (d.startswith(prefix) and os.path.isdir(full)):
                 continue
             v = d[len(prefix):]
+            if v == "__HIVE_DEFAULT_PARTITION__":
+                raise ValueError(
+                    f"partition column {col!r} holds NULL, which no value "
+                    "filter matches; fill it before partitioning"
+                )
             if not all(c.isalnum() or c in "-._" for c in v):
                 raise ValueError(
                     f"partition value {unquote(v)!r} needs path escaping; use "

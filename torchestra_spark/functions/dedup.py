@@ -22,9 +22,10 @@ Every stage reads either a text column or a pre-tokenized
   probe index over a static reference corpus; probing is stateless,
   so it runs on streams.
 * **mark_contaminated / decontaminate** — test-set decontamination:
-  distinct token n-grams shared with an eval corpus (broadcast join);
-  **build_contamination_index -> mark_contaminated_indexed** is its
-  stateless (streaming) twin.
+  distinct token n-grams shared with an eval corpus, probed against a
+  driver-built sorted gram index in one pass with no join or shuffle
+  (batch or streaming); **build_contamination_index ->
+  mark_contaminated_indexed** reuses one index across calls.
 * **dedup_clusters / dedup_keep_best** — connected components over
   near-dup pairs and the keep-best-member policy.
 
@@ -216,9 +217,12 @@ def _map_token_lists(
     kernel,
     out_ddl: str,
     prep=None,
+    keep_columns: bool = False,
 ) -> DataFrame:
     """(id, <kernel columns>) per row of ``df`` from ONE ``mapInArrow``
-    pass over the list column ``col``.
+    pass over the list column ``col``; with ``keep_columns`` every input
+    column, in order, takes the place of the id (and ``col`` is read in
+    place, so it crosses the Arrow boundary once).
 
     The Arrow ListArray's flat values buffer already IS the
     concatenated form the batch kernels want: ``kernel(flat, lens)``
@@ -230,22 +234,27 @@ def _map_token_lists(
 
     The repartition of ``_ensure_parallelism`` runs on the source
     column; ``prep`` (a Column -> Column function, e.g. a Catalyst
-    shingle hash of a text column) is applied after it."""
+    shingle hash of a text column; id form only) is applied after it."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    names = [id_col] + [f.split()[0] for f in out_ddl.split(",")]
-    sel = _ensure_parallelism(df.select(F.col(id_col).alias("__id"), F.col(col).alias("__t")))
+    if keep_columns:
+        sel, src = df, df.columns.index(col)
+    else:
+        sel, src = df.select(F.col(id_col), F.col(col).alias("__t")), 1
+    sel = _ensure_parallelism(sel)
     if prep is not None:
-        sel = sel.select("__id", prep(F.col("__t")).alias("__t"))
+        sel = sel.withColumn("__t", prep(F.col("__t")))
+    fields = sel.schema.fields if keep_columns else sel.schema.fields[:1]
+    names = [f.name for f in fields] + [f.split()[0] for f in out_ddl.split(",")]
 
     def run(batches):
         for b in batches:
-            arr = b.column(1)
+            arr = b.column(src)
             lens = pc.fill_null(pc.list_value_length(arr), 0)
             lens = lens.to_numpy(zero_copy_only=False).astype(np.int64)
             flat = pc.list_flatten(arr).to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
-            cols = [b.column(0)]
+            cols = b.columns[: len(fields)]
             for c in kernel(flat, lens):
                 if isinstance(c, tuple):
                     offsets, values = c
@@ -255,8 +264,8 @@ def _map_token_lists(
                 cols.append(c)
             yield pa.RecordBatch.from_arrays(cols, names)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return sel.mapInArrow(run, f"`{id_col}` {id_type}, {out_ddl}")
+    kept_ddl = [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
+    return sel.mapInArrow(run, ", ".join(kept_ddl + [out_ddl]))
 
 
 def _capped_self_join(rows: DataFrame, keys: list, cap: Optional[int]) -> DataFrame:
@@ -1167,54 +1176,22 @@ def mark_contaminated(
     """Test-set decontamination marking (the GPT-3/PaLM n-gram rule):
     annotate every training document with ``contam_hits`` = the number
     of DISTINCT token n-grams it shares with the evaluation corpus,
-    and ``is_contaminated`` = hits >= min_hits.
+    and ``is_contaminated`` = hits >= min_hits.  Returns the input
+    columns, in order, then ``contam_hits`` and ``is_contaminated``.
 
     Scale shape: the eval corpus is benchmarks — KBs to MBs — so its
-    distinct n-gram hash set is aggregated once and met via a
-    BROADCAST join: the 100 TB training side streams through a
-    map-side hash probe, never shuffles, and docs with no hit cost one
-    gram-explode + probe.  Gram hashing is the winnow polynomial fold
-    (``text.token_ngram_hashes``), so the whole check replays in SQL
-    (driver oracle `decontaminate`).  Unlike near-dup detection this
+    distinct n-gram hashes are collected once into a sorted driver-side
+    index (``build_contamination_index``, capped at 5M eval docs).  The
+    100 TB training side is then probed in ONE mapInArrow pass: no join,
+    no aggregate, no shuffle, so each row is marked on its own (NULL or
+    duplicated ids included) and the same call runs on a
+    Structured-Streaming frame.  Gram hashing is the winnow polynomial
+    fold (``text.token_ngram_hashes``), so the whole check replays in
+    SQL (driver oracle `decontaminate`).  Unlike near-dup detection this
     keeps EVERY n-gram — a sampled fingerprint that misses an overlap
     would leak an eval example into training."""
-    from torchestra_spark.functions.text import token_ngram_hashes
-
-    eval_tokens_col = eval_tokens_col or tokens_col
-    eg = (
-        eval_df.select(
-            F.explode(token_ngram_hashes(F.col(eval_tokens_col), n)).alias("__g")
-        )
-        .distinct()
-    )
-    # Train side (the 100 TB side): grams from the numpy twin of
-    # token_ngram_hashes' fold, one vector op per gram position over the
-    # batch's token buffer, vs n interpreted element_at evaluations PER
-    # GRAM for the Catalyst HOF (guide §4.2; interleaved A/B at sf0.1:
-    # 2.3 s vs 3.2 s end-to-end).  Grams are RAW (duplicates kept) and
-    # exploded JVM-side: only grams that match are ever deduped, by the
-    # count_distinct below, so the whole-corpus dedup sort is skipped.
-    def grams(flat, lens):
-        gv, gs = _token_ngram_raw(flat, lens, n)
-        offsets = np.zeros(len(lens) + 1, dtype=np.int64)
-        np.cumsum(np.bincount(gs, minlength=len(lens)), out=offsets[1:])
-        return ((offsets, gv),)
-
-    tg = _map_token_lists(df, tokens_col, id_col, grams, "__gs array<bigint>").select(
-        id_col, F.explode("__gs").alias("__g")
-    )
-    # count DISTINCT matched grams so the semantics stay exactly
-    # token_ngram_hashes' distinct-gram hits
-    hits = (
-        tg.join(F.broadcast(eg), "__g")
-        .groupBy(id_col)
-        .agg(F.count_distinct(F.col("__g")).alias("contam_hits"))
-    )
-    return (
-        df.join(hits, id_col, "left")
-        .withColumn("contam_hits", F.coalesce(F.col("contam_hits"), F.lit(0)))
-        .withColumn("is_contaminated", F.col("contam_hits") >= min_hits)
-    )
+    gram_index = build_contamination_index(eval_df, eval_tokens_col or tokens_col, n)
+    return _probe_contamination(df, tokens_col, id_col, gram_index, n, min_hits, keep_columns=True)
 
 
 def decontaminate(
@@ -1227,7 +1204,8 @@ def decontaminate(
     min_hits: int = 1,
 ) -> DataFrame:
     """Drop training documents sharing >= ``min_hits`` distinct token
-    n-grams with the evaluation corpus (see ``mark_contaminated``)."""
+    n-grams with the evaluation corpus: a filter over the one-pass
+    ``mark_contaminated``."""
     m = mark_contaminated(
         df, tokens_col, id_col, eval_df, eval_tokens_col=eval_tokens_col,
         n=n, min_hits=min_hits,
@@ -1240,14 +1218,16 @@ def build_contamination_index(
 ) -> np.ndarray:
     """Sorted distinct n-gram hash array of the evaluation corpus,
     collected to the driver (eval corpora are benchmarks — KBs to MBs
-    of grams).  Probe it with ``mark_contaminated_indexed``."""
+    of grams).  ``mark_contaminated`` builds one per call; build it
+    once and probe it with ``mark_contaminated_indexed`` to reuse it."""
     from torchestra_spark.functions.text import token_ngram_hashes
 
     n_eval = eval_df.count()
     if n_eval > 5_000_000:
         raise ValueError(
-            f"eval corpus has {n_eval} docs — too large for a driver-side "
-            "gram index; use mark_contaminated (broadcast join) instead"
+            f"eval corpus has {n_eval} docs, above the 5,000,000-doc cap of "
+            "the driver-side gram index; pass the evaluation corpus, not a "
+            "training-scale frame"
         )
     pdf = (
         eval_df.select(F.explode(token_ngram_hashes(F.col(tokens_col), n)).alias("g"))
@@ -1265,15 +1245,26 @@ def mark_contaminated_indexed(
     n: int = 8,
     min_hits: int = 1,
 ) -> DataFrame:
-    """Stateless decontamination marking against a prebuilt gram index
-    (``build_contamination_index``): each row's distinct n-grams are
+    """``mark_contaminated`` against a prebuilt gram index
+    (``build_contamination_index``): the same one mapInArrow pass, for
+    callers that probe many frames or micro-batches with one index.
+    Driver queries `decontaminate` / `decontaminate_indexed` share one
+    SQL oracle.  Returns (id, contam_hits, is_contaminated)."""
+    return _probe_contamination(df, tokens_col, id_col, gram_index, n, min_hits)
+
+
+def _probe_contamination(
+    df: DataFrame,
+    tokens_col: str,
+    id_col: str,
+    gram_index: np.ndarray,
+    n: int,
+    min_hits: int,
+    keep_columns: bool = False,
+) -> DataFrame:
+    """The decontamination pass: each row's distinct n-grams are
     computed and probed (sorted-array membership) in ONE mapInArrow
-    pass — no join, no shuffle, so the identical code runs on a
-    Structured-Streaming frame in append mode (batch-parity pytest).
-    Semantics equal ``mark_contaminated`` exactly (same gram hashing,
-    distinct-gram hit counts), so the same SQL oracle checks both
-    (driver queries `decontaminate` / `decontaminate_indexed`).
-    Returns (id, contam_hits, is_contaminated)."""
+    pass."""
     idx = np.sort(np.asarray(gram_index, dtype=np.int64))
 
     def probe(flat, lens):
@@ -1293,7 +1284,8 @@ def mark_contaminated_indexed(
         return hits.astype(np.int64), hits >= min_hits
 
     return _map_token_lists(
-        df, tokens_col, id_col, probe, "contam_hits bigint, is_contaminated boolean"
+        df, tokens_col, id_col, probe, "contam_hits bigint, is_contaminated boolean",
+        keep_columns=keep_columns,
     )
 
 

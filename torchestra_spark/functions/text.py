@@ -406,6 +406,10 @@ def token_ngram_hashes(tokens: Column, n: int = 8) -> Column:
 
 
 # ------------------------------------------------------------- tokenization
+# rows of a vocabulary small enough to collect into a task closure
+_MAX_VOCAB = 10_000_000
+
+
 def fit_vocab(
     df: DataFrame, text_col: str, size: int = 50_000, min_count: int = 1
 ) -> DataFrame:
@@ -450,43 +454,12 @@ def tokenize_with_vocab(
     (packing, simhash/winnow dedup, decontamination, sequence ops)
     runs on tokenized text.
 
-    Plan: posexplode words -> BROADCAST-join the vocabulary (vocabs
-    are ~1e5 rows; the corpus side streams map-side, no shuffle for
-    the lookup) -> one groupBy per document re-assembles the array in
-    word order (sort_array over (pos, id) structs).  The reassembly
-    shuffles one row per token — the same unavoidable cost as exact
-    packing; empty/no-word documents keep an empty array.  Returns the
-    input columns + ``tokens`` (array<int>) + ``n_tok``."""
-    ws = df.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode_outer(words(F.lower(F.col(text_col)))).alias("__pos", "__w"),
-    )
-    joined = ws.join(
-        F.broadcast(vocab.withColumnRenamed("word", "__w")), "__w", "left"
-    ).select(
-        "__id",
-        "__pos",
-        F.coalesce(F.col("token_id"), F.lit(oov_id)).cast("int").alias("__tid"),
-    )
-    toks = joined.groupBy("__id").agg(
-        F.transform(
-            # posexplode_outer emits one NULL-pos row for wordless docs;
-            # filter it so they get [] rather than [oov]
-            F.array_sort(
-                F.collect_list(
-                    F.when(
-                        F.col("__pos").isNotNull(),
-                        F.struct(F.col("__pos"), F.col("__tid")),
-                    )
-                )
-            ),
-            lambda s: s["__tid"],
-        ).alias("tokens")
-    )
-    out = df.join(toks.withColumnRenamed("__id", id_col), id_col, "left")
-    return out.withColumn(
-        "tokens", F.coalesce(F.col("tokens"), F.array().cast("array<int>"))
-    ).withColumn("n_tok", F.size("tokens"))
+    One shuffle-free pass (``tokenize_with_vocab_local`` with its
+    default vocabulary cap): each row is tokenized on its own, so NULL
+    or duplicated ids need no care.  Returns the input columns, in
+    order, then ``tokens`` (array<int>) and ``n_tok``; NULL, empty and
+    wordless documents get an empty array."""
+    return tokenize_with_vocab_local(df, text_col, id_col, vocab, oov_id)
 
 
 def add_text_features(df: DataFrame, text_col: str = "text", lang: str = "en") -> DataFrame:
@@ -512,55 +485,56 @@ def tokenize_with_vocab_local(
     id_col: str,
     vocab: DataFrame,
     oov_id: int = 0,
-    max_vocab: int = 10_000_000,
+    max_vocab: int = _MAX_VOCAB,
 ) -> DataFrame:
-    """Shuffle-FREE twin of ``tokenize_with_vocab``: the fitted
-    vocabulary (size-bounded by construction — ``fit_vocab`` caps it)
-    is collected once and shipped in the task closure; every document
-    tokenizes inside ONE Arrow-batched mapInPandas pass.  The corpus
-    never moves — at 100 TB this is the production path (the join
-    variant shuffles one row per token for the ordered reassembly),
-    and being stateless it runs unchanged on a Structured-Streaming
-    frame, like the probe-index gates.  Output contract and token
-    arrays are identical to the join variant (same driver oracle):
-    input columns + ``tokens array<int>`` + ``n_tok``.
+    """``tokenize_with_vocab`` with the vocabulary cap as an argument.
+    The fitted vocabulary (size-bounded by construction — ``fit_vocab``
+    caps it) is collected once and shipped in the task closure; every
+    document tokenizes inside ONE mapInArrow pass.  The corpus never
+    moves, and being stateless the pass runs unchanged on a
+    Structured-Streaming frame, like the probe-index gates.  Output:
+    input columns + ``tokens array<int>`` + ``n_tok``.  The input
+    columns pass through as Arrow arrays: a pandas round trip would
+    turn a bigint column holding a NULL into float64 and round ids
+    above 2**53.
 
     Word split replicates ``words()`` exactly: Java ``\\s`` is
     ASCII-only, so the Python side splits on the same five chars.
     Lowercasing happens SPARK-side (``F.lower`` on a pre-projected
-    column) so both tokenizer paths and ``fit_vocab`` share one casing
+    column) so the tokenizer and ``fit_vocab`` share one casing
     implementation — Python ``str.lower()`` diverges from the JVM on
     locale-sensitive characters (e.g. U+0130 İ), which would silently
-    send such words to OOV in one path only."""
+    send such words to OOV."""
     import re
 
-    import pandas as pd
+    import pyarrow as pa
 
     rows = vocab.limit(max_vocab + 1).collect()
     if len(rows) > max_vocab:
         raise RuntimeError(
-            f"vocabulary exceeds {max_vocab} rows — too large for a task "
-            "closure; use tokenize_with_vocab (broadcast join) instead"
+            f"vocabulary exceeds {max_vocab} rows — too large to collect "
+            "into the task closure; fit a smaller one (fit_vocab size=)"
         )
     mapping = {r["word"]: int(r["token_id"]) for r in rows}
     split = re.compile("[ \\t\\n\\x0b\\f\\r]+").split
+    fields = df.schema.fields
+    names = [f.name for f in fields] + ["tokens", "n_tok"]
     out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
         + ["tokens array<int>", "n_tok int"]
     )
     sel = df.select("*", F.lower(F.col(text_col)).alias("__lc"))
 
     def run(batches):
-        for pdf in batches:
+        for b in batches:
             toks = [
-                [mapping.get(w, oov_id) for w in split(t) if w != ""]
-                if isinstance(t, str)
-                else []
-                for t in pdf["__lc"]
+                [mapping.get(w, oov_id) for w in split(t) if w != ""] if t is not None else []
+                for t in b.column(b.num_columns - 1).to_pylist()
             ]
-            pdf = pdf.drop(columns=["__lc"])
-            pdf["tokens"] = toks
-            pdf["n_tok"] = [len(x) for x in toks]
-            yield pdf
+            cols = b.columns[:-1] + [
+                pa.array(toks, pa.list_(pa.int32())),
+                pa.array([len(x) for x in toks], pa.int32()),
+            ]
+            yield pa.RecordBatch.from_arrays(cols, names)
 
-    return sel.mapInPandas(run, out_schema)
+    return sel.mapInArrow(run, out_schema)

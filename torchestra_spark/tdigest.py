@@ -242,7 +242,12 @@ class TDigest:
         at_min = x <= digest.mean_min
         at_max = x >= digest.mean_max
         out[at_max] = 1.0
-        mask = ~(at_min | at_max)
+        # NaN (a NULL after the transform's cast) fails every comparison:
+        # keep it out of the interior, where searchsorted would index
+        # one past the last centroid
+        nan = np.isnan(x)
+        out[nan] = np.nan
+        mask = ~(at_min | at_max | nan)
         m0 = digest.processed_means[0]
         tail_l = mask & (x <= m0)
         if m0 - digest.mean_min > 0.0:
