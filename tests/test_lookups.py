@@ -235,6 +235,34 @@ def test_int_lookup_null_key(spark, op, expect):
     assert got == expect
 
 
+NAN, INF = float("nan"), float("inf")
+
+
+@pytest.mark.parametrize(
+    "op, expect, state",
+    [
+        (IntCountLookup(), [1, 2, 0, 0, 0, 0, 0], {"1": 1, "2": 2}),
+        (IntRatioLookup(), [1 / 3, 2 / 3, 0.0, 0.0, 0.0, 0.0, 0.0], {"1": 1 / 3, "2": 2 / 3}),
+        (IntIndexLookup(), [3, 2, 1, 1, 1, 1, 1], {"2": 2, "1": 3}),
+    ],
+    ids=["count", "ratio", "index"],
+)
+@pytest.mark.parametrize(
+    "dirty", [[], [NAN], [NAN, INF, -INF, 1.5, 1e19]], ids=["clean", "nan", "nan_inf_frac"]
+)
+def test_int_lookup_double_key(spark, op, expect, state, dirty):
+    # an integral double keys like its int; NULL, NaN, ±inf, a fractional
+    # value and one past the bigint range are no integer key: left out at
+    # fit and mapped to the OOV default at transform, never truncated
+    keys = [1.0, 2.0, 2.0, None] + dirty
+    train = spark.createDataFrame(list(enumerate(keys)), "id long, k double")
+    probe_keys = [1.0, 2.0, None, NAN, 1.5, 2.5, INF]
+    probe = spark.createDataFrame(list(enumerate(probe_keys)), "id long, k double")
+    got, pipe = _fit_probe(train, probe, op)
+    assert got == expect
+    assert pipe.features["y"].ops[0].get_state()[op._table] == state
+
+
 def test_shared_vocab_fit_is_one_wave(train_df):
     pipe = Pipeline(
         {

@@ -10,7 +10,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from torchestra_spark import Feature, MinMaxScale, Pipeline, StandardScore
-from torchestra_spark.core import FitKind, FittedTransform
+from torchestra_spark.core import FitKind, FittedTransform, Transform
 
 
 class AddTotal(FittedTransform):
@@ -123,6 +123,92 @@ def test_diamond_dag_plans_in_linear_time():
     assert pipe.dependencies[f"r{depth}.0"] == {"d0.0"} | {
         f"{side}{i}.0" for i in range(1, depth) for side in "lr"
     }
+
+
+class Shift(Transform):
+    """Stateless x + c (test op): keeps the right side of a diamond
+    positive, so each level's ratio varies and its std stays finite."""
+
+    def __init__(self, c: float):
+        self.c = c
+
+    def expr(self, col: Column) -> Column:
+        return col.cast("double") + F.lit(self.c)
+
+
+def _diamonds(depth: int) -> Pipeline:
+    """l_i = StandardScore(d_{i-1}), r_i = StandardScore(d_{i-1}) + 3 and
+    d_i = Ratio(l_i, r_i) over d0 = StandardScore(x).  On 8 rows a
+    z-score lies within ±7/sqrt(8) < 3, so r_i > 0, and d_i = z/(z+3) is
+    increasing in z: every level keeps 8 distinct values."""
+    from torchestra_spark import Ratio
+
+    feats = {"d0": Feature("x", [StandardScore()])}
+    for i in range(1, depth + 1):
+        feats[f"l{i}"] = Feature(f"d{i - 1}", [StandardScore()])
+        feats[f"r{i}"] = Feature(f"d{i - 1}", [StandardScore(), Shift(3.0)])
+        feats[f"d{i}"] = Feature([f"l{i}", f"r{i}"], [Ratio()])
+    return Pipeline(feats)
+
+
+_DIAMOND_X = [1.0, 2.0, 4.0, 7.0, 11.0, 16.0, 22.0, 29.0]
+
+
+def _diamond_frame(spark):
+    return spark.range(1).select(F.explode(F.array(*map(F.lit, _DIAMOND_X))).alias("x"))
+
+
+def test_diamond_dag_fit_hand_derived(spark):
+    """Depth 3: each level's StandardScore parameters equal the sample
+    mean and std (ddof=1) of the previous level's values, worked out
+    here in numpy level by level."""
+    pipe = _diamonds(3)
+    pipe.fit(_diamond_frame(spark))
+    d = np.array(_DIAMOND_X)
+    m, s = d.mean(), d.std(ddof=1)
+    got = pipe.features["d0"].ops[0]
+    assert np.isclose(got.mean, m, rtol=1e-12) and np.isclose(got.std, s, rtol=1e-12)
+    d = (d - m) / s
+    for i in range(1, 4):
+        m, s = d.mean(), d.std(ddof=1)
+        for side in "lr":
+            got = pipe.features[f"{side}{i}"].ops[0]
+            assert np.isclose(got.mean, m, rtol=1e-9, atol=1e-12), (side, i)
+            assert np.isclose(got.std, s, rtol=1e-9), (side, i)
+        z = (d - m) / s
+        d = z / (z + 3.0)
+    assert np.all(np.isfinite(d)) and d.std() > 0
+
+
+def test_diamond_dag_fit_linear_in_depth(spark, monkeypatch):
+    """Depth 14 (each d_i reaches d0 along 2^i paths): fit stages every
+    feature once, so each wave's fit input builds in under 1 s and the
+    whole fit finishes in under 60 s, with finite parameters."""
+    import time
+
+    marks = []
+    orig = Pipeline._fit_scalar
+
+    def spy(df, ops, update=False):
+        marks.append(time.perf_counter())
+        orig(df, ops, update)
+        marks.append(time.perf_counter())
+
+    monkeypatch.setattr(Pipeline, "_fit_scalar", staticmethod(spy))
+    depth = 14
+    pipe = _diamonds(depth)
+    df = _diamond_frame(spark)
+    t0 = time.perf_counter()
+    pipe.fit(df)
+    total = time.perf_counter() - t0
+    assert len(marks) == 2 * (depth + 1)
+    # a wave's fit input is built between the previous wave's job and its own
+    builds = [marks[0] - t0] + [marks[k] - marks[k - 1] for k in range(2, len(marks), 2)]
+    assert max(builds) < 1.0, builds
+    assert total < 60.0, total
+    for path in pipe.stats_op_paths:
+        state = pipe._op(path).get_state()
+        assert np.isfinite(state["mean"]) and np.isfinite(state["std"]) and state["std"] > 0, path
 
 
 def test_e2e_staged_fit_hand_derived(sdf):

@@ -1,15 +1,17 @@
-"""Property-based tests (hypothesis) for driver-side kernels — no Spark.
+"""Property-based tests (hypothesis).
 
 Mirrors the reference's determinism/edge-case coverage style with
 generated inputs: t-digest invariants, sort_counts ordering contract,
-state-artifact round-trips.
+state-artifact round-trips (driver-side kernels, no Spark), and the
+pipeline's staged fit and transform against inlined composition over
+random feature DAGs (on Spark).
 """
 
 import math
 import os
 
 import numpy as np
-from hypothesis import given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from torchestra_spark.operators.lookups import sort_counts
@@ -278,3 +280,129 @@ def test_avi_roundtrip_property(n, h, w, every, seed):
     idx, dec = V.decode_avi_frames(V.encode_avi(frames), every_n=every)
     assert idx.tolist() == list(range(0, n, every))
     assert np.array_equal(dec, frames[::every])
+
+
+# ------------------------------------------------- pipeline composition
+# Random small feature DAGs over dirty frames (NULL, NaN, ±inf): chains,
+# feature-on-feature references, multi-input heads and one-level
+# diamonds.  Checked against two independent compositions: the inlined
+# ``output_expr`` for transform, and a wave-by-wave fit of each op alone
+# over ``transform`` of the features fitted before it.
+_SOURCES = ["a", "b"]
+_TAIL_OPS = ["z", "mm", "clamp", "nan"]  # z, mm are fitted
+
+
+def _make_op(code):
+    from torchestra_spark import Clamp, Diff, MinMaxScale, NanToNum, Ratio, StandardScore
+
+    return {
+        "z": StandardScore,
+        "mm": MinMaxScale,
+        "clamp": lambda: Clamp(-3.0, 3.0),
+        "nan": NanToNum,
+        "ratio": Ratio,
+        "diff": Diff,
+    }[code]()
+
+
+@st.composite
+def feature_dags(draw):
+    """A list of (input refs, op codes); feature i is named f{i} and
+    may read the sources and f0..f{i-1}."""
+    spec = []
+    for i in range(draw(st.integers(1, 5))):
+        refs = _SOURCES + [f"f{j}" for j in range(i)]
+        tail = draw(st.lists(st.sampled_from(_TAIL_OPS), min_size=1, max_size=3))
+        if i >= 1 and draw(st.booleans()):
+            pair = draw(st.lists(st.sampled_from(refs), min_size=2, max_size=2))
+            spec.append((pair, [draw(st.sampled_from(["ratio", "diff"]))] + tail))
+        else:
+            spec.append(([draw(st.sampled_from(refs))], tail))
+    return spec
+
+
+def _pipeline(spec):
+    from torchestra_spark import Feature, Pipeline
+
+    return Pipeline(
+        {f"f{i}": Feature(refs if len(refs) > 1 else refs[0], [_make_op(c) for c in codes])
+         for i, (refs, codes) in enumerate(spec)}
+    )
+
+
+_DIRTY = st.one_of(
+    st.sampled_from([None, math.nan, math.inf, -math.inf]),
+    st.floats(-100, 100, allow_nan=False),
+)
+
+# a diamond under a multi-input head: f0 feeds f1 and f2, f3 = f1 / f2
+_DIAMOND = [(["a"], ["z"]), (["f0"], ["z"]), (["f0"], ["mm", "clamp"]), (["f1", "f2"], ["ratio", "z"])]
+
+
+def _same(x, y):
+    return x == y or (isinstance(x, float) and isinstance(y, float) and math.isnan(x) and math.isnan(y))
+
+
+# generation is timed in the process that also runs the py4j threads,
+# so its too_slow health check would measure Spark, not the strategies
+@settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@example(spec=_DIAMOND, rows=[(1.0, 2.0), (None, 3.0), (math.nan, -math.inf), (4.0, 0.5)])
+@given(
+    spec=feature_dags(),
+    rows=st.lists(st.tuples(_DIRTY, _DIRTY), min_size=1, max_size=8),
+)
+def test_staged_fit_and_transform_match_inlined_composition(spark, spec, rows):
+    import json
+
+    from pyspark.sql import functions as F
+
+    from torchestra_spark import Feature, Pipeline
+
+    def num(v):
+        return F.lit(v).cast("double")
+
+    # built in the JVM (no Python worker per job), one partition
+    df = spark.range(1).select(
+        F.inline(F.array(*[
+            F.struct(F.lit(i).cast("long").alias("id"), num(a).alias("a"), num(b).alias("b"))
+            for i, (a, b) in enumerate(rows)
+        ]))
+    )
+    pipe = _pipeline(spec).fit(df)
+    names = list(pipe.features)
+
+    # transform == the inlined output_expr, row for row
+    got = pipe.transform(df).select("id", *names).orderBy("id").collect()
+    want = df.select("id", *[pipe.output_expr(n).alias(n) for n in names]).orderBy("id").collect()
+    for g, w in zip(got, want):
+        assert all(_same(g[n], w[n]) for n in names), (g, w)
+    assert len(got) == len(want) == len(rows)
+
+    # staged fit == each wave fit by hand over transform of earlier features
+    ref = _pipeline(spec)
+    fitted = set()
+    for wave in ref.waves:
+        done = []
+        for n in ref._feature_order():
+            own = {p for p in ref.stats_op_paths if p.rpartition(".")[0] == n}
+            feature_refs = [r for r in ref.features[n].input_refs if r in ref.features]
+            if own <= fitted and all(r in done for r in feature_refs):
+                done.append(n)
+        frame = Pipeline({n: ref.features[n] for n in done}).transform(df)
+        inputs = []
+        for path in wave:
+            name, _, idx = path.rpartition(".")
+            feat = ref.features[name]
+            ops = feat.ops[: int(idx)]
+            cols = [F.col(r) for r in feat.input_refs]
+            col = ops[0].expr(*cols) if len(cols) > 1 else cols[0]
+            for op in ops[1:] if len(cols) > 1 else ops:
+                col = op.expr(col)
+            inputs.append(col.alias(f"x{len(inputs)}"))
+        # one single-wave pipeline over the inputs as source columns
+        alone = Pipeline({f"y{j}": Feature(f"x{j}", [ref._op(p)]) for j, p in enumerate(wave)})
+        alone.fit(frame.select(*inputs))
+        fitted.update(wave)
+    for path in pipe.stats_op_paths:
+        staged, by_hand = pipe._op(path).get_state(), ref._op(path).get_state()
+        assert json.dumps(staged, sort_keys=True) == json.dumps(by_hand, sort_keys=True), path

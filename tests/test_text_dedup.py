@@ -1866,6 +1866,22 @@ def test_frame_sample_real_through_spark(spark):
         V.frame_sample(empty, every_n=2, frame_features=4).collect()
 
 
+def test_media_stages_keep_bigint_ids_exact(spark):
+    """Ids above 2**53 that share a batch with NULL ids come back exact
+    from the media stages, and the NULL ids stay NULL.  Eight trailing
+    NULLs reach every partition of the round-robin spread up to 8."""
+    from collections import Counter
+
+    ids = [2**60 + 1 + i for i in range(32)] + [None] * 8
+    df = spark.createDataFrame(
+        [(i, None) for i in ids], "doc_id bigint, payload binary"
+    ).coalesce(1)
+    resized = M.resize_image(df).collect()
+    assert Counter(r["doc_id"] for r in resized) == Counter(ids)
+    frames = M.frame_sample_stub(df, every_n=10, frame_features=4).collect()
+    assert Counter((r["doc_id"], r["frame_idx"]) for r in frames) == Counter((i, 0) for i in ids)
+
+
 def test_winnow_release_with_fp_freq_cap(spark):
     """Regression (r7 self-review): with max_fp_freq SET (the default),
     winnow_near_dups rebinds its fps frame through the boilerplate

@@ -21,7 +21,7 @@ Schema convention:
                   sample_rate int, n_frames int>
 
 All stages (here and in video.py) run through one driver,
-``_map_payloads``: one ``mapInPandas`` pass in which each task decodes
+``_map_payloads``: one ``mapInArrow`` pass in which each task decodes
 a whole Arrow batch, amortizing per-batch setup; batch size is
 controlled by spark.sql.execution.arrow.maxRecordsPerBatch.  Each stage
 supplies only its per-payload function.
@@ -30,7 +30,6 @@ supplies only its per-payload function.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -354,37 +353,39 @@ def _fake_decode(payload: bytes, n: int) -> np.ndarray:
 
 
 def _map_payloads(df: DataFrame, payload_col: str, id_col: str, out_ddl: str, fn) -> DataFrame:
-    """(id, <out_ddl columns>) from ONE Arrow-batched ``mapInPandas``
+    """(id, <out_ddl columns>) from ONE Arrow-batched ``mapInArrow``
     pass over the binary column ``payload_col``.
 
     ``fn(payload)`` gets one payload (``bytes``, or None for a NULL: each
     stage keeps its own NULL policy) and returns a list of output rows,
     each a tuple matching ``out_ddl``; the payload's id repeats once per
-    row.  Decoding is CPU-heavy and media tables are often a few files,
-    so the input is first spread over the session's parallelism
-    (``_ensure_parallelism``)."""
+    row.  The id passes through as an Arrow array, ``take``-repeated per
+    output row: a pandas round trip would turn a bigint id column holding
+    a NULL into float64 and round ids above 2**53.  Decoding is CPU-heavy
+    and media tables are often a few files, so the input is first spread
+    over the session's parallelism (``_ensure_parallelism``)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
     from torchestra_spark.functions.dedup import _ensure_parallelism
 
-    names = [f.split()[0] for f in out_ddl.split(",")]
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = StructType.fromDDL(f"__id {id_type}, {out_ddl}")
+    out_fields = list(to_arrow_schema(schema))[1:]
     sel = _ensure_parallelism(
         df.select(F.col(id_col).alias("__id"), F.col(payload_col).alias("__p"))
     )
 
     def run(batches):
-        for pdf in batches:
-            outs = [fn(p) for p in pdf["__p"]]
+        for b in batches:
+            outs = [fn(p) for p in b.column(1).to_pylist()]
             rows = [r for o in outs for r in o]
-            if not rows:
-                # pandas types an empty column float64, which Arrow
-                # cannot convert to an array column: emit nothing
-                continue
-            data = {"__id": np.repeat(pdf["__id"].to_numpy(), [len(o) for o in outs])}
-            data.update((n, list(c)) for n, c in zip(names, zip(*rows)))
-            yield pd.DataFrame(data)
+            ids = b.column(0).take(np.repeat(np.arange(b.num_rows), [len(o) for o in outs]))
+            arrays = [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(out_fields)]
+            yield pa.RecordBatch.from_arrays([ids] + arrays, names=schema.names)
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    out = sel.mapInPandas(run, f"__id {id_type}, {out_ddl}")
-    return out.withColumnRenamed("__id", id_col)
+    return sel.mapInArrow(run, schema).withColumnRenamed("__id", id_col)
 
 
 def _resize_nearest(px: np.ndarray, height: int, width: int) -> np.ndarray:
@@ -452,7 +453,7 @@ def resize_bmp(
     Returns (id, payload) with every image exactly (height, width).
 
     The Spark shape is the multimodal contract: opaque binary column
-    in, opaque binary column out, Arrow-batched mapInPandas, no
+    in, opaque binary column out, Arrow-batched mapInArrow, no
     external codec.  NULL payloads pass through as NULL; non-BMP
     payloads raise at the codec (same contract as decode_features)."""
     return _resize_payloads(

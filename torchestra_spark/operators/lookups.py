@@ -24,6 +24,7 @@ from typing import Any, Dict, List, Optional
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from torchestra_spark.core import FitKind, FittedTransform, Transform
 
@@ -196,8 +197,12 @@ def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool)
     def _apply(s: pd.Series) -> pd.Series:
         if int_keys:
             # a bigint column with NULLs arrives as float64 with NaN: map
-            # the non-null keys as int64, NULL rows get the default
-            out = s.dropna().astype("int64").map(get_vocab()).reindex(s.index)
+            # the integral keys as int64; NULL, NaN, ±inf and fractional
+            # keys get the default, as ``vocab_key`` leaves them out of fit
+            keys = s.dropna()
+            if keys.dtype.kind not in "iu":
+                keys = keys[(keys % 1 == 0) & (keys.abs() < 2.0**63)]
+            out = keys.astype("int64").map(get_vocab()).reindex(s.index)
         else:
             out = s.map(get_vocab())
         out = out.fillna(default)
@@ -233,6 +238,16 @@ class _VocabLookup(FittedTransform):
     @property
     def _oov(self) -> Any:
         return self._value(0)
+
+    def vocab_key(self, df: DataFrame, col: Column) -> Column:
+        """The string key each value of ``col`` over ``df`` is counted
+        under at fit.  An ``int_keys`` lookup over a fractional column
+        counts only integral values, as their digits: NaN, ±inf and 1.5
+        are no integer key, so like NULL they are left out, and the
+        transform maps them to the OOV default."""
+        if self.int_keys and not isinstance(df.select(col).schema[0].dataType, IntegralType):
+            col = F.when(col == F.floor(col), F.floor(col))
+        return col.cast("string")
 
     def expr(self, col: Column) -> Column:
         self._require_fitted()

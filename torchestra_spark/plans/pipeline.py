@@ -20,8 +20,10 @@ to an input column or to another feature's output:
   named outputs.
 
 Fit executes one dependency wave at a time (Kahn-style, mirroring
-_stats_plan.py:89-102).  Within a wave everything is batched for
-minimal passes over the data:
+_stats_plan.py:89-102).  Before a wave, fit stages the earlier features
+the wave's ops read as columns, as transform does, so each op's input
+is its chain prefix over column refs.  Within a wave everything is
+batched for minimal passes over the data:
 
 * all SCALAR_AGG fits -> **one** ``df.agg(...)`` (single scan; Catalyst
   hash aggregate does partial/merge — the reference's calculate/combine
@@ -47,6 +49,7 @@ single whole-stage-codegen'd select (plus Arrow UDF stages where lookups
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Set, Tuple
 
 import numpy as np
@@ -61,7 +64,6 @@ from torchestra_spark.core import (
     Transform,
     type_kind,
 )
-from torchestra_spark.operators.lookups import Eliminator
 from torchestra_spark.state import StateArtifact
 
 
@@ -80,12 +82,9 @@ class Feature:
     output exactly like a single-input feature."""
 
     def __init__(self, input_ref, ops: Optional[Sequence[Transform]] = None):
-        if isinstance(input_ref, str):
-            self.input_refs: List[str] = [input_ref]
-        else:
-            self.input_refs = [str(r) for r in input_ref]
-            if not self.input_refs:
-                raise ValueError("Feature needs at least one input reference")
+        self.input_refs = [input_ref] if isinstance(input_ref, str) else [str(r) for r in input_ref]
+        if not self.input_refs:
+            raise ValueError("Feature needs at least one input reference")
         self.ops: List[Transform] = list(ops or [])
         if len(self.input_refs) > 1:
             if not self.ops or not isinstance(self.ops[0], MultiTransform):
@@ -255,20 +254,22 @@ class Pipeline:
             col = op.expr(col)
         return col
 
-    def _resolve(self, ref: str) -> Column:
-        """A reference as one composed Column: a feature's whole chain
-        over its resolved inputs, or a source column."""
-        return self.output_expr(ref) if ref in self.features else F.col(ref)
-
-    def _input_expr(self, path: str) -> Column:
-        """Composed Column feeding the op at `path` (the reference's
-        minimal input-prefix subgraph, _stats_plan.py:63-87)."""
-        name, _, idx = path.rpartition(".")
-        return self._chain(self.features[name], self._resolve, upto=int(idx))
+    def _stage(self, df: DataFrame, names: Sequence[str]) -> DataFrame:
+        """``df`` with each named feature (fitted, in feature order) added
+        as a column; a ref to an earlier feature reads its column, so
+        each chain is built once."""
+        for name in names:
+            df = df.withColumn(name, self._chain(self.features[name], F.col))
+        return df
 
     def output_expr(self, name: str) -> Column:
-        """Fully-composed expression for a feature (requires fit)."""
-        return self._chain(self.features[name], self._resolve)
+        """Fully-composed expression for a feature (requires fit).  The
+        Column inlines every upstream feature's whole chain, once per path
+        to it, so it grows exponentially on feature diamonds; ``fit`` and
+        ``transform`` stage features as columns instead."""
+        return self._chain(
+            self.features[name], lambda r: self.output_expr(r) if r in self.features else F.col(r)
+        )
 
     # ------------------------------------------------------------ bind check
     def validate_schema(self, schema) -> None:
@@ -320,10 +321,7 @@ class Pipeline:
 
     # ----------------------------------------------------------------- fit
     def fit(self, df: DataFrame) -> "Pipeline":
-        self.validate_schema(df.schema)
-        for wave in self.waves:
-            self._fit_wave(df, wave)
-        return self
+        return self._fit(df, update=False)
 
     def fit_update(self, df: DataFrame, upstream_rtol: float = 0.0) -> "Pipeline":
         """Incremental refit: collect this delta's statistics and merge
@@ -351,7 +349,16 @@ class Pipeline:
         pass a larger ``upstream_rtol`` to accept the drift as an
         approximation — the error bound on downstream moments is then
         O(rtol) of the upstream param shift)."""
+        return self._fit(df, update=True, upstream_rtol=upstream_rtol)
+
+    def _fit(self, df: DataFrame, update: bool, upstream_rtol: float = 0.0) -> "Pipeline":
+        """Fit, or delta-merge, wave by wave.  Before each wave the
+        features its ops read, transitively, are staged onto ``df``: each
+        at most once per call, and only after the waves that fit it."""
         self.validate_schema(df.schema)
+        order = self._feature_order()
+        upstream = set().union(*self.dependencies.values())
+        staged: Set[str] = set()
         changed: Set[str] = set()
         for wave in self.waves:
             for p in wave:
@@ -367,9 +374,16 @@ class Pipeline:
                         "NOTE: earlier waves of this pipeline have already "
                         "been delta-merged."
                     )
-            is_upstream = [p for p in wave if any(p in self.dependencies[q] for q in self.stats_op_paths)]
+            reads = {r for p in wave for r in self.features[p.rpartition(".")[0]].input_refs}
+            for name in reversed(order):  # consumers before their inputs
+                if name in reads:
+                    reads.update(self.features[name].input_refs)
+            new = [n for n in order if n in reads and n not in staged]
+            df = self._stage(df, new)
+            staged.update(new)
+            is_upstream = [p for p in wave if update and p in upstream]
             before = {p: self._op(p).get_state() for p in is_upstream}
-            self._fit_wave(df, wave, update=True)
+            self._fit_wave(df, wave, update)
             changed |= {
                 p
                 for p in is_upstream
@@ -405,7 +419,9 @@ class Pipeline:
         for path in wave:
             op = self._op(path)
             assert isinstance(op, FittedTransform)
-            by_kind[op.fit_kind].append((path, op, self._input_expr(path)))
+            name, _, idx = path.rpartition(".")
+            col = self._chain(self.features[name], F.col, upto=int(idx))
+            by_kind[op.fit_kind].append((path, op, col))
         for kind, fit in jobs.items():
             if by_kind[kind]:
                 fit(df, by_kind[kind], update)
@@ -432,8 +448,7 @@ class Pipeline:
     def _fit_scalar(df: DataFrame, ops: List[Tuple[str, FittedTransform, Column]], update: bool = False) -> None:
         """One df.agg for every scalar-stat op in the wave (shared scan)."""
         aggs, unpack = Pipeline._aggregates(ops)
-        row = df.agg(*aggs).collect()[0]
-        for (_path, op, _col), stats in zip(ops, unpack(row)):
+        for (_path, op, _col), stats in zip(ops, unpack(df.agg(*aggs).collect()[0])):
             Pipeline._finalize(op, stats, update)
 
     # Hard ceiling on vocabulary rows collected to the driver: above
@@ -464,21 +479,20 @@ class Pipeline:
         vocabulary skips the unpivot (plain groupBy, no explode)."""
         if len(ops) == 1:
             _path, op, col = ops[0]
-            elim: Eliminator = getattr(op, "eliminator")
             counts = (
-                df.select(col.cast("string").alias("key"))
+                df.select(op.vocab_key(df, col).alias("key"))
                 .filter(F.col("key").isNotNull())
                 .groupBy("key")
                 .agg(F.count("*").alias("cnt"))
             )
             rows = Pipeline._collect_vocab(
-                elim.prune_spark(counts, "key", "cnt", group_cols=[]), _path
+                op.eliminator.prune_spark(counts, "key", "cnt", group_cols=[]), _path
             )
             Pipeline._finalize(op, {r["key"]: r["cnt"] for r in rows}, update)
             return
         structs = [
-            F.struct(F.lit(j).alias("op"), col.cast("string").alias("key"))
-            for j, (_p, _o, col) in enumerate(ops)
+            F.struct(F.lit(j).alias("op"), op.vocab_key(df, col).alias("key"))
+            for j, (_p, op, col) in enumerate(ops)
         ]
         pairs = df.select(F.explode(F.array(*structs)).alias("kv")).select("kv.op", "kv.key")
         counts = (
@@ -486,13 +500,11 @@ class Pipeline:
         )
         counts.persist()
         try:
-            pruned = None
-            for j, (_path, op, _col) in enumerate(ops):
-                elim: Eliminator = getattr(op, "eliminator")
-                sub = counts.filter(F.col("op") == j)
-                sub = elim.prune_spark(sub, "key", "cnt", group_cols=[])
-                pruned = sub if pruned is None else pruned.unionAll(sub)
-            rows = Pipeline._collect_vocab(pruned, "vocab wave")
+            pruned = [
+                op.eliminator.prune_spark(counts.filter(F.col("op") == j), "key", "cnt", group_cols=[])
+                for j, (_path, op, _col) in enumerate(ops)
+            ]
+            rows = Pipeline._collect_vocab(reduce(DataFrame.unionAll, pruned), "vocab wave")
         finally:
             counts.unpersist()
         by_op: Dict[int, Dict[str, int]] = {j: {} for j in range(len(ops))}
@@ -574,18 +586,14 @@ class Pipeline:
                         }
                     )
                 )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"op": [], "pid": [], "mean": [], "weight": []}
-            )
+            yield pd.concat(out)
 
         centroid_schema = "op int, pid int, mean double, weight double"
         rows_df = sel.mapInPandas(build, centroid_schema)
 
         n_parts = sel.rdd.getNumPartitions()
         if n_parts > Pipeline._SKETCH_FANIN:
-            import math as _math
-
-            group_size = _math.ceil(n_parts / Pipeline._SKETCH_FANIN)
+            group_size = int(np.ceil(n_parts / Pipeline._SKETCH_FANIN))
 
             def merge_run(pdf: pd.DataFrame) -> pd.DataFrame:
                 # one (op, gid) group = a contiguous pid run; merge its
@@ -624,10 +632,9 @@ class Pipeline:
         # stay in their emitted mean-ascending order, and np.unique
         # yields pids sorted (the reference's shard-merge order).
         pdf_rows = rows_df.toPandas()
-        ops_arr = pdf_rows["op"].to_numpy()
-        pid_arr = pdf_rows["pid"].to_numpy()
-        mean_arr = pdf_rows["mean"].to_numpy()
-        weight_arr = pdf_rows["weight"].to_numpy()
+        ops_arr, pid_arr, mean_arr, weight_arr = (
+            pdf_rows[c].to_numpy() for c in ("op", "pid", "mean", "weight")
+        )
         for j, (_path, op, _col) in enumerate(ops):
             opm = ops_arr == j
             pj, mj, wj = pid_arr[opm], mean_arr[opm], weight_arr[opm]
@@ -648,10 +655,7 @@ class Pipeline:
         projection and so in its own ArrowEvalPython stage."""
         self.validate_schema(df.schema)
         order = self._feature_order()
-        for name in order:
-            # prior feature outputs are materialized columns here, so a
-            # plain F.col works for feature refs and source columns alike
-            df = df.withColumn(name, self._chain(self.features[name], F.col))
+        df = self._stage(df, order)
         if not keep_input:
             df = df.select(*order)
         return df
