@@ -235,6 +235,27 @@ def test_int_lookup_null_key(spark, op, expect):
     assert got == expect
 
 
+BIG = 2**60
+
+
+@pytest.mark.parametrize(
+    "op, expect",
+    [
+        (IntCountLookup(), [2, 2, 0, 1]),
+        (IntRatioLookup(), [2 / 3, 2 / 3, 0.0, 1 / 3]),
+        (IntIndexLookup(), [2, 2, 1, 3]),
+    ],
+    ids=["count", "ratio", "index"],
+)
+def test_int_lookup_exact_bigint_keys_beside_null(spark, op, expect):
+    # keys above 2**53 that share one Arrow batch with a NULL key are
+    # looked up exactly: 2**60+1 is not rounded onto its neighbour 2**60
+    keys = [BIG + 1, BIG + 1, None, BIG]
+    df = spark.createDataFrame(list(enumerate(keys)), "id long, k bigint").coalesce(1)
+    got, pipe = _fit_probe(df, df, op)
+    assert got == expect
+
+
 NAN, INF = float("nan"), float("inf")
 
 

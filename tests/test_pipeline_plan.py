@@ -314,14 +314,26 @@ def test_combine_features_collision():
 
 
 def test_transform_single_arrow_stage(spark):
-    """k independent lookups in one transform share ONE ArrowEvalPython
-    stage — Catalyst's ExtractPythonUDFs batches adjacent pandas UDFs,
-    so no engine-side fusion is needed (and measurement shows an
+    """k independent Python-boundary ops in one transform (lookups, the
+    t-digest CDF, the grouped z-score, a callable sequence reducer and
+    python float formatting) share ONE ArrowEvalPython stage —
+    Catalyst's ExtractPythonUDFs batches adjacent Arrow UDFs of one
+    kind, so no engine-side fusion is needed (and measurement shows an
     explicit struct-fused UDF is slower)."""
     from torchestra_spark.operators.lookups import CountLookup, IndexLookup, RatioLookup
+    from torchestra_spark.operators.scalers import GroupedStandardScore, TDigestDistribution
+    from torchestra_spark.operators.sequences import SparseMapSequences
+    from torchestra_spark.operators.wrappers import ToStr
 
     df = spark.createDataFrame(
-        pd.DataFrame({"a": ["x", "y", "x"], "b": ["p", "p", "q"], "v": [1.0, 2.0, 3.0]})
+        pd.DataFrame(
+            {
+                "a": ["x", "y", "x"],
+                "b": ["p", "p", "q"],
+                "v": [1.0, 2.0, 3.0],
+                "arr": [[1, 2], [3], []],
+            }
+        )
     )
     pipe = Pipeline(
         {
@@ -329,6 +341,10 @@ def test_transform_single_arrow_stage(spark):
             "b_ratio": Feature("b", [RatioLookup()]),
             "a_idx": Feature("a", [IndexLookup()]),
             "v_z": Feature("v", [StandardScore()]),
+            "v_cdf": Feature("v", [TDigestDistribution()]),
+            "v_gz": Feature("v", [GroupedStandardScore("b")]),
+            "arr_len": Feature("arr", [SparseMapSequences(lambda a: float(len(a)))]),
+            "v_str": Feature("v", [ToStr(python_floats=True)]),
         }
     )
     out = pipe.fit_transform(df)
@@ -338,6 +354,10 @@ def test_transform_single_arrow_stage(spark):
     assert [r["a_cnt"] for r in got] == [2, 1, 2]
     assert [r["a_idx"] for r in got] == [2, 3, 2]
     assert abs(got[0]["b_ratio"] - 2 / 3) < 1e-12
+    assert [r["arr_len"] for r in got] == [2.0, 1.0, 0.0]
+    assert [r["v_str"] for r in got] == ["1.0", "2.0", "3.0"]
+    assert np.allclose([r["v_gz"] for r in got][:2], [-(2**-0.5), 2**-0.5])
+    assert all(0.0 <= r["v_cdf"] <= 1.0 for r in got)
 
 
 # --------------------------------------------------------- multi-input heads

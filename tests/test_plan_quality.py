@@ -215,7 +215,7 @@ def test_vocab_topk_has_no_global_window(spark):
     assert "Window" not in vplan
 
     counts = docs.groupBy(F.col("lang").alias("key")).agg(F.count("*").alias("cnt"))
-    tplan = _plan(TopK(3).prune_spark(counts, "key", "cnt", group_cols=[]))
+    tplan = _plan(TopK(3).prune_spark(counts, "key", "cnt"))
     assert "TakeOrderedAndProject" in tplan
     assert "Window" not in tplan
 
@@ -223,7 +223,7 @@ def test_vocab_topk_has_no_global_window(spark):
     # window; it must now broadcast a 1-row total instead
     from torchestra_spark.operators.lookups import RatioThreshold
 
-    rplan = _plan(RatioThreshold(0.1).prune_spark(counts, "key", "cnt", group_cols=[]))
+    rplan = _plan(RatioThreshold(0.1).prune_spark(counts, "key", "cnt"))
     assert "Window" not in rplan
     assert "BroadcastNestedLoopJoin" in rplan or "BroadcastHashJoin" in rplan
 

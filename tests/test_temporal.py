@@ -2,6 +2,8 @@
 merge_asof oracle (both strategies + salted skew variant), zero
 temporal leakage, lag/lead/fill-forward/sessionize vs pandas."""
 
+import datetime
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -254,6 +256,51 @@ def test_asof_broadcast_null_feature_ts_ignored(spark):
         out = asof_join_multi(lt, tables, on="user_id", left_ts="ts", strategy=strategy).collect()
         for k in range(3):
             assert got(out, f"v{k}", f"t{k}_matched_ts") == expected, (strategy, k)
+
+
+@pytest.mark.parametrize(
+    "strategy", ["union", "salted", "broadcast", "merge_asof", "multi_union", "multi_broadcast"]
+)
+def test_asof_exact_bigint_and_null_entity(spark, strategy):
+    """Every strategy agrees on one probe batch that holds the entities
+    2**60 and 2**60+1 (one apart, above 2**53) and a NULL entity, and on
+    a bigint value column that holds a NULL: values come back exact,
+    each entity gets its own history, and a NULL entity never matches —
+    not even a NULL-entity feature row (SQL ``=``)."""
+    import pyspark.sql.functions as F
+
+    from torchestra_spark.operators.temporal import asof_join_multi
+
+    big = 2**60
+    lt = spark.createDataFrame(
+        [(0, big), (1, big + 1), (2, None)], "event_id long, user_id long"
+    ).withColumn("ts", F.timestamp_seconds(F.lit(100))).coalesce(1)
+    rt = spark.createDataFrame(
+        [(big, 10, big + 7), (big + 1, 20, None), (None, 30, 5)],
+        "user_id long, fval int, bval long",
+    ).withColumn("feature_ts", F.timestamp_seconds(F.lit(10))).coalesce(1)
+    kw = dict(on="user_id", left_ts="ts")
+    if strategy.startswith("multi_"):
+        tables = [
+            dict(name=f"t{k}", df=rt.select("user_id", "feature_ts", F.col("fval").alias(f"f{k}"),
+                                            F.col("bval").alias(f"b{k}")), ts="feature_ts")
+            for k in range(3)
+        ]
+        out = asof_join_multi(lt, tables, strategy=strategy[len("multi_"):], **kw).collect()
+        cols = [(f"f{k}", f"b{k}", f"t{k}_matched_ts") for k in range(3)]
+    else:
+        opts = (
+            dict(strategy="union", salt_buckets=4, salt_threshold=1)
+            if strategy == "salted"
+            else dict(strategy=strategy)
+        )
+        out = asof_join(lt, rt, right_ts="feature_ts", **kw, **opts).collect()
+        cols = [("fval", "bval", "matched_feature_ts")]
+    ts10 = datetime.datetime.fromtimestamp(10)  # how collect() renders the feature ts
+    expected = {0: (10, big + 7, ts10), 1: (20, None, ts10), 2: (None, None, None)}
+    for f, b, m in cols:
+        got = {r["event_id"]: (r[f], r[b], r[m]) for r in out}
+        assert got == expected, (strategy, f)
 
 
 def test_asof_broadcast_pre_epoch_matched_ts(spark):

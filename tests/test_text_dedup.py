@@ -998,6 +998,27 @@ def test_pq_encode_vector_only_input(spark, embs):
     assert all(len(r.pq_code) == 8 for r in rows)
 
 
+def test_splitmix64_uniform_batch_invariant_and_null(spark):
+    # a non-NULL id's value depends on the id alone, not on a NULL id in
+    # the same Arrow batch (no float64 rounding of ids above 2**53); a
+    # NULL id gives NULL
+    from pyspark.sql import functions as F
+
+    from torchestra_spark.functions import sampling as SM
+    from torchestra_spark.io.sources import _uniform
+
+    big = 2**60 + 1
+    want = float(_uniform(np.array([big], dtype=np.uint64), 42, 0)[0])
+
+    def u(ids):
+        df = spark.createDataFrame([(i,) for i in ids], "id long").coalesce(1)
+        u = SM.uniform_by_id(F.col("id"), method="splitmix64")
+        return [r[0] for r in df.select(u).collect()]
+
+    assert u([big]) == [want]
+    assert u([big, None]) == [want, None]
+
+
 def test_deterministic_sampling_partition_invariant(spark):
     from torchestra_spark.functions import sampling as SM
 

@@ -41,7 +41,7 @@ def test_tostr_python_float_parity(spark):
     exponent forms where the JVM cast differs (1e+16 vs 1.0E16)."""
     from torchestra_spark.operators.wrappers import ToStr
 
-    vals = [1.0, 0.1, 1e16, 1.5e-07, -3.14, 123456789.123, 2e-308]
+    vals = [1.0, 0.1, 1e16, 1.5e-07, -3.14, 123456789.123, 2e-308, float("nan")]
     df = spark.createDataFrame([(v,) for v in vals], "x double")
     got = [r["s"] for r in df.select(ToStr(python_floats=True).expr(F.col("x")).alias("s"))
            .collect()]

@@ -5,8 +5,8 @@ Reimplements the fit/transform semantics of the reference library
 point-in-time feature store:
 
 * two-phase *fit* (distributed partial aggregation -> driver finalize)
-  and *transform* (pure Column expressions / Arrow-vectorized pandas
-  UDFs — never per-row Python),
+  and *transform* (pure Column expressions / vectorized Arrow UDFs —
+  never per-row Python),
 * the reference's operator inventory: scalers (StandardScore,
   MinMaxScale, MeanScale, RobustScale, TDigestDistribution), categorical
   lookups (Count/Ratio/Index + Int variants) with vocabulary eliminators
@@ -22,8 +22,10 @@ point-in-time feature store:
 
 The architecture is idiomatic PySpark: logical plans are declared with
 the DataFrame API and Catalyst/Tungsten pick the physical strategy;
-Python only runs inside Arrow-batched pandas UDFs (t-digest sketches,
-broadcast-dict lookups) and driver-side finalization of tiny stats.
+Python only runs inside Arrow UDFs (t-digest CDFs, broadcast-dict
+lookups, the broadcast as-of match), Arrow/pandas map functions
+(t-digest sketches, tokenization) and driver-side finalization of tiny
+stats.
 """
 
 from torchestra_spark.core import Transform, FittedTransform, MultiTransform, FitKind, Col

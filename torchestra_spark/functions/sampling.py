@@ -11,7 +11,7 @@ Two hash backends:
 * ``method="xxhash64"`` (default) — JVM-side, whole-stage codegen, zero
   Python: the scale path.
 * ``method="splitmix64"`` — the engine's counter-based generator hash
-  (io/sources.py) via one Arrow-vectorized pandas UDF; bit-exactly
+  (io/sources.py) via one vectorized Arrow UDF; bit-exactly
   reproducible in ANSI SQL (the DuckDB oracle replays it in HUGEINT,
   the `_sm_cols` machinery), which xxhash64 is not.
 
@@ -24,7 +24,7 @@ from __future__ import annotations
 from typing import Dict, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -34,17 +34,21 @@ _MANTISSA = float(1 << 53)
 def uniform_by_id(
     id_col: Column, seed: int = 42, salt: int = 0, method: str = "xxhash64"
 ) -> Column:
-    """Deterministic U[0,1) per id (partition-invariant)."""
+    """Deterministic U[0,1) per id (partition-invariant): a non-NULL
+    id's value depends only on (id, seed, salt), never on the rows it
+    is batched with.  With ``method="splitmix64"`` a NULL id gives
+    NULL."""
     if method == "xxhash64":
         h = F.xxhash64(id_col, F.lit(int(seed)), F.lit(int(salt)))
         return F.shiftrightunsigned(h, 11).cast("double") / F.lit(_MANTISSA)
     if method == "splitmix64":
         from torchestra_spark.io.sources import _uniform
 
-        @F.pandas_udf("double")
-        def _u(s: pd.Series) -> pd.Series:
-            ids = s.to_numpy(np.int64).astype(np.uint64)
-            return pd.Series(_uniform(ids, seed, salt))
+        @F.arrow_udf("double")
+        def _u(s: pa.Array) -> pa.Array:
+            ids = s.cast(pa.int64()).fill_null(0).to_numpy().astype(np.uint64)
+            null = s.is_null().to_numpy(zero_copy_only=False)
+            return pa.array(_uniform(ids, seed, salt), mask=null)
 
         return _u(id_col)
     raise ValueError(f"unknown method {method!r}")

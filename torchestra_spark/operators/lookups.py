@@ -5,9 +5,10 @@ Semantics from /root/reference/src/torchestra/_lookups.py.  Fit is a
 count-dict partial/merge, _lookups.py:31-61); eliminators are pushed
 into Spark as HAVING-style predicates / top-k windows *before* the
 vocabulary is collected, so only the surviving (small) vocabulary ever
-reaches the driver.  Transforms apply the broadcast vocabulary dict in
-an Arrow-batched pandas UDF (``Series.map`` — vectorized, no per-row
-Python) — the broadcast-hash-join-in-spirit of _lookups.py:219-220.
+reaches the driver.  Transforms apply the broadcast vocabulary as an
+Arrow UDF (one ``index_in`` + ``take`` per batch — vectorized, no
+per-row Python) — the broadcast-hash-join-in-spirit of
+_lookups.py:219-220.
 
 Ordering parity: ``sort_counts`` replicates the reference's
 ``_sort_counts`` (_lookups.py:547-551) — keys sorted ascending, then a
@@ -21,8 +22,9 @@ from __future__ import annotations
 
 from typing import Any, Dict, List, Optional
 
-import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession, Window
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
@@ -50,7 +52,7 @@ class Eliminator:
     def prune_dict(self, counts: Dict[str, int]) -> Dict[str, int]:
         raise NotImplementedError
 
-    def prune_spark(self, df: DataFrame, key: str, cnt: str, group_cols: List[str]) -> DataFrame:
+    def prune_spark(self, df: DataFrame, key: str, cnt: str) -> DataFrame:
         raise NotImplementedError
 
     def get_state(self) -> Dict[str, Any]:
@@ -63,7 +65,7 @@ class NoThreshold(Eliminator):
     def prune_dict(self, counts: Dict[str, int]) -> Dict[str, int]:
         return counts
 
-    def prune_spark(self, df: DataFrame, key: str, cnt: str, group_cols: List[str]) -> DataFrame:
+    def prune_spark(self, df: DataFrame, key: str, cnt: str) -> DataFrame:
         return df
 
 
@@ -76,7 +78,7 @@ class MinThreshold(Eliminator):
     def prune_dict(self, counts: Dict[str, int]) -> Dict[str, int]:
         return {k: v for k, v in counts.items() if v >= self.threshold}
 
-    def prune_spark(self, df: DataFrame, key: str, cnt: str, group_cols: List[str]) -> DataFrame:
+    def prune_spark(self, df: DataFrame, key: str, cnt: str) -> DataFrame:
         return df.filter(F.col(cnt) >= F.lit(int(self.threshold)))
 
     def get_state(self) -> Dict[str, Any]:
@@ -94,21 +96,13 @@ class RatioThreshold(Eliminator):
         total = sum(counts.values())
         return {k: v for k, v in counts.items() if v / total >= self.threshold}
 
-    def prune_spark(self, df: DataFrame, key: str, cnt: str, group_cols: List[str]) -> DataFrame:
-        if not group_cols:
-            # global total via a 1-row scalar aggregate broadcast back
-            # onto the counts — not a partition-less sum window that
-            # would funnel every distinct key through one task
-            total = df.agg(F.sum(F.col(cnt)).alias("__total"))
-            return (
-                df.crossJoin(F.broadcast(total))
-                .filter(F.col(cnt) / F.col("__total") >= F.lit(float(self.threshold)))
-                .drop("__total")
-            )
-        w = Window.partitionBy(*[F.col(c) for c in group_cols])
-        total = F.sum(F.col(cnt)).over(w)
+    def prune_spark(self, df: DataFrame, key: str, cnt: str) -> DataFrame:
+        # global total via a 1-row scalar aggregate broadcast back
+        # onto the counts — not a partition-less sum window that
+        # would funnel every distinct key through one task
+        total = df.agg(F.sum(F.col(cnt)).alias("__total"))
         return (
-            df.withColumn("__total", total)
+            df.crossJoin(F.broadcast(total))
             .filter(F.col(cnt) / F.col("__total") >= F.lit(float(self.threshold)))
             .drop("__total")
         )
@@ -126,23 +120,13 @@ class TopK(Eliminator):
     def prune_dict(self, counts: Dict[str, int]) -> Dict[str, int]:
         return {k: counts[k] for k in sort_counts(counts)[: self.k]}
 
-    def prune_spark(self, df: DataFrame, key: str, cnt: str, group_cols: List[str]) -> DataFrame:
-        if not group_cols:
-            # orderBy + limit compiles to TakeOrderedAndProject: every
-            # partition keeps a partial top-k and the driver merges k
-            # rows per partition — no single-partition ranking window,
-            # so a web-scale distinct-key set never funnels through one
-            # task.  Tie rule (count DESC, key ASC) is identical to
-            # _sort_counts / the row_number formulation it replaces.
-            return df.orderBy(F.col(cnt).desc(), F.col(key).asc()).limit(int(self.k))
-        w = Window.partitionBy(*[F.col(c) for c in group_cols]).orderBy(
-            F.col(cnt).desc(), F.col(key).asc()
-        )
-        return (
-            df.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= F.lit(int(self.k)))
-            .drop("__rn")
-        )
+    def prune_spark(self, df: DataFrame, key: str, cnt: str) -> DataFrame:
+        # orderBy + limit compiles to TakeOrderedAndProject: every
+        # partition keeps a partial top-k and the driver merges k rows
+        # per partition — no single-partition ranking window, so a
+        # web-scale distinct-key set never funnels through one task.
+        # Tie rule (count DESC, key ASC) is identical to _sort_counts.
+        return df.orderBy(F.col(cnt).desc(), F.col(key).asc()).limit(int(self.k))
 
     def get_state(self) -> Dict[str, Any]:
         return {"kind": "TopK", "k": self.k}
@@ -165,7 +149,7 @@ _BROADCAST_MIN = 1024  # below this, ship the payload in the UDF closure
 
 
 def _shipped(payload: Any, size: int):
-    """A zero-argument getter of ``payload`` for a pandas UDF: payloads
+    """A zero-argument getter of ``payload`` for an Arrow UDF: payloads
     of ``size >= _BROADCAST_MIN`` entries ride a TorrentBroadcast (read
     once per executor, kept out of the pickled task closure); smaller
     ones ride the closure itself."""
@@ -181,7 +165,7 @@ def fused_lookups(df: "DataFrame", outputs: Dict[str, tuple]) -> "DataFrame":
 
     ``outputs`` maps output column name -> (fitted lookup op, input
     column name).  Catalyst's ExtractPythonUDFs batches the k
-    independent pandas UDFs of one projection into ONE ArrowEvalPython
+    independent Arrow UDFs of one projection into ONE ArrowEvalPython
     stage, so the k lookups share a single Arrow crossing — the plan
     is the same as applying each ``op.expr`` in turn (bench
     lookups_fused vs lookups_unfused)."""
@@ -189,26 +173,27 @@ def fused_lookups(df: "DataFrame", outputs: Dict[str, tuple]) -> "DataFrame":
 
 
 def _map_udf(vocab: Dict[str, Any], default: Any, out_type: str, int_keys: bool) -> "F.udf":
-    """Arrow-vectorized dict application (``Series.map``); the dict
-    ships by ``_shipped``."""
-    get_vocab = _shipped(vocab, len(vocab))
+    """Arrow-vectorized dict application: one ``index_in`` of the batch
+    against the key array, one ``take`` of the value array, OOV (and
+    NULL) keys get ``default``.  The arrays ship by ``_shipped``."""
+    get_arrays = _shipped(
+        (
+            pa.array(list(vocab), pa.int64() if int_keys else pa.string()),
+            pa.array(list(vocab.values()), pa.int64() if out_type == "bigint" else pa.float64()),
+        ),
+        len(vocab),
+    )
 
-    @F.pandas_udf(out_type)
-    def _apply(s: pd.Series) -> pd.Series:
-        if int_keys:
-            # a bigint column with NULLs arrives as float64 with NaN: map
-            # the integral keys as int64; NULL, NaN, ±inf and fractional
-            # keys get the default, as ``vocab_key`` leaves them out of fit
-            keys = s.dropna()
-            if keys.dtype.kind not in "iu":
-                keys = keys[(keys % 1 == 0) & (keys.abs() < 2.0**63)]
-            out = keys.astype("int64").map(get_vocab()).reindex(s.index)
-        else:
-            out = s.map(get_vocab())
-        out = out.fillna(default)
-        if out_type == "bigint":
-            out = out.astype("int64")
-        return out
+    @F.arrow_udf(out_type)
+    def _apply(s: pa.Array) -> pa.Array:
+        keys, values = get_arrays()
+        if int_keys and not pa.types.is_integer(s.type):
+            # only integral, in-range values are keys, as ``vocab_key``
+            # counts them at fit: NaN, ±inf and 1.5 get the default
+            s = s.cast(pa.float64())
+            whole = pc.and_(pc.equal(s, pc.floor(s)), pc.less(pc.abs(s), 2.0**63))
+            s = pc.if_else(whole, s, None).cast(pa.int64())
+        return pc.take(values, pc.index_in(s, value_set=keys, skip_nulls=True)).fill_null(default)
 
     return _apply
 

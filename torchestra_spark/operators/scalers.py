@@ -22,7 +22,8 @@ import math
 from typing import Any, Dict, List
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -355,8 +356,9 @@ class TDigestDistribution(_SketchOp):
     """forward(x) = estimated CDF(x) — reference _normalization.py:565-628.
 
     This is the QuantileBin primitive: maps values to their estimated
-    quantile position.  Transform is an Arrow-batched pandas UDF over the
-    broadcast finalized centroid arrays (≤ 2*compression f64 pairs).
+    quantile position.  Transform is an Arrow UDF over the broadcast
+    finalized centroid arrays (≤ 2*compression f64 pairs); a NULL or
+    NaN value comes back as NULL.
     """
 
     def fit_finalize(self, partials: List[DigestState]) -> None:
@@ -369,10 +371,9 @@ class TDigestDistribution(_SketchOp):
         self._require_fitted()
         td, digest = self._td, self.t
 
-        @F.pandas_udf("double")
-        def _cdf(s: pd.Series) -> pd.Series:
-            vals = s.to_numpy(dtype=np.float64, na_value=np.nan)
-            return pd.Series(td.cdf(digest, vals), index=s.index)
+        @F.arrow_udf("double")
+        def _cdf(s: pa.Array) -> pa.Array:
+            return pa.array(td.cdf(digest, s.to_numpy(zero_copy_only=False)), from_pandas=True)
 
         return _cdf(col.cast("double"))
 
@@ -467,12 +468,13 @@ class GroupedStandardScore(FittedTransform):
     StandardScore and the broadcast-vocabulary pattern: fit learns one
     (mean, std) pair per key of ``group_col`` (one groupBy aggregate,
     driver dict bounded like a vocabulary), transform applies the pair
-    via an Arrow-batched two-column map.  The fit/transform split means
+    via an Arrow-batched two-column lookup.  The fit/transform split means
     per-segment normalization parameters can be TRAINED on one table
     and SERVED on another (or on a stream) — a plain window expression
     cannot do that.
 
-    OOV groups at transform time get NaN (no fitted parameters).
+    OOV and NULL groups at transform time get NULL (no fitted
+    parameters), as does any NaN result.
     """
 
     fit_kind = FitKind.GROUPED
@@ -505,24 +507,32 @@ class GroupedStandardScore(FittedTransform):
 
     def expr(self, col: Column) -> Column:
         self._require_fitted()
-        # Build the two lookup maps ONCE (not per Arrow batch); they ship
-        # like the lookups' vocabularies (closure, or broadcast if large)
+        # Build the key and parameter arrays ONCE (not per Arrow batch);
+        # they ship like the lookups' vocabularies (closure, or broadcast
+        # if large)
         from torchestra_spark.operators.lookups import _shipped
 
-        get_maps = _shipped(
-            ({k: v[0] for k, v in self.params.items()}, {k: v[1] for k, v in self.params.items()}),
+        get_arrays = _shipped(
+            (
+                pa.array(list(self.params), pa.string()),
+                pa.array([v[0] for v in self.params.values()], pa.float64()),
+                pa.array([v[1] for v in self.params.values()], pa.float64()),
+            ),
             len(self.params),
         )
 
-        @F.pandas_udf("double")
-        def _apply(g: pd.Series, x: pd.Series) -> pd.Series:
-            m, s = get_maps()
-            return (x.astype("float64") - g.map(m)) / g.map(s)
+        @F.arrow_udf("double")
+        def _apply(g: pa.Array, x: pa.Array) -> pa.Array:
+            keys, means, stds = get_arrays()
+            i = pc.index_in(g, value_set=keys, skip_nulls=True)
+            m, s = (pc.take(a, i).to_numpy(zero_copy_only=False) for a in (means, stds))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                z = (x.to_numpy(zero_copy_only=False) - m) / s
+            return pa.array(z, from_pandas=True)
 
         # Canonicalize the serving key with the SAME Spark cast('string')
-        # the fit side uses (pipeline groupBy cast) — pandas astype(str)
-        # disagrees with Spark on booleans ('True' vs 'true') and
-        # large/exponent floats ('1e+16' vs '1.0E16').
+        # the fit side uses (pipeline groupBy cast), so booleans ('true')
+        # and exponent floats ('1.0E16') key alike at fit and transform.
         return _apply(F.col(self.group_col).cast("string"), col.cast("double"))
 
     def get_state(self) -> Dict[str, Any]:

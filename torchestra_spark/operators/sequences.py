@@ -7,7 +7,7 @@ exactly that way (values + offsets), so the engine's native ragged type
 IS the reference's sparse representation — ``tokens:array<int32>`` in
 the driver's input_hint table.  Every op below is a pure Catalyst array
 expression (whole-stage codegen, no Python), except the generic
-``SparseMapSequences`` fallback which is an Arrow-batched pandas UDF.
+``SparseMapSequences`` fallback which is an Arrow UDF.
 
 Parity targets (exact equality): test_sparse_slices.py:14-84.
 """
@@ -17,7 +17,8 @@ from __future__ import annotations
 from typing import Callable, Optional, Union
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -94,9 +95,10 @@ class SparseMapSequences(Transform):
 
     Built-in reducers ('sum', 'mean', 'min', 'max', 'count') compile to
     Catalyst higher-order functions (aggregate/array_min/...) — JVM-side,
-    no Python.  An arbitrary ``numpy`` callable falls back to an
-    Arrow-batched pandas UDF (the reference's own implementation is a
-    per-row python loop; ours at least batches the Arrow transfer).
+    no Python.  An arbitrary ``numpy`` callable falls back to an Arrow
+    UDF that calls it on each non-NULL row's values as a numpy array; a
+    NULL row gives NULL.  (The reference's own implementation is a
+    per-row python loop; ours at least batches the Arrow transfer.)
     """
 
     input_kinds = ("array",)
@@ -127,9 +129,12 @@ class SparseMapSequences(Transform):
             fn = r
             out_type = self.out_type
 
-            @F.pandas_udf(out_type)
-            def _map(s: pd.Series) -> pd.Series:
-                return s.map(lambda a: fn(np.asarray(a)) if a is not None else None)
+            @F.arrow_udf(out_type)
+            def _map(s: pa.Array) -> pa.Array:
+                rows = (a.values for a in s)
+                return pa.array(
+                    [None if v is None else fn(v.to_numpy(zero_copy_only=False)) for v in rows]
+                )
 
             return _map(col)
         raise ValueError(f"unknown reducer {r!r}")
@@ -325,9 +330,6 @@ def pack_sequences_local(
     unique, stable for a fixed partitioning (repartition changes block
     contents; use pack_sequences when blocks must be
     partitioning-invariant).  Returns (block_id, tokens, n_tok)."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
     sel = df.select(F.col(tokens_col).alias("__t"))
 
     def pack(batches):

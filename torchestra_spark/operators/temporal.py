@@ -12,13 +12,15 @@ Scale design notes
 * One as-of engine: ``asof_join_multi`` joins k >= 1 feature tables
   onto a probe spine and ``asof_join`` is its k=1 case.  Feature rows
   whose ts is NULL are dropped once, where the table specs are
-  normalized, so every strategy sees the same input.
+  normalized, as are feature rows whose entity is NULL, so every
+  strategy sees the same input.
 * The default strategy is ``"auto"``: when every feature side is
   provably small (a free Catalyst size estimate, then one confirming
   ``count()``) it takes the **broadcast kernel** — each table ships to
-  every task as sorted numpy arrays and one pandas UDF matches each
-  Arrow batch of the probe with vectorized ``searchsorted``, so the
-  (wide) probe side is never shuffled.  Otherwise it takes ``"union"``.
+  every task as sorted Arrow/numpy arrays and one Arrow UDF matches
+  each Arrow batch of the probe with vectorized ``searchsorted``, so
+  the (wide) probe side is never shuffled.  Otherwise it takes
+  ``"union"``.
 * ``"union"``: union-tag + window fill-forward — one shuffle on the
   entity key and one window scan for all k tables, fully JVM-side
   (whole-stage codegen, no UDF).  The scale-out path when a feature
@@ -41,7 +43,10 @@ from __future__ import annotations
 import os
 from typing import List, Optional, Sequence
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -84,7 +89,8 @@ def asof_join(
 
     Leakage-free by construction: joined values only ever come from
     right rows at or before the probe timestamp.  Feature rows whose
-    ``right_ts`` is NULL are ignored by every strategy.  Precondition:
+    ``right_ts`` or ``on`` is NULL are ignored by every strategy, so a
+    NULL entity never matches (SQL ``=`` semantics).  Precondition:
     probe timestamps must be non-null (a NULL event time has no
     point-in-time meaning); filter them upstream.
     """
@@ -121,8 +127,9 @@ def asof_join_multi(
     ``ts <= left_ts`` (exact ties match), emitted as the table's value
     columns (``value_cols=None``: every column but ``on`` and ``ts``)
     plus ``{name}_matched_ts``.  With ``tolerance_sec`` a match older
-    than that many seconds counts as none.  Feature rows whose ts is
-    NULL are ignored.
+    than that many seconds counts as none.  Feature rows whose ts or
+    entity is NULL are ignored, so a probe row with a NULL entity never
+    matches.
 
     Strategy — all return identical rows:
 
@@ -247,10 +254,11 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
     """Normalized copies of the table specs, shared by every strategy:
     ``value_cols=None`` becomes every column but the key and ts, the
     schema is read once, the output name ``{name}_matched_ts`` is
-    fixed, and feature rows whose
-    ts is NULL are dropped — a NULL feature ts has no point-in-time
-    meaning (the union spine would sort it first and fill its value
-    forward with no matched ts).  Raises on colliding output columns."""
+    fixed, and feature rows whose ts or entity is NULL are dropped — a
+    NULL feature ts has no point-in-time meaning (the union spine would
+    sort it first and fill its value forward with no matched ts), and a
+    NULL entity equals no entity, NULL included.  Raises on colliding
+    output columns."""
     specs: List[dict] = []
     out_names = list(left.columns)
     for t in tables:
@@ -262,7 +270,7 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
             if sp.get("value_cols") is not None
             else [c for c in sp["schema"].names if c not in (on, rts)]
         )
-        sp["df"] = right.filter(F.col(rts).isNotNull())
+        sp["df"] = right.filter(F.col(on).isNotNull() & F.col(rts).isNotNull())
         sp["matched"] = f"{sp['name']}_matched_ts"
         for c in sp["value_cols"] + [sp["matched"]]:
             if c in out_names:
@@ -455,42 +463,33 @@ def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) 
 
 
 # Broadcast guardrail: each feature row costs ~8B (ts) + 8-ish B per
-# value column as contiguous numpy arrays, plus the entity index.  5M
-# rows ~ a few hundred MB per executor — the realistic ceiling for a
+# value column as contiguous arrays, plus its entity.  5M rows ~ a few
+# hundred MB per executor — the realistic ceiling for a
 # torrent-broadcast table that every Python worker must hold.
 _BROADCAST_MAX_ROWS = 5_000_000
 
 
-# "no match" marker for the broadcast kernels' matched-ts column:
-# INT64_MIN micros (~year -290308) cannot collide with any real
-# timestamp the engine can represent, unlike -1 (1 µs before epoch)
-_TS_UNMATCHED = -(2**63)
-
-
 def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]) -> dict:
     """Flat broadcastable (entity-code, ts, values) arrays sorted by
-    (code, ts): each entity's history is one contiguous block.  ``right``
-    must hold no NULL ts (``_specs`` drops them): pandas would sort one
-    last and int64 conversion would turn it into INT64_MIN, breaking the
-    sorted-key invariant ``searchsorted`` relies on."""
-    import numpy as np
-
-    pdf = (
+    (entity, ts): each entity's history is one contiguous block.
+    ``right`` holds no NULL entity or ts (``_specs`` drops them), so the
+    composed key array below is strictly increasing."""
+    tbl = (
         right.select(
             F.col(on).alias("__e"),
             F.unix_micros(F.col(right_ts).cast("timestamp")).alias("__t"),
             *[F.col(c) for c in value_cols],
         )
-        .toPandas()
-        .sort_values(["__e", "__t"], kind="stable")
-        .reset_index(drop=True)
+        .toArrow()
+        .sort_by([("__e", "ascending"), ("__t", "ascending")])
     )
-    # dense entity codes in sorted order -> the code column is itself
-    # sorted, so each entity's history is one contiguous block
-    codes_sorted, uniq = pd.factorize(pdf["__e"], sort=False)
-    codes = codes_sorted.astype(np.int64)
-    t = pdf["__t"].to_numpy(np.int64)
-    ent_index = pd.Series(np.arange(len(uniq), dtype=np.int64), index=uniq)
+    e = tbl["__e"].combine_chunks()
+    cols = {c: tbl[c].combine_chunks() for c in ["__t"] + value_cols}
+    # dense entity codes in sorted order (``unique`` keeps first
+    # occurrence), so the code column is itself non-decreasing
+    ents = pc.unique(e)
+    codes = pc.index_in(e, value_set=ents).to_numpy().astype(np.int64)
+    t = cols["__t"].to_numpy()
     # rank-composed key (r8): key_i = code_i * (N+1) + global_rank(t_i)
     # is strictly increasing (codes ascend; within a code, t ascends and
     # the stable global rank preserves tie order), so ONE searchsorted
@@ -503,85 +502,44 @@ def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]
     rank = np.empty(n, dtype=np.int64)
     rank[order] = np.arange(n, dtype=np.int64)
     return {
+        "ents": ents,
         "codes": codes,
-        "t": t,
         "t_sorted": t[order],
         "keys": codes * np.int64(n + 1) + rank,
-        "vals": {c: pdf[c].to_numpy() for c in value_cols},
-        "index": ent_index,
+        "cols": cols,
     }
 
 
-def _bcast_match_idx(tb: dict, entity: pd.Series, ts_us: pd.Series, tol_us):
+def _bcast_match_idx(tb: dict, entity: pa.Array, ts_us: pa.Array, tol_us) -> pa.Array:
     """Vectorized backward-as-of match of a probe batch against a
-    broadcast table: entity -> code via one C-level hash-map lookup,
-    probe t -> global t rank via one ``searchsorted``, then ONE
-    ``searchsorted`` of the composed (code, rank) keys against the
-    table's precomputed strictly-increasing key array (``_bcast_build``)
-    — no per-code loop, no pandas groupby, no per-row Python (the
-    previous per-distinct-code loop was ~20k Python iterations per
-    batch on a 20k-entity table and dominated the kernel).  Returns
-    int64 row indices into the broadcast arrays, -1 where unmatched."""
-    import numpy as np
-
-    b_codes, b_t = tb["codes"], tb["t"]
-    n_rows = len(entity)
+    broadcast table: entity -> code via one ``index_in``, probe t ->
+    global t rank via one ``searchsorted``, then ONE ``searchsorted`` of
+    the composed (code, rank) keys against the table's precomputed
+    strictly-increasing key array (``_bcast_build``) — no per-code loop,
+    no per-row Python.  Returns int64 row indices into the table's
+    arrays, NULL where unmatched (also for a NULL entity or ts)."""
+    b_codes, b_t = tb["codes"], tb["cols"]["__t"].to_numpy()
     if len(b_t) == 0:
-        # empty feature table: every probe row is unmatched — a gather
-        # would index position 0 of zero-length arrays
-        return np.full(n_rows, -1, dtype=np.int64)
-    codes = tb["index"].reindex(entity.to_numpy()).to_numpy(np.float64)
+        # a gather would index position 0 of zero-length arrays
+        return pa.nulls(len(entity), pa.int64())
     # unknown entity -> code -1: its composed key is < every table key
     # (ub <= N so -1*(N+1) + ub - 1 < 0), landing at p = -1 -> unmatched
-    kc = np.where(np.isnan(codes), -1, codes).astype(np.int64)
-    kt = ts_us.to_numpy(np.int64)
+    kc = pc.index_in(entity, value_set=tb["ents"], skip_nulls=True).fill_null(-1)
+    kc = kc.to_numpy().astype(np.int64)
+    kt = ts_us.fill_null(0).to_numpy()
     n = np.int64(len(b_t) + 1)
     ub = np.searchsorted(tb["t_sorted"], kt, side="right")
     p = np.searchsorted(tb["keys"], kc * n + ub - 1, side="right") - 1
     gather = np.maximum(p, 0)
-    valid = (p >= 0) & (b_codes[gather] == kc)
+    valid = (p >= 0) & (b_codes[gather] == kc) & ts_us.is_valid().to_numpy(zero_copy_only=False)
     if tol_us is not None:
         valid &= kt - b_t[gather] <= tol_us
-    return np.where(valid, p, -1)
-
-
-def _bcast_match_cols(
-    tb: dict, entity: pd.Series, ts_us: pd.Series, tol_us, value_cols: List[str],
-    matched_field: str,
-) -> dict:
-    """Column dict (values + matched-us) for one broadcast table."""
-    import numpy as np
-
-    out_idx = _bcast_match_idx(tb, entity, ts_us, tol_us)
-    hit = out_idx >= 0
-    gather = np.maximum(out_idx, 0)
-    b_t, b_vals = tb["t"], tb["vals"]
-    n_rows = len(entity)
-    data = {}
-    for c in value_cols:
-        if len(b_t) == 0:
-            col = pd.Series([None] * n_rows, dtype=object)
-        else:
-            # object dtype so unmatched rows (and NaN feature values)
-            # cross Arrow as SQL NULL, not float NaN
-            col = pd.Series(b_vals[c][gather].astype(object))
-            col[~hit] = None
-        data[c] = col
-    # unmatched sentinel = INT64_MIN, NOT -1: -1 is a legitimate
-    # pre-epoch timestamp_micros and would blank matched_ts while the
-    # value columns are filled (review r8)
-    out_ts = (
-        np.full(n_rows, _TS_UNMATCHED, dtype=np.int64)
-        if len(b_t) == 0
-        else np.where(hit, b_t[gather], _TS_UNMATCHED)
-    )
-    data[matched_field] = pd.Series(out_ts)
-    return data
+    return pa.array(p, mask=~valid)
 
 
 def _asof_broadcast_multi(left: DataFrame, specs: Sequence[dict], on: str, left_ts: str) -> DataFrame:
     """The broadcast kernel for k normalized specs: ONE Arrow crossing
-    matches every table (k chained pandas-UDF stages would ship the
+    matches every table (k chained Arrow-UDF stages would ship the
     probe's (entity, ts) columns to Python k times).  The probe side is
     never shuffled.  Output columns/types are identical to the union
     spine's: l_cols, then per table value_cols + ``{name}_matched_ts``."""
@@ -599,34 +557,29 @@ def _asof_broadcast_multi(left: DataFrame, specs: Sequence[dict], on: str, left_
         for c in sp["value_cols"]
     )
     fields += ", " + ", ".join(f"`__matched_us_{k}` bigint" for k in range(len(specs)))
+    names = [c for vcols in all_vcols for c in vcols]
+    names += [f"__matched_us_{k}" for k in range(len(specs))]
 
-    @F.pandas_udf(fields)
-    def _match(entity: pd.Series, ts_us: pd.Series) -> pd.DataFrame:
-        data = {}
-        for k, tb in enumerate(bc.value):
-            data.update(
-                _bcast_match_cols(
-                    tb, entity, ts_us, tols[k], all_vcols[k], f"__matched_us_{k}"
-                )
-            )
-        return pd.DataFrame(data)
+    @F.arrow_udf(fields)
+    def _match(entity: pa.Array, ts_us: pa.Array) -> pa.Array:
+        # a NULL index (no match) takes a NULL value and a NULL matched ts
+        idx = [_bcast_match_idx(tb, entity, ts_us, tol) for tb, tol in zip(bc.value, tols)]
+        arrays = [
+            tb["cols"][c].take(i) for tb, i, vcols in zip(bc.value, idx, all_vcols) for c in vcols
+        ]
+        arrays += [tb["cols"]["__t"].take(i) for tb, i in zip(bc.value, idx)]
+        return pa.StructArray.from_arrays(arrays, names)
 
-    l_cols = left.columns
-    out = left.withColumn(
-        "__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp")))
-    )
-    sel: List[Column] = [F.col(c) for c in l_cols]
+    m = left.withColumn("__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp"))))
+    sel: List[Column] = [F.col(c) for c in left.columns]
     for k, sp in enumerate(specs):
         sel += [F.col(f"__m.{c}").alias(c) for c in sp["value_cols"]]
         sel.append(
-            F.when(
-                F.col(f"__m.__matched_us_{k}") != F.lit(_TS_UNMATCHED),
-                F.timestamp_micros(F.col(f"__m.__matched_us_{k}")).cast(
-                    sp["schema"][sp["ts"]].dataType
-                ),
-            ).alias(sp["matched"])
+            F.timestamp_micros(F.col(f"__m.__matched_us_{k}"))
+            .cast(sp["schema"][sp["ts"]].dataType)
+            .alias(sp["matched"])
         )
-    return out.select(*sel)
+    return m.select(*sel)
 
 
 def interval_join(

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from typing import List, Optional, Sequence
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -96,6 +96,7 @@ class ToStr(Transform):
     Arrow-batched UDF that applies python float repr (shortest
     round-trip) for exact reference parity — the slow path, only for
     float keys that must match reference vocabularies byte-for-byte.
+    There a NaN formats as ``'nan'`` and a NULL stays NULL.
     """
 
     input_kinds = ("numeric", "boolean", "string")
@@ -108,9 +109,9 @@ class ToStr(Transform):
         if not self.python_floats:
             return col.cast("string")
 
-        @F.pandas_udf("string")
-        def _pystr(s: pd.Series) -> pd.Series:
-            return s.map(lambda v: None if pd.isna(v) else str(float(v)))
+        @F.arrow_udf("string")
+        def _pystr(s: pa.Array) -> pa.Array:
+            return pa.array([None if v is None else str(v) for v in s.to_pylist()], pa.string())
 
         return _pystr(col.cast("double"))
 

@@ -486,7 +486,7 @@ class Pipeline:
                 .agg(F.count("*").alias("cnt"))
             )
             rows = Pipeline._collect_vocab(
-                op.eliminator.prune_spark(counts, "key", "cnt", group_cols=[]), _path
+                op.eliminator.prune_spark(counts, "key", "cnt"), _path
             )
             Pipeline._finalize(op, {r["key"]: r["cnt"] for r in rows}, update)
             return
@@ -501,7 +501,7 @@ class Pipeline:
         counts.persist()
         try:
             pruned = [
-                op.eliminator.prune_spark(counts.filter(F.col("op") == j), "key", "cnt", group_cols=[])
+                op.eliminator.prune_spark(counts.filter(F.col("op") == j), "key", "cnt")
                 for j, (_path, op, _col) in enumerate(ops)
             ]
             rows = Pipeline._collect_vocab(reduce(DataFrame.unionAll, pruned), "vocab wave")
@@ -647,7 +647,7 @@ class Pipeline:
     def transform(self, df: DataFrame, keep_input: bool = True) -> DataFrame:
         """Dependency-ordered withColumns; Catalyst collapses the
         projections into one select, and its ExtractPythonUDFs rule
-        batches all independent pandas UDFs at that level into ONE
+        batches all independent Arrow UDFs at that level into ONE
         ArrowEvalPython stage — k lookups share a single Arrow crossing
         with no engine-side fusion (see
         tests/test_pipeline_plan.py::test_transform_single_arrow_stage).

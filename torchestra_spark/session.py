@@ -2,7 +2,7 @@
 
 Tuned for correctness tests on local[*] but with the switches that
 matter at cluster scale: AQE (runtime re-planning, skew-join splitting),
-Arrow for every pandas-UDF crossing, and partition sizing knobs that are
+Arrow for every Python-UDF crossing, and partition sizing knobs that are
 explicit rather than inherited defaults.
 """
 

@@ -8,7 +8,7 @@ The engine's streaming story follows the feature-store pattern:
   is pure Column expressions / Arrow UDFs over frozen state, so it
   applies to a streaming DataFrame unchanged (``apply_pipeline``);
 * **point-in-time serving on a stream** — the broadcast as-of strategy
-  (operators/temporal.py) is a pandas-UDF match against a static
+  (operators/temporal.py) is an Arrow-UDF match against a static
   feature table, so ``asof_join(stream_df, features,
   strategy='broadcast')`` works on a streaming probe unchanged (tested
   for batch parity in tests/test_streaming.py);
