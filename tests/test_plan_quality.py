@@ -117,6 +117,51 @@ def test_asof_auto_disabled_by_env_falls_back_to_union(spark, events, monkeypatc
     assert plan.count("Exchange hashpartitioning(user_id") <= 2
 
 
+def test_asof_merge_strategy_cogroups_in_arrow(spark, events):
+    """strategy="merge_asof" co-groups both sides by entity through one
+    Arrow cogroup node; no pandas node is planned."""
+    from torchestra_spark.io.sources import feature_events
+    from torchestra_spark.operators.temporal import asof_join
+
+    feats = feature_events(spark, n_entities=50, partitions=2)
+    plan = _plan(
+        asof_join(events, feats, on="user_id", left_ts="ts", right_ts="feature_ts",
+                  value_cols=["fval"], strategy="merge_asof")
+    )
+    assert plan.count("FlatMapCoGroupsInArrow") == 1
+    assert "InPandas" not in plan
+
+
+def test_fixture_generators_map_in_arrow(spark):
+    from torchestra_spark.io.sources import feature_events, tokenized_sequences
+
+    for df in (tokenized_sequences(spark, 100, partitions=2), feature_events(spark, 20, partitions=2)):
+        plan = _plan(df)
+        assert plan.count("MapInArrow") == 1
+        assert "InPandas" not in plan
+
+
+def test_sketch_fit_maps_no_pandas_frame(spark, monkeypatch):
+    """The t-digest fit builds its partials in Arrow: Pipeline.fit never
+    calls DataFrame.mapInPandas."""
+    from torchestra_spark import Feature, Pipeline
+    from torchestra_spark.operators.scalers import TDigestDistribution
+
+    df = spark.range(0, 2000, 1, numPartitions=3).select((F.col("id") % 97).cast("double").alias("x"))
+    calls = []
+    real = type(df).mapInPandas
+
+    def spy(self, *args, **kwargs):
+        calls.append(args)
+        return real(self, *args, **kwargs)
+
+    monkeypatch.setattr(type(df), "mapInPandas", spy)
+    op = TDigestDistribution()
+    Pipeline({"q": Feature("x", [op])}).fit(df)
+    assert op.t is not None
+    assert calls == []
+
+
 def test_scaler_transform_stays_in_codegen(spark, events):
     """Fitted scaler transforms are literal Column exprs — the hot path
     has zero Python stages and one WholeStageCodegen projection."""

@@ -53,6 +53,45 @@ def test_generator_partition_invariance(spark):
     assert (a["source"] == b["source"]).all()
 
 
+def _column_checksums(df):
+    """Order-independent checksum of every column (the exact sum of its
+    values' xxhash64) plus the row count."""
+    from pyspark.sql import functions as F
+
+    sums = [F.sum(F.xxhash64(c).cast("decimal(38,0)")).cast("string").alias(c) for c in df.columns]
+    return df.agg(*sums, F.count("*").alias("__n")).first().asDict()
+
+
+def test_generator_output_pinned(spark):
+    """Both fixture generators' output is pinned bit for bit: the DuckDB
+    oracle replays ``tokenized_sequences`` in SQL, and every fixture
+    built from either must not move when their implementation does."""
+    from torchestra_spark.io.sources import feature_events
+
+    tok = tokenized_sequences(spark, 2000, seed=42, partitions=3)
+    assert tok.schema.simpleString() == (
+        "struct<doc_id:string,tokens:array<int>,n_tok:int,source:string>"
+    )
+    assert _column_checksums(tok) == {
+        "doc_id": "-6828725222634366803",
+        "tokens": "21455884813337770892",
+        "n_tok": "-78716386675451356474",
+        "source": "-1576636421196255964936",
+        "__n": 2000,
+    }
+    fe = feature_events(spark, n_entities=200, seed=7, partitions=2)
+    assert fe.schema.simpleString() == (
+        "struct<user_id:bigint,feature_ts:timestamp,fval:double,seq:bigint>"
+    )
+    assert _column_checksums(fe) == {
+        "user_id": "673760207056082084190",
+        "feature_ts": "282932637168167763621",
+        "fval": "816247145817966236905",
+        "seq": "1492766750623339385703",
+        "__n": 4065,
+    }
+
+
 def test_sparse_len(toks, toks_pd):
     out = Pipeline({"L": Feature("tokens", [SparseLen()])}).fit_transform(toks)
     assert _col(out, "L") == toks_pd["tokens"].map(len).tolist()

@@ -303,6 +303,45 @@ def test_asof_exact_bigint_and_null_entity(spark, strategy):
         assert got == expected, (strategy, f)
 
 
+@pytest.mark.parametrize("strategy", ["union", "salted", "broadcast", "merge_asof"])
+def test_asof_exact_nan_null_and_probe_bigint(spark, strategy):
+    """Rows read with ``collect()``, so NaN and NULL stay apart: a
+    matched NaN feature value comes back NaN, a matched NULL comes back
+    NULL, bigints above 2**53 come back exact on both sides (also when
+    their entity's rows hold a NULL in that column), and a probe row
+    before its entity's first feature row is unmatched."""
+    import math
+
+    import pyspark.sql.functions as F
+
+    B = 2**60
+    lt = spark.createDataFrame(
+        [(1, B + 1, 10, 7), (2, B, 10, None), (3, B + 1, 0, 8), (4, 5, 5, 9), (5, B, 20, B + 3)],
+        "eid long, user_id long, ts long, big long",
+    ).withColumn("ts", F.timestamp_seconds("ts")).coalesce(1)
+    rt = spark.createDataFrame(
+        [(B + 1, 5, float("nan"), B + 7), (B, 1, 1.5, None), (B, 15, 2.5, 4),
+         (5, 5, None, 1), (None, 1, 9.0, 9)],
+        "user_id long, feature_ts long, fval double, bval long",
+    ).withColumn("feature_ts", F.timestamp_seconds("feature_ts")).coalesce(1)
+    opts = (
+        dict(strategy="union", salt_buckets=4, salt_threshold=1)
+        if strategy == "salted"
+        else dict(strategy=strategy)
+    )
+    rows = {
+        r["eid"]: r
+        for r in asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts", **opts).collect()
+    }
+    assert sorted(rows) == [1, 2, 3, 4, 5]
+    assert math.isnan(rows[1]["fval"]) and rows[1]["bval"] == B + 7
+    assert rows[4]["fval"] is None and rows[4]["bval"] == 1
+    assert (rows[2]["fval"], rows[2]["bval"]) == (1.5, None)
+    assert (rows[5]["fval"], rows[5]["bval"], rows[5]["big"]) == (2.5, 4, B + 3)
+    assert (rows[3]["fval"], rows[3]["bval"], rows[3]["matched_feature_ts"]) == (None, None, None)
+    assert [rows[e]["big"] for e in (1, 2, 3, 4)] == [7, None, 8, 9]
+
+
 def test_asof_broadcast_pre_epoch_matched_ts(spark):
     """r8 review: a matched feature ts BEFORE 1970 is a real match —
     the unmatched sentinel must not blank it (old sentinel was -1 µs)."""

@@ -1019,6 +1019,26 @@ def test_splitmix64_uniform_batch_invariant_and_null(spark):
     assert u([big, None]) == [want, None]
 
 
+@pytest.mark.parametrize("method", ["xxhash64", "splitmix64"])
+def test_null_ids_sampled_alike_by_both_methods(spark, method):
+    # a NULL id gives a NULL uniform under both hash methods, so both
+    # samplers drop NULL-id rows and split_assign puts them in its last
+    # split — not in whichever split one shared NULL hash happens to pick
+    from torchestra_spark.functions import sampling as SM
+
+    df = spark.createDataFrame(
+        [(7, "web"), (None, "web"), (None, "web")], "doc_id long, source string"
+    ).coalesce(1)
+    u = SM.uniform_by_id(F.col("doc_id"), seed=42, salt=0, method=method)
+    assert [r[0] is None for r in df.select(u).collect()] == [False, True, True]
+    kept = SM.deterministic_sample(df, "doc_id", 1.0, seed=42, method=method)
+    assert [r["doc_id"] for r in kept.collect()] == [7]
+    mixed = SM.mixture_sample(df, "doc_id", "source", {"web": 1.0}, seed=42, method=method)
+    assert [r["doc_id"] for r in mixed.collect()] == [7]
+    split = SM.split_assign(F.col("doc_id"), {"train": 1.0 - 1e-12, "rest": 1e-12}, method=method)
+    assert [r[0] for r in df.select(split).collect()] == ["train", "rest", "rest"]
+
+
 def test_deterministic_sampling_partition_invariant(spark):
     from torchestra_spark.functions import sampling as SM
 

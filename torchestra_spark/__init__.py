@@ -23,9 +23,9 @@ point-in-time feature store:
 The architecture is idiomatic PySpark: logical plans are declared with
 the DataFrame API and Catalyst/Tungsten pick the physical strategy;
 Python only runs inside Arrow UDFs (t-digest CDFs, broadcast-dict
-lookups, the broadcast as-of match), Arrow/pandas map functions
-(t-digest sketches, tokenization) and driver-side finalization of tiny
-stats.
+lookups, the broadcast as-of match), Arrow map and co-group
+functions (t-digest sketches, tokenization, the per-entity as-of
+match) and driver-side finalization of tiny stats.
 """
 
 from torchestra_spark.core import Transform, FittedTransform, MultiTransform, FitKind, Col

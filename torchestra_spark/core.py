@@ -18,7 +18,7 @@ Spark-first:
     several), with the op's ``eliminator`` (HAVING-style predicates)
     pushed into Spark before the collect.
   - ``FitKind.SKETCH``: fit builds a mergeable sketch per partition
-    (numpy t-digest inside ``mapInPandas``), partials merged on the
+    (numpy t-digest inside ``mapInArrow``), partials merged on the
     driver in deterministic partition order.
   - ``FitKind.GROUPED``: ``fit_aggs(col)`` per key of the op's
     ``group_col``; the ops of a wave that share a group column share

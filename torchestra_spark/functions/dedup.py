@@ -1058,15 +1058,14 @@ def build_simhash_index(
     simhashes: per rotation table, sketches sorted by prefix bucket for
     O(log n) range probes.  Driver-heap cost per reference doc: 8 B
     sketch + 16 B (bucket, order) per rotation table (64 B at the
-    default 4 tables) + the id held once in a numpy array (8 B for int
-    ids, 4 B/char fixed-width for strings) — ~100-130 B/doc, so the
-    10M-doc guard bounds the index near ~1.3 GB.  Beyond that use the
-    distributed blocked join (``simhash_tokens_near_dups``).
+    default 4 tables) — ~72 B/doc, so the 10M-doc guard bounds the
+    index near ~0.7 GB.  Beyond that use the distributed blocked join
+    (``simhash_tokens_near_dups``).
 
     ``max_bucket_size`` drops degenerate reference buckets (e.g. all
     empty docs sketch to 0) exactly like the join path, keeping every
     probe O(bucket) with a bounded bucket."""
-    # NOTE (r8): a limit(cap+1).toPandas() single-scan guard was tried
+    # NOTE (r8): a limit(cap+1) collect single-scan guard was tried
     # and reverted — CollectLimit evaluates partitions in sequential
     # scale-up waves, serializing the sketch; two parallel scans win.
     n_ref = ref_df.count()
@@ -1076,17 +1075,10 @@ def build_simhash_index(
             "driver-side probe index; use simhash_tokens_near_dups "
             "(distributed blocked join) instead"
         )
-    pdf = simhash_tokens(ref_df, tokens_col, id_col).toPandas()
-    sh = pdf["simhash"].to_numpy(dtype=np.int64).view(np.uint64)
-    # numpy array, not a Python list: object headers on 10M str ids
-    # would multiply the driver heap; fixed-width U dtype stays flat
-    ids = np.asarray(pdf[id_col].to_numpy())
-    if ids.dtype == object:
-        # fixed-width U conversion would silently turn a None id into
-        # the literal string 'None' — reject upstream garbage instead
-        if pdf[id_col].isna().any():
-            raise ValueError("build_simhash_index: reference ids contain NULLs")
-        ids = ids.astype("U")
+    sh = (
+        simhash_tokens(ref_df, tokens_col, id_col).select("simhash").toArrow()["simhash"]
+        .to_numpy().astype(np.int64).view(np.uint64)
+    )
     step = 64 // max(1, tables)
     shift = np.uint64(64 - prefix_bits)
     tbls = []
@@ -1103,7 +1095,6 @@ def build_simhash_index(
         tbls.append((bs, order.astype(np.int64)))
     return {
         "sh": sh,
-        "ids": ids,
         "tables": tbls,
         "step": step,
         "shift": shift,
@@ -1229,12 +1220,12 @@ def build_contamination_index(
             "the driver-side gram index; pass the evaluation corpus, not a "
             "training-scale frame"
         )
-    pdf = (
+    grams = (
         eval_df.select(F.explode(token_ngram_hashes(F.col(tokens_col), n)).alias("g"))
         .distinct()
-        .toPandas()  # Arrow transfer — no per-row Row objects (r8)
+        .toArrow()["g"]  # Arrow transfer — no per-row Row objects (r8)
     )
-    return np.sort(pdf["g"].to_numpy(dtype=np.int64))
+    return np.sort(grams.to_numpy().astype(np.int64))
 
 
 def mark_contaminated_indexed(

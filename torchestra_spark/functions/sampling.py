@@ -36,11 +36,12 @@ def uniform_by_id(
 ) -> Column:
     """Deterministic U[0,1) per id (partition-invariant): a non-NULL
     id's value depends only on (id, seed, salt), never on the rows it
-    is batched with.  With ``method="splitmix64"`` a NULL id gives
-    NULL."""
+    is batched with.  A NULL id gives NULL under both methods (a NULL
+    input adds nothing to ``xxhash64``, so hashing it would give every
+    NULL id one shared value)."""
     if method == "xxhash64":
         h = F.xxhash64(id_col, F.lit(int(seed)), F.lit(int(salt)))
-        return F.shiftrightunsigned(h, 11).cast("double") / F.lit(_MANTISSA)
+        return F.when(id_col.isNotNull(), F.shiftrightunsigned(h, 11).cast("double") / F.lit(_MANTISSA))
     if method == "splitmix64":
         from torchestra_spark.io.sources import _uniform
 
@@ -62,8 +63,9 @@ def deterministic_sample(
     method: str = "xxhash64",
 ) -> DataFrame:
     """Keep each row iff uniform(id) < rate — a reproducible Bernoulli
-    sample that survives repartitioning and reruns.  Pure filter: no
-    shuffle, pushes down past column pruning."""
+    sample that survives repartitioning and reruns.  Rows with a NULL
+    id are dropped.  Pure filter: no shuffle, pushes down past column
+    pruning."""
     return df.filter(uniform_by_id(F.col(id_col), seed, salt=0, method=method) < rate)
 
 
@@ -78,9 +80,9 @@ def mixture_sample(
 ) -> DataFrame:
     """Dataset mixing: per-source sampling rates (e.g. up-weight wiki,
     down-weight web) in one pass.  ``rates`` maps source value -> keep
-    probability; unseen sources use ``default_rate``.  The rate lookup
-    is a literal CASE chain — still a pure filter, no join, no
-    shuffle."""
+    probability; unseen sources use ``default_rate``; rows with a NULL
+    id are dropped.  The rate lookup is a literal CASE chain — still a
+    pure filter, no join, no shuffle."""
     rate = F.lit(float(default_rate))
     for s, r in sorted(rates.items()):
         rate = F.when(F.col(source_col) == s, F.lit(float(r))).otherwise(rate)
@@ -96,7 +98,8 @@ def split_assign(
     """Assign each id to a named split ('train'/'val'/'test' by
     default) with the given weights — disjoint, exhaustive, stable
     under any reshuffle.  Weights are normalized; assignment is by
-    cumulative-threshold on the same uniform."""
+    cumulative-threshold on the same uniform, so a NULL id (NULL
+    uniform) lands in the last split."""
     weights = weights or {"train": 0.98, "val": 0.01, "test": 0.01}
     total = float(sum(weights.values()))
     u = uniform_by_id(id_col, seed, salt=2, method=method)

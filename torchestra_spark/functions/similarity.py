@@ -350,8 +350,9 @@ def _train_sample(
 def _to_matrix(df: DataFrame, vec_col: str) -> np.ndarray:
     """Collect a bounded frame's vectors to the driver as one (n, d)
     float64 matrix."""
-    pdf = df.toPandas()
-    return np.stack(pdf[vec_col].map(lambda v: np.asarray(v, dtype=np.float64)).to_numpy())
+    vecs = df.select(vec_col).toArrow()[vec_col].combine_chunks()
+    dim = len(vecs[0]) if len(vecs) and vecs[0].is_valid else 0
+    return _fixed_dim_matrix(vecs, dim, "vector collect")
 
 
 def _nearest(X: np.ndarray, C: np.ndarray) -> np.ndarray:

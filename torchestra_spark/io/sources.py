@@ -20,7 +20,7 @@ import math
 from typing import Iterator, List, Optional
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -81,9 +81,9 @@ def tokenized_sequences(
     """Synthesize the input_hint table, fully distributed."""
     base = spark.range(0, n_rows, 1, numPartitions=partitions)
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf["id"].to_numpy(dtype=np.int64)
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            ids = b.column(0).to_numpy()
             u_len = _uniform(ids, seed, 1)
             lens = np.clip(
                 np.floor(np.log1p(-u_len) / math.log1p(-geo_p)).astype(np.int64), 0, max_len
@@ -98,18 +98,18 @@ def tokenized_sequences(
             pos = np.arange(total, dtype=np.int64) - np.repeat(starts, lens)
             tok_u = _uniform(row_rep * np.int64(1 << 20) + pos, seed, 3)
             toks = (tok_u * vocab).astype(np.int32)
-            offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64)
-            tokens = [toks[offsets[i] : offsets[i + 1]] for i in range(len(ids))]
-            yield pd.DataFrame(
-                {
-                    "doc_id": np.char.add("doc", np.char.zfill(ids.astype(str), 10)),
-                    "tokens": tokens,
-                    "n_tok": lens.astype(np.int32),
-                    "source": src,
-                }
+            offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int32)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.char.add("doc", np.char.zfill(ids.astype(str), 10))),
+                    pa.ListArray.from_arrays(pa.array(offsets), pa.array(toks)),
+                    pa.array(lens.astype(np.int32)),
+                    pa.array(src),
+                ],
+                ["doc_id", "tokens", "n_tok", "source"],
             )
 
-    return base.mapInPandas(gen, TOKENIZED_SCHEMA)
+    return base.mapInArrow(gen, TOKENIZED_SCHEMA)
 
 
 FEATURE_EVENTS_SCHEMA = (
@@ -131,40 +131,41 @@ def feature_events(
     per-entity poisson-ish arrivals with a random-walk value.  Entity
     sizes follow a zipf-like law so hot keys exercise skew handling.
     Deterministic per (seed, entity), partition-invariant (each entity's
-    walk generated whole inside its mapInPandas batch row)."""
+    walk generated whole inside its mapInArrow batch row)."""
     base = spark.range(0, n_entities, 1, numPartitions=partitions)
-    t0 = pd.Timestamp(start)
+    t0 = int(np.datetime64(start, "us").astype(np.int64))
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
             out_uid: List[np.ndarray] = []
             out_ts: List[np.ndarray] = []
             out_val: List[np.ndarray] = []
             out_seq: List[np.ndarray] = []
-            for uid in pdf["id"].to_numpy(dtype=np.int64):
+            for uid in b.column(0).to_numpy():
                 # zipf-ish event count: rank-based power law, >= 1
                 n = max(1, int(mean_events * (uid + 1) ** (-zipf_a / 4) * 4))
                 ks = np.arange(n, dtype=np.int64)
                 gaps = -np.log(1.0 - _uniform(uid * np.int64(1 << 24) + ks, seed, 11)) * (
                     days * 86400.0 / n
                 )
-                ts = (t0.value // 1000 + (np.cumsum(gaps) * 1e6)).astype(np.int64)
+                ts = (t0 + (np.cumsum(gaps) * 1e6)).astype(np.int64)
                 steps = _uniform(uid * np.int64(1 << 24) + ks, seed, 12) - 0.5
                 fval = np.cumsum(steps)
                 out_uid.append(np.full(n, uid, dtype=np.int64))
                 out_ts.append(ts)
                 out_val.append(fval)
                 out_seq.append(ks)
-            yield pd.DataFrame(
-                {
-                    "user_id": np.concatenate(out_uid),
-                    "feature_ts": pd.to_datetime(np.concatenate(out_ts), unit="us"),
-                    "fval": np.concatenate(out_val),
-                    "seq": np.concatenate(out_seq),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(out_uid)),
+                    pa.array(np.concatenate(out_ts), pa.timestamp("us", tz="UTC")),
+                    pa.array(np.concatenate(out_val)),
+                    pa.array(np.concatenate(out_seq)),
+                ],
+                ["user_id", "feature_ts", "fval", "seq"],
             )
 
-    return base.mapInPandas(gen, FEATURE_EVENTS_SCHEMA)
+    return base.mapInArrow(gen, FEATURE_EVENTS_SCHEMA)
 
 
 # ----------------------------------------------------------- bucketed layout

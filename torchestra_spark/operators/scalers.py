@@ -10,7 +10,7 @@ fitted parameters, so the hot path stays in whole-stage codegen.
 The t-digest family (TDigestDistribution, RobustScale) can't use a
 built-in aggregate (Spark's approx_percentile is a different sketch, not
 allclose-compatible) — they fit via per-partition numpy sketches in
-``mapInPandas`` and a deterministic driver merge; see FitKind.SKETCH.
+``mapInArrow`` and a deterministic driver merge; see FitKind.SKETCH.
 
 All statistics are float64, like the reference
 (_normalization.py:20-21,107-108,192-193).
@@ -314,9 +314,10 @@ class StandardScore(FittedTransform):
 class _SketchOp(FittedTransform):
     """Shared t-digest fit machinery for TDigestDistribution/RobustScale.
 
-    Fit contract (FitKind.SKETCH): the planner runs one ``mapInPandas``
-    pass emitting per-partition centroid rows ``(op_id, mean, weight)``
-    (≤ 2*compression per partition after compaction), collects them, and
+    Fit contract (FitKind.SKETCH): the planner runs one ``mapInArrow``
+    pass emitting one row of centroid arrays ``(op, pid, means,
+    weights)`` per op and partition (≤ 2*compression centroids after
+    compaction), collects them, and
     calls ``fit_finalize`` with the partials in partition order — the
     same shard-merge discipline as the reference
     (_normalization.py:601-613).

@@ -27,7 +27,8 @@ Scale design notes
   side does not fit executor memory: at 1000 executors it is a plain
   hash-partitioned sort, the cost profile of a sort-merge join.
 * ``"merge_asof"`` (``asof_join`` only) co-groups both sides by entity
-  and runs ``pandas.merge_asof`` per entity inside ``applyInPandas``.
+  and runs the broadcast match kernel per group inside an Arrow
+  co-group (``applyInArrow``).
 * Skew: a single hot entity lands in one window partition.  The
   ``salt_buckets`` option splits each hot entity's *probe* rows into N
   hash(ts)-buckets and replicates its (much smaller) feature history
@@ -44,11 +45,11 @@ import os
 from typing import List, Optional, Sequence
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
 
 def _ts_sec(col: Column) -> Column:
@@ -56,6 +57,13 @@ def _ts_sec(col: Column) -> Column:
     numeric in Spark 4; route through TIMESTAMP (lossless under the
     engine's UTC session timezone, see session.py)."""
     return col.cast("timestamp").cast("double")
+
+
+def _micros(ts: str) -> Column:
+    """Epoch microseconds of a DATE, TIMESTAMP or TIMESTAMP_NTZ column
+    (via TIMESTAMP, lossless under the engine's UTC session timezone):
+    the match kernel's one time axis, on both sides."""
+    return F.unix_micros(F.col(ts).cast("timestamp"))
 
 
 def asof_join(
@@ -82,10 +90,11 @@ def asof_join(
     three strategies that return identical rows: ``"union"`` (window
     fill-forward over one entity shuffle), ``"broadcast"`` (the
     vectorized kernel over a broadcast feature table; the probe is
-    never shuffled) and ``"merge_asof"`` (only here: cogrouped
-    ``pandas.merge_asof`` per entity).  ``"auto"`` (default) picks
-    broadcast when the feature side is provably small, else union; see
-    :func:`asof_join_multi` for the gate, tolerance and skew salting.
+    never shuffled) and ``"merge_asof"`` (only here: co-group by
+    entity and run the broadcast match kernel per group).  ``"auto"``
+    (default) picks broadcast when the feature side is provably small,
+    else union; see :func:`asof_join_multi` for the gate, tolerance
+    and skew salting.
 
     Leakage-free by construction: joined values only ever come from
     right rows at or before the probe timestamp.  Feature rows whose
@@ -159,8 +168,6 @@ def asof_join_multi(
     into hash(ts) buckets and every table's feature rows for them
     replicate into all buckets.  Cold entities keep the plain path and
     pay nothing."""
-    from pyspark.sql.types import StructField, StructType
-
     specs = _specs(left, tables, on)
     if not specs:
         return left
@@ -254,7 +261,8 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
     """Normalized copies of the table specs, shared by every strategy:
     ``value_cols=None`` becomes every column but the key and ts, the
     schema is read once, the output name ``{name}_matched_ts`` is
-    fixed, and feature rows whose ts or entity is NULL are dropped — a
+    fixed, the match kernel's tolerance ``tol_us`` is in whole
+    microseconds, and feature rows whose ts or entity is NULL are dropped — a
     NULL feature ts has no point-in-time meaning (the union spine would
     sort it first and fill its value forward with no matched ts), and a
     NULL entity equals no entity, NULL included.  Raises on colliding
@@ -272,6 +280,8 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
         )
         sp["df"] = right.filter(F.col(on).isNotNull() & F.col(rts).isNotNull())
         sp["matched"] = f"{sp['name']}_matched_ts"
+        tol = sp.get("tolerance_sec")
+        sp["tol_us"] = None if tol is None else int(tol * 1_000_000)
         for c in sp["value_cols"] + [sp["matched"]]:
             if c in out_names:
                 raise ValueError(
@@ -428,38 +438,36 @@ def _salt_feature(tagged: DataFrame, bucket: str, salt_buckets: int) -> DataFram
 
 def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) -> DataFrame:
     """``asof_join(strategy="merge_asof")`` for one normalized spec:
-    co-group both sides by entity and run ``pandas.merge_asof`` per
-    group (Arrow-batched, vectorized — no per-row Python).
+    co-group both sides by entity and run the broadcast match kernel
+    (``_bcast_build`` + ``_bcast_match_idx``) on each group, one Arrow
+    table per side — no per-row Python, and values cross untouched, so
+    NaN stays NaN and bigints stay exact, as in the other strategies.
 
     Partition-boundary-correct because grouping is on the entity key
     only (never on time), so an entity's full feature history is
     visible to its probe rows.
     """
-    right, schema, value_cols, tol = sp["df"], sp["schema"], sp["value_cols"], sp.get("tolerance_sec")
-    l_schema = left.schema
-    l_cols = l_schema.names
-    out_cols = l_cols + value_cols + [matched]
-    rv = right.select(F.col(on), F.col(sp["ts"]).alias("__rts"), *[F.col(c) for c in value_cols])
-    merged_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in l_schema.fields]
-        + [f"`{c}` {schema[c].dataType.simpleString()}" for c in value_cols]
-        + [f"`{matched}` {schema[sp['ts']].dataType.simpleString()}"]
+    schema, value_cols, tol_us = sp["schema"], sp["value_cols"], sp["tol_us"]
+    l_cols = left.columns
+    out_schema = StructType(
+        left.schema.fields + [schema[c] for c in value_cols] + [StructField("__matched_us", LongType())]
     )
 
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=out_cols)
-        out = pd.merge_asof(
-            lpdf.sort_values(left_ts, kind="stable"),
-            rpdf.sort_values("__rts", kind="stable")[["__rts"] + value_cols],
-            left_on=left_ts,
-            right_on="__rts",
-            direction="backward",
-            tolerance=pd.Timedelta(seconds=tol) if tol is not None else None,
-        )
-        return out.rename(columns={"__rts": matched})[out_cols]
+    def match(lt: pa.Table, rt: pa.Table) -> pa.Table:
+        tb = _bcast_build(rt)
+        idx = _bcast_match_idx(tb, lt[on].combine_chunks(), lt["__t"].combine_chunks(), tol_us)
+        out = lt.select(l_cols)
+        for c in value_cols:
+            out = out.append_column(c, tb["cols"][c].take(idx))
+        return out.append_column("__matched_us", tb["cols"]["__t"].take(idx))
 
-    return left.groupBy(on).cogroup(rv.groupBy(on)).applyInPandas(merge, merged_schema)
+    probe = left.withColumn("__t", _micros(left_ts))
+    out = probe.groupBy(on).cogroup(_bcast_side(sp, on).groupBy("__e")).applyInArrow(match, out_schema)
+    return out.select(
+        *l_cols,
+        *value_cols,
+        F.timestamp_micros(F.col("__matched_us")).cast(schema[sp["ts"]].dataType).alias(matched),
+    )
 
 
 # Broadcast guardrail: each feature row costs ~8B (ts) + 8-ish B per
@@ -469,22 +477,23 @@ def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) 
 _BROADCAST_MAX_ROWS = 5_000_000
 
 
-def _bcast_build(right: DataFrame, on: str, right_ts: str, value_cols: List[str]) -> dict:
-    """Flat broadcastable (entity-code, ts, values) arrays sorted by
-    (entity, ts): each entity's history is one contiguous block.
-    ``right`` holds no NULL entity or ts (``_specs`` drops them), so the
-    composed key array below is strictly increasing."""
-    tbl = (
-        right.select(
-            F.col(on).alias("__e"),
-            F.unix_micros(F.col(right_ts).cast("timestamp")).alias("__t"),
-            *[F.col(c) for c in value_cols],
-        )
-        .toArrow()
-        .sort_by([("__e", "ascending"), ("__t", "ascending")])
+def _bcast_side(sp: dict, on: str) -> DataFrame:
+    """The match kernel's view of one normalized feature table: entity
+    ``__e``, epoch-micros ``__t`` and the value columns."""
+    return sp["df"].select(
+        F.col(on).alias("__e"), _micros(sp["ts"]).alias("__t"), *[F.col(c) for c in sp["value_cols"]]
     )
+
+
+def _bcast_build(tbl: pa.Table) -> dict:
+    """Match index over an Arrow table of ``_bcast_side`` columns: flat
+    (entity-code, ts, values) arrays sorted by (entity, ts), so each
+    entity's history is one contiguous block.  The table holds no NULL
+    entity or ts (``_specs`` drops them), so the composed key array
+    below is strictly increasing."""
+    tbl = tbl.sort_by([("__e", "ascending"), ("__t", "ascending")])
     e = tbl["__e"].combine_chunks()
-    cols = {c: tbl[c].combine_chunks() for c in ["__t"] + value_cols}
+    cols = {c: tbl[c].combine_chunks() for c in tbl.column_names if c != "__e"}
     # dense entity codes in sorted order (``unique`` keeps first
     # occurrence), so the code column is itself non-decreasing
     ents = pc.unique(e)
@@ -544,12 +553,9 @@ def _asof_broadcast_multi(left: DataFrame, specs: Sequence[dict], on: str, left_
     never shuffled.  Output columns/types are identical to the union
     spine's: l_cols, then per table value_cols + ``{name}_matched_ts``."""
     spark = left.sparkSession
-    tables = [_bcast_build(sp["df"], on, sp["ts"], sp["value_cols"]) for sp in specs]
+    tables = [_bcast_build(_bcast_side(sp, on).toArrow()) for sp in specs]
     bc = spark.sparkContext.broadcast(tables)
-    tols = [
-        None if sp.get("tolerance_sec") is None else int(sp["tolerance_sec"] * 1_000_000)
-        for sp in specs
-    ]
+    tols = [sp["tol_us"] for sp in specs]
     all_vcols = [list(sp["value_cols"]) for sp in specs]
     fields = ", ".join(
         f"`{c}` {sp['schema'][c].dataType.simpleString()}"
@@ -570,7 +576,7 @@ def _asof_broadcast_multi(left: DataFrame, specs: Sequence[dict], on: str, left_
         arrays += [tb["cols"]["__t"].take(i) for tb, i in zip(bc.value, idx)]
         return pa.StructArray.from_arrays(arrays, names)
 
-    m = left.withColumn("__m", _match(F.col(on), F.unix_micros(F.col(left_ts).cast("timestamp"))))
+    m = left.withColumn("__m", _match(F.col(on), _micros(left_ts)))
     sel: List[Column] = [F.col(c) for c in left.columns]
     for k, sp in enumerate(specs):
         sel += [F.col(f"__m.{c}").alias(c) for c in sp["value_cols"]]
@@ -665,7 +671,7 @@ def rolling_stats(
     # range frames need integral bounds: order by epoch micros (long)
     w = (
         Window.partitionBy(entity)
-        .orderBy(F.unix_micros(F.col(ts).cast("timestamp")))
+        .orderBy(_micros(ts))
         .rangeBetween(-int(window_sec * 1_000_000), 0)
     )
     out = df

@@ -33,8 +33,8 @@ batched for minimal passes over the data:
   every vocabulary in the wave), a lone one is a plain
   ``groupBy(key).count()``; eliminators pushed as Spark predicates
   before the driver collect;
-* all SKETCH fits -> one ``mapInPandas`` pass emitting per-partition
-  t-digest centroids, merged on the driver in partition order (the
+* all SKETCH fits -> one ``mapInArrow`` pass emitting one t-digest
+  partial per partition, merged on the driver in partition order (the
   reference's shard merge, _normalization.py:601-613);
 * all GROUPED fits -> one ``groupBy(group_col).agg(...)`` per distinct
   group column.
@@ -53,7 +53,7 @@ from functools import reduce
 from typing import Any, Callable, Dict, Iterator, List, Optional, Sequence, Set, Tuple
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -543,11 +543,12 @@ class Pipeline:
 
     @staticmethod
     def _fit_sketch(df: DataFrame, ops: List[Tuple[str, FittedTransform, Column]], update: bool = False) -> None:
-        """One mapInPandas pass -> per-partition t-digest centroids for
-        every sketch op in the wave; contiguous partition runs are merged
-        executor-side when the partition count is large (deterministic:
-        runs merge in partition order, like the reference's sequential
-        shard merge); driver merge in run order."""
+        """One mapInArrow pass -> one t-digest partial per (sketch op,
+        partition) of the wave, as one row of centroid arrays;
+        contiguous partition runs are merged executor-side when the
+        partition count is large (deterministic: runs merge in partition
+        order, like the reference's sequential shard merge); driver
+        merge in run order."""
         from pyspark import TaskContext
 
         sketchers = [op for (_p, op, _c) in ops]
@@ -565,83 +566,69 @@ class Pipeline:
         sel = _ensure_parallelism(sel)
         n_ops = len(ops)
 
-        def build(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        def partials(pid: int, digests: List[tuple]) -> pa.RecordBatch:
+            # one row per (op, digest); an empty digest (all-NULL input)
+            # contributes no partial
+            keep = [(j, d) for j, d in digests if d.n_processed]
+            lists = pa.list_(pa.float64())
+            return pa.RecordBatch.from_arrays(
+                [
+                    pa.array([j for j, _d in keep], pa.int32()),
+                    pa.array([pid] * len(keep), pa.int32()),
+                    pa.array([d.processed_means[: d.n_processed] for _j, d in keep], lists),
+                    pa.array([d.processed_weights[: d.n_processed] for _j, d in keep], lists),
+                ],
+                ["op", "pid", "means", "weights"],
+            )
+
+        def build(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             tc = TaskContext.get()
             pid = tc.partitionId() if tc is not None else 0
             cols: List[List[np.ndarray]] = [[] for _ in range(n_ops)]
-            for pdf in batches:
+            for b in batches:
                 for j in range(n_ops):
-                    cols[j].append(pdf[f"c{j}"].to_numpy(dtype=np.float64, na_value=np.nan))
-            out = []
-            for j in range(n_ops):
-                d = sketchers[j].partial_sketch(np.concatenate(cols[j] or [np.empty(0)]))
-                k = d.n_processed
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "op": np.full(k, j, dtype=np.int32),
-                            "pid": np.full(k, pid, dtype=np.int32),
-                            "mean": d.processed_means[:k],
-                            "weight": d.processed_weights[:k],
-                        }
-                    )
-                )
-            yield pd.concat(out)
+                    # a NULL input reads as NaN, which partial_sketch drops
+                    cols[j].append(b.column(j).to_numpy(zero_copy_only=False))
+            yield partials(pid, [
+                (j, sketchers[j].partial_sketch(np.concatenate(cols[j] or [np.empty(0)])))
+                for j in range(n_ops)
+            ])
 
-        centroid_schema = "op int, pid int, mean double, weight double"
-        rows_df = sel.mapInPandas(build, centroid_schema)
+        partial_schema = "op int, pid int, means array<double>, weights array<double>"
+        rows_df = sel.mapInArrow(build, partial_schema)
 
         n_parts = sel.rdd.getNumPartitions()
         if n_parts > Pipeline._SKETCH_FANIN:
             group_size = int(np.ceil(n_parts / Pipeline._SKETCH_FANIN))
 
-            def merge_run(pdf: pd.DataFrame) -> pd.DataFrame:
+            def merge_run(key: tuple, tbl: pa.Table) -> pa.Table:
                 # one (op, gid) group = a contiguous pid run; merge its
-                # digests in pid order, emit one digest's centroids
-                j = int(pdf["op"].iloc[0])
-                gid = int(pdf["pid"].iloc[0]) // group_size
+                # digests in pid order, emit one digest
+                j, gid = (k.as_py() for k in key)
                 td = sketchers[j]._td
                 t = td.new_digest()
-                for pid in sorted(pdf["pid"].unique()):
-                    # processed centroids are mean-ascending; restore order
-                    sub = pdf[pdf["pid"] == pid].sort_values("mean", kind="stable")
-                    d = td.from_centroids(sub["mean"].to_numpy(), sub["weight"].to_numpy())
-                    td.merge_digests(t, d)
+                tbl = tbl.sort_by("pid")
+                for m, w in zip(tbl["means"].to_numpy(), tbl["weights"].to_numpy()):
+                    td.merge_digests(t, td.from_centroids(m, w))
                 td._process(t)
-                k = t.n_processed
-                return pd.DataFrame(
-                    {
-                        "op": np.full(k, j, dtype=np.int32),
-                        "pid": np.full(k, gid, dtype=np.int32),
-                        "mean": t.processed_means[:k],
-                        "weight": t.processed_weights[:k],
-                    }
-                )
+                return pa.Table.from_batches([partials(gid, [(j, t)])])
 
-            rows_df = rows_df.withColumn(
-                "gid", (F.col("pid") / group_size).cast("int")
-            ).groupBy("op", "gid").applyInPandas(
-                lambda pdf: merge_run(pdf.drop(columns=["gid"])), centroid_schema
+            rows_df = (
+                rows_df.withColumn("gid", (F.col("pid") / group_size).cast("int"))
+                .groupBy("op", "gid")
+                .applyInArrow(merge_run, partial_schema)
             )
 
-        # Arrow transfer + numpy grouping (r8): a Row-based collect of
-        # FANIN * 2*compression centroid rows plus a Python row loop was
-        # the slow half of the fit once the sketch pass itself ran
-        # parallel.  Order guarantees are unchanged: toPandas preserves
-        # partition-concatenation order, so rows within one (op, pid)
-        # stay in their emitted mean-ascending order, and np.unique
-        # yields pids sorted (the reference's shard-merge order).
-        pdf_rows = rows_df.toPandas()
-        ops_arr, pid_arr, mean_arr, weight_arr = (
-            pdf_rows[c].to_numpy() for c in ("op", "pid", "mean", "weight")
-        )
+        # Arrow transfer (r8): a Row-based collect of the partials plus
+        # a Python row loop was the slow half of the fit once the sketch
+        # pass itself ran parallel.  Partials merge in pid order, the
+        # reference's shard-merge order.
+        tbl = rows_df.toArrow().sort_by("pid")
+        op_ids = tbl["op"].to_numpy()
+        means, weights = tbl["means"].to_numpy(), tbl["weights"].to_numpy()
         for j, (_path, op, _col) in enumerate(ops):
-            opm = ops_arr == j
-            pj, mj, wj = pid_arr[opm], mean_arr[opm], weight_arr[opm]
-            partials = [
-                op._td.from_centroids(mj[pj == pid], wj[pj == pid]) for pid in np.unique(pj)
-            ]
-            Pipeline._finalize(op, partials, update)
+            rows = np.flatnonzero(op_ids == j)
+            Pipeline._finalize(op, [op._td.from_centroids(means[i], weights[i]) for i in rows], update)
 
     # ------------------------------------------------------------ transform
     def transform(self, df: DataFrame, keep_input: bool = True) -> DataFrame:

@@ -9,9 +9,10 @@ self-contained, checkpoint-resumable point-in-time feature job:
         --master <cluster> path/to/repo/torchestra_spark/submit.py run \
         --events <parquet> --features <parquet> --out <dir> [--resume]
 
-The job: as-of join features onto events, lag + sessionize, fitted
-StandardScore + IndexLookup, checkpointed bucketed write with lineage
-manifests (resumable via --resume; re-running is idempotent).
+The job: as-of join features onto events, lag + sessionize, a fitted
+``value_z`` feature (StandardScore, NanToNum, Clamp) over the value
+column, checkpointed bucketed write with lineage manifests (resumable
+via --resume; re-running is idempotent).
 """
 
 from __future__ import annotations
@@ -47,9 +48,8 @@ def build_pyfiles_zip(out_path: str = "dist/torchestra_spark.zip") -> str:
 
 def run_job(args: argparse.Namespace) -> None:
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from torchestra_spark import Clamp, Feature, IndexLookup, NanToNum, Pipeline, StandardScore
+    from torchestra_spark import Clamp, Feature, NanToNum, Pipeline, StandardScore
     from torchestra_spark.checkpoint import CheckpointedWriter, input_fingerprint
     from torchestra_spark.operators.temporal import asof_join, lag_lead, sessionize
 

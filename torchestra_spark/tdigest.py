@@ -4,7 +4,7 @@ classic Dunning t-digest with the sin-based k1 scale function).
 
 Spark has no built-in allclose-compatible equivalent
 (``approx_percentile`` uses a different sketch), so this module is the
-sketch kernel that runs inside Arrow-batched ``mapInPandas`` partials;
+sketch kernel that runs inside Arrow-batched ``mapInArrow`` partials;
 partial digests are merged on the driver in deterministic partition
 order (mirroring the reference's ``combine_stats`` shard merge,
 _normalization.py:601-613).
