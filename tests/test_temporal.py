@@ -3,6 +3,7 @@ merge_asof oracle (both strategies + salted skew variant), zero
 temporal leakage, lag/lead/fill-forward/sessionize vs pandas."""
 
 import datetime
+import math
 
 import numpy as np
 import pandas as pd
@@ -258,88 +259,113 @@ def test_asof_broadcast_null_feature_ts_ignored(spark):
             assert got(out, f"v{k}", f"t{k}_matched_ts") == expected, (strategy, k)
 
 
+def _nan_tag(v):
+    """``collect()`` value with NaN made comparable (NaN != NaN)."""
+    return "NaN" if isinstance(v, float) and math.isnan(v) else v
+
+
 @pytest.mark.parametrize(
     "strategy", ["union", "salted", "broadcast", "merge_asof", "multi_union", "multi_broadcast"]
 )
 def test_asof_exact_bigint_and_null_entity(spark, strategy):
-    """Every strategy agrees on one probe batch that holds the entities
-    2**60 and 2**60+1 (one apart, above 2**53) and a NULL entity, and on
+    """Every strategy agrees exactly on two one-partition probe batches,
+    read with ``collect()`` so NaN and NULL stay apart.  (a) Entities
+    2**60 and 2**60+1 (one apart, above 2**53) and a NULL entity against
     a bigint value column that holds a NULL: values come back exact,
     each entity gets its own history, and a NULL entity never matches —
-    not even a NULL-entity feature row (SQL ``=``)."""
+    not even a NULL-entity feature row (SQL ``=``).  (b) A matched NaN
+    comes back NaN and a matched NULL comes back NULL, a probe-side
+    bigint above 2**53 comes back exact also when its entity's rows hold
+    a NULL in that column, and a probe row before its entity's first
+    feature row is unmatched."""
     import pyspark.sql.functions as F
 
     from torchestra_spark.operators.temporal import asof_join_multi
 
-    big = 2**60
-    lt = spark.createDataFrame(
-        [(0, big), (1, big + 1), (2, None)], "event_id long, user_id long"
-    ).withColumn("ts", F.timestamp_seconds(F.lit(100))).coalesce(1)
-    rt = spark.createDataFrame(
-        [(big, 10, big + 7), (big + 1, 20, None), (None, 30, 5)],
-        "user_id long, fval int, bval long",
-    ).withColumn("feature_ts", F.timestamp_seconds(F.lit(10))).coalesce(1)
+    B, nan = 2**60, float("nan")
+    t = datetime.datetime.fromtimestamp  # how collect() renders a ts
+    cases = [
+        (  # (a): probe (eid, user_id, ts, big), features (user_id, feature_ts, fval, bval)
+            [(0, B, 100, None), (1, B + 1, 100, None), (2, None, 100, None)],
+            [(B, 10, 10, B + 7), (B + 1, 10, 20, None), (None, 10, 30, 5)],
+            "int",
+            {0: (10, B + 7, t(10), None), 1: (20, None, t(10), None), 2: (None, None, None, None)},
+        ),
+        (  # (b)
+            [(1, B + 1, 10, 7), (2, B, 10, None), (3, B + 1, 0, 8), (4, 5, 5, 9), (5, B, 20, B + 3)],
+            [(B + 1, 5, nan, B + 7), (B, 1, 1.5, None), (B, 15, 2.5, 4), (5, 5, None, 1),
+             (None, 1, 9.0, 9)],
+            "double",
+            {1: (nan, B + 7, t(5), 7), 2: (1.5, None, t(1), None), 3: (None, None, None, 8),
+             4: (None, 1, t(5), 9), 5: (2.5, 4, t(15), B + 3)},
+        ),
+    ]
     kw = dict(on="user_id", left_ts="ts")
-    if strategy.startswith("multi_"):
-        tables = [
-            dict(name=f"t{k}", df=rt.select("user_id", "feature_ts", F.col("fval").alias(f"f{k}"),
-                                            F.col("bval").alias(f"b{k}")), ts="feature_ts")
-            for k in range(3)
-        ]
-        out = asof_join_multi(lt, tables, strategy=strategy[len("multi_"):], **kw).collect()
-        cols = [(f"f{k}", f"b{k}", f"t{k}_matched_ts") for k in range(3)]
-    else:
-        opts = (
-            dict(strategy="union", salt_buckets=4, salt_threshold=1)
-            if strategy == "salted"
-            else dict(strategy=strategy)
-        )
-        out = asof_join(lt, rt, right_ts="feature_ts", **kw, **opts).collect()
-        cols = [("fval", "bval", "matched_feature_ts")]
-    ts10 = datetime.datetime.fromtimestamp(10)  # how collect() renders the feature ts
-    expected = {0: (10, big + 7, ts10), 1: (20, None, ts10), 2: (None, None, None)}
-    for f, b, m in cols:
-        got = {r["event_id"]: (r[f], r[b], r[m]) for r in out}
-        assert got == expected, (strategy, f)
+    for probe, feats, fval_type, expected in cases:
+        lt = spark.createDataFrame(probe, "eid long, user_id long, ts long, big long").withColumn(
+            "ts", F.timestamp_seconds("ts")
+        ).coalesce(1)
+        rt = spark.createDataFrame(
+            feats, f"user_id long, feature_ts long, fval {fval_type}, bval long"
+        ).withColumn("feature_ts", F.timestamp_seconds("feature_ts")).coalesce(1)
+        if strategy.startswith("multi_"):
+            tables = [
+                dict(name=f"t{k}", df=rt.select("user_id", "feature_ts", F.col("fval").alias(f"f{k}"),
+                                                F.col("bval").alias(f"b{k}")), ts="feature_ts")
+                for k in range(3)
+            ]
+            out = asof_join_multi(lt, tables, strategy=strategy[len("multi_"):], **kw).collect()
+            cols = [(f"f{k}", f"b{k}", f"t{k}_matched_ts") for k in range(3)]
+        else:
+            opts = (
+                dict(strategy="union", salt_buckets=4, salt_threshold=1)
+                if strategy == "salted"
+                else dict(strategy=strategy)
+            )
+            out = asof_join(lt, rt, right_ts="feature_ts", **kw, **opts).collect()
+            cols = [("fval", "bval", "matched_feature_ts")]
+        want = {e: tuple(map(_nan_tag, v)) for e, v in expected.items()}
+        for f, b, m in cols:
+            got = {r["eid"]: tuple(map(_nan_tag, (r[f], r[b], r[m], r["big"]))) for r in out}
+            assert got == want, (strategy, f)
 
 
-@pytest.mark.parametrize("strategy", ["union", "salted", "broadcast", "merge_asof"])
-def test_asof_exact_nan_null_and_probe_bigint(spark, strategy):
-    """Rows read with ``collect()``, so NaN and NULL stay apart: a
-    matched NaN feature value comes back NaN, a matched NULL comes back
-    NULL, bigints above 2**53 come back exact on both sides (also when
-    their entity's rows hold a NULL in that column), and a probe row
-    before its entity's first feature row is unmatched."""
-    import math
-
+@pytest.mark.parametrize("strategy", ["union", "broadcast", "merge_asof"])
+def test_asof_non_nullable_values_under_non_utc_session(spark, strategy):
+    """A feature table whose value columns are declared NOT NULL (derived
+    from ``spark.range``) still gives an unmatched probe row NULL in
+    them: the output declares them nullable and ``isNull`` sees it.
+    Under a session time zone other than UTC, a TIMESTAMP probe column
+    and a TIMESTAMP value column come back as the same instants."""
     import pyspark.sql.functions as F
 
-    B = 2**60
-    lt = spark.createDataFrame(
-        [(1, B + 1, 10, 7), (2, B, 10, None), (3, B + 1, 0, 8), (4, 5, 5, 9), (5, B, 20, B + 3)],
-        "eid long, user_id long, ts long, big long",
-    ).withColumn("ts", F.timestamp_seconds("ts")).coalesce(1)
-    rt = spark.createDataFrame(
-        [(B + 1, 5, float("nan"), B + 7), (B, 1, 1.5, None), (B, 15, 2.5, 4),
-         (5, 5, None, 1), (None, 1, 9.0, 9)],
-        "user_id long, feature_ts long, fval double, bval long",
-    ).withColumn("feature_ts", F.timestamp_seconds("feature_ts")).coalesce(1)
-    opts = (
-        dict(strategy="union", salt_buckets=4, salt_threshold=1)
-        if strategy == "salted"
-        else dict(strategy=strategy)
-    )
-    rows = {
-        r["eid"]: r
-        for r in asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts", **opts).collect()
-    }
-    assert sorted(rows) == [1, 2, 3, 4, 5]
-    assert math.isnan(rows[1]["fval"]) and rows[1]["bval"] == B + 7
-    assert rows[4]["fval"] is None and rows[4]["bval"] == 1
-    assert (rows[2]["fval"], rows[2]["bval"]) == (1.5, None)
-    assert (rows[5]["fval"], rows[5]["bval"], rows[5]["big"]) == (2.5, 4, B + 3)
-    assert (rows[3]["fval"], rows[3]["bval"], rows[3]["matched_feature_ts"]) == (None, None, None)
-    assert [rows[e]["big"] for e in (1, 2, 3, 4)] == [7, None, 8, 9]
+    key = "spark.sql.session.timeZone"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "America/New_York")
+    try:
+        lt = spark.createDataFrame(
+            [(1, 1, 10), (2, 1, 0), (3, 9, 10)], "eid long, user_id long, ts long"
+        ).withColumn("ts", F.timestamp_seconds("ts"))
+        rt = spark.range(1).select(
+            F.lit(1).cast("long").alias("user_id"),
+            F.timestamp_seconds(F.lit(5)).alias("feature_ts"),
+            (F.col("id") * 0.5 + 1.5).alias("fval"),
+            F.timestamp_seconds(F.col("id") + 3).alias("tval"),
+        )
+        assert not rt.schema["fval"].nullable and not rt.schema["tval"].nullable
+        out = asof_join(lt, rt, on="user_id", left_ts="ts", right_ts="feature_ts", strategy=strategy)
+        assert out.schema["fval"].nullable and out.schema["tval"].nullable
+        rows = out.select(
+            "eid", "fval", F.col("fval").isNull().alias("miss"), "tval", "matched_feature_ts", "ts"
+        ).orderBy("eid").collect()
+    finally:
+        spark.conf.set(key, prev)
+    t = datetime.datetime.fromtimestamp
+    assert [tuple(r) for r in rows] == [
+        (1, 1.5, False, t(3), t(5), t(10)),
+        (2, None, True, None, None, t(0)),
+        (3, None, True, None, None, t(10)),
+    ]
 
 
 def test_asof_broadcast_pre_epoch_matched_ts(spark):

@@ -2000,6 +2000,19 @@ def test_train_ivfpq_collects_one_sample(spark, embs, monkeypatch):
     assert C.shape == (4, 64) and B.shape == (8, 16, 8)
 
 
+@pytest.mark.parametrize("train", [
+    lambda df: S.train_ivf_centroids(df, "embedding", n_centroids=2),
+    lambda df: S.train_pq(df, "embedding", m=1, ks=2),
+    lambda df: S.train_ivfpq(df, "embedding", n_centroids=2, m=1, ks=2),
+], ids=["ivf", "pq", "ivfpq"])
+def test_trainers_reject_empty_input(spark, train):
+    """A trainer over an empty frame raises a named ValueError at the
+    collect, not a numpy error further on."""
+    empty = spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match="vector collect: no rows in 'embedding'"):
+        train(empty)
+
+
 def test_avi_top_down_rows(spark):
     """Regression (r7 self-review): negative biHeight = top-down DIB
     rows; the decoder must NOT flip them."""

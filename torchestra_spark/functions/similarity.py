@@ -349,9 +349,12 @@ def _train_sample(
 
 def _to_matrix(df: DataFrame, vec_col: str) -> np.ndarray:
     """Collect a bounded frame's vectors to the driver as one (n, d)
-    float64 matrix."""
+    float64 matrix.  An empty frame raises a ``ValueError``, as a NULL or
+    ragged vector does."""
     vecs = df.select(vec_col).toArrow()[vec_col].combine_chunks()
-    dim = len(vecs[0]) if len(vecs) and vecs[0].is_valid else 0
+    if len(vecs) == 0:
+        raise ValueError(f"vector collect: no rows in {vec_col!r}; the input frame is empty")
+    dim = len(vecs[0]) if vecs[0].is_valid else 0
     return _fixed_dim_matrix(vecs, dim, "vector collect")
 
 

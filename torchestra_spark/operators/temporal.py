@@ -49,6 +49,7 @@ import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StructField, StructType
 
 
@@ -449,9 +450,16 @@ def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) 
     """
     schema, value_cols, tol_us = sp["schema"], sp["value_cols"], sp["tol_us"]
     l_cols = left.columns
+    # value fields are nullable whatever the feature table declares: an
+    # unmatched probe row gets NULL in every one of them
     out_schema = StructType(
-        left.schema.fields + [schema[c] for c in value_cols] + [StructField("__matched_us", LongType())]
+        left.schema.fields
+        + [StructField(c, schema[c].dataType) for c in value_cols]
+        + [StructField("__matched_us", LongType())]
     )
+    # timestamps reach the worker in the session time zone but must
+    # leave it as UTC; the cast only relabels them (same instants)
+    arrow_schema = to_arrow_schema(out_schema)
 
     def match(lt: pa.Table, rt: pa.Table) -> pa.Table:
         tb = _bcast_build(rt)
@@ -459,7 +467,7 @@ def _asof_merge(left: DataFrame, sp: dict, on: str, left_ts: str, matched: str) 
         out = lt.select(l_cols)
         for c in value_cols:
             out = out.append_column(c, tb["cols"][c].take(idx))
-        return out.append_column("__matched_us", tb["cols"]["__t"].take(idx))
+        return out.append_column("__matched_us", tb["cols"]["__t"].take(idx)).cast(arrow_schema)
 
     probe = left.withColumn("__t", _micros(left_ts))
     out = probe.groupBy(on).cogroup(_bcast_side(sp, on).groupBy("__e")).applyInArrow(match, out_schema)
