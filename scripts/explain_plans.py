@@ -7,8 +7,8 @@ it.  A named query the bench lacks is looked up in
 noop sink, so the plans of every declared query can be diffed.  Every
 SQL execution a query starts (pinning sub-jobs, count gates, the
 final noop write) is written with the text Spark's SQL status store
-recorded for it, sorted by that text (``near_dup_report`` runs two
-branches concurrently, so execution order is not stable).
+recorded for it, sorted by that text, so two checkouts that start the
+same executions in another order still diff clean.
 Normalization removes what differs between runs and checkouts of the
 same plan: the checkout's path, expression ids (``#123`` -> ``#``),
 RDD and plan ids (``MapPartitionsRDD[45]`` -> ``MapPartitionsRDD[]``,

@@ -1,9 +1,10 @@
 """The allocator-tuning env defaults `get_spark` exports for the JVM
 gateway and its forked Python workers (guide §4: page-fault/memcg
-charge churn from per-buffer mmap/munmap in every Arrow stage), and its
-choice of shuffle scratch dir."""
+charge churn from per-buffer mmap/munmap in every Arrow stage), its
+choice of shuffle scratch dir, and its default master."""
 
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -23,7 +24,7 @@ def _own_env(monkeypatch):
         return {k: v for k, v in os.environ.items() if k != "PYTEST_CURRENT_TEST"}
 
     before = env()
-    for k in _KEYS + ("SPARK_GRAFT_MALLOC_TUNING", "SPARK_GRAFT_LOCAL_DIR"):
+    for k in _KEYS + ("SPARK_GRAFT_MALLOC_TUNING", "SPARK_GRAFT_LOCAL_DIR", "SPARK_GRAFT_MASTER"):
         monkeypatch.setenv(k, "")
         monkeypatch.delenv(k)
     yield
@@ -82,3 +83,37 @@ def test_local_dir_shm_only_for_local_master(monkeypatch, free_gib, master, want
 def test_local_dir_env_override(monkeypatch, master):
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/scratch/nvme")
     assert _local_dir(master) == "/scratch/nvme"
+
+
+class _Builder:
+    """Records the master ``get_spark`` picks; starts no JVM."""
+
+    def __init__(self):
+        self.master_url = None
+
+    def appName(self, name):
+        return self
+
+    def master(self, url):
+        self.master_url = url
+        return self
+
+    def config(self, key, value):
+        return self
+
+    def getOrCreate(self):
+        return self.master_url
+
+
+@pytest.mark.parametrize("env_master, arg, want", [
+    (None, None, "local[3]"),              # one slot per core in the affinity set
+    ("spark://head:7077", None, "spark://head:7077"),
+    ("spark://head:7077", "local[2]", "local[2]"),
+])
+def test_default_master_from_host(monkeypatch, env_master, arg, want):
+    monkeypatch.setattr(session, "SparkSession", SimpleNamespace(builder=_Builder()))
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")  # the library ignores it
+    if env_master is not None:
+        monkeypatch.setenv("SPARK_GRAFT_MASTER", env_master)
+    assert session.get_spark(master=arg) == want

@@ -277,18 +277,24 @@ def test_asof_exact_bigint_and_null_entity(spark, strategy):
     comes back NaN and a matched NULL comes back NULL, a probe-side
     bigint above 2**53 comes back exact also when its entity's rows hold
     a NULL in that column, and a probe row before its entity's first
-    feature row is unmatched."""
+    feature row is unmatched.  (c) Under a 570 ms tolerance, a feature
+    row exactly 570 ms older than its probe (2023-11-14 22:13:20.9 UTC)
+    matches and one a microsecond older does not: every strategy tests
+    tolerance in whole microseconds.  (d) The same under a 1.001 s
+    tolerance, whose double product with 10**6 lies just below
+    1,001,000."""
     import pyspark.sql.functions as F
 
     from torchestra_spark.operators.temporal import asof_join_multi
 
-    B, nan = 2**60, float("nan")
+    B, nan, T = 2**60, float("nan"), 1_700_000_000.9
     t = datetime.datetime.fromtimestamp  # how collect() renders a ts
     cases = [
         (  # (a): probe (eid, user_id, ts, big), features (user_id, feature_ts, fval, bval)
             [(0, B, 100, None), (1, B + 1, 100, None), (2, None, 100, None)],
             [(B, 10, 10, B + 7), (B + 1, 10, 20, None), (None, 10, 30, 5)],
             "int",
+            None,
             {0: (10, B + 7, t(10), None), 1: (20, None, t(10), None), 2: (None, None, None, None)},
         ),
         (  # (b)
@@ -296,22 +302,42 @@ def test_asof_exact_bigint_and_null_entity(spark, strategy):
             [(B + 1, 5, nan, B + 7), (B, 1, 1.5, None), (B, 15, 2.5, 4), (5, 5, None, 1),
              (None, 1, 9.0, 9)],
             "double",
+            None,
             {1: (nan, B + 7, t(5), 7), 2: (1.5, None, t(1), None), 3: (None, None, None, 8),
              4: (None, 1, t(5), 9), 5: (2.5, 4, t(15), B + 3)},
         ),
+        (  # (c)
+            [(1, 1, T, None), (2, 2, T, None)],
+            [(1, 1_700_000_000.33, 1, 10), (2, 1_700_000_000.329999, 2, 20)],
+            "int",
+            0.57,
+            {1: (1, 10, t(1_700_000_000.33), None), 2: (None, None, None, None)},
+        ),
+        (  # (d)
+            [(1, 1, T, None), (2, 2, T, None)],
+            [(1, 1_699_999_999.899, 1, 10), (2, 1_699_999_999.898999, 2, 20)],
+            "int",
+            1.001,
+            {1: (1, 10, t(1_699_999_999.899), None), 2: (None, None, None, None)},
+        ),
     ]
     kw = dict(on="user_id", left_ts="ts")
-    for probe, feats, fval_type, expected in cases:
-        lt = spark.createDataFrame(probe, "eid long, user_id long, ts long, big long").withColumn(
-            "ts", F.timestamp_seconds("ts")
-        ).coalesce(1)
+
+    def micros(rows, i):  # field i: ts seconds -> exact epoch microseconds
+        return [(*r[:i], round(r[i] * 10**6), *r[i + 1:]) for r in rows]
+
+    for probe, feats, fval_type, tol, expected in cases:
+        lt = spark.createDataFrame(
+            micros(probe, 2), "eid long, user_id long, ts long, big long"
+        ).withColumn("ts", F.timestamp_micros("ts")).coalesce(1)
         rt = spark.createDataFrame(
-            feats, f"user_id long, feature_ts long, fval {fval_type}, bval long"
-        ).withColumn("feature_ts", F.timestamp_seconds("feature_ts")).coalesce(1)
+            micros(feats, 1), f"user_id long, feature_ts long, fval {fval_type}, bval long"
+        ).withColumn("feature_ts", F.timestamp_micros("feature_ts")).coalesce(1)
         if strategy.startswith("multi_"):
             tables = [
                 dict(name=f"t{k}", df=rt.select("user_id", "feature_ts", F.col("fval").alias(f"f{k}"),
-                                                F.col("bval").alias(f"b{k}")), ts="feature_ts")
+                                                F.col("bval").alias(f"b{k}")), ts="feature_ts",
+                     tolerance_sec=tol)
                 for k in range(3)
             ]
             out = asof_join_multi(lt, tables, strategy=strategy[len("multi_"):], **kw).collect()
@@ -322,7 +348,7 @@ def test_asof_exact_bigint_and_null_entity(spark, strategy):
                 if strategy == "salted"
                 else dict(strategy=strategy)
             )
-            out = asof_join(lt, rt, right_ts="feature_ts", **kw, **opts).collect()
+            out = asof_join(lt, rt, right_ts="feature_ts", tolerance_sec=tol, **kw, **opts).collect()
             cols = [("fval", "bval", "matched_feature_ts")]
         want = {e: tuple(map(_nan_tag, v)) for e, v in expected.items()}
         for f, b, m in cols:

@@ -1688,6 +1688,44 @@ def test_near_dup_report_release_frees_all_blocks(spark):
     assert not left, f"near_dup_report leaked storage blocks: {left}"
 
 
+@pytest.mark.parametrize(
+    "entry", ["near_dup_report", "dedup_clusters", "dedup_keep_best", "minhash_dedup_verified"]
+)
+def test_dedup_entry_release_frees_all_blocks(spark, entry):
+    """Every dedup entry point that pins state hands all of it to its
+    result: once the result is consumed, ``release_pinned(result)``
+    leaves none of the storage blocks the call made.  Before, the label
+    propagation kept every superseded label pin and its edge pin, and
+    the verified MinHash kept its candidate pin."""
+    path = spark.createDataFrame([(i, i + 1) for i in range(40)], "id_a long, id_b long")
+    docs = spark.createDataFrame(
+        [(i, list(range(i % 7, i % 7 + 30)), f"doc {i % 9} alpha beta gamma {i % 4}")
+         for i in range(60)],
+        "doc_id long, tokens array<long>, text string",
+    )
+    run = {
+        "near_dup_report": lambda: D.near_dup_report(
+            docs, "tokens", "doc_id", max_bucket_size=None, max_fp_freq=None
+        ),
+        "dedup_clusters": lambda: D.dedup_clusters(path),
+        "dedup_keep_best": lambda: D.dedup_keep_best(
+            path.select(F.col("id_a").alias("doc_id"), (F.col("id_a") % 3).alias("quality")),
+            path, "doc_id", "quality",
+        ),
+        "minhash_dedup_verified": lambda: D.minhash_dedup_verified(
+            docs, "text", "doc_id", k=64, bands=32, shingle_n=2, threshold=0.6
+        ),
+    }[entry]
+    base = _stored_rdd_ids(spark)
+    out = run()
+    assert out.count() > 0  # fully consume
+    mine = _stored_rdd_ids(spark) - base
+    assert mine  # the result reads pinned state
+    D.release_pinned(out)
+    left = mine & _stored_rdd_ids(spark)
+    assert not left, f"{entry} leaked storage blocks: {left}"
+
+
 def test_sketch_pins_honor_checkpoint_dir(spark, tmp_path):
     """r7: the two remaining sketch pins — simhash_hamming_pairs'
     (id, sketch) table and winnow_near_dups' (id, fp) table — take

@@ -490,7 +490,9 @@ def minhash_dedup_verified(
     would admit ~j^2-probability false-positive candidates per band
     (nearly all pairs of a small-vocabulary corpus — quadratic verify
     cost); r=4 keeps the candidate set ~j^4-sparse while the verify
-    stage discards the remainder, never surfacing in the output."""
+    stage discards the remainder, never surfacing in the output.
+    ``release_pinned(result)`` frees the pinned candidate pairs the
+    result reads, once it is consumed."""
     sigs_pin = _pin(
         minhash_signatures(df, text_col, id_col, k=k, shingle_n=shingle_n, seed=seed),
         checkpoint_dir,
@@ -510,7 +512,9 @@ def minhash_dedup_verified(
     finally:
         release_pinned(sigs_pin)
     verified = verify_pairs_jaccard(df, cands, text_col, id_col, n=shingle_n)
-    return verified.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    out = verified.filter(F.col("jaccard") >= threshold).select("id_a", "id_b", "jaccard")
+    out._torchestra_pins = [cands]  # freed by release_pinned(out)
+    return out
 
 
 # ----------------------------------------------------------------- simhash
@@ -940,23 +944,21 @@ def near_dup_report(
     (token-id fingerprints) separately — only the scan count drops.
 
     The sketch table is referenced by BOTH pair pipelines, so it is
-    checkpointed once; the (small) pair sets are materialized eagerly
-    while it is live and the per-doc sketch storage — the big block —
-    is released before returning, same discipline as ``minhash_dedup``
+    checkpointed once.  The two lazy pair plans over it are the two
+    sides of ONE full-outer join, materialized by one pin: Spark's
+    scheduler runs the two sides' stages side by side, so the report
+    is a single job in the caller's thread (its job group and
+    description apply).  Once the report is pinned nothing reads the
+    sketch or the pair pipelines' internal tables, so their blocks are
+    released before returning, the corpus-sized sketch included
     (pinning a per-doc fingerprint table for the session was the
-    round-2 cache-leak lesson).  The RESULT itself is pinned too: the
-    full-outer join of the two pair frames is materialized (pair-count
-    sized, cheap) and the sim/win intermediates released before
-    returning, so exactly ONE pinned frame leaves this function and
-    ``release_pinned(result)`` genuinely frees the last blocks —
-    releasing a plain join of pinned frames would be a no-op, because
-    a join plan is not a LogicalRDD and checkpoint blocks are invisible
-    to the CacheManager (``unpersist`` can't reach them either)."""
+    round-2 cache-leak lesson).  Exactly ONE pinned frame leaves this
+    function and ``release_pinned(result)`` frees the last blocks."""
     sk_pin = _pin(near_dup_sketches(df, tokens_col, id_col, k=k, w=w), checkpoint_dir)
-    sk = _compact_view(sk_pin)
-
-    def _sim_branch():
-        sim_raw = simhash_hamming_pairs(
+    sim = win = None
+    try:
+        sk = _compact_view(sk_pin)
+        sim = simhash_hamming_pairs(
             sk.select(id_col, "simhash"),
             id_col,
             max_hamming=max_hamming,
@@ -965,12 +967,7 @@ def near_dup_report(
             max_bucket_size=max_bucket_size,
             checkpoint_dir=checkpoint_dir,
         )
-        sim = _pin(sim_raw, checkpoint_dir)
-        release_pinned(sim_raw)  # frees the internal (id, sketch) table pin
-        return sim
-
-    def _win_branch():
-        win_raw = winnow_near_dups(
+        win = winnow_near_dups(
             sk,
             "winnow_fps",
             id_col,
@@ -979,51 +976,12 @@ def near_dup_report(
             fingerprints=F.col("winnow_fps"),
             checkpoint_dir=checkpoint_dir,
         )
-        win = _pin(win_raw, checkpoint_dir)
-        release_pinned(win_raw)  # frees the internal (id, fp) table pin
-        return win
-
-    try:
-        # the two pair pipelines are independent consumers of the pinned
-        # sketch — submit them concurrently so the tail of one back-fills
-        # the other's idle executors (guide §2.6); 2 jobs in flight, both
-        # materialize eagerly via _pin, exceptions propagate via result()
-        from concurrent.futures import ThreadPoolExecutor
-
-        sim = win = None
-        try:
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                sim_f = pool.submit(_sim_branch)
-                win_f = pool.submit(_win_branch)
-                try:
-                    sim = sim_f.result()
-                finally:
-                    # the with-block always waits for BOTH branches;
-                    # read the second result here so a failure in one
-                    # can still release the survivor's blocks below
-                    try:
-                        win = win_f.result()
-                    except Exception:
-                        if sim_f.exception() is None:
-                            raise
-        except Exception:
-            # one branch failed after the other pinned its pair frame:
-            # free the surviving pins instead of leaking them (review r8)
-            for survivor in (sim, win):
-                if survivor is not None:
-                    release_pinned(survivor)
-            raise
+        return _pin(sim.join(win, ["id_a", "id_b"], "full_outer"), checkpoint_dir)
     finally:
-        # release the corpus-sized sketch blocks NOW — the pair frames
-        # above were materialized eagerly and no longer read them
+        for pairs in (sim, win):
+            if pairs is not None:
+                release_pinned(pairs)  # the (id, sketch) / (id, fp) table pins
         release_pinned(sk_pin)
-    out = _pin(sim.join(win, ["id_a", "id_b"], "full_outer"), checkpoint_dir)
-    # the joined report is materialized; the per-pipeline pair blocks
-    # are no longer read by anything — free them so release_pinned(out)
-    # leaves zero blocks behind
-    release_pinned(sim)
-    release_pinned(win)
-    return out
 
 
 # ------------------------------------------------- simhash probe index
@@ -1303,7 +1261,10 @@ def dedup_clusters(
     two bounded shuffles (edge-label join + min aggregate; label
     self-join); labels are checkpointed per step so the plan stays
     flat instead of growing a join-tree per iteration, and the edge
-    list is checkpointed once and reused.  Default pins are executor-
+    list is checkpointed once and reused.  Superseded pins are released
+    as the loop goes and the edge pin after it; the result reads the
+    last label pin, which ``release_pinned(result)`` frees once the
+    result is consumed.  Default pins are executor-
     local (fastest); pass ``checkpoint_dir`` to route the iteration
     state through reliable storage so a lost executor costs one step's
     recompute instead of the whole near-dup join.  The driver-side loop
@@ -1332,62 +1293,69 @@ def dedup_clusters(
         .distinct()
     )
     edges = _pin(edges, checkpoint_dir)
-    labels = _pin(
-        edges.select(F.col("a").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id")),
-        checkpoint_dir,
-    )
-    converged = False
-    for _ in range(max_iter):
-        nbr = (
-            edges.join(
-                labels.select(F.col("id").alias("b"), F.col("label").alias("nl")), "b"
-            )
-            .groupBy("a")
-            .agg(F.min("nl").alias("nbr_min"))
+    try:
+        labels = _pin(
+            edges.select(F.col("a").alias("id"))
+            .distinct()
+            .withColumn("label", F.col("id")),
+            checkpoint_dir,
         )
-        new_labels = (
-            labels.join(nbr.withColumnRenamed("a", "id"), "id", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias(
-                    "label"
+        converged = False
+        for _ in range(max_iter):
+            nbr = (
+                edges.join(
+                    labels.select(F.col("id").alias("b"), F.col("label").alias("nl")), "b"
+                )
+                .groupBy("a")
+                .agg(F.min("nl").alias("nbr_min"))
+            )
+            hop = _pin(
+                labels.join(nbr.withColumnRenamed("a", "id"), "id", "left")
+                .select(
+                    "id",
+                    F.least(F.col("label"), F.coalesce(F.col("nbr_min"), F.col("label"))).alias(
+                        "label"
+                    ),
                 ),
+                checkpoint_dir,
             )
-        )
-        new_labels = _pin(new_labels, checkpoint_dir)
-        # pointer doubling: label(v) <- min(label(v), label(label(v))).
-        # Every label value is a node id present in new_labels, so the
-        # left join always matches; left+coalesce guards regardless.
-        ptr = new_labels.select(
-            F.col("id").alias("label"), F.col("label").alias("__ll")
-        )
-        new_labels = (
-            new_labels.join(ptr, "label", "left")
-            .select(
-                "id",
-                F.least(F.col("label"), F.coalesce(F.col("__ll"), F.col("label"))).alias(
-                    "label"
+            # pointer doubling: label(v) <- min(label(v), label(label(v))).
+            # Every label value is a node id present in hop, so the left
+            # join always matches; left+coalesce guards regardless.
+            ptr = hop.select(F.col("id").alias("label"), F.col("label").alias("__ll"))
+            new_labels = _pin(
+                hop.join(ptr, "label", "left")
+                .select(
+                    "id",
+                    F.least(F.col("label"), F.coalesce(F.col("__ll"), F.col("label"))).alias(
+                        "label"
+                    ),
                 ),
+                checkpoint_dir,
             )
-        )
-        new_labels = _pin(new_labels, checkpoint_dir)
-        changed = (
-            new_labels.join(labels.select("id", F.col("label").alias("old")), "id")
-            .filter(F.col("label") < F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            converged = True
-            break
+            release_pinned(hop)
+            changed = (
+                new_labels.join(labels.select("id", F.col("label").alias("old")), "id")
+                .filter(F.col("label") < F.col("old"))
+                .count()
+            )
+            # each pin is eager, so the superseded labels are read by nothing
+            release_pinned(labels)
+            labels = new_labels
+            if changed == 0:
+                converged = True
+                break
+    finally:
+        release_pinned(edges)
     if not converged:
+        release_pinned(labels)
         raise RuntimeError(
             f"dedup_clusters did not converge in {max_iter} rounds "
             f"(a component has diameter > {max_iter}); raise max_iter"
         )
-    return labels.select("id", F.col("label").alias("cluster_id"))
+    out = labels.select("id", F.col("label").alias("cluster_id"))
+    out._torchestra_pins = [labels]  # freed by release_pinned(out)
+    return out
 
 
 def dedup_keep_best(
@@ -1417,7 +1385,8 @@ def dedup_keep_best(
     ``coalesce(cluster_id, id)`` keys a singleton as its own one-row
     group — safe because cluster labels are min-MEMBER ids, so an id
     that appears in no pair can never equal any cluster's label.
-    Returns the kept rows of ``df``."""
+    Returns the kept rows of ``df``; ``release_pinned(result)`` frees
+    the cluster labels it reads, once it is consumed."""
     from pyspark.sql import Window
 
     # no broadcast hint: dup-cluster membership can be a large fraction
@@ -1429,8 +1398,10 @@ def dedup_keep_best(
     w = Window.partitionBy(
         F.coalesce(F.col("cluster_id"), F.col(id_col))
     ).orderBy(F.col(quality_col).desc(), F.col(id_col).asc())
-    return (
+    out = (
         member.withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") == 1)
         .drop("__rn", "cluster_id")
     )
+    out._torchestra_pins = [labels]  # freed by release_pinned(out)
+    return out

@@ -41,7 +41,6 @@ Scale design notes
 
 from __future__ import annotations
 
-import os
 from typing import List, Optional, Sequence
 
 import numpy as np
@@ -60,11 +59,12 @@ def _ts_sec(col: Column) -> Column:
     return col.cast("timestamp").cast("double")
 
 
-def _micros(ts: str) -> Column:
+def _micros(ts: str | Column) -> Column:
     """Epoch microseconds of a DATE, TIMESTAMP or TIMESTAMP_NTZ column
-    (via TIMESTAMP, lossless under the engine's UTC session timezone):
-    the match kernel's one time axis, on both sides."""
-    return F.unix_micros(F.col(ts).cast("timestamp"))
+    (a name or a Column; via TIMESTAMP, lossless under the engine's UTC
+    session timezone): the one time axis of every as-of tolerance test,
+    on both sides."""
+    return F.unix_micros((F.col(ts) if isinstance(ts, str) else ts).cast("timestamp"))
 
 
 def asof_join(
@@ -144,15 +144,14 @@ def asof_join_multi(
     Strategy — all return identical rows:
 
     * ``"auto"`` (default): ``"broadcast"`` when EVERY feature side is
-      provably small — each Catalyst size estimate under
-      ``TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES`` (default 64 MB, 0
-      disables), all k checked before any count is paid, then one
+      provably small — each Catalyst size estimate under 64 MiB,
+      all k checked before any count is paid, then one
       confirming row count per table under the broadcast guardrail —
       else ``"union"``.  The reasoning of Spark's own
       ``autoBroadcastJoinThreshold``: broadcasting the side that fits
       removes the only shuffle of the (wide, 10^12-row at scale) probe
       side.  Explicit ``salt_buckets`` declares skew for the shuffle
-      path, so it forces union.
+      path, so it forces union; ``"union"`` skips the gate.
     * ``"union"``: every table's payload rides its own nullable struct
       column on one shared union spine; the k
       ``last(struct_k, ignorenulls=True)`` window functions share one
@@ -245,10 +244,9 @@ def asof_join_multi(
     proj: List[Column] = [F.col(c) for c in l_cols]
     for sp in specs:
         ff = F.last(F.col(sp["fv"]), ignorenulls=True).over(w)
-        tol = sp.get("tolerance_sec")
-        if tol is not None:
+        if sp["tol_us"] is not None:
             in_tol = ff["__mts"].isNotNull() & (
-                _ts_sec(F.col(ts)) - _ts_sec(ff["__mts"]) <= F.lit(float(tol))
+                _micros(ts) - _micros(ff["__mts"]) <= F.lit(sp["tol_us"])
             )
             proj += [F.when(in_tol, ff[f"__v_{c}"]).alias(c) for c in sp["value_cols"]]
             proj.append(F.when(in_tol, ff["__mts"]).alias(sp["matched"]))
@@ -262,12 +260,12 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
     """Normalized copies of the table specs, shared by every strategy:
     ``value_cols=None`` becomes every column but the key and ts, the
     schema is read once, the output name ``{name}_matched_ts`` is
-    fixed, the match kernel's tolerance ``tol_us`` is in whole
-    microseconds, and feature rows whose ts or entity is NULL are dropped — a
-    NULL feature ts has no point-in-time meaning (the union spine would
-    sort it first and fill its value forward with no matched ts), and a
-    NULL entity equals no entity, NULL included.  Raises on colliding
-    output columns."""
+    fixed, the tolerance ``tol_us`` is in whole microseconds (rounded:
+    1.001 s is 1,001,000 us, not the truncated 1,000,999), and feature
+    rows whose ts or entity is NULL are dropped — a NULL feature ts has
+    no point-in-time meaning (the union spine would sort it first and
+    fill its value forward with no matched ts), and a NULL entity equals
+    no entity, NULL included.  Raises on colliding output columns."""
     specs: List[dict] = []
     out_names = list(left.columns)
     for t in tables:
@@ -282,7 +280,7 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
         sp["df"] = right.filter(F.col(on).isNotNull() & F.col(rts).isNotNull())
         sp["matched"] = f"{sp['name']}_matched_ts"
         tol = sp.get("tolerance_sec")
-        sp["tol_us"] = None if tol is None else int(tol * 1_000_000)
+        sp["tol_us"] = None if tol is None else round(tol * 1_000_000)
         for c in sp["value_cols"] + [sp["matched"]]:
             if c in out_names:
                 raise ValueError(
@@ -300,10 +298,8 @@ def _specs(left: DataFrame, tables: Sequence[dict], on: str) -> List[dict]:
 # Estimates can be wrong both ways after filters/aggregates: an
 # overestimate only costs the (still-correct) union path, an
 # underestimate is caught by the count confirmation — never an OOM'd
-# broadcast.  0 disables auto-broadcast entirely (always union).
-_AUTO_BROADCAST_MAX_BYTES = int(
-    os.environ.get("TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES", str(64 * 1024 * 1024))
-)
+# broadcast.
+_AUTO_BROADCAST_MAX_BYTES = 64 * 1024 * 1024
 
 
 def _auto_stats_small(right: DataFrame) -> bool:
@@ -325,8 +321,7 @@ def _use_broadcast(specs: Sequence[dict], strategy: str, salt_buckets: int) -> b
     then one count per (estimated-small) table to confirm.  Residual
     risk: both gates can be fooled together when Catalyst underestimates
     a <=5M-row frame of very wide rows (the row guardrail bounds rows,
-    not bytes) — set TORCHESTRA_ASOF_AUTO_BROADCAST_BYTES=0 to force
-    union for such workloads."""
+    not bytes) — pass ``strategy="union"`` for such workloads."""
     if strategy == "broadcast":
         for sp in specs:
             n = sp["df"].count()
@@ -340,7 +335,7 @@ def _use_broadcast(specs: Sequence[dict], strategy: str, salt_buckets: int) -> b
         return False
     if strategy != "auto":
         raise ValueError(f"unknown strategy {strategy!r}")
-    if salt_buckets > 1 or _AUTO_BROADCAST_MAX_BYTES <= 0:
+    if salt_buckets > 1:
         return False
     return all(_auto_stats_small(sp["df"]) for sp in specs) and all(
         sp["df"].count() <= _BROADCAST_MAX_ROWS for sp in specs

@@ -63,7 +63,11 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
+    # default: one local task slot per core this process may run on
+    # (its CPU affinity, which a container's cpuset narrows)
+    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
+        f"local[{len(os.sched_getaffinity(0))}]"
+    )
     shuffle_partitions = shuffle_partitions or int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
     # Allocator churn at the Python boundary (guide §4): every numpy /
     # Arrow temp above glibc's default 128 KB mmap threshold pays an
